@@ -70,11 +70,13 @@ DRIVER_SAMPLE_FIRST_50 = [
 # depends on whether Pillow is installed). ~200 paired queries remain
 # never-sampled (see COVERAGE.md for the full inventory); every one of
 # them — sampled or not — is still gated by the strict local checker
-# each round: this session the FULL registry ran ALL OK at sf0.01
-# post-module-split (343 paired + 2 rows-only, 0 fails) and again at
-# sf0.1 under CHECK_MASTER=local[32]/CHECK_PARTITIONS=96 (see the
-# round-5 commits), with registry identity itself pinned by
-# tests/test_registry_hash.py.
+# each round. The registry is 344 paired + 3 rows-only queries
+# (rows-only: dedup_minhash_fast, stats_approx_distinct,
+# multimodal_decode_pil), pinned by tests/test_registry_hash.py. The
+# recorded round-5 full-registry runs — ALL OK at sf0.01
+# post-module-split and at sf0.1 under CHECK_MASTER=local[32]/
+# CHECK_PARTITIONS=96 — covered 343 paired + 2 rows-only: they predate
+# stream_cds and multimodal_decode_pil.
 
 
 def _rotate(d: dict) -> dict:

@@ -35,6 +35,7 @@ candidates against `concept_similarity` (P10).
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import cached_property
 
 import numpy as np
 import pandas as pd
@@ -155,6 +156,32 @@ def surface_canonical_table(ontology_pdf: pd.DataFrame,
         rows.append((surface, cid, float(cos), float(link)))
     return pd.DataFrame(
         rows, columns=["surface", "concept_id", "cos_sim", "link_score"])
+
+
+class OntologySetup:
+    """The one driver-side ontology setup of KG construction: concepts →
+    gazetteer, then (on first use of :attr:`canonical`) Wu-Palmer pairs
+    → :func:`surface_canonical_table`. Built once per ontology frame by
+    ``build_triples_fast``, ``run_pipeline`` and the query oracles. The
+    canonical table is lazy because ``run_pipeline``'s fine-grained
+    stages never read it."""
+
+    def __init__(self, ontology_pdf: pd.DataFrame):
+        self.ontology_pdf = ontology_pdf
+        self.concepts = [
+            S.Concept(r.concept_id, r.pref_label, list(r.alt_labels),
+                      r.parent_id, int(r.depth), list(r.path))
+            for r in ontology_pdf.itertuples()]
+        self.gazetteer = S.build_gazetteer(self.concepts)
+
+    @cached_property
+    def canonical(self) -> pd.DataFrame:
+        wup_pdf = pd.DataFrame(
+            [(a.concept_id, b.concept_id, S.wup_similarity(a, b))
+             for a in self.concepts for b in self.concepts],
+            columns=["concept_a", "concept_b", "wup"])
+        return surface_canonical_table(self.ontology_pdf, self.gazetteer,
+                                       wup_pdf)
 
 
 def canonicalize_broadcast(mentions: DataFrame,

@@ -1,17 +1,22 @@
-"""P4/P5 — vectorized mention detection + explode.
+"""P4/P5 — vectorized mention detection, emitted one row per mention.
 
 North star: "vectorized pandas/Arrow-UDF mention detection". The
 reference extracts spaCy noun-chunk terms per document [K]; spaCy is
 absent in this sandbox (SURVEY.md §0 [L]) so mention detection is a
 gazetteer n-gram matcher: greedy longest-match left-to-right over
-normalized tokens against the broadcast ontology label set
-(``semantics.find_mentions`` — the same pure function the pandas
-mini-oracle uses).
+normalized tokens against the broadcast ontology label set, compiled to
+one leftmost-longest regex alternation (``semantics.gazetteer_pattern``;
+the pure ``semantics.find_mentions`` / ``find_mentions_regex`` are the
+test oracle).
 
-Scale notes: the gazetteer (a few hundred strings) ships inside the UDF
-closure — one copy per executor python worker, not per row. The UDF is a
-scalar pandas_udf over Arrow batches; per batch it is a tight Python loop
-over rows but each row costs O(tokens) dict lookups only. mention_id is
+Both detectors are ``mapInPandas`` stages that run ONE regex pass per
+Arrow batch over the batch's texts joined into a mega-string and emit
+exploded rows directly: :func:`detect_mentions_exploded` (one row per
+mention, the checkpointed ``mentions`` stage) and
+:func:`detect_canonical_concepts_exploded` (one row per canonical
+(turn, concept), the ``build_triples_fast`` hot path). The gazetteer (a
+few hundred strings) ships inside the UDF closure — one copy per
+executor python worker, not per row. mention_id is
 ``xxhash64(conv_id, turn_idx, tok_start)`` — deterministic, so re-runs /
 resumed runs emit identical ids (SURVEY.md §4 risk 3; never
 ``monotonically_increasing_id`` in persisted output).
@@ -19,82 +24,63 @@ resumed runs emit identical ids (SURVEY.md §4 risk 3; never
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from .. import semantics as S
-from ..schemas import MENTION_STRUCT
-
-_MENTIONS_TYPE = T.ArrayType(MENTION_STRUCT)
 
 
-def mention_detector_udf(gazetteer: dict[str, str], max_ngram: int = S.MAX_NGRAM,
-                         use_regex: bool = True):
-    """Build the pandas_udf closing over the gazetteer.
+def _mega_batches(batches, norm_col: str, caller: str):
+    """Batch prologue shared by the detectors. Per non-empty Arrow
+    batch, yields ``(pdf, mega, locate)``:
 
-    use_regex=True (default): compiled leftmost-longest alternation —
-    the hot loop runs in the C regex engine, ~3-5x the pure-Python
-    token walk; exact-equivalent semantics (pinned by tests)."""
-    if use_regex:
-        pattern = S.gazetteer_pattern(gazetteer, max_ngram)
+    - ``mega`` is the batch's ``norm_col`` texts joined by ``\\x00``
+      (normalized text is strictly ``[a-z0-9 ]``, so the separator can
+      never match or merge across rows);
+    - ``locate(starts)`` maps match offsets in ``mega`` to
+      ``(starts, row index, row start offset)`` int64 arrays.
 
-        @pandas_udf(_MENTIONS_TYPE)
-        def detect(norm_texts: pd.Series) -> pd.Series:
-            find = S.find_mentions_regex
-            return norm_texts.map(
-                lambda t: [] if not t else find(t, pattern))
+    HARD PRECONDITION: ``norm_col`` is normalized to the ``[a-z0-9 ]``
+    single-space alphabet (what both normalizers in
+    operators/normalize.py emit). Non-ASCII text, the sign that
+    normalization was skipped, raises a ValueError naming ``caller`` and
+    the offending row rather than an opaque error deep in an executor.
+    """
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        texts = pdf[norm_col].fillna("").tolist()
+        mega = "\x00".join(texts)
+        if not mega.isascii():
+            bad = next(t for t in texts if not t.isascii())
+            raise ValueError(
+                f"{caller} requires [a-z0-9 ]-normalized text (run "
+                f"normalize_turns first); offending row text: {bad[:80]!r}")
 
-        return detect
+        def locate(starts, texts=texts):
+            lens = np.fromiter(map(len, texts), dtype=np.int64,
+                               count=len(texts))
+            offsets = np.zeros(len(texts), dtype=np.int64)
+            np.cumsum(lens[:-1] + 1, out=offsets[1:])
+            st = np.asarray(starts, dtype=np.int64)
+            rows = np.searchsorted(offsets, st, side="right") - 1
+            return st, rows, offsets[rows]
 
-    keys = frozenset(gazetteer)
-
-    @pandas_udf(_MENTIONS_TYPE)
-    def detect(norm_texts: pd.Series) -> pd.Series:
-        find = S.find_mentions
-        return norm_texts.map(
-            lambda t: [] if not t else find(t, keys, max_ngram)
-        )
-
-    return detect
-
-
-def detect_mentions(df: DataFrame, gazetteer: dict[str, str],
-                    norm_col: str = "norm_text",
-                    use_regex: bool = True) -> DataFrame:
-    """Add a ``mentions`` array<struct<surface,tok_start,tok_end>> column."""
-    return df.withColumn(
-        "mentions",
-        mention_detector_udf(gazetteer, use_regex=use_regex)(F.col(norm_col)))
+        yield pdf, mega, locate
 
 
 def detect_mentions_exploded(df: DataFrame, gazetteer: dict[str, str],
                              max_ngram: int = S.MAX_NGRAM,
                              norm_col: str = "norm_text") -> DataFrame:
-    """Fused P4+P5 hot path: mapInPandas that emits exploded mention
-    rows directly — output identical to
-    ``explode_mentions(detect_mentions(df))`` (test-pinned), including
-    the deterministic xxhash64 mention_id, but ~2x faster:
-
-    - ONE regex pass per Arrow batch over a ``\\x00``-joined mega-string
-      (normalized text is strictly ``[a-z0-9 ]`` so the separator can
-      never match or merge across rows) instead of a per-row
-      ``Series.map`` lambda;
-    - token offsets via numpy cumulative space counts — O(1) per match
-      rather than O(prefix) ``str.count``;
-    - no array-of-struct Arrow serialization and no separate explode.
-
-    HARD PRECONDITION: ``norm_col`` must already be normalized to the
-    ``[a-z0-9 ]`` single-space alphabet (what both built-in normalizers
-    in operators/normalize.py emit). The mega-string encodes as ASCII
-    and token offsets count single spaces, so any other input is
-    rejected with an explicit error naming the offending row rather
-    than an opaque UnicodeEncodeError deep in an executor.
+    """P4+P5: one row per gazetteer mention, with the deterministic
+    xxhash64 mention_id. Token offsets come from numpy cumulative space
+    counts over the batch mega-string — O(1) per match rather than
+    O(prefix) ``str.count``. Rows equal ``semantics.find_mentions`` on
+    each normalized text (pinned by tests/test_mentions.py).
     """
-    import numpy as np
-
     pattern = S.gazetteer_pattern(gazetteer, max_ngram)
     out_schema = T.StructType([
         T.StructField("conv_id", T.StringType()),
@@ -105,19 +91,8 @@ def detect_mentions_exploded(df: DataFrame, gazetteer: dict[str, str],
     ])
 
     def gen(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            texts = pdf[norm_col].fillna("").tolist()
-            mega = "\x00".join(texts)
-            try:
-                mega_bytes = mega.encode("ascii")
-            except UnicodeEncodeError:
-                bad = next(t for t in texts if not t.isascii())
-                raise ValueError(
-                    "detect_mentions_exploded requires [a-z0-9 ]-normalized "
-                    f"text (run normalize_turns first); offending row text: "
-                    f"{bad[:80]!r}") from None
+        for pdf, mega, locate in _mega_batches(
+                batches, norm_col, "detect_mentions_exploded"):
             starts: list[int] = []
             surfaces: list[str] = []
             for m in pattern.finditer(mega):
@@ -125,17 +100,11 @@ def detect_mentions_exploded(df: DataFrame, gazetteer: dict[str, str],
                 surfaces.append(m.group(0))
             if not starts:
                 continue
-            arr = np.frombuffer(mega_bytes, dtype=np.uint8)
-            lens = np.fromiter((len(t) for t in texts), dtype=np.int64,
-                               count=len(texts))
-            offsets = np.zeros(len(texts), dtype=np.int64)
-            if len(texts) > 1:
-                np.cumsum(lens[:-1] + 1, out=offsets[1:])
+            st, rows, row_start = locate(starts)
+            arr = np.frombuffer(mega.encode("ascii"), dtype=np.uint8)
             cumspace = np.concatenate(
                 ([0], np.cumsum(arr == 32, dtype=np.int64)))
-            st = np.asarray(starts, dtype=np.int64)
-            rows = np.searchsorted(offsets, st, side="right") - 1
-            tok_start = (cumspace[st] - cumspace[offsets[rows]]).astype("int32")
+            tok_start = (cumspace[st] - cumspace[row_start]).astype("int32")
             n_toks = np.fromiter((s.count(" ") + 1 for s in surfaces),
                                  dtype=np.int32, count=len(surfaces))
             yield pd.DataFrame({
@@ -160,7 +129,7 @@ def detect_canonical_concepts_exploded(
         max_ngram: int = S.MAX_NGRAM,
         norm_col: str = "norm_text") -> DataFrame:
     """Fully-fused P4+P5+P7–P9 hot path: ONE mapInPandas stage that
-    regex-detects mentions (same mega-string machinery as
+    regex-detects mentions (the same batch prologue as
     ``detect_mentions_exploded``), maps each surface to its precomputed
     canonical (concept_id, link_score) in-batch, and max-dedups per
     (turn, concept) — so every emitted row is already unique within its
@@ -173,15 +142,15 @@ def detect_canonical_concepts_exploded(
     (subj, pred, obj) mention triples — a turn's mentions always live in
     one Arrow batch, so collapsing them here makes the downstream triple
     stream globally unique by construction and deletes the full-corpus
-    dedup shuffle (the second wide boundary of ``build_triples_fast``).
-    At 10^12 turns that shuffle moves ~the whole triple table through
-    shared disk/network; this trades it for a vectorized in-batch
-    lexsort. The broadcast-join stage disappears with it: the canonical
-    table (a few hundred rows) ships once per python worker in the UDF
-    closure, exactly like the gazetteer.
+    dedup shuffle from ``build_triples_fast``, leaving it the P11
+    respread and the ``replies_to`` window as its only wide boundaries
+    (plan-pinned by tests/test_plans.py). At 10^12 turns that shuffle
+    moves ~the whole triple table through shared disk/network; this
+    trades it for a vectorized in-batch lexsort. The broadcast-join
+    stage disappears with it: the canonical table (a few hundred rows)
+    ships once per python worker in the UDF closure, exactly like the
+    gazetteer.
     """
-    import numpy as np
-
     pattern = S.gazetteer_pattern(gazetteer, max_ngram)
     # surface -> (dense concept code, link_score); unmatched surfaces
     # (sub-threshold, absent from the canonical table) drop out exactly
@@ -202,19 +171,8 @@ def detect_canonical_concepts_exploded(
     ])
 
     def gen(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            texts = pdf[norm_col].fillna("").tolist()
-            mega = "\x00".join(texts)
-            try:
-                mega_bytes = mega.encode("ascii")
-            except UnicodeEncodeError:
-                bad = next(t for t in texts if not t.isascii())
-                raise ValueError(
-                    "detect_canonical_concepts_exploded requires "
-                    "[a-z0-9 ]-normalized text (run normalize_turns "
-                    f"first); offending row text: {bad[:80]!r}") from None
+        for pdf, mega, locate in _mega_batches(
+                batches, norm_col, "detect_canonical_concepts_exploded"):
             starts: list[int] = []
             codes: list[int] = []
             scores: list[float] = []
@@ -228,14 +186,7 @@ def detect_canonical_concepts_exploded(
                 scores.append(hit[1])
             if not starts:
                 continue
-            del mega_bytes  # ascii guarantee was the only use
-            lens = np.fromiter((len(t) for t in texts), dtype=np.int64,
-                               count=len(texts))
-            offsets = np.zeros(len(texts), dtype=np.int64)
-            if len(texts) > 1:
-                np.cumsum(lens[:-1] + 1, out=offsets[1:])
-            st = np.asarray(starts, dtype=np.int64)
-            rows = np.searchsorted(offsets, st, side="right") - 1
+            _, rows, _ = locate(starts)
             cid = np.asarray(codes, dtype=np.int64)
             sc = np.asarray(scores, dtype=np.float64)
             # per-(row, concept) max: lexsort (primary row, then concept,
@@ -254,20 +205,3 @@ def detect_canonical_concepts_exploded(
 
     return df.select("conv_id", "turn_idx", norm_col).mapInPandas(
         gen, schema=out_schema)
-
-
-def explode_mentions(df: DataFrame) -> DataFrame:
-    """P5: one row per mention with a deterministic mention_id."""
-    return (
-        df.select(
-            "conv_id", "turn_idx",
-            F.explode("mentions").alias("m"),
-        )
-        .select(
-            "conv_id", "turn_idx",
-            F.xxhash64("conv_id", "turn_idx", F.col("m.tok_start")).alias("mention_id"),
-            F.col("m.surface").alias("surface"),
-            F.col("m.tok_start").alias("tok_start"),
-            F.col("m.tok_end").alias("tok_end"),
-        )
-    )

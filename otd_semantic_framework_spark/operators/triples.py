@@ -10,10 +10,12 @@ transcripts"), each turn becomes an RDF-style subject
 - ``replies_to``: turn → previous turn       (score = 1.0, via P2 lag)
 
 Dedup (P13) restores rdflib-graph set semantics: one row per (s,p,o),
-max score wins. At scale this is the second wide boundary of the hot
-path (after the candidate/canonical windows); it partial-aggregates
-map-side (hash agg) before the shuffle, and the subject key inherits the
-conv_id salt when P11 salting is active.
+max score wins. It runs in ``run_pipeline``'s triples stage as one
+shuffle that partial-aggregates map-side (hash agg) first, and the
+subject key inherits the conv_id salt when P11 salting is active. The
+``build_triples_fast`` hot path has no dedup shuffle: its fused detector
+dedups per turn, so its two wide boundaries are the P11 respread and the
+``replies_to`` lag window.
 """
 
 from __future__ import annotations

@@ -35,11 +35,14 @@ from pyspark.sql import functions as F
 
 from .. import semantics as S
 from ..operators.cds import cds_scores
-from ..operators.linking import canonicalize, link_candidates_broadcast
-from ..operators.mentions import (detect_mentions, detect_mentions_exploded,
-                                  explode_mentions)
+from ..operators.linking import (OntologySetup, canonicalize,
+                                 canonicalize_broadcast,
+                                 link_candidates_broadcast)
+from ..operators.mentions import (detect_canonical_concepts_exploded,
+                                  detect_mentions_exploded)
 from ..operators.normalize import normalize_turns
-from ..operators.triples import dedup_triples, extract_triples
+from ..operators.triples import (canonical_mention_triples, dedup_triples,
+                                 extract_triples, reply_triples, tool_triples)
 from ..operators.wup import concept_similarity
 from ..schemas import ONTOLOGY_CONCEPTS
 from ..sources import fixtures
@@ -131,41 +134,27 @@ class CheckpointedRun:
 
 def build_triples_fast(spark: SparkSession, transcripts: DataFrame,
                        ontology_pdf: pd.DataFrame | None = None,
-                       spread_partitions: int | None = None,
-                       fuse_canonical: bool = True) -> DataFrame:
+                       spread_partitions: int | None = None) -> DataFrame:
     """Single-expression hot path (no checkpoint materialization).
 
-    Default plan (``fuse_canonical=True``): fully-fused mapInPandas
-    (regex mentions → in-batch canonical map → per-turn max-dedup) →
-    3-rule union. Every rule then emits globally-unique (s,p,o) rows —
-    mention duplicates only ever arise within one turn and are collapsed
-    inside the UDF batch — so P13's full-corpus dedup shuffle is
-    unnecessary by construction and the hot path has exactly ONE wide
-    boundary (the P11 respread; the replies window is narrow-ish:
-    conv_id+turn_idx only after column pruning). PRECONDITION: one row
-    per (conv_id, turn_idx), which P2 turn assembly guarantees; pass
-    ``fuse_canonical=False`` for raw un-assembled input to route through
-    the broadcast-join + global-dedup plan instead. Output equality of
-    both plans with run_pipeline is pinned by
-    tests/test_autotag.py::test_fast_path_equals_checkpointed."""
-    from ..operators.linking import (canonicalize_broadcast,
-                                     surface_canonical_table)
-    from ..operators.mentions import detect_canonical_concepts_exploded
-    from ..operators.triples import (canonical_mention_triples,
-                                     reply_triples, tool_triples)
+    Plan: one fully-fused mapInPandas (regex mentions → in-batch
+    canonical map → per-turn max-dedup) → 3-rule union. Every rule then
+    emits globally-unique (s,p,o) rows — mention duplicates only ever
+    arise within one turn and are collapsed inside the UDF batch — so
+    P13's full-corpus dedup shuffle is unnecessary by construction. The
+    executed plan has TWO wide boundaries, the P11 round-robin respread
+    of the mention branch and the conv_id hash exchange of the
+    ``replies_to`` lag window (narrow after column pruning: conv_id and
+    turn_idx only), and reads the input once per rule (three scans of a
+    parquet source); tests/test_plans.py pins both counts.
 
-    ontology_pdf = ontology_pdf if ontology_pdf is not None else fixtures.ontology_pandas()
-    concepts = [
-        S.Concept(r.concept_id, r.pref_label, list(r.alt_labels), r.parent_id,
-                  int(r.depth), list(r.path))
-        for r in ontology_pdf.itertuples()
-    ]
-    gaz = S.build_gazetteer(concepts)
-    wup_pdf = pd.DataFrame(
-        [(a.concept_id, b.concept_id, S.wup_similarity(a, b))
-         for a in concepts for b in concepts],
-        columns=["concept_a", "concept_b", "wup"])
-    canon_table = surface_canonical_table(ontology_pdf, gaz, wup_pdf)
+    PRECONDITION: one row per (conv_id, turn_idx), which P2 turn
+    assembly guarantees. Un-assembled input goes to ``run_pipeline``,
+    whose ``extract_triples`` + ``dedup_triples`` chain collapses
+    duplicate rows. Output equality with run_pipeline is pinned by
+    tests/test_autotag.py::test_fast_path_equals_checkpointed."""
+    onto = OntologySetup(ontology_pdf if ontology_pdf is not None
+                         else fixtures.ontology_pandas())
     # P11: the mention UDF is map-only, so a round-robin respread defuses
     # hot-conversation stragglers (one skewed input partition otherwise
     # pins the whole wave). Default 3 waves per core;
@@ -177,17 +166,13 @@ def build_triples_fast(spark: SparkSession, transcripts: DataFrame,
     else:
         n = spread_partitions or spark.sparkContext.defaultParallelism * 3
         spread = transcripts.repartition(n)
-    if fuse_canonical:
-        canon_concepts = detect_canonical_concepts_exploded(
-            normalize_turns(spread), gaz, canon_table)
-        return (
-            canonical_mention_triples(canon_concepts)
-            .unionByName(tool_triples(transcripts))
-            .unionByName(reply_triples(transcripts))
-        )
-    mentions = detect_mentions_exploded(normalize_turns(spread), gaz)
-    canon = canonicalize_broadcast(mentions, canon_table)
-    return dedup_triples(extract_triples(transcripts, canon))
+    canon_concepts = detect_canonical_concepts_exploded(
+        normalize_turns(spread), onto.gazetteer, onto.canonical)
+    return (
+        canonical_mention_triples(canon_concepts)
+        .unionByName(tool_triples(transcripts))
+        .unionByName(reply_triples(transcripts))
+    )
 
 
 def run_pipeline(
@@ -220,8 +205,8 @@ def run_pipeline(
     reference's curated tagging graph feeds its CDS matrix [K].
 
     ``fused_linking=True`` collapses mentions→candidates→canonical into
-    ONE checkpointed stage computed via the precomputed broadcast
-    canonical table (the fast-path plan) — ~3x fewer large intermediate
+    ONE checkpointed stage: the same mention detector joined to the
+    precomputed broadcast canonical table — ~3x fewer large intermediate
     materializations, same output (equality pinned by tests). Resume
     granularity becomes concept_similarity → canonical → triples → cds,
     which is the right trade at 10^12 turns where writing the candidate
@@ -236,12 +221,8 @@ def run_pipeline(
     recovery.
     """
     ontology_pdf = ontology_pdf if ontology_pdf is not None else fixtures.ontology_pandas()
-    concepts = [
-        S.Concept(r.concept_id, r.pref_label, list(r.alt_labels), r.parent_id,
-                  int(r.depth), list(r.path))
-        for r in ontology_pdf.itertuples()
-    ]
-    gaz = S.build_gazetteer(concepts)
+    onto = OntologySetup(ontology_pdf)
+    gaz = onto.gazetteer
     run = CheckpointedRun(spark, run_dir, run_id)
     # The fingerprint must digest the ontology's CONTENT, not just its
     # size (same discipline as the manual-tags digest below): an edited
@@ -252,7 +233,7 @@ def run_pipeline(
         "onto", *sorted(f"{c.concept_id}\x00{c.pref_label}\x00"
                         f"{c.parent_id}\x00{'/'.join(c.path)}\x00"
                         f"{'+'.join(sorted(c.alt_labels))}"
-                        for c in concepts))
+                        for c in onto.concepts))
     cfg_fp = (len(ontology_pdf), f"onto:{onto_digest:x}",
               S.COS_THRESHOLD, S.LINK_ALPHA, S.TOP_K)
 
@@ -267,21 +248,14 @@ def run_pipeline(
     spread = transcripts.repartition(spark.sparkContext.defaultParallelism * 3)
 
     if fused_linking:
-        from ..operators.linking import (canonicalize_broadcast,
-                                         surface_canonical_table)
-        wup_pdf = pd.DataFrame(
-            [(a.concept_id, b.concept_id, S.wup_similarity(a, b))
-             for a in concepts for b in concepts],
-            columns=["concept_a", "concept_b", "wup"])
-        canon_table = surface_canonical_table(ontology_pdf, gaz, wup_pdf)
         canonical = run.stage("canonical", cfg_fp, lambda: canonicalize_broadcast(
             detect_mentions_exploded(normalize_turns(spread), gaz),
-            canon_table))
+            onto.canonical))
         if stop_after == "canonical":
             return PipelineResult(None, None, run.metrics)
     else:
-        mentions = run.stage("mentions", cfg_fp, lambda: explode_mentions(
-            detect_mentions(normalize_turns(spread), gaz)))
+        mentions = run.stage("mentions", cfg_fp, lambda: detect_mentions_exploded(
+            normalize_turns(spread), gaz))
         if stop_after == "mentions":
             return PipelineResult(None, None, run.metrics)
 

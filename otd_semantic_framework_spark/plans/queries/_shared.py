@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ... import semantics as S
-from ...operators.linking import canonicalize
+from ...operators.linking import OntologySetup, canonicalize
 from ...operators.wup import concept_similarity
 from ...schemas import CONCEPT_SIMILARITY
 from ..driver_ontology import (driver_ancestors, driver_concepts,
@@ -502,17 +502,8 @@ def _fast_onto_pdf():
 
 def _fast_canon_pdf():
     """The precomputed surface→canonical table build_triples_fast uses,
-    recomputed with the same driver-side functions for the oracle."""
-    import pandas as pd
-
-    from ...operators.linking import surface_canonical_table
-    concepts = list(driver_concepts())
-    gaz = S.build_gazetteer(concepts)
-    wup_pdf = pd.DataFrame(
-        [(a.concept_id, b.concept_id, S.wup_similarity(a, b))
-         for a in concepts for b in concepts],
-        columns=["concept_a", "concept_b", "wup"])
-    return surface_canonical_table(_fast_onto_pdf(), gaz, wup_pdf)
+    recomputed with the same driver-side setup for the oracle."""
+    return OntologySetup(_fast_onto_pdf()).canonical
 
 
 MAXSIM_TOKENS = 4          # 64-dim vectors -> 4 token slices of width 16

@@ -1036,9 +1036,10 @@ GROUP BY conv_id, turn_idx, m.surface
 
 
 def q_kg_fast_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The TRUE production hot path END-TO-END (normalize → fused regex
-    mention UDF → broadcast precomputed canonical → 3-rule union → one
-    dedup shuffle), oracle-paired since r2: the DuckDB oracle replays
+    """The TRUE production hot path END-TO-END (round-robin respread →
+    normalize → fused regex mention UDF with the precomputed canonical
+    map and per-turn dedup in-batch → 3-rule union; no dedup shuffle),
+    oracle-paired since r2: the DuckDB oracle replays
     mentions with the RE2 alternation (see kg_mentions_regex) and joins
     the SAME precomputed canonical table as literals — the exact
     surface→(concept, link_score) function build_triples_fast

@@ -782,6 +782,8 @@ def q_stream_cds(spark: SparkSession, sf_dir: str) -> DataFrame:
     _shutil.rmtree(ckpt, ignore_errors=True)
     if holder["state"] is not None:
         _shutil.rmtree(holder["state"], ignore_errors=True)
+    if holder["cds"] is None:
+        raise RuntimeError("stream_cds: no micro-batches fired")
     final = spark.read.parquet(holder["cds"])
     return final.select("subj_key",
                         F.col("concept_id").alias("cds_concept"), "score")

@@ -35,12 +35,6 @@ CONCEPT_SIMILARITY = T.StructType([
     T.StructField("wup", T.DoubleType(), False),
 ])
 
-MENTION_STRUCT = T.StructType([
-    T.StructField("surface", T.StringType(), False),
-    T.StructField("tok_start", T.IntegerType(), False),
-    T.StructField("tok_end", T.IntegerType(), False),
-])
-
 CANDIDATES = T.StructType([
     T.StructField("conv_id", T.StringType(), False),
     T.StructField("turn_idx", T.IntegerType(), False),

@@ -112,34 +112,23 @@ def run_stream_to_table(result: DataFrame, checkpoint_dir: str,
 
 
 def incremental_triples(spark: SparkSession, in_path: str, run_dir: str,
-                        gazetteer: dict[str, str], ontology_pdf,
-                        max_files_per_trigger: int = 1) -> None:
+                        ontology_pdf, max_files_per_trigger: int = 1) -> None:
     """foreachBatch micro-batch triple extraction: each batch runs the
-    BATCH operators (P3→P13) — streaming reuses the exact batch semantics,
-    checkpointed by the engine's offsets.
+    batch hot path ``build_triples_fast`` — streaming reuses the exact
+    batch semantics, checkpointed by the engine's offsets.
 
     CORRECTNESS PRECONDITION: input files must be conversation-aligned
     (each conv_id entirely within one file), which the production
     bucket(conv_id) Iceberg layout guarantees. Otherwise replies_to
-    edges spanning a micro-batch boundary are lost and cross-batch dedup
-    is incomplete. tests/test_streaming.py pins this contract."""
-    from ..operators.linking import canonicalize, link_candidates_broadcast
-    from ..operators.mentions import detect_mentions, explode_mentions
-    from ..operators.normalize import normalize_turns
-    from ..operators.triples import dedup_triples, extract_triples
-    from ..operators.wup import concept_similarity
-    from ..schemas import ONTOLOGY_CONCEPTS
-
-    onto_df = spark.createDataFrame(ontology_pdf, schema=ONTOLOGY_CONCEPTS)
-    sim = concept_similarity(onto_df)
+    edges spanning a micro-batch boundary are lost. Each batch also
+    inherits build_triples_fast's one-row-per-(conv_id, turn_idx)
+    precondition: no dedup runs within or across batches.
+    tests/test_streaming.py pins this contract."""
+    from ..plans.pipeline import build_triples_fast
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        mentions = explode_mentions(
-            detect_mentions(normalize_turns(batch), gazetteer))
-        cands = link_candidates_broadcast(mentions, ontology_pdf, gazetteer)
-        canon = canonicalize(cands, sim)
-        triples = dedup_triples(extract_triples(batch, canon))
-        triples.write.mode("append").parquet(f"{run_dir}/triples_stream.parquet")
+        build_triples_fast(spark, batch, ontology_pdf).write.mode(
+            "append").parquet(f"{run_dir}/triples_stream.parquet")
 
     stream = read_transcript_stream(spark, in_path, max_files_per_trigger)
     q = (stream.writeStream.foreachBatch(process)

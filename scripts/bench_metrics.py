@@ -22,11 +22,11 @@ def jvm_peak_rss_mb() -> int | None:
     Two caveats the r5 review surfaced, both handled by callers:
     VmHWM is a JVM-process-LIFETIME high-water mark (never decreases),
     so a per-leg reading requires a fresh JVM per leg — scale_sweep
-    runs every size in its own subprocess; and to avoid reading some
-    OTHER concurrent Spark job's JVM, the scan prefers java processes
-    whose parent is this python (the py4j child), falling back to the
-    global max only when no child JVM is found."""
-    best_child, best_any = None, None
+    runs every size in its own subprocess; and only java processes whose
+    parent is this python (the py4j child) count. When no child JVM is
+    found the result is None, never some OTHER concurrent Spark job's
+    JVM; callers record that as unattributed (``peak_rss_record``)."""
+    best = None
     me = str(os.getpid())
     for status in glob.glob("/proc/[0-9]*/status"):
         pid = status.split("/")[2]
@@ -44,14 +44,18 @@ def jvm_peak_rss_mb() -> int | None:
                         hwm = int(line.split()[1]) // 1024
                     elif line.startswith("PPid:"):
                         ppid = line.split()[1]
-            if hwm is None:
-                continue
-            best_any = max(best_any or 0, hwm)
-            if ppid == me:
-                best_child = max(best_child or 0, hwm)
+            if hwm is not None and ppid == me:
+                best = max(best or 0, hwm)
         except (OSError, ValueError):
             continue
-    return best_child if best_child is not None else best_any
+    return best
+
+
+def peak_rss_record() -> int | str:
+    """``jvm_peak_rss_mb()`` as a bench JSON field: ``"unattributed"``
+    when this process has no child JVM to read."""
+    mb = jvm_peak_rss_mb()
+    return "unattributed" if mb is None else mb
 
 
 def _api(spark, path: str):
@@ -76,23 +80,24 @@ def stage_totals(spark) -> dict:
 
 
 def completed_stage_ids(spark) -> set[int]:
-    """Ids of every completed stage so far — snapshot between runs to
-    attribute later stages to the run that created them (stage ids
-    never repeat within an application)."""
+    """Ids of every completed stage so far — snapshot before and after
+    a run to attribute the stages in between to it (stage ids never
+    repeat within an application). Drains the listener bus first, so a
+    snapshot taken right after an action already lists its stages."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     return {s["stageId"] for s in _api(spark, "/stages?status=COMPLETE")}
 
 
-def straggler_profile(spark, min_tasks: int = 8,
-                      min_stage_ms: int = 500,
-                      exclude_ids: set[int] | None = None) -> list[dict]:
+def straggler_profile(spark, stage_ids: set[int], min_tasks: int = 8,
+                      min_stage_ms: int = 500) -> list[dict]:
     """Per-stage task-time skew: (median, max, max/median) of
-    executorRunTime over each completed stage with enough tasks to make
-    a ratio meaningful. The north-rule skew claim is exactly
-    'max-task/median-task < 3 on the adversarial corpus'."""
+    executorRunTime over each completed stage in ``stage_ids`` with
+    enough tasks to make a ratio meaningful. The north-rule skew claim
+    is exactly 'max-task/median-task < 3 on the adversarial corpus'."""
     out = []
     for s in _api(spark, "/stages?status=COMPLETE"):
         sid, att = s["stageId"], s["attemptId"]
-        if exclude_ids and sid in exclude_ids:
+        if sid not in stage_ids:
             continue
         if s.get("numCompleteTasks", 0) < min_tasks:
             continue

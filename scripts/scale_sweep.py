@@ -55,7 +55,7 @@ def gen_leg(n_convs: int) -> None:
 def measure_leg(n_convs: int, out_path: str) -> None:
     from otd_semantic_framework_spark.plans.pipeline import build_triples_fast
     from otd_semantic_framework_spark.session import get_spark
-    from scripts.bench_metrics import jvm_peak_rss_mb, stage_totals
+    from scripts.bench_metrics import peak_rss_record, stage_totals
     spark = get_spark("sweep", master="local[32]",
                       extra_conf={"spark.ui.enabled": "true"})
     transcripts = spark.read.parquet(corpus_path(n_convs))
@@ -74,7 +74,7 @@ def measure_leg(n_convs: int, out_path: str) -> None:
          "all_runs_sec": [round(w, 2) for w in walls],
          "triples_per_sec": round(n_triples / wall, 1),
          "turns_per_sec": round(n_turns / wall, 1),
-         "jvm_peak_rss_mb": jvm_peak_rss_mb(),
+         "jvm_peak_rss_mb": peak_rss_record(),
          "stages": stage_totals(spark)}
     with open(out_path, "w") as f:
         json.dump(r, f)

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from otd_semantic_framework_spark.session import get_spark  # noqa: E402
 from scripts.bench_metrics import (completed_stage_ids,  # noqa: E402
-                                   straggler_profile)
+                                   peak_rss_record, straggler_profile)
 
 N_CONVS = int(sys.argv[1]) if len(sys.argv) > 1 else 720000
 HOT_FRAC = float(sys.argv[2]) if len(sys.argv) > 2 else 0.01
@@ -69,19 +69,20 @@ def build_corpus(spark) -> str:
 def timed_run(spark, transcripts, spread_partitions, tag: str) -> dict:
     from otd_semantic_framework_spark.plans.pipeline import build_triples_fast
     out = f"/tmp/skew_triples_{tag}"
-    walls, pre_warm_ids = [], set()
-    for i in range(2):
-        if i == 1:
-            # r5 review: snapshot stage ids so the reported straggler
-            # profile covers the WARM run only — cold-run JIT/IO
-            # stragglers are not key skew
-            pre_warm_ids = completed_stage_ids(spark)
+    walls = []
+    for _ in range(2):
+        # the stage window of the LAST (warm) build: the reported
+        # straggler profile covers that build only — cold-run JIT/IO
+        # stragglers are not key skew, and the count and parity-hash
+        # jobs below are not the build
+        before = completed_stage_ids(spark)
         t0 = time.time()
         build_triples_fast(
             spark, transcripts,
             spread_partitions=spread_partitions,
         ).write.mode("overwrite").parquet(out)
         walls.append(round(time.time() - t0, 2))
+        warm_ids = completed_stage_ids(spark) - before
     tri = spark.read.parquet(out)
     h = (tri.select(F.md5(F.concat_ws("\x1f", "subj", "pred", "obj",
                                       "conv_id", "turn_idx",
@@ -91,7 +92,7 @@ def timed_run(spark, transcripts, spread_partitions, tag: str) -> dict:
                     .cast("decimal(38,0)")).alias("s")).collect()[0]["s"])
     return {"tag": tag, "walls_sec": walls, "sec": min(walls),
             "triples": tri.count(), "hash": str(h), "out": out,
-            "pre_warm_ids": pre_warm_ids}
+            "warm_ids": warm_ids}
 
 
 def cds_run(spark, triples_path: str) -> dict:
@@ -123,7 +124,7 @@ def main() -> None:
         res["turns"] = t.count()
         res["unsalted"] = timed_run(s1, t, 0, "unsalted")
         res["unsalted"]["stages"] = straggler_profile(
-            s1, exclude_ids=res["unsalted"].pop("pre_warm_ids"))
+            s1, res["unsalted"].pop("warm_ids"))
     finally:
         s1.stop()
 
@@ -135,13 +136,17 @@ def main() -> None:
         t.count()
         res["salted"] = timed_run(s2, t, None, "salted")
         res["salted"]["stages"] = straggler_profile(
-            s2, exclude_ids=res["salted"].pop("pre_warm_ids"))
+            s2, res["salted"].pop("warm_ids"))
         pre_cds = completed_stage_ids(s2)
         res["cds"] = cds_run(s2, res["salted"]["out"])
-        res["cds"]["stages"] = straggler_profile(s2, exclude_ids=pre_cds)
+        res["cds"]["stages"] = straggler_profile(
+            s2, completed_stage_ids(s2) - pre_cds)
     finally:
         s2.stop()
 
+    # VmHWM is a JVM-lifetime peak and both legs share this process's
+    # JVM, so this is one reading over the whole run
+    res["jvm_peak_rss_mb"] = peak_rss_record()
     res["hashes_equal"] = (res["unsalted"]["hash"]
                            == res["salted"]["hash"])
     res["triples_equal"] = (res["unsalted"]["triples"]

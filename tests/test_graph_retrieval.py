@@ -220,12 +220,10 @@ def test_incremental_cds_equals_full(spark, tiny_df, n_batches):
     """IVM invariant: folding the canonical links in as n_batches
     arbitrary appends (split by a turn hash, so conversations span
     batches) yields byte-identical CDS to one full propagation."""
-    import pandas as pd
-    from otd_semantic_framework_spark import semantics as S
     from otd_semantic_framework_spark.operators.cds import (
         incremental_cds_update, propagate_cds)
     from otd_semantic_framework_spark.operators.linking import (
-        canonicalize_broadcast, surface_canonical_table)
+        OntologySetup, canonicalize_broadcast)
     from otd_semantic_framework_spark.operators.mentions import (
         detect_mentions_exploded)
     from otd_semantic_framework_spark.operators.normalize import (
@@ -234,15 +232,10 @@ def test_incremental_cds_equals_full(spark, tiny_df, n_batches):
     from otd_semantic_framework_spark.sources.fixtures import (
         ontology_pandas, ontology_spark)
 
-    concepts = S.build_ontology()
-    gaz = S.build_gazetteer(concepts)
-    wup_pdf = pd.DataFrame(
-        [(a.concept_id, b.concept_id, S.wup_similarity(a, b))
-         for a in concepts for b in concepts],
-        columns=["concept_a", "concept_b", "wup"])
+    onto = OntologySetup(ontology_pandas())
     canon = canonicalize_broadcast(
-        detect_mentions_exploded(normalize_turns(tiny_df), gaz),
-        surface_canonical_table(ontology_pandas(), gaz, wup_pdf)).cache()
+        detect_mentions_exploded(normalize_turns(tiny_df), onto.gazetteer),
+        onto.canonical).cache()
     sim = concept_similarity(ontology_spark(spark))
 
     def tags_of(df):

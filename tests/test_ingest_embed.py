@@ -69,12 +69,12 @@ def test_hash_embedding_table_matches_semantics(spark):
 def test_mention_embeddings_dataframe_path(spark, tiny_df):
     """The pure-DataFrame mean-pool must equal semantics.phrase_vector."""
     from otd_semantic_framework_spark.operators.mentions import (
-        detect_mentions, explode_mentions)
+        detect_mentions_exploded)
     from otd_semantic_framework_spark.operators.normalize import normalize_turns
     import numpy as np
     gaz = S.build_gazetteer(S.build_ontology())
-    mentions = explode_mentions(
-        detect_mentions(normalize_turns(tiny_df), gaz)).limit(50).cache()
+    mentions = detect_mentions_exploded(
+        normalize_turns(tiny_df), gaz).limit(50).cache()
     out = mention_embeddings(mentions, hash_embedding_table(spark))
     surfaces = {r.mention_id: r.surface for r in mentions.collect()}
     for r in out.collect():

@@ -7,7 +7,7 @@ from otd_semantic_framework_spark import semantics as S
 from otd_semantic_framework_spark.operators.linking import (
     canonicalize, link_candidates_arrow, link_candidates_broadcast)
 from otd_semantic_framework_spark.operators.mentions import (
-    detect_mentions, explode_mentions)
+    detect_mentions_exploded)
 from otd_semantic_framework_spark.operators.normalize import normalize_turns
 from otd_semantic_framework_spark.operators.wup import concept_similarity
 from otd_semantic_framework_spark.sources.fixtures import ontology_spark
@@ -15,7 +15,7 @@ from otd_semantic_framework_spark.sources.fixtures import ontology_spark
 
 def _mentions(tiny_df):
     gaz = S.build_gazetteer(S.build_ontology())
-    return explode_mentions(detect_mentions(normalize_turns(tiny_df), gaz)), gaz
+    return detect_mentions_exploded(normalize_turns(tiny_df), gaz), gaz
 
 
 def _key(rows):

@@ -1,8 +1,10 @@
 """P3/P4/P5 — normalization parity, mention detection, explode."""
 
+import pytest
+
 from otd_semantic_framework_spark import semantics as S
 from otd_semantic_framework_spark.operators.mentions import (
-    detect_mentions, explode_mentions)
+    detect_canonical_concepts_exploded, detect_mentions_exploded)
 from otd_semantic_framework_spark.operators.normalize import normalize_turns
 
 
@@ -21,56 +23,47 @@ def test_normalize_nfkc_udf_matches(spark):
 
 
 def test_mentions_match_oracle(spark, tiny_df, tiny_pdf, ontology_pdf):
+    """detect_mentions_exploded (mega-string mapInPandas) emits exactly
+    the pure find_mentions walk per turn, also under repartitioning
+    (batch boundaries move)."""
     gaz = S.build_gazetteer(S.build_ontology())
-    got = (
-        explode_mentions(detect_mentions(normalize_turns(tiny_df), gaz))
-        .select("conv_id", "turn_idx", "surface", "tok_start", "tok_end")
-        .collect()
-    )
-    got_set = {(r.conv_id, r.turn_idx, r.surface, r.tok_start, r.tok_end) for r in got}
-    want = set()
-    for row in tiny_pdf.itertuples():
-        for surf, s, e in S.find_mentions(S.normalize_text(row.text), gaz):
-            want.add((row.conv_id, row.turn_idx, surf, s, e))
-    assert got_set == want
+    k = lambda df: sorted((r.conv_id, r.turn_idx, r.surface, r.tok_start,
+                           r.tok_end) for r in df.collect())
+    want = sorted(
+        (row.conv_id, row.turn_idx, surf, s, e)
+        for row in tiny_pdf.itertuples()
+        for surf, s, e in S.find_mentions(S.normalize_text(row.text), gaz))
+    assert k(detect_mentions_exploded(normalize_turns(tiny_df), gaz)) == want
+    assert k(detect_mentions_exploded(
+        normalize_turns(tiny_df.repartition(13)), gaz)) == want
     assert len(want) > 50  # fixture guarantees plenty of hits
 
 
 def test_mention_id_deterministic(spark, tiny_df):
     gaz = S.build_gazetteer(S.build_ontology())
-    m1 = explode_mentions(detect_mentions(normalize_turns(tiny_df), gaz))
-    m2 = explode_mentions(detect_mentions(
-        normalize_turns(tiny_df.repartition(11)), gaz))
+    m1 = detect_mentions_exploded(normalize_turns(tiny_df), gaz)
+    m2 = detect_mentions_exploded(
+        normalize_turns(tiny_df.repartition(11)), gaz)
     ids1 = sorted(r.mention_id for r in m1.select("mention_id").collect())
     ids2 = sorted(r.mention_id for r in m2.select("mention_id").collect())
     assert ids1 == ids2
     assert len(ids1) == len(set(ids1))  # unique per mention
 
 
-def test_regex_detector_equals_python_walk(spark, tiny_df):
-    gaz = S.build_gazetteer(S.build_ontology())
-    fast = explode_mentions(detect_mentions(
-        normalize_turns(tiny_df), gaz, use_regex=True))
-    slow = explode_mentions(detect_mentions(
-        normalize_turns(tiny_df), gaz, use_regex=False))
-    k = lambda df: sorted((r.conv_id, r.turn_idx, r.surface, r.tok_start,
-                           r.tok_end, r.mention_id) for r in df.collect())
-    assert k(fast) == k(slow)
-
-
-def test_fused_exploded_detector_equivalence(spark, tiny_df):
-    """detect_mentions_exploded (mega-string mapInPandas, the hot path)
-    emits exactly explode_mentions(detect_mentions(...)) including
-    mention_id, under repartitioning (batch boundaries move)."""
-    from otd_semantic_framework_spark.operators.mentions import (
-        detect_mentions_exploded)
-    gaz = S.build_gazetteer(S.build_ontology())
-    k = lambda df: sorted((r.conv_id, r.turn_idx, r.surface, r.tok_start,
-                           r.tok_end, r.mention_id) for r in df.collect())
-    want = k(explode_mentions(detect_mentions(normalize_turns(tiny_df), gaz)))
-    assert k(detect_mentions_exploded(normalize_turns(tiny_df), gaz)) == want
-    assert k(detect_mentions_exploded(
-        normalize_turns(tiny_df.repartition(13)), gaz)) == want
+def test_detectors_reject_unnormalized_text(spark, ontology_pdf):
+    """Both detectors name themselves and the offending row when the
+    text column skipped normalize_turns."""
+    from otd_semantic_framework_spark.operators.linking import OntologySetup
+    onto = OntologySetup(ontology_pdf)
+    df = spark.createDataFrame(
+        [("c1", 0, "bus stop"), ("c1", 1, "Café bus")],
+        "conv_id string, turn_idx int, norm_text string")
+    with pytest.raises(Exception, match="detect_mentions_exploded requires"):
+        detect_mentions_exploded(df, onto.gazetteer).collect()
+    with pytest.raises(Exception,
+                       match="detect_canonical_concepts_exploded requires"):
+        detect_canonical_concepts_exploded(
+            df, onto.gazetteer, onto.canonical).collect()
 
 
 def test_regex_twin_pure_function_equivalence():
@@ -97,18 +90,10 @@ def test_fused_canonical_detector_equivalence(spark, tiny_df, ontology_pdf):
     detect_mentions_exploded(...)) max-reduced per (turn, concept), with
     matching dedup_triples score rounding — and is invariant under
     repartitioning (batch boundaries move)."""
-    import pandas as pd
     from otd_semantic_framework_spark.operators.linking import (
-        canonicalize_broadcast, surface_canonical_table)
-    from otd_semantic_framework_spark.operators.mentions import (
-        detect_canonical_concepts_exploded, detect_mentions_exploded)
-    concepts = S.build_ontology()
-    gaz = S.build_gazetteer(concepts)
-    wup_pdf = pd.DataFrame(
-        [(a.concept_id, b.concept_id, S.wup_similarity(a, b))
-         for a in concepts for b in concepts],
-        columns=["concept_a", "concept_b", "wup"])
-    canon_table = surface_canonical_table(ontology_pdf, gaz, wup_pdf)
+        OntologySetup, canonicalize_broadcast)
+    onto = OntologySetup(ontology_pdf)
+    gaz, canon_table = onto.gazetteer, onto.canonical
     ref = canonicalize_broadcast(
         detect_mentions_exploded(normalize_turns(tiny_df), gaz), canon_table)
     want = {}

@@ -5,18 +5,22 @@ cartesian products outside the intended tiny cross joins, no per-row
 Python in JVM-expressible stages.
 """
 
+import re
+
 from pyspark.sql import functions as F
 
 from otd_semantic_framework_spark import semantics as S
 from otd_semantic_framework_spark.operators.linking import (
-    canonicalize, link_candidates_broadcast)
+    OntologySetup, canonicalize, canonicalize_broadcast,
+    link_candidates_broadcast)
 from otd_semantic_framework_spark.operators.mentions import (
-    detect_mentions, explode_mentions)
+    detect_mentions_exploded)
 from otd_semantic_framework_spark.operators.normalize import normalize_turns
+from otd_semantic_framework_spark.operators.triples import (
+    dedup_triples, extract_triples)
 from otd_semantic_framework_spark.operators.wup import concept_similarity
 from otd_semantic_framework_spark.plans.pipeline import build_triples_fast
-from otd_semantic_framework_spark.sources.fixtures import (
-    ontology_pandas, ontology_spark)
+from otd_semantic_framework_spark.sources.fixtures import ontology_spark
 
 
 def _plan(df) -> str:
@@ -29,7 +33,7 @@ def _opt(df) -> str:
 
 def test_linking_is_broadcast_join(spark, tiny_df, ontology_pdf):
     gaz = S.build_gazetteer(S.build_ontology())
-    mentions = explode_mentions(detect_mentions(normalize_turns(tiny_df), gaz))
+    mentions = detect_mentions_exploded(normalize_turns(tiny_df), gaz)
     cands = link_candidates_broadcast(mentions, ontology_pdf, gaz)
     plan = _plan(cands)
     assert "BroadcastHashJoin" in plan
@@ -39,7 +43,7 @@ def test_linking_is_broadcast_join(spark, tiny_df, ontology_pdf):
 
 def test_canonicalize_wup_join_is_broadcast(spark, tiny_df, ontology_pdf):
     gaz = S.build_gazetteer(S.build_ontology())
-    mentions = explode_mentions(detect_mentions(normalize_turns(tiny_df), gaz))
+    mentions = detect_mentions_exploded(normalize_turns(tiny_df), gaz)
     cands = link_candidates_broadcast(mentions, ontology_pdf, gaz)
     canon = canonicalize(cands, concept_similarity(ontology_spark(spark)))
     plan = _plan(canon)
@@ -48,11 +52,11 @@ def test_canonicalize_wup_join_is_broadcast(spark, tiny_df, ontology_pdf):
 
 
 def test_fast_path_plan_shape(spark, tiny_df):
-    """The fused hot path (fuse_canonical=True default): JOIN-FREE and
-    AGGREGATION-FREE — canonical mapping and per-turn dedup happen inside
-    the single mapInPandas stage, so the mention branch is scan →
-    round-robin exchange → MapInPandas → project, with nothing wide after
-    the UDF. No sort-merge joins, no cartesian, no global HashAggregate."""
+    """The fused hot path: JOIN-FREE and AGGREGATION-FREE — canonical
+    mapping and per-turn dedup happen inside the single mapInPandas
+    stage, so the mention branch is scan → round-robin exchange →
+    MapInPandas → project, with nothing wide after the UDF. No
+    sort-merge joins, no cartesian, no global HashAggregate."""
     df = build_triples_fast(spark, tiny_df)
     plan = _plan(df)
     assert "Join" not in plan          # canonical map fused into the UDF
@@ -61,12 +65,32 @@ def test_fast_path_plan_shape(spark, tiny_df):
     assert "MapInPandas" in plan
 
 
-def test_fast_path_unfused_plan_shape(spark, tiny_df):
-    """The unfused fallback (fuse_canonical=False, for un-assembled
-    input): broadcast canonical join + map-side-partial dedup agg, no
-    sort-merge join, codegen spans present (codegen explain mode — the
-    AQE root string hides WholeStageCodegen until a plan is final)."""
-    df = build_triples_fast(spark, tiny_df, fuse_canonical=False)
+def test_fast_path_exchange_and_scan_counts(spark, tiny_df, tmp_path):
+    """build_triples_fast's docstring, pinned on the EXECUTED (AQE
+    final) plan over a parquet source: exactly two Exchanges — the P11
+    round-robin respread and the replies_to window's conv_id hash — and
+    three parquet scans, one per triple rule."""
+    p = str(tmp_path / "t.parquet")
+    tiny_df.write.parquet(p)
+    df = build_triples_fast(spark, spark.read.parquet(p))
+    assert len(df.collect()) > 0
+    final = _plan(df).split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    exchanges = re.findall(r"\bExchange (\w+)", final)
+    assert sorted(exchanges) == ["RoundRobinPartitioning", "hashpartitioning"]
+    assert final.count("FileScan parquet") == 3
+
+
+def test_canonicalize_broadcast_plan_shape(spark, tiny_df, ontology_pdf):
+    """The precomputed canonical link (run_pipeline's fused_linking
+    stage): a broadcast join of the mention stream to the canonical
+    table, no sort-merge join, codegen spans present (codegen explain
+    mode — the AQE root string hides WholeStageCodegen until a plan is
+    final)."""
+    onto = OntologySetup(ontology_pdf)
+    df = canonicalize_broadcast(
+        detect_mentions_exploded(normalize_turns(tiny_df), onto.gazetteer),
+        onto.canonical)
     plan = _plan(df)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
@@ -90,37 +114,33 @@ def test_scan_pushdown_filter_and_pruning(spark, tmp_path):
     assert "w" not in plan.split("ReadSchema")[-1]  # column pruned
 
 
-def test_dedup_is_hash_aggregate_with_partials(spark, tiny_df):
-    """The final dedup must be HashAggregate (NOT SortAggregate — caught
-    live: min(string) aggregates degrade to sort-based) and must
-    partial-aggregate map-side (two HashAggregate levels around one
-    exchange) — what keeps the shuffle linear in distinct keys at
-    10^12-turn scale. (Routes through fuse_canonical=False: the fused
-    default has no dedup aggregate at all, by design.)"""
-    plan = _plan(build_triples_fast(spark, tiny_df, fuse_canonical=False))
+def test_dedup_is_hash_aggregate_with_partials(spark, tiny_df, ontology_pdf):
+    """The P13 dedup (run_pipeline's triples stage) must be HashAggregate
+    (NOT SortAggregate — caught live: min(string) aggregates degrade to
+    sort-based) and must partial-aggregate map-side (two HashAggregate
+    levels around one exchange) — what keeps the shuffle linear in
+    distinct keys at 10^12-turn scale. (The fused build_triples_fast
+    has no dedup aggregate at all, by design.)"""
+    onto = OntologySetup(ontology_pdf)
+    canon = canonicalize_broadcast(
+        detect_mentions_exploded(normalize_turns(tiny_df), onto.gazetteer),
+        onto.canonical)
+    plan = _plan(dedup_triples(extract_triples(tiny_df, canon)))
     assert "SortAggregate" not in plan
     assert plan.count("HashAggregate") >= 2
 
 
-def test_no_python_udf_outside_mention_stage(spark, tiny_df, tmp_path):
+def test_no_python_udf_outside_mention_stage(spark, tiny_df, tmp_path,
+                                             ontology_pdf):
     """Everything after mention detection is JVM-side: the canonical link
     + triple rules + dedup must contain no Python evals. (Materialize the
     mention stage to cut lineage, then audit the downstream plan.)"""
-    gaz = S.build_gazetteer(S.build_ontology())
+    onto = OntologySetup(ontology_pdf)
     p = str(tmp_path / "mentions.parquet")
-    explode_mentions(
-        detect_mentions(normalize_turns(tiny_df), gaz)).write.parquet(p)
+    detect_mentions_exploded(
+        normalize_turns(tiny_df), onto.gazetteer).write.parquet(p)
     mentions = spark.read.parquet(p)
-    from otd_semantic_framework_spark.operators.linking import (
-        canonicalize_broadcast, surface_canonical_table)
-    import pandas as pd
-    concepts = S.build_ontology()
-    wup_pdf = pd.DataFrame(
-        [(a.concept_id, b.concept_id, S.wup_similarity(a, b))
-         for a in concepts for b in concepts],
-        columns=["concept_a", "concept_b", "wup"])
-    canon = canonicalize_broadcast(
-        mentions, surface_canonical_table(ontology_pandas(), gaz, wup_pdf))
+    canon = canonicalize_broadcast(mentions, onto.canonical)
     plan = _plan(canon)
     for marker in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF"):
         assert marker not in plan, marker

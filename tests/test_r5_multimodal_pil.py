@@ -107,3 +107,26 @@ class TestStreamCds:
                       for r in q_kg_cds(spark, SF).collect()}
         assert stream_rows == batch_rows
         assert len(stream_rows) > 0
+
+    def test_no_micro_batch_is_a_named_error(self, spark, monkeypatch):
+        """An empty canonical-link table still stages one (empty) parquet
+        file, so one micro-batch fires and the CDS comes back empty.
+        When no micro-batch fires at all (simulated by dropping the
+        foreachBatch callback) the query raises a named RuntimeError
+        instead of the opaque TypeError of spark.read.parquet(None)."""
+        from pyspark.sql.streaming import DataStreamWriter
+
+        from otd_semantic_framework_spark.plans.queries import kg1
+        from otd_semantic_framework_spark.plans.queries.stream import (
+            q_stream_cds)
+        empty = spark.createDataFrame(
+            [], "conv_id string, turn_idx int, concept_id string, "
+                "link_score double")
+        monkeypatch.setattr(kg1, "q_kg_canonical", lambda *_: empty)
+        assert q_stream_cds(spark, SF).count() == 0
+        for_each = DataStreamWriter.foreachBatch
+        monkeypatch.setattr(DataStreamWriter, "foreachBatch",
+                            lambda self, _fn: for_each(self, lambda *_: None))
+        with pytest.raises(RuntimeError,
+                           match="stream_cds: no micro-batches fired"):
+            q_stream_cds(spark, SF)

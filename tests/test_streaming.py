@@ -5,7 +5,6 @@ foreachBatch triples equal the batch pipeline output."""
 import pytest
 from pyspark.sql import functions as F
 
-from otd_semantic_framework_spark import semantics as S
 from otd_semantic_framework_spark.sources.fixtures import ontology_pandas
 from otd_semantic_framework_spark.streaming.sessions import (
     conversation_sessions, incremental_triples, read_transcript_stream,
@@ -134,8 +133,7 @@ def test_stateful_running_stats(spark, tiny_df, tmp_path):
 def test_incremental_triples_equal_batch(spark, tiny_df, stream_input, tmp_path):
     from otd_semantic_framework_spark.plans.pipeline import run_pipeline
     run_dir = str(tmp_path / "inc")
-    gaz = S.build_gazetteer(S.build_ontology())
-    incremental_triples(spark, stream_input, run_dir, gaz, ontology_pandas())
+    incremental_triples(spark, stream_input, run_dir, ontology_pandas())
     got = spark.read.parquet(f"{run_dir}/triples_stream.parquet")
     batch = run_pipeline(spark, tiny_df, str(tmp_path / "batch")).triples
     k_got = sorted((r.subj, r.pred, r.obj, round(r.score, 6))

@@ -31,7 +31,7 @@ from otd_semantic_framework_spark.operators.evaluate import precision_recall
 from otd_semantic_framework_spark.operators.linking import (
     canonicalize, link_candidates_broadcast)
 from otd_semantic_framework_spark.operators.mentions import (
-    detect_mentions, explode_mentions)
+    detect_mentions_exploded)
 from otd_semantic_framework_spark.operators.normalize import normalize_turns
 from otd_semantic_framework_spark.operators.wup import concept_similarity
 from otd_semantic_framework_spark.sources.fixtures import (
@@ -58,8 +58,8 @@ def test_trained_word2vec_linking_quality(spark):
         lambda v: any(math.isnan(x) or math.isinf(x) for x in v)).any()
 
     gaz = S.build_gazetteer(S.build_ontology())
-    mentions = explode_mentions(
-        detect_mentions(normalize_turns(corpus), gaz)).cache()
+    mentions = detect_mentions_exploded(
+        normalize_turns(corpus), gaz).cache()
     assert mentions.count() > 100
 
     # --- trained-path embeddings (distributed mean-pool + renorm) ------
