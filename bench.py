@@ -107,34 +107,6 @@ def kg_pipeline_run(master: str, input_path: str, runs: int = 2) -> dict:
         spark.stop()
 
 
-def kg_pipeline_run_pinned(n_cores: int, input_path: str, runs: int) -> dict:
-    """Manual/diagnostic: one scaling leg in a subprocess pinned to
-    exactly ``n_cores`` CPUs via taskset. ``local[N]`` alone only caps
-    TASK threads — JVM GC, Arrow IPC and forked Python workers would
-    still spread onto the host's other idle cores, silently giving the
-    small leg more silicon than its N and corrupting measured scaling
-    (observed: unpinned local[2] ran 1.5x faster than 2 real cores
-    allow, depressing efficiency to ~0.72; pinned legs measure ~1.0).
-    Falls back to in-process (unpinned) if taskset is unavailable. The
-    official bench path is ``kg_scaling_paired`` below."""
-    import shutil as _shutil
-    import subprocess
-    import tempfile
-    if _shutil.which("taskset") is None:
-        return kg_pipeline_run(f"local[{n_cores}]", input_path, runs)
-    fd, out = tempfile.mkstemp(suffix=".json")
-    os.close(fd)
-    cpu_list = f"0-{n_cores - 1}" if n_cores > 1 else "0"
-    subprocess.run(
-        ["taskset", "-c", cpu_list, sys.executable, os.path.abspath(__file__),
-         "--leg", str(n_cores), str(runs), input_path, out],
-        check=True)
-    with open(out) as f:
-        r = json.load(f)
-    os.unlink(out)
-    return r
-
-
 def serve_leg(n_cores: int, input_path: str) -> None:
     """Child side of the paired-scaling protocol: one warmed pinned
     Spark session; 'run' on stdin → one timed pipeline run, 'count' →
@@ -185,12 +157,10 @@ def kg_scaling_paired(input_path: str, n_small: int, n_big: int,
     import shutil as _shutil
     import statistics
     import subprocess
-    if _shutil.which("taskset") is None:  # degraded fallback (no pinning)
-        n4 = kg_pipeline_run(f"local[{n_big}]", input_path, runs=4)
-        n1 = kg_pipeline_run(f"local[{n_small}]", input_path, runs=3)
-        return {"scale_n": n1, "scale_4n": n4, "paired": False,
-                "scaling_efficiency": round(
-                    n4["triples_per_sec"] / (4.0 * n1["triples_per_sec"]), 3)}
+    # local[N] caps only task threads: unpinned, JVM GC and forked
+    # Python workers spread onto idle cores and inflate the small leg
+    if _shutil.which("taskset") is None:
+        raise RuntimeError("taskset unavailable: legs cannot be pinned")
 
     def spawn(n_cores: int, cpu_list: str) -> subprocess.Popen:
         return subprocess.Popen(
@@ -259,13 +229,6 @@ def kg_scaling_paired(input_path: str, n_small: int, n_big: int,
 
 
 def main() -> None:
-    if len(sys.argv) > 1 and sys.argv[1] == "--leg":
-        n_cores, runs, input_path, out = (
-            int(sys.argv[2]), int(sys.argv[3]), sys.argv[4], sys.argv[5])
-        r = kg_pipeline_run(f"local[{n_cores}]", input_path, runs)
-        with open(out, "w") as f:
-            json.dump(r, f)
-        return
     if len(sys.argv) > 1 and sys.argv[1] == "--serve":
         serve_leg(int(sys.argv[2]), sys.argv[3])
         return
@@ -287,15 +250,9 @@ def main() -> None:
                 pairs=int(os.environ.get("SPARK_GRAFT_BENCH_PAIRS", "5")),
                 n_turns=big["turns"]))
         except Exception as ex:  # noqa: BLE001 — a dead leg must not
-            # sink the whole bench; fall back to sequential pinned legs
-            print(f"paired scaling failed ({ex}); sequential fallback",
-                  file=sys.stderr)
-            n4 = kg_pipeline_run_pinned(int(SCALING_BIG), input_path, runs=4)
-            n1 = kg_pipeline_run_pinned(int(SCALING_SMALL), input_path, runs=3)
-            kg.update({"scale_n": n1, "scale_4n": n4, "paired": False,
-                       "scaling_efficiency": round(
-                           n4["triples_per_sec"]
-                           / (4.0 * n1["triples_per_sec"]), 3)})
+            # sink the whole bench; record the failure, no efficiency
+            print(f"paired scaling failed ({ex})", file=sys.stderr)
+            kg.update({"paired": False, "scaling_error": str(ex)})
 
     import __spark_entry__ as E
     queries = E.queries()

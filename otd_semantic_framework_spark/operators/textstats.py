@@ -1,6 +1,6 @@
 """Text analysis for training-data pipelines: language-ID heuristic,
 quality scoring, token counting — the vectorized-UDF members live here
-(SQL-expressible ones are in plans/driver_queries.py with oracles).
+(SQL-expressible ones are in plans/queries/text.py with oracles).
 """
 
 from __future__ import annotations

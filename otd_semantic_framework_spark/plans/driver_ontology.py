@@ -108,7 +108,7 @@ def driver_manual_tags() -> pd.DataFrame:
     ontology validation must drop, and convs with no manual tags."""
     concepts = [c.concept_id for c in driver_concepts()]
     rows = []
-    for n in range(50):  # matches driver_queries.N_CONVS
+    for n in range(50):  # matches queries._shared.N_CONVS
         if n % 3 == 2:
             continue  # every third conv is un-curated
         for k in range(2):

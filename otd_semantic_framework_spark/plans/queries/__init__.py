@@ -1,1 +1,2 @@
-"""Per-domain driver query modules (see _shared.py header)."""
+"""Per-domain driver query modules, registered in
+``plans.driver_queries.QUERIES``."""

@@ -1,9 +1,4 @@
-"""Shared helpers/constants for the driver query modules.
-
-Generated from plans/driver_queries.py by scripts/split_driver_queries.py
-(round 5); original source order preserved. Do not edit the monolith
-back into existence — edit here.
-"""
+"""Shared helpers/constants for the driver query modules."""
 
 from __future__ import annotations
 

@@ -1,9 +1,4 @@
-"""Driver queries: `curation` domain (part 1).
-
-Generated from plans/driver_queries.py by scripts/split_driver_queries.py
-(round 5); original source order preserved. Do not edit the monolith
-back into existence — edit here.
-"""
+"""Driver queries: `curation` domain."""
 
 from __future__ import annotations
 
@@ -13,61 +8,6 @@ from pyspark.sql import functions as F
 
 
 from ._shared import *  # noqa: F401,F403
-
-__all__ = [
-    "q_curation_sample",
-    "SQL_CURATION_SAMPLE",
-    "q_curation_keep_best",
-    "_sql_curation_keep_best",
-    "q_curation_pack",
-    "SQL_CURATION_PACK",
-    "q_curation_mixture",
-    "SQL_CURATION_MIXTURE",
-    "q_curation_deciles",
-    "_sql_curation_deciles",
-    "q_curation_weighted",
-    "_sql_curation_weighted",
-    "q_curation_shards",
-    "_sql_curation_shards",
-    "q_curation_source_filter",
-    "_sql_curation_source_filter",
-    "q_curation_interleave",
-    "_sql_curation_interleave",
-    "q_curation_dsir",
-    "SQL_CURATION_DSIR",
-    "q_curation_attrition",
-    "SQL_CURATION_ATTRITION",
-    "q_curation_chunks",
-    "SQL_CURATION_CHUNKS",
-    "q_curation_split",
-    "_sql_curation_split",
-    "q_curation_skipgram",
-    "_sql_curation_skipgram",
-    "q_curation_token_budget",
-    "SQL_CURATION_TOKEN_BUDGET",
-    "q_curation_contrastive_pairs",
-    "_sql_curation_contrastive_pairs",
-    "q_curation_keep_list",
-    "_sql_curation_keep_list",
-    "q_curation_domain_weights",
-    "_sql_curation_domain_weights",
-    "q_curation_anneal",
-    "_sql_curation_anneal",
-    "q_curation_fertility",
-    "_sql_curation_fertility",
-    "q_curation_curriculum",
-    "_sql_curation_curriculum",
-    "q_curation_dataset_card",
-    "_sql_curation_dataset_card",
-    "q_curation_pii_audit",
-    "_sql_curation_pii_audit",
-    "q_curation_apportion",
-    "_sql_curation_apportion",
-    "q_curation_sample_audit",
-    "_sql_curation_sample_audit",
-    "q_curation_ablation",
-    "_sql_curation_ablation",
-]
 
 
 def q_curation_sample(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,9 +1,4 @@
-"""Driver queries: `dedup` domain (part 1).
-
-Generated from plans/driver_queries.py by scripts/split_driver_queries.py
-(round 5); original source order preserved. Do not edit the monolith
-back into existence — edit here.
-"""
+"""Driver queries: `dedup` domain."""
 
 from __future__ import annotations
 
@@ -15,52 +10,6 @@ from ... import semantics as S
 
 
 from ._shared import *  # noqa: F401,F403
-
-__all__ = [
-    "SQL_DEDUP_EXACT",
-    "q_dedup_exact",
-    "q_dedup_jaccard",
-    "SQL_DEDUP_JACCARD",
-    "q_dedup_embedding",
-    "SQL_DEDUP_EMBEDDING",
-    "q_dedup_minhash",
-    "_sql_minhash_prefix",
-    "_sql_dedup_minhash",
-    "q_dedup_simhash",
-    "_sql_dedup_simhash",
-    "q_dedup_components",
-    "_sql_dedup_components",
-    "q_dedup_spans",
-    "SQL_DEDUP_SPANS",
-    "q_dedup_incremental",
-    "SQL_DEDUP_INCREMENTAL",
-    "q_dedup_semantic",
-    "SQL_DEDUP_SEMANTIC",
-    "q_dedup_bloom",
-    "_sql_dedup_bloom",
-    "q_dedup_edit",
-    "_sql_dedup_edit",
-    "q_dedup_canonical",
-    "_sql_dedup_canonical",
-    "q_dedup_containment",
-    "SQL_DEDUP_CONTAINMENT",
-    "q_dedup_blocking_audit",
-    "_sql_dedup_blocking_audit",
-    "q_dedup_savings",
-    "_sql_dedup_savings",
-    "q_dedup_threshold_sweep",
-    "_sql_dedup_threshold_sweep",
-    "q_dedup_cluster_quality",
-    "_sql_dedup_cluster_quality",
-    "q_dedup_population_est",
-    "_sql_dedup_population_est",
-    "q_dedup_hash_collision_audit",
-    "_sql_dedup_hash_collision_audit",
-    "q_dedup_attribution",
-    "_sql_dedup_attribution",
-    "q_dedup_truncation",
-    "_sql_dedup_truncation",
-]
 
 
 SQL_DEDUP_EXACT = """

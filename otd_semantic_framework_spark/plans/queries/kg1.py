@@ -1,9 +1,4 @@
-"""Driver queries: `kg` domain (part 1).
-
-Generated from plans/driver_queries.py by scripts/split_driver_queries.py
-(round 5); original source order preserved. Do not edit the monolith
-back into existence — edit here.
-"""
+"""Driver queries: `kg` domain (part 1)."""
 
 from __future__ import annotations
 
@@ -20,147 +15,6 @@ from ..driver_ontology import (driver_ancestors, driver_concepts,
 
 
 from ._shared import *  # noqa: F401,F403
-
-__all__ = [
-    "q_kg_transcripts",
-    "SQL_KG_TRANSCRIPTS",
-    "q_kg_turn_assembly",
-    "SQL_KG_TURN_ASSEMBLY",
-    "q_kg_mentions",
-    "SQL_KG_MENTIONS",
-    "q_kg_candidates",
-    "_sql_kg_candidates_body",
-    "q_kg_canonical",
-    "_sql_kg_canonical_body",
-    "q_kg_triples",
-    "_sql_kg_triples_body",
-    "q_kg_inferred_triples",
-    "_sql_kg_inferred_triples",
-    "q_kg_cds",
-    "_sql_kg_cds_body",
-    "q_kg_wup_matrix",
-    "_sql_kg_wup_matrix",
-    "q_kg_search",
-    "_sql_kg_search",
-    "q_kg_ontology_diff",
-    "_sql_kg_ontology_diff",
-    "q_kg_branch_rollup",
-    "_sql_kg_branch_rollup",
-    "q_kg_search_closure",
-    "_sql_kg_search_closure",
-    "q_kg_nt_export",
-    "_sql_kg_nt_export",
-    "q_kg_batch_search",
-    "_sql_kg_batch_search",
-    "_auto_tags_df",
-    "_merged_tags_df",
-    "q_kg_manual_merge",
-    "_sql_manual_merge_ctes",
-    "_sql_kg_manual_merge",
-    "q_kg_manual_cds",
-    "_sql_kg_manual_cds",
-    "q_kg_config_cds",
-    "_sql_kg_config_cds",
-    "q_kg_config_search",
-    "_sql_kg_config_search",
-    "q_kg_search_wup",
-    "_sql_kg_search_wup",
-    "q_kg_two_hop",
-    "_sql_kg_two_hop",
-    "q_kg_mentions_regex",
-    "_sql_kg_mentions_regex",
-    "q_kg_fast_pipeline",
-    "_sql_kg_fast_pipeline",
-    "q_kg_materialize",
-    "q_kg_ontology_ingest",
-    "_sql_kg_ontology_ingest",
-    "q_kg_resume_manifest",
-    "_sql_kg_resume_manifest",
-    "q_kg_dcat_ingest",
-    "_sql_kg_dcat_ingest",
-    "q_kg_eval_pr",
-    "_sql_kg_eval_pr",
-    "q_kg_pagerank",
-    "_sql_kg_pagerank",
-    "q_kg_concept_lift",
-    "_sql_kg_concept_lift",
-    "q_kg_bgp_query",
-    "_sql_kg_bgp_query",
-    "q_kg_construct_query",
-    "_sql_kg_construct_query",
-    "q_kg_validate",
-    "_sql_kg_validate",
-    "q_kg_path_query",
-    "_sql_kg_path_query",
-    "q_kg_bgp_optional",
-    "_sql_kg_bgp_optional",
-    "q_kg_incremental_cds",
-    "q_kg_negative_samples",
-    "_sql_kg_negative_samples",
-    "q_kg_tool_sequences",
-    "SQL_KG_TOOL_SEQUENCES",
-    "q_kg_tool_latency",
-    "SQL_KG_TOOL_LATENCY",
-    "q_kg_triangles",
-    "SQL_KG_TRIANGLES",
-    "q_kg_conv_rollup",
-    "SQL_KG_CONV_ROLLUP",
-    "q_kg_episodes",
-    "_sql_kg_episodes",
-    "q_kg_search_ndcg",
-    "_sql_kg_search_ndcg",
-    "q_kg_degree_dist",
-    "_sql_kg_degree_dist",
-    "q_kg_coverage",
-    "_sql_kg_coverage",
-    "q_kg_clustering",
-    "SQL_KG_CLUSTERING",
-    "q_kg_concept_drift",
-    "SQL_KG_CONCEPT_DRIFT",
-    "q_kg_related",
-    "SQL_KG_RELATED",
-    "q_kg_resnik",
-    "_sql_kg_resnik",
-    "q_kg_kcore",
-    "_sql_kg_kcore",
-    "q_kg_lin_jc",
-    "_sql_kg_lin_jc",
-    "q_kg_hits",
-    "_sql_kg_hits",
-    "q_kg_ask",
-    "_sql_kg_ask",
-    "q_kg_bfs",
-    "_sql_kg_bfs",
-    "q_kg_community",
-    "_sql_kg_community",
-    "q_kg_shortest_path",
-    "_sql_kg_shortest_path",
-    "q_kg_snapshot_asof",
-    "_sql_kg_snapshot_asof",
-    "q_kg_sparql_agg",
-    "_sql_kg_sparql_agg",
-    "q_kg_link_predict",
-    "_sql_kg_link_predict",
-    "q_kg_random_walks",
-    "_sql_kg_random_walks",
-    "q_kg_describe",
-    "_sql_kg_describe",
-    "q_kg_walk_pairs",
-    "_sql_kg_walk_pairs",
-    "q_kg_direct_mapping",
-    "SQL_KG_DIRECT_MAPPING",
-    "q_kg_fact_fusion",
-    "_sql_kg_fact_fusion",
-    "q_kg_open_relations",
-    "_sql_kg_open_relations",
-    "q_kg_dialogue_acts",
-    "_sql_kg_dialogue_acts",
-    "q_kg_property_stats",
-    "_sql_kg_property_stats",
-    "q_kg_coref_lite",
-    "SQL_KG_COREF_LITE",
-    "q_kg_entity_salience",
-]
 
 
 def q_kg_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -275,6 +129,10 @@ best AS (
 )
 {select}
 """
+
+
+def _sql_kg_canonical() -> str:
+    return "WITH x AS (" + _sql_kg_canonical_body() + ") SELECT * FROM x"
 
 
 def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:

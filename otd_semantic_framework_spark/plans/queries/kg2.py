@@ -1,9 +1,4 @@
-"""Driver queries: `kg` domain (part 2).
-
-Generated from plans/driver_queries.py by scripts/split_driver_queries.py
-(round 5); original source order preserved. Do not edit the monolith
-back into existence — edit here.
-"""
+"""Driver queries: `kg` domain (part 2)."""
 
 from __future__ import annotations
 
@@ -16,106 +11,6 @@ from ..driver_ontology import driver_ancestors, driver_gazetteer, driver_scores,
 
 
 from ._shared import *  # noqa: F401,F403
-
-__all__ = [
-    "_sql_kg_entity_salience",
-    "q_kg_turn_novelty",
-    "SQL_KG_TURN_NOVELTY",
-    "q_kg_alias_table",
-    "_sql_kg_alias_table",
-    "q_kg_transe_score",
-    "_sql_kg_transe_score",
-    "q_kg_rule_mining",
-    "_sql_kg_rule_mining",
-    "q_kg_completeness_est",
-    "SQL_KG_COMPLETENESS_EST",
-    "q_kg_fact_conflicts",
-    "_sql_kg_fact_conflicts",
-    "q_kg_sparql_setops",
-    "_sql_kg_sparql_setops",
-    "q_kg_reify",
-    "_sql_kg_reify",
-    "q_kg_void_stats",
-    "_sql_kg_void_stats",
-    "q_kg_closeness",
-    "SQL_KG_CLOSENESS",
-    "q_kg_decay_cds",
-    "_sql_kg_decay_cds",
-    "q_kg_pred_cooccur",
-    "_sql_kg_pred_cooccur",
-    "q_kg_collective_linking",
-    "_sql_kg_collective_linking",
-    "q_kg_concept_transitions",
-    "_sql_kg_concept_transitions",
-    "q_kg_entity_cards",
-    "_sql_kg_entity_cards",
-    "q_kg_graph_summary",
-    "_sql_kg_graph_summary",
-    "q_kg_surface_ambiguity",
-    "_sql_kg_surface_ambiguity",
-    "q_kg_transitive_reduction",
-    "_sql_kg_transitive_reduction",
-    "q_kg_event_extraction",
-    "_sql_kg_event_extraction",
-    "q_kg_fact_intervals",
-    "_sql_kg_fact_intervals",
-    "q_kg_snapshot_diff",
-    "_sql_kg_snapshot_diff",
-    "q_kg_ppr",
-    "_sql_kg_ppr",
-    "q_kg_search_prf",
-    "_sql_kg_search_prf",
-    "q_kg_linkpred_eval",
-    "_sql_kg_linkpred_eval",
-    "q_kg_type_inference",
-    "_sql_kg_type_inference",
-    "q_kg_assortativity",
-    "_sql_kg_assortativity",
-    "q_kg_sameas_closure",
-    "_sql_kg_sameas_closure",
-    "q_kg_search_mmr",
-    "_sql_kg_search_mmr",
-    "q_kg_property_table",
-    "_sql_kg_property_table",
-    "q_kg_powerlaw_alpha",
-    "_sql_kg_powerlaw_alpha",
-    "q_kg_impact_analysis",
-    "_sql_kg_impact_analysis",
-    "q_kg_mention_contexts",
-    "_sql_kg_mention_contexts",
-    "q_kg_neighbor_sampling",
-    "_sql_kg_neighbor_sampling",
-    "q_kg_degree_anomaly",
-    "_sql_kg_degree_anomaly",
-    "q_kg_calibration",
-    "_sql_kg_calibration",
-    "q_kg_truss",
-    "_sql_kg_truss",
-    "q_kg_pathsim",
-    "_sql_kg_pathsim",
-    "q_kg_rank_corr",
-    "_sql_kg_rank_corr",
-    "q_kg_diameter_est",
-    "_sql_kg_diameter_est",
-    "q_kg_topic_focus",
-    "_sql_kg_topic_focus",
-    "q_kg_cardinality_profile",
-    "_sql_kg_cardinality_profile",
-    "q_kg_join_cardinality",
-    "_sql_kg_join_cardinality",
-    "q_kg_rich_club",
-    "_sql_kg_rich_club",
-    "q_kg_domain_range_audit",
-    "_sql_kg_domain_range_audit",
-    "q_kg_reciprocity",
-    "_sql_kg_reciprocity",
-    "q_kg_salt_planner",
-    "_sql_kg_salt_planner",
-    "q_kg_thread_stats",
-    "_sql_kg_thread_stats",
-    "q_kg_storage_model",
-    "_sql_kg_storage_model",
-]
 
 
 def _sql_kg_entity_salience() -> str:

@@ -1,9 +1,4 @@
-"""Driver queries: `multimodal` domain (part 1).
-
-Generated from plans/driver_queries.py by scripts/split_driver_queries.py
-(round 5); original source order preserved. Do not edit the monolith
-back into existence — edit here.
-"""
+"""Driver queries: `multimodal` domain."""
 
 from __future__ import annotations
 
@@ -13,21 +8,6 @@ from pyspark.sql import functions as F
 
 
 from ._shared import *  # noqa: F401,F403
-
-__all__ = [
-    "q_multimodal_frames",
-    "SQL_MULTIMODAL_FRAMES",
-    "q_multimodal_decode",
-    "_sql_multimodal_decode",
-    "q_multimodal_stats",
-    "SQL_MULTIMODAL_STATS",
-    "q_multimodal_resize",
-    "_sql_multimodal_resize",
-    "q_multimodal_phash",
-    "_sql_multimodal_phash",
-    "q_multimodal_patches",
-    "_sql_multimodal_patches",
-]
 
 
 def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:

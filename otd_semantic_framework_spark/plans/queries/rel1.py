@@ -1,9 +1,4 @@
-"""Driver queries: `rel` domain (part 1).
-
-Generated from plans/driver_queries.py by scripts/split_driver_queries.py
-(round 5); original source order preserved. Do not edit the monolith
-back into existence — edit here.
-"""
+"""Driver queries: `rel` domain (part 1)."""
 
 from __future__ import annotations
 
@@ -13,106 +8,6 @@ from pyspark.sql import functions as F
 
 
 from ._shared import *  # noqa: F401,F403
-
-__all__ = [
-    "q_rel_heavy_hitters",
-    "SQL_REL_HEAVY_HITTERS",
-    "SQL_REL_PRICING",
-    "q_rel_pricing",
-    "SQL_REL_NATION_REVENUE",
-    "q_rel_nation_revenue",
-    "SQL_REL_SEMI_ANTI",
-    "q_rel_semi_anti",
-    "SQL_REL_WINDOW_TOPK",
-    "q_rel_window_topk",
-    "SQL_REL_ROLLUP",
-    "q_rel_rollup",
-    "SQL_REL_SETOPS",
-    "q_rel_setops",
-    "SQL_REL_STRINGS",
-    "q_rel_strings",
-    "q_rel_monthly_orders",
-    "SQL_REL_MONTHLY_ORDERS",
-    "q_rel_json",
-    "SQL_REL_JSON",
-    "q_rel_sessionize",
-    "SQL_REL_SESSIONIZE",
-    "q_rel_asof_join",
-    "SQL_REL_ASOF",
-    "q_rel_unpivot",
-    "SQL_REL_UNPIVOT",
-    "SQL_REL_PERCENTILES",
-    "q_rel_percentiles",
-    "SQL_REL_SUBQUERIES",
-    "q_rel_subqueries",
-    "q_rel_salted_agg",
-    "SQL_REL_SALTED_AGG",
-    "SQL_REL_STATS_AGG",
-    "q_rel_stats_agg",
-    "SQL_REL_GROUPING_SETS",
-    "q_rel_grouping_sets",
-    "SQL_REL_LATERAL",
-    "q_rel_lateral",
-    "SQL_REL_RANGE_FRAME",
-    "q_rel_range_frame",
-    "q_rel_pivot",
-    "SQL_REL_PIVOT",
-    "SQL_REL_WINDOW_ANALYTICS",
-    "q_rel_window_analytics",
-    "q_rel_range_join",
-    "SQL_REL_RANGE_JOIN",
-    "q_rel_datefns",
-    "SQL_REL_DATEFNS",
-    "q_rel_collect_list",
-    "SQL_REL_COLLECT_LIST",
-    "SQL_REL_CUBE",
-    "q_rel_cube",
-    "SQL_REL_MISC_FNS",
-    "q_rel_misc_fns",
-    "SQL_REL_ARRAY_FNS",
-    "q_rel_array_fns",
-    "q_rel_profile",
-    "_sql_rel_profile",
-    "q_rel_scd2",
-    "SQL_REL_SCD2",
-    "q_rel_skew_profile",
-    "SQL_REL_SKEW_PROFILE",
-    "q_rel_pit_join",
-    "SQL_REL_PIT_JOIN",
-    "q_rel_funnel",
-    "SQL_REL_FUNNEL",
-    "q_rel_window_dist",
-    "SQL_REL_WINDOW_DIST",
-    "q_rel_funnel_latency",
-    "SQL_REL_FUNNEL_LATENCY",
-    "q_rel_retention",
-    "SQL_REL_RETENTION",
-    "q_rel_kanon",
-    "SQL_REL_KANON",
-    "q_rel_islands",
-    "SQL_REL_ISLANDS",
-    "q_rel_ks_drift",
-    "_sql_rel_ks_drift",
-    "q_rel_benford",
-    "_sql_rel_benford",
-    "q_rel_gapfill",
-    "SQL_REL_GAPFILL",
-    "q_rel_changepoint",
-    "SQL_REL_CHANGEPOINT",
-    "q_rel_concurrency",
-    "SQL_REL_CONCURRENCY",
-    "q_rel_outliers",
-    "SQL_REL_OUTLIERS",
-    "q_rel_seq_patterns",
-    "SQL_REL_SEQ_PATTERNS",
-    "q_rel_skyline",
-    "SQL_REL_SKYLINE",
-    "q_rel_nearest_event",
-    "SQL_REL_NEAREST_EVENT",
-    "q_rel_fk_discovery",
-    "_sql_rel_fk_discovery",
-    "q_rel_chisq",
-]
 
 
 def q_rel_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:

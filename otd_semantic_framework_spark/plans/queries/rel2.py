@@ -1,9 +1,4 @@
-"""Driver queries: `rel` domain (part 2).
-
-Generated from plans/driver_queries.py by scripts/split_driver_queries.py
-(round 5); original source order preserved. Do not edit the monolith
-back into existence — edit here.
-"""
+"""Driver queries: `rel` domain (part 2)."""
 
 from __future__ import annotations
 
@@ -13,52 +8,6 @@ from pyspark.sql import functions as F
 
 
 from ._shared import *  # noqa: F401,F403
-
-__all__ = [
-    "SQL_REL_CHISQ",
-    "q_rel_attribution",
-    "_sql_rel_attribution",
-    "q_rel_basket_rules",
-    "_sql_rel_basket_rules",
-    "q_rel_rfm",
-    "_sql_rel_rfm",
-    "q_rel_abtest",
-    "_sql_rel_abtest",
-    "q_rel_ltv",
-    "_sql_rel_ltv",
-    "q_rel_ri_audit",
-    "_sql_rel_ri_audit",
-    "q_rel_new_returning",
-    "_sql_rel_new_returning",
-    "q_rel_user_entropy",
-    "_sql_rel_user_entropy",
-    "q_rel_velocity",
-    "_sql_rel_velocity",
-    "q_rel_stickiness",
-    "_sql_rel_stickiness",
-    "q_rel_dormancy",
-    "_sql_rel_dormancy",
-    "q_rel_growth_accounting",
-    "_sql_rel_growth_accounting",
-    "q_rel_anova",
-    "_sql_rel_anova",
-    "q_rel_error_cascade",
-    "_sql_rel_error_cascade",
-    "q_rel_fulfillment",
-    "_sql_rel_fulfillment",
-    "q_rel_hhi_trend",
-    "_sql_rel_hhi_trend",
-    "q_rel_sla_inversion",
-    "_sql_rel_sla_inversion",
-    "q_rel_simpson",
-    "_sql_rel_simpson",
-    "q_rel_pvm_bridge",
-    "_sql_rel_pvm_bridge",
-    "q_rel_interaction",
-    "_sql_rel_interaction",
-    "q_rel_calendar_effects",
-    "_sql_rel_calendar_effects",
-]
 
 
 SQL_REL_CHISQ = """

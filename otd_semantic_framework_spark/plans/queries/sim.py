@@ -1,9 +1,4 @@
-"""Driver queries: `sim` domain (part 1).
-
-Generated from plans/driver_queries.py by scripts/split_driver_queries.py
-(round 5); original source order preserved. Do not edit the monolith
-back into existence — edit here.
-"""
+"""Driver queries: `sim` domain."""
 
 from __future__ import annotations
 
@@ -13,74 +8,6 @@ from pyspark.sql import functions as F
 
 
 from ._shared import *  # noqa: F401,F403
-
-__all__ = [
-    "q_sim_topk_cosine",
-    "SQL_SIM_TOPK",
-    "_sql_vec_lit",
-    "q_sim_ann_lsh",
-    "_sql_sim_ann_lsh",
-    "q_sim_ann_ivf",
-    "_sql_sim_ann_ivf",
-    "q_sim_quantized_topk",
-    "q_sim_maxsim_topk",
-    "SQL_SIM_MAXSIM_TOPK_TMPL",
-    "SQL_SIM_QUANTIZED_TOPK_TMPL",
-    "q_sim_recall",
-    "_sql_sim_recall",
-    "q_sim_kmeans",
-    "_sql_kmeans_dist",
-    "_sql_kmeans_ctes",
-    "_sql_sim_kmeans",
-    "q_sim_silhouette",
-    "_sql_sim_silhouette",
-    "q_sim_pq_topk",
-    "SQL_SIM_PQ_TOPK_TMPL",
-    "q_sim_two_stage",
-    "_sql_sim_two_stage",
-    "q_sim_rrf_fusion",
-    "_sql_sim_rrf_fusion",
-    "q_sim_cluster_ari",
-    "_sql_sim_cluster_ari",
-    "q_sim_prefix_recall",
-    "_sql_sim_prefix_recall",
-    "q_sim_conv_pool",
-    "_sql_sim_conv_pool",
-    "q_sim_centroid_drift",
-    "_sql_sim_centroid_drift",
-    "q_sim_knn_graph",
-    "_sql_sim_knn_graph",
-    "q_sim_semantic_clusters",
-    "_sql_sim_semantic_clusters",
-    "q_sim_outliers",
-    "_sql_sim_outliers",
-    "q_sim_ann_sweep",
-    "_sql_sim_ann_sweep",
-    "q_sim_bucket_balance",
-    "_sql_sim_bucket_balance",
-    "q_sim_pq_recall",
-    "_sql_sim_pq_recall",
-    "q_sim_label_calibration",
-    "_sql_sim_label_calibration",
-    "q_sim_dim_variance",
-    "_sql_sim_dim_variance",
-    "q_sim_triplet_mining",
-    "_sql_sim_triplet_mining",
-    "q_sim_hubness",
-    "_sql_sim_hubness",
-    "q_sim_norm_audit",
-    "_sql_sim_norm_audit",
-    "q_sim_knn_label_smooth",
-    "_sql_sim_knn_label_smooth",
-    "q_sim_intrinsic_dim",
-    "_sql_sim_intrinsic_dim",
-    "q_sim_ivf_sweep",
-    "_sql_sim_ivf_sweep",
-    "q_sim_anisotropy",
-    "_sql_sim_anisotropy",
-    "q_sim_mahalanobis_ood",
-    "_sql_sim_mahalanobis_ood",
-]
 
 
 def q_sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -263,7 +190,7 @@ def q_sim_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return maxsim_topk(q, c, k=SIM_TOP_K)
 
 
-SQL_SIM_MAXSIM_TOPK_TMPL = """
+SQL_SIM_MAXSIM_TOPK = """
 WITH q8 AS (
   SELECT vec_id,
          CASE WHEN ma = 0 THEN list_transform(d, x -> 0)
@@ -288,10 +215,11 @@ SELECT qid, cid, maxsim, rk FROM (
          row_number() OVER (PARTITION BY qid
                             ORDER BY maxsim DESC, cid ASC) AS rk
   FROM sim) WHERE rk <= {k}
-"""
+""".format(
+    t=MAXSIM_TOKENS, w=64 // MAXSIM_TOKENS, n_query=N_QUERY_VECS, k=SIM_TOP_K)
 
 
-SQL_SIM_QUANTIZED_TOPK_TMPL = """
+SQL_SIM_QUANTIZED_TOPK = """
 WITH q8 AS (
   SELECT vec_id,
          CASE WHEN ma = 0 THEN list_transform(d, x -> 0)
@@ -312,7 +240,7 @@ SELECT qid, cid, qdot, rk FROM (
          row_number() OVER (PARTITION BY qid
                             ORDER BY qdot DESC, cid ASC) AS rk
   FROM sim) WHERE rk <= {k}
-"""
+""".format(n_query=N_QUERY_VECS, k=SIM_TOP_K)
 
 
 def q_sim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -492,7 +420,7 @@ def q_sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_adc_topk(q, enc, cb, PQ_SUBS, PQ_CODES, k=SIM_TOP_K)
 
 
-SQL_SIM_PQ_TOPK_TMPL = """
+SQL_SIM_PQ_TOPK = """
 WITH q8 AS (
   SELECT vec_id,
          CASE WHEN ma = 0 THEN list_transform(d, x -> 0)
@@ -539,7 +467,9 @@ SELECT qid, cid, adc_dist, rk FROM (
          row_number() OVER (PARTITION BY qid
                             ORDER BY adc_dist ASC, cid ASC) AS rk
   FROM dist) WHERE rk <= {k}
-"""
+""".format(
+    n_query=N_QUERY_VECS, K=PQ_CODES, M=PQ_SUBS, w=64 // PQ_SUBS,
+    k=SIM_TOP_K)
 
 
 # ---------------------------------------------------------------------------
@@ -1421,9 +1351,7 @@ def q_sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_sim_pq_recall() -> str:
     bf = SQL_SIM_TOPK.strip().rstrip(";")
-    pq = SQL_SIM_PQ_TOPK_TMPL.format(
-        n_query=N_QUERY_VECS, K=PQ_CODES, M=PQ_SUBS,
-        w=64 // PQ_SUBS, k=SIM_TOP_K).strip().rstrip(";")
+    pq = SQL_SIM_PQ_TOPK.strip().rstrip(";")
     return f"""
 WITH bf AS MATERIALIZED (SELECT qid, cid FROM ({bf})),
 pq AS MATERIALIZED (SELECT qid, cid FROM ({pq})),

@@ -1,9 +1,4 @@
-"""Driver queries: `stats` domain (part 1).
-
-Generated from plans/driver_queries.py by scripts/split_driver_queries.py
-(round 5); original source order preserved. Do not edit the monolith
-back into existence — edit here.
-"""
+"""Driver queries: `stats` domain."""
 
 from __future__ import annotations
 
@@ -19,71 +14,6 @@ import math as _math
 #: literal, so no cross-engine transcendental is ever compared.
 
 from ._shared import *  # noqa: F401,F403
-
-__all__ = [
-    "q_stats_cms_tokens",
-    "_sql_stats_cms_tokens",
-    "q_stats_binned_quantiles",
-    "SQL_STATS_BINNED_QUANTILES",
-    "q_stats_kmv_distinct",
-    "_sql_stats_kmv_distinct",
-    "q_stats_bootstrap_ci",
-    "_sql_stats_bootstrap_ci",
-    "q_stats_welch",
-    "_sql_stats_welch",
-    "q_stats_autocorr",
-    "_sql_stats_autocorr",
-    "q_stats_runs",
-    "_sql_stats_runs",
-    "q_stats_seasonality",
-    "_sql_stats_seasonality",
-    "q_stats_evt",
-    "_sql_stats_evt",
-    "q_stats_chao1",
-    "_sql_stats_chao1",
-    "q_stats_jackknife",
-    "_sql_stats_jackknife",
-    "q_stats_ewma",
-    "_sql_stats_ewma",
-    "q_stats_backtest",
-    "_sql_stats_backtest",
-    "q_stats_anomaly_days",
-    "_sql_stats_anomaly_days",
-    "q_stats_mannwhitney",
-    "_sql_stats_mannwhitney",
-    "q_stats_trend",
-    "_sql_stats_trend",
-    "q_stats_friedman",
-    "_sql_stats_friedman",
-    "q_stats_dispersion",
-    "_sql_stats_dispersion",
-    "q_stats_control_chart",
-    "_sql_stats_control_chart",
-    "q_stats_ccf",
-    "_sql_stats_ccf",
-    "q_stats_interarrival",
-    "_sql_stats_interarrival",
-    "q_stats_psi",
-    "_sql_stats_psi",
-    "q_stats_records",
-    "_sql_stats_records",
-    "q_stats_mix_shift",
-    "_sql_stats_mix_shift",
-    "q_stats_entropy_rate",
-    "_sql_stats_entropy_rate",
-    "q_stats_transition_drift",
-    "_sql_stats_transition_drift",
-    "q_stats_circadian",
-    "_sql_stats_circadian",
-    "q_stats_survival",
-    "_sql_stats_survival",
-    "q_stats_qq_shift",
-    "_sql_stats_qq_shift",
-    "q_stats_longmemory",
-    "_sql_stats_longmemory",
-    "q_stats_cusum",
-    "_sql_stats_cusum",
-]
 
 
 def q_stats_cms_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:

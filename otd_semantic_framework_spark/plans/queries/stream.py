@@ -1,9 +1,4 @@
-"""Driver queries: `stream` domain (part 1).
-
-Generated from plans/driver_queries.py by scripts/split_driver_queries.py
-(round 5); original source order preserved. Do not edit the monolith
-back into existence — edit here.
-"""
+"""Driver queries: `stream` domain."""
 
 from __future__ import annotations
 
@@ -13,27 +8,6 @@ from pyspark.sql import functions as F
 
 
 from ._shared import *  # noqa: F401,F403
-
-__all__ = [
-    "q_stream_sessionize",
-    "SQL_STREAM_SESSIONIZE",
-    "q_stream_join",
-    "SQL_STREAM_JOIN",
-    "q_stream_triples",
-    "q_stream_dedup",
-    "SQL_STREAM_DEDUP",
-    "q_stream_attrition",
-    "q_stream_upsert",
-    "SQL_STREAM_UPSERT",
-    "q_stream_topk",
-    "SQL_STREAM_TOPK",
-    "q_stream_cds",
-    "q_stream_late_audit",
-    "_sql_stream_late_audit",
-    "q_stream_stateful_counts",
-    "_sql_stream_stateful_counts",
-    "q_stream_scd2",
-]
 
 
 def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,9 +1,4 @@
-"""Driver queries: `text` domain (part 1).
-
-Generated from plans/driver_queries.py by scripts/split_driver_queries.py
-(round 5); original source order preserved. Do not edit the monolith
-back into existence — edit here.
-"""
+"""Driver queries: `text` domain."""
 
 from __future__ import annotations
 
@@ -13,71 +8,6 @@ from pyspark.sql import functions as F
 
 
 from ._shared import *  # noqa: F401,F403
-
-__all__ = [
-    "q_text_tfidf",
-    "SQL_TEXT_TFIDF",
-    "q_text_quality",
-    "SQL_TEXT_QUALITY",
-    "q_text_fingerprint",
-    "SQL_TEXT_FINGERPRINT",
-    "q_text_token_counts",
-    "SQL_TEXT_TOKEN_COUNTS",
-    "q_text_winnow",
-    "_sql_text_winnow",
-    "q_text_langid",
-    "_sql_text_langid",
-    "q_text_langid_eval",
-    "_sql_text_langid_eval",
-    "q_text_redact",
-    "_sql_text_redact",
-    "q_text_contamination",
-    "SQL_TEXT_CONTAMINATION",
-    "q_text_repetition",
-    "SQL_TEXT_REPETITION",
-    "q_text_bm25",
-    "_sql_text_bm25",
-    "q_text_perplexity",
-    "SQL_TEXT_PERPLEXITY",
-    "q_text_hash_classifier",
-    "_sql_text_hash_classifier",
-    "q_text_ttr",
-    "SQL_TEXT_TTR",
-    "q_text_boilerplate",
-    "SQL_TEXT_BOILERPLATE",
-    "q_text_vocab",
-    "SQL_TEXT_VOCAB",
-    "q_text_source_overlap",
-    "SQL_TEXT_SOURCE_OVERLAP",
-    "q_text_zipf",
-    "SQL_TEXT_ZIPF",
-    "q_text_readability",
-    "SQL_TEXT_READABILITY",
-    "q_text_keyphrase",
-    "_sql_text_keyphrase",
-    "q_text_collocations",
-    "_sql_text_collocations",
-    "q_text_jsd_sources",
-    "_sql_text_jsd_sources",
-    "q_text_burstiness",
-    "_sql_text_burstiness",
-    "q_text_vocab_coverage",
-    "_sql_text_vocab_coverage",
-    "q_text_gini",
-    "_sql_text_gini",
-    "q_text_heaps",
-    "_sql_text_heaps",
-    "q_text_code_detect",
-    "_sql_text_code_detect",
-    "q_text_blocklist",
-    "_sql_text_blocklist",
-    "q_text_class_entropy",
-    "_sql_text_class_entropy",
-    "q_text_memorization",
-    "_sql_text_memorization",
-    "q_text_instruction_detect",
-    "_sql_text_instruction_detect",
-]
 
 
 def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:

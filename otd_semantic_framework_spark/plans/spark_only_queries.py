@@ -45,8 +45,6 @@ def q_multimodal_decode_pil(spark: SparkSession,
 
 
 def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # kg_fast_pipeline and the multimodal queries moved to driver_queries
-    # in r2 — all gained full DuckDB oracles
     return {
         "dedup_minhash_fast": q_dedup_minhash_fast,
         "stats_approx_distinct": q_stats_approx_distinct,

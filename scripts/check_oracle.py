@@ -5,6 +5,10 @@ value hash (columns sorted by name, rows sorted, values stringified
 with floats rounded).
 
 Usage: python scripts/check_oracle.py [sf_dir] [query ...]
+
+An argument that is neither an existing sf dir (first position only) nor
+a registered query name is an error, reported before Spark starts; a run
+that checks zero queries fails.
 """
 
 from __future__ import annotations
@@ -52,12 +56,20 @@ def frame_hash(pdf: pd.DataFrame) -> str:
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 and os.path.isdir(sys.argv[1]) \
-        else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:]) if len(sys.argv) > 2 else (
-        set(sys.argv[1:]) if len(sys.argv) > 1 and not os.path.isdir(sys.argv[1]) else None)
+    args = sys.argv[1:]
+    sf_dir = "/root/testdata/sf0.01"
+    if args and os.path.isdir(args[0]):
+        sf_dir, args = args[0], args[1:]
 
     import __spark_entry__ as E
+    queries = E.queries()
+    unknown = [a for a in args if a not in queries]
+    if unknown:
+        print(f"unknown query names (the sf dir must be an existing "
+              f"directory in first position): {unknown}", file=sys.stderr)
+        return 2
+    only = set(args)
+
     from otd_semantic_framework_spark.session import get_spark
 
     # CHECK_MASTER/CHECK_PARTITIONS: re-verify under a different layout
@@ -73,12 +85,13 @@ def main() -> int:
         if os.path.exists(p):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
-    queries = E.queries()
     oracles = E.oracle_sql()
     failures = []
+    checked = 0
     for name, fn in queries.items():
         if only and name not in only:
             continue
+        checked += 1
         t0 = time.time()
         try:
             spdf = fn(spark, sf_dir).toPandas()
@@ -115,7 +128,10 @@ def main() -> int:
                 for a, b in diff:
                     print(f"    spark: {a[:160]}")
                     print(f"    duck : {b[:160]}")
-    print(f"\n{len(failures)} failures: {failures}" if failures else "\nALL OK")
+    print(f"\n{checked} queries checked")
+    if not checked:
+        failures.append("<no queries checked>")
+    print(f"{len(failures)} failures: {failures}" if failures else "ALL OK")
     spark.stop()
     return 1 if failures else 0
 

@@ -84,8 +84,7 @@ def test_scd2_tiebreak_deterministic(spark):
 
 
 def test_pit_join_exactly_one_version_per_event(spark):
-    from otd_semantic_framework_spark.plans.driver_queries import (
-        q_rel_pit_join)
+    from otd_semantic_framework_spark.plans.queries.rel1 import q_rel_pit_join
     sf = "/root/testdata/sf0.001"
     out = q_rel_pit_join(spark, sf)
     n_events = spark.read.parquet(f"{sf}/events.parquet").count()

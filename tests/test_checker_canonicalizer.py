@@ -41,3 +41,22 @@ def test_frame_hash_distinguishes_signed_zero():
     a = pd.DataFrame({"x": [0.0]})
     b = pd.DataFrame({"x": [-0.0]})
     assert frame_hash(a) != frame_hash(b)
+
+
+def test_unknown_query_name_fails_before_spark(monkeypatch, capsys):
+    # an unknown name (a mistyped sf path, `--sf`, a typo) must not
+    # become a filter that matches nothing and prints ALL OK
+    import check_oracle
+
+    from otd_semantic_framework_spark import session
+
+    def no_spark(*a, **k):
+        raise AssertionError("Spark started before names were validated")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    monkeypatch.setattr(sys, "argv", [
+        "check_oracle.py", "--sf", "/no/such/sf0.01", "kg_triples"])
+    assert check_oracle.main() != 0
+    err = capsys.readouterr().err
+    assert "'--sf'" in err and "'/no/such/sf0.01'" in err
+    assert "'kg_triples'" not in err

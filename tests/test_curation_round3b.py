@@ -74,7 +74,7 @@ def test_stream_dedup_matches_batch(spark, tmp_path):
     sf_dir = tmp_path / "sf"
     sf_dir.mkdir()
     spark.createDataFrame(pdf).write.parquet(str(sf_dir / "documents.parquet"))
-    from otd_semantic_framework_spark.plans.driver_queries import (
+    from otd_semantic_framework_spark.plans.queries.stream import (
         q_stream_dedup)
     got = q_stream_dedup(spark, str(sf_dir))
     batch = (spark.read.parquet(str(sf_dir / "documents.parquet"))

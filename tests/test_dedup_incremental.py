@@ -44,8 +44,9 @@ def test_incremental_empty_corpus(spark):
 
 def test_conv_rollup_consistency(spark):
     # rollup counts must agree with direct recomputes on the same input
-    from otd_semantic_framework_spark.plans.driver_queries import (
-        derived_transcripts, q_kg_conv_rollup, _mentions_df)
+    from otd_semantic_framework_spark.plans.queries._shared import (
+        derived_transcripts, _mentions_df)
+    from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_conv_rollup
     sf = "/root/testdata/sf0.001"
     out = {r.conv_id: r for r in q_kg_conv_rollup(spark, sf).collect()}
     t = derived_transcripts(spark, sf)

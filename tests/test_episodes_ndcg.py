@@ -3,8 +3,9 @@ nDCG@10 search evaluation."""
 
 from __future__ import annotations
 
-from otd_semantic_framework_spark.plans.driver_queries import (
-    EPISODE_JACCARD, q_kg_episodes, q_kg_search_ndcg)
+from otd_semantic_framework_spark.plans.queries._shared import EPISODE_JACCARD
+from otd_semantic_framework_spark.plans.queries.kg1 import (
+    q_kg_episodes, q_kg_search_ndcg)
 
 SF = "/root/testdata/sf0.001"
 
@@ -49,7 +50,7 @@ def test_ndcg_invariants(spark):
 
 
 def test_degree_dist_consistent(spark):
-    from otd_semantic_framework_spark.plans.driver_queries import (
+    from otd_semantic_framework_spark.plans.queries.kg1 import (
         q_kg_degree_dist, q_kg_triples)
     rows = q_kg_degree_dist(spark, SF).collect()
     t = q_kg_triples(spark, SF)
@@ -59,8 +60,7 @@ def test_degree_dist_consistent(spark):
 
 
 def test_coverage_partition(spark):
-    from otd_semantic_framework_spark.plans.driver_queries import (
-        q_kg_coverage)
+    from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_coverage
     rows = q_kg_coverage(spark, SF).collect()
     assert rows
     for r in rows:

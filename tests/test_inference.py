@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from otd_semantic_framework_spark.operators.triples import (
     ancestor_expansion, infer_broader_triples)
 from otd_semantic_framework_spark.plans.driver_ontology import driver_concepts
-from otd_semantic_framework_spark.plans.driver_queries import (
+from otd_semantic_framework_spark.plans.queries.kg1 import (
     q_kg_inferred_triples)
 
 SF = "/root/testdata/sf0.001"
@@ -220,7 +220,7 @@ def test_search_closure_rank_window_is_bounded_and_results_sane(spark):
     partitionless window over unbounded input — the repo plan gate also
     walks it) and returns a valid dense ranking whose scores are
     >= the asserted-only contribution for every returned conv."""
-    from otd_semantic_framework_spark.plans.driver_queries import (
+    from otd_semantic_framework_spark.plans.queries.kg1 import (
         q_kg_search_closure)
     rows = q_kg_search_closure(spark, SF).collect()
     assert 0 < len(rows) <= 20
@@ -235,8 +235,10 @@ def test_branch_rollup_conserves_tag_mass(spark):
     """Every (conv, concept) tag except root-level ones maps to exactly
     one branch, so per-branch ppm masses must sum to the total tag mass
     and n_convs is bounded by the corpus conv count."""
-    from otd_semantic_framework_spark.plans.driver_queries import (
-        N_CONVS, _branch_map_pdf, q_kg_branch_rollup, q_kg_canonical)
+    from otd_semantic_framework_spark.plans.queries._shared import (
+        N_CONVS, _branch_map_pdf)
+    from otd_semantic_framework_spark.plans.queries.kg1 import (
+        q_kg_branch_rollup, q_kg_canonical)
     rolled = q_kg_branch_rollup(spark, SF).collect()
     assert 0 < len(rolled) <= 8
     canon = q_kg_canonical(spark, SF)

@@ -170,7 +170,7 @@ def test_range_join_is_hash_not_bnl(spark):
     """The interval self-join must plan as a HASH join on the epoch-hour
     equi-conjunct (range predicate as residual) — never a
     broadcast-nested-loop over the full table (VERDICT r1 #6)."""
-    from otd_semantic_framework_spark.plans.driver_queries import (
+    from otd_semantic_framework_spark.plans.queries.rel1 import (
         q_rel_range_join)
     plan = _plan(q_rel_range_join(spark, "/root/testdata/sf0.001"))
     assert "BroadcastNestedLoop" not in plan

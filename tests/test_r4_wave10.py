@@ -30,7 +30,7 @@ class TestContainment:
         assert r.jaccard_ppm == 250_000  # would NOT pass a jaccard gate
 
     def test_one_best_container_per_doc(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.dedup import (
             q_dedup_containment)
         out = q_dedup_containment(spark, SF).cache()
         assert out.count() > 0
@@ -43,8 +43,10 @@ class TestContainment:
 
 class TestDescribe:
     def test_cbd_extent(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_describe, q_kg_triples, DESCRIBE_NODE)
+        from otd_semantic_framework_spark.plans.queries.kg1 import (
+            q_kg_describe, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            DESCRIBE_NODE)
         out = q_kg_describe(spark, SF).cache()
         tr = q_kg_triples(spark, SF).cache()
         # every 'incident' row touches the node; no 'neighbor' row does
@@ -73,9 +75,11 @@ class TestTwoStage:
     def test_rerank_stays_within_stage1_shortlist(self, spark):
         from otd_semantic_framework_spark.operators.simsearch import (
             ann_ivf_topk)
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_sim_two_stage, N_QUERY_VECS, SIM_TOP_K, TWO_STAGE_SHORTLIST,
-            IVF_N_CELLS, IVF_N_PROBE)
+        from otd_semantic_framework_spark.plans.queries.sim import (
+            q_sim_two_stage)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            N_QUERY_VECS, SIM_TOP_K, TWO_STAGE_SHORTLIST, IVF_N_CELLS,
+            IVF_N_PROBE)
         out = q_sim_two_stage(spark, SF).cache()
         assert out.count() == N_QUERY_VECS * SIM_TOP_K
         e = spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -99,8 +103,10 @@ class TestTwoStage:
 
 class TestWalkPairs:
     def test_symmetry_and_window_reach(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_random_walks, q_kg_walk_pairs, WALK_PAIR_WINDOW)
+        from otd_semantic_framework_spark.plans.queries.kg1 import (
+            q_kg_random_walks, q_kg_walk_pairs)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            WALK_PAIR_WINDOW)
         out = q_kg_walk_pairs(spark, SF).cache()
         got = {(r.center, r.context): r.n_pairs for r in out.collect()}
         assert got, "walk corpus produced no pairs"

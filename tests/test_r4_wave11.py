@@ -19,7 +19,7 @@ TRANSCRIPT_SCHEMA = ("conv_id string, turn_idx int, role string, "
 
 class TestDirectMapping:
     def test_fk_closure_is_complete(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg1 import (
             q_kg_direct_mapping)
         out = q_kg_direct_mapping(spark, SF).cache()
         # every FK reference object resolves to a mapped subject
@@ -35,8 +35,10 @@ class TestDirectMapping:
         out.unpersist()
 
     def test_slice_and_set_semantics(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            DIRECT_MAP_MODULUS, q_kg_direct_mapping)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            DIRECT_MAP_MODULUS)
+        from otd_semantic_framework_spark.plans.queries.kg1 import (
+            q_kg_direct_mapping)
         out = q_kg_direct_mapping(spark, SF).cache()
         assert out.count() == out.distinct().count()
         orders = (out.filter(F.col("pred") == "rdf:type")
@@ -75,7 +77,7 @@ class TestFactFusion:
         assert c2.conf_ppm < c1.conf_ppm < 1_000_000
 
     def test_paired_query_runs(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg1 import (
             q_kg_fact_fusion)
         out = q_kg_fact_fusion(spark, SF).cache()
         assert out.count() > 0
@@ -103,7 +105,7 @@ class TestOpenRelations:
     def test_args_never_triggers_or_stopwords(self, spark):
         from otd_semantic_framework_spark.operators.construct import (
             OPENIE_STOP, OPENIE_TRIGGERS)
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg1 import (
             q_kg_open_relations)
         out = q_kg_open_relations(spark, SF).cache()
         assert out.count() > 0
@@ -116,7 +118,7 @@ class TestOpenRelations:
 
 class TestDialogueActs:
     def test_transition_normalization(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg1 import (
             q_kg_dialogue_acts)
         out = q_kg_dialogue_acts(spark, SF).cache()
         # row-normalization: per prev_act, p_ppm sums to 1e6 minus
@@ -127,7 +129,7 @@ class TestDialogueActs:
         for r in sums:
             assert 1_000_000 - r.k < r.s <= 1_000_000
         # every conversation contributes exactly one <start> transition
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries._shared import (
             derived_transcripts)
         n_convs = (derived_transcripts(spark, SF)
                    .select("conv_id").distinct().count())
@@ -177,8 +179,10 @@ class TestBlockingAudit:
         corpus — pin that equality, plus the metric bounds."""
         from otd_semantic_framework_spark.operators.dedup import (
             minhash_dedup_pairs)
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            JACCARD_MAX_DOC, MINHASH_THRESHOLD, q_dedup_blocking_audit)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            JACCARD_MAX_DOC, MINHASH_THRESHOLD)
+        from otd_semantic_framework_spark.plans.queries.dedup import (
+            q_dedup_blocking_audit)
         row = q_dedup_blocking_audit(spark, SF).collect()[0]
         assert 0 < row.n_hit <= min(row.n_cand, row.n_true)
         assert 0 < row.pairs_completeness_ppm <= 1_000_000

@@ -18,8 +18,10 @@ SF = "/root/testdata/sf0.001"
 
 class TestCorefLite:
     def test_antecedent_is_strictly_earlier_and_real(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _mentions_df, q_kg_coref_lite)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            _mentions_df)
+        from otd_semantic_framework_spark.plans.queries.kg1 import (
+            q_kg_coref_lite)
         out = q_kg_coref_lite(spark, SF).cache()
         assert out.count() > 0
         assert out.filter(F.col("antecedent_turn") >= F.col("turn_idx")
@@ -63,7 +65,7 @@ class TestEntitySalience:
     def test_topk_and_formula(self, spark):
         from otd_semantic_framework_spark.operators.construct import (
             SALIENCE_TOP_K, entity_salience)
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg1 import (
             q_kg_entity_salience)
         out = q_kg_entity_salience(spark, SF).cache()
         per_conv = out.groupBy("conv_id").agg(
@@ -88,8 +90,10 @@ class TestEntitySalience:
 
 class TestTurnNovelty:
     def test_novelty_curve_invariants(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _mentions_df, q_kg_turn_novelty)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            _mentions_df)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_turn_novelty)
         out = q_kg_turn_novelty(spark, SF).cache()
         assert out.filter(F.col("n_new") > F.col("n_concepts")).count() == 0
         # the first mention-bearing turn of each conv is 100% novel
@@ -132,8 +136,10 @@ class TestAliasTable:
         assert so.margin_ppm == 500000 and so.is_ambiguous == 0
 
     def test_paired_query_surfaces_match_corpus(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _mentions_df, q_kg_alias_table)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            _mentions_df)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_alias_table)
         out = q_kg_alias_table(spark, SF)
         corpus = _mentions_df(spark, SF).select("surface").distinct()
         assert out.join(corpus, "surface", "left_anti").count() == 0
@@ -154,7 +160,7 @@ class TestTransEScore:
     def test_score_bounds_and_rates(self, spark):
         from otd_semantic_framework_spark.operators.kgembed import (
             TRANSE_DIM, transe_margins)
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_transe_score)
         out = q_kg_transe_score(spark, SF).cache()
         rows = out.collect()

@@ -48,7 +48,7 @@ class TestRuleMining:
                              & (F.col("head_r") == "r")).count() == 1
 
     def test_paired_query_finds_topic_persistence(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_rule_mining)
         rows = q_kg_rule_mining(spark, SF).collect()
         got = {(r.body_p, r.body_q, r.head_r): r for r in rows}
@@ -86,7 +86,7 @@ class TestCompletenessEst:
         assert r.est_total is None and r.coverage_ppm is None
 
     def test_paired_query_sane(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_completeness_est)
         r = q_kg_completeness_est(spark, SF).collect()[0]
         assert r.n_overlap <= min(r.n_user, r.n_assistant)
@@ -96,7 +96,7 @@ class TestCompletenessEst:
 
 class TestFactConflicts:
     def test_queue_invariants(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_fact_conflicts)
         out = q_kg_fact_conflicts(spark, SF).cache()
         assert out.count() > 0
@@ -131,8 +131,10 @@ class TestFactConflicts:
 
 class TestDedupSavings:
     def test_consistent_with_components(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            JACCARD_MAX_DOC, q_dedup_components, q_dedup_savings)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            JACCARD_MAX_DOC)
+        from otd_semantic_framework_spark.plans.queries.dedup import (
+            q_dedup_components, q_dedup_savings)
         out = q_dedup_savings(spark, SF).cache()
         assert out.count() > 0
         assert out.filter(F.col("n_docs") < 2).count() == 0

@@ -16,8 +16,9 @@ T3 = "subj string, pred string, obj string"
 
 class TestSparqlSetops:
     def test_minus_removes_replying_turns_and_filter_holds(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_sparql_setops, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_sparql_setops)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
         out = q_kg_sparql_setops(spark, SF).cache()
         assert out.count() > 0
         assert out.filter(~F.col("c").rlike("^(dq:B|tool:)")).count() == 0
@@ -54,8 +55,7 @@ class TestReify:
     def test_roundtrip_reconstructs_graph(self, spark):
         from otd_semantic_framework_spark.operators.construct import (
             reify_triples)
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
         base = q_kg_triples(spark, SF).select("subj", "pred", "obj")
         r = reify_triples(base).cache()
         # pivot the four reification triples back into (subj, pred, obj)
@@ -81,8 +81,9 @@ class TestReify:
 
 class TestVoidStats:
     def test_void_counts_match_graph(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_triples, q_kg_void_stats)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_void_stats)
         out = q_kg_void_stats(spark, SF).cache()
         t = q_kg_triples(spark, SF).select("subj", "pred", "obj") \
             .distinct().cache()

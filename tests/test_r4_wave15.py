@@ -15,7 +15,7 @@ SF = "/root/testdata/sf0.001"
 
 class TestRelOutliers:
     def test_matches_pandas_recompute_per_type(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel1 import (
             q_rel_outliers)
         out = {r.event_type: r for r in q_rel_outliers(spark, SF).collect()}
         ev = pd.read_parquet(f"{SF}/events.parquet")
@@ -36,7 +36,7 @@ class TestRelOutliers:
             assert r.outlier_ppm == n_out * 1_000_000 // len(g)
 
     def test_outliers_are_a_minority(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel1 import (
             q_rel_outliers)
         for r in q_rel_outliers(spark, SF).collect():
             assert 0 <= r.n_outliers < r.n // 4
@@ -44,8 +44,10 @@ class TestRelOutliers:
 
 class TestRelSeqPatterns:
     def test_matches_pandas_trigrams_for_one_user(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_rel_seq_patterns, SEQ_MIN_SUPPORT)
+        from otd_semantic_framework_spark.plans.queries.rel1 import (
+            q_rel_seq_patterns)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            SEQ_MIN_SUPPORT)
         out = q_rel_seq_patterns(spark, SF).collect()
         assert out and all(r.support >= SEQ_MIN_SUPPORT for r in out)
         # independent recompute: total support over ALL trigrams equals
@@ -62,7 +64,7 @@ class TestRelSeqPatterns:
         assert got == expect
 
     def test_n_users_bounded_by_support(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel1 import (
             q_rel_seq_patterns)
         for r in q_rel_seq_patterns(spark, SF).collect():
             assert 1 <= r.n_users <= r.support
@@ -70,8 +72,10 @@ class TestRelSeqPatterns:
 
 class TestCurationTokenBudget:
     def test_budget_is_a_hard_cap_and_partition_is_exact(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_curation_token_budget, TOKEN_BUDGET)
+        from otd_semantic_framework_spark.plans.queries.curation import (
+            q_curation_token_budget)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            TOKEN_BUDGET)
         rows = q_curation_token_budget(spark, SF).collect()
         assert len(rows) == 20
         for r in rows:
@@ -82,8 +86,10 @@ class TestCurationTokenBudget:
     def test_greedy_longest_first_prefix(self, spark):
         """Kept set == longest-first greedy prefix recomputed in pandas
         for every domain (ties broken by doc_id ascending)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_curation_token_budget, TOKEN_BUDGET)
+        from otd_semantic_framework_spark.plans.queries.curation import (
+            q_curation_token_budget)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            TOKEN_BUDGET)
         got = {r.domain: (r.n_kept, r.tokens_kept)
                for r in q_curation_token_budget(spark, SF).collect()}
         docs = pd.read_parquet(f"{SF}/documents.parquet")
@@ -133,7 +139,7 @@ class TestKgCloseness:
     def test_cooccurrence_edges_floor_and_symmetry(self, spark):
         from otd_semantic_framework_spark.operators.graph import (
             cooccurrence_edges)
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries._shared import (
             _mentions_df, CLOSENESS_MIN_CONVS)
         edges = cooccurrence_edges(_mentions_df(spark, SF),
                                    min_convs=CLOSENESS_MIN_CONVS).cache()

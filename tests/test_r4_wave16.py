@@ -20,7 +20,7 @@ def _bucket(i: int, key: str, width: int) -> int:
 
 class TestCmsTokens:
     def test_never_undercounts_and_exact_total_preserved(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_cms_tokens)
         rows = q_stats_cms_tokens(spark, SF).collect()
         assert rows
@@ -32,7 +32,7 @@ class TestCmsTokens:
         per-token counts and check every estimate."""
         from otd_semantic_framework_spark.operators.sketch import (
             CMS_DEPTH, CMS_WIDTH)
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_cms_tokens)
         rows = q_stats_cms_tokens(spark, SF).collect()
         counters: dict[tuple[int, int], int] = {}
@@ -53,7 +53,7 @@ class TestCmsTokens:
         4 independent rows exists precisely to suppress it."""
         from otd_semantic_framework_spark.operators.sketch import (
             CMS_DEPTH, CMS_WIDTH)
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_cms_tokens)
         toks = [r.tok for r in q_stats_cms_tokens(spark, SF).collect()]
         collided = False
@@ -65,7 +65,7 @@ class TestCmsTokens:
 
 class TestDecayCds:
     def test_decay_bounded_by_raw_and_positive(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_decay_cds)
         rows = q_kg_decay_cds(spark, SF).collect()
         assert rows
@@ -75,8 +75,10 @@ class TestDecayCds:
         """A concept whose best mention sits ON the conversation's last
         turn decays by 1e6 DIV 1 = identity: decayed == raw. Verified
         against the canonical table directly."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_canonical, q_kg_decay_cds)
+        from otd_semantic_framework_spark.plans.queries.kg1 import (
+            q_kg_canonical)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_decay_cds)
         canon = q_kg_canonical(spark, SF)
         last = canon.groupBy("conv_id").agg(
             F.max("turn_idx").alias("last_turn"))

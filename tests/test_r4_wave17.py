@@ -16,7 +16,7 @@ class TestRelSkyline:
     def test_matches_bruteforce_dominance(self, spark):
         """Skyline == brute-force O(n²) per-source check: a doc is OUT
         iff some other doc is >= on both dims and > on at least one."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel1 import (
             q_rel_skyline)
         got = {(r.source, r.doc_id)
                for r in q_rel_skyline(spark, SF).collect()}
@@ -38,7 +38,7 @@ class TestRelSkyline:
         """Within a source, sorting distinct skyline points by n_chars
         descending must give strictly increasing distinct_toks — the
         defining staircase shape of a 2-D Pareto front."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel1 import (
             q_rel_skyline)
         rows = q_rel_skyline(spark, SF).collect()
         by_src: dict[str, list] = {}
@@ -54,8 +54,9 @@ class TestRelSkyline:
 
 class TestKgPredCooccur:
     def test_jaccard_consistent_with_pair_counts(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_pred_cooccur, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_pred_cooccur)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
         rows = q_kg_pred_cooccur(spark, SF).collect()
         assert rows
         per = (q_kg_triples(spark, SF).select("subj", "pred").distinct()
@@ -72,7 +73,7 @@ class TestKgPredCooccur:
     def test_mentions_and_replies_cooccur(self, spark):
         """Turns that reply also mention things in this corpus — the
         pair (mentions, replies_to) must be present with n_both > 0."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_pred_cooccur)
         pairs = {(r.pred_a, r.pred_b)
                  for r in q_kg_pred_cooccur(spark, SF).collect()}

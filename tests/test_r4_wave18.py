@@ -15,8 +15,10 @@ class TestBinnedQuantiles:
     def test_bin_brackets_exact_quantile(self, spark):
         """Each sketch bin must CONTAIN the exact (lower-interpolation)
         quantile of the raw data — the sketch's one-bin-width contract."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            BINQ_QUANTILES_PPM, q_stats_binned_quantiles)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            BINQ_QUANTILES_PPM)
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_binned_quantiles)
         out = {r.q_ppm: r for r in
                q_stats_binned_quantiles(spark, SF).collect()}
         assert set(out) == set(BINQ_QUANTILES_PPM)
@@ -32,8 +34,10 @@ class TestBinnedQuantiles:
 
     def test_cumulative_counts_consistent(self, spark):
         """cum_n must be monotone in q and == #values in bins <= bin."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            BINQ_WIDTH_CENTS, q_stats_binned_quantiles)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            BINQ_WIDTH_CENTS)
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_binned_quantiles)
         rows = sorted(q_stats_binned_quantiles(spark, SF).collect(),
                       key=lambda r: r.q_ppm)
         li = pd.read_parquet(f"{SF}/lineitem.parquet")
@@ -54,9 +58,11 @@ class TestCollectiveLinking:
         that blend over the self+4-neighbor candidate set."""
         from otd_semantic_framework_spark.plans.driver_ontology import (
             driver_wup)
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries._shared import (
             COLLECTIVE_TOP_K, COLLECTIVE_W_CTX, COLLECTIVE_W_PRIOR,
-            _mentions_df, q_kg_collective_linking)
+            _mentions_df)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_collective_linking)
         wup = {(r.concept_a, r.concept_b): round(r.wup * 1_000_000)
                for r in driver_wup().itertuples()}
         neighbors = {}
@@ -96,8 +102,10 @@ class TestCollectiveLinking:
         """Exactly one row per mention; the corpus must exercise BOTH
         branches (some picks flipped by context, most confirmed) or
         the operator is inert."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _mentions_df, q_kg_collective_linking)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            _mentions_df)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_collective_linking)
         out = q_kg_collective_linking(spark, SF).cache()
         n_mentions = (_mentions_df(spark, SF)
                       .select("conv_id", "turn_idx", "surface")
@@ -111,7 +119,7 @@ class TestNearestEvent:
     def test_matches_bruteforce_nearest(self, spark):
         """Every click maps to the per-user purchase minimizing |Δts|,
         tie to the earlier purchase — brute-forced in pandas."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel1 import (
             q_rel_nearest_event)
         out = {r.event_id: (r.purchase_id, r.delta_us, r.direction)
                for r in q_rel_nearest_event(spark, SF).collect()}
@@ -138,7 +146,7 @@ class TestNearestEvent:
         assert len(out) == n_with_purchase > 0
 
     def test_directions_both_exercised(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel1 import (
             q_rel_nearest_event)
         dirs = {r.direction for r in
                 q_rel_nearest_event(spark, SF).collect()}

@@ -15,8 +15,10 @@ SF = "/root/testdata/sf0.001"
 
 class TestConceptTransitions:
     def test_matches_pandas_recount(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _mentions_df, q_kg_concept_transitions)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            _mentions_df)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_concept_transitions)
         m = (_mentions_df(spark, SF)
              .select("conv_id", "turn_idx", "concept_id")
              .distinct().toPandas())
@@ -34,7 +36,7 @@ class TestConceptTransitions:
     def test_probabilities_sum_to_one_per_source(self, spark):
         """Σ p over dst per src must be 10^6 up to DIV-floor loss
         (< out-degree ulps)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_concept_transitions)
         got = q_kg_concept_transitions(spark, SF).toPandas()
         for src, g in got.groupby("src"):
@@ -47,8 +49,10 @@ class TestKmvDistinct:
         """est == (K-1)*SPACE // v_K recomputed from raw md5 hashes in
         Python, and the estimate lands within the standard ~1/sqrt(K)
         relative-error band (3 sigma) of the exact count."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            KMV_K, KMV_PREFIX_HEX, KMV_SPACE, q_stats_kmv_distinct)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            KMV_K, KMV_PREFIX_HEX, KMV_SPACE)
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_kmv_distinct)
         r = q_stats_kmv_distinct(spark, SF).collect()[0]
         orders = pd.read_parquet(f"{SF}/orders.parquet")
         hashes = sorted({hashlib.md5(str(v).encode()).hexdigest()
@@ -64,7 +68,7 @@ class TestKmvDistinct:
 
 class TestFkDiscovery:
     def test_known_keys_accepted_control_rejected(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel1 import (
             q_rel_fk_discovery)
         rows = {r.child_col: r for r in
                 q_rel_fk_discovery(spark, SF).collect()}
@@ -81,7 +85,7 @@ class TestFkDiscovery:
         assert 0 < ctl.containment_ppm < 1_000_000
 
     def test_containment_counts_are_distinct_based(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel1 import (
             q_rel_fk_discovery)
         li = pd.read_parquet(f"{SF}/lineitem.parquet")
         orders = pd.read_parquet(f"{SF}/orders.parquet")

@@ -21,7 +21,7 @@ class TestBoilerplate:
     def test_both_branches_and_reassembly(self, spark):
         from otd_semantic_framework_spark.operators.dedup import (
             boilerplate_segments)
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries._shared import (
             BOILER_DF_CAP, BOILER_SEG_WORDS)
         docs = _docs(spark)
         out = boilerplate_segments(docs, seg_words=BOILER_SEG_WORDS,
@@ -62,8 +62,9 @@ class TestBoilerplate:
 class TestKCore:
     def test_fixpoint_and_degree_floor(self, spark):
         from otd_semantic_framework_spark.operators.graph import kcore_peel
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            KCORE_K, KCORE_ROUNDS, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            KCORE_K, KCORE_ROUNDS)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
         tr = q_kg_triples(spark, SF).cache()
         at_r = kcore_peel(tr, k=KCORE_K, rounds=KCORE_ROUNDS).cache()
         one_more = kcore_peel(tr, k=KCORE_K, rounds=KCORE_ROUNDS + 1)
@@ -85,7 +86,7 @@ class TestKCore:
 
 class TestVocab:
     def test_rank_and_cumulative_share(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.text import (
             q_text_vocab)
         rows = q_text_vocab(spark, SF).orderBy("rank").collect()
         assert rows, "empty vocabulary"
@@ -103,7 +104,7 @@ class TestVocab:
 
 class TestSourceOverlap:
     def test_pair_bounds(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.text import (
             q_text_source_overlap)
         out = q_text_source_overlap(spark, SF).cache()
         assert out.where(F.col("source_a") >= F.col("source_b")).count() == 0
@@ -120,7 +121,7 @@ class TestSourceOverlap:
 
 class TestAttrition:
     def test_funnel_conservation_and_all_rules_fire(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.curation import (
             q_curation_attrition)
         rows = {r.stage: r for r in
                 q_curation_attrition(spark, SF).collect()}
@@ -143,7 +144,7 @@ class TestAttrition:
     def test_single_pass_shape(self, spark):
         """The funnel is one grouping-free Aggregate over the signal
         pass — no joins after the signals, no windows anywhere."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.curation import (
             q_curation_attrition)
         plan = (q_curation_attrition(spark, SF)
                 ._jdf.queryExecution().optimizedPlan().toString())
@@ -154,7 +155,7 @@ class TestKMeansExact:
     def test_partitioning_invariance_and_improvement(self, spark):
         from otd_semantic_framework_spark.operators.simsearch import (
             kmeans_lloyd_exact, quantize_embeddings)
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries._shared import (
             KMEANS_ITERS, KMEANS_K)
         e = spark.read.parquet(f"{SF}/embeddings.parquet")
         qz = quantize_embeddings(e)
@@ -182,8 +183,10 @@ class TestKMeansExact:
 
 class TestChunks:
     def test_coverage_overlap_and_tail(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            CHUNK_STRIDE, CHUNK_TOKENS, q_curation_chunks)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            CHUNK_STRIDE, CHUNK_TOKENS)
+        from otd_semantic_framework_spark.plans.queries.curation import (
+            q_curation_chunks)
         out = q_curation_chunks(spark, SF).cache()
         # stride/width invariants: chunk c covers [c*stride+1,
         # min(c*stride+width, n)] and spans are never empty
@@ -214,7 +217,7 @@ class TestChunks:
         out.unpersist()
 
     def test_map_only_plan(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.curation import (
             q_curation_chunks)
         plan = (q_curation_chunks(spark, SF)
                 ._jdf.queryExecution().executedPlan().toString())
@@ -248,7 +251,7 @@ class TestPhash:
     def test_query_no_all_pairs(self, spark):
         """Candidate generation must be the chunk equi-join, never a
         cartesian product over the media table."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.multimodal import (
             q_multimodal_phash)
         plan = (q_multimodal_phash(spark, SF)
                 ._jdf.queryExecution().executedPlan().toString())
@@ -335,8 +338,10 @@ class TestStreamAttrition:
         """The streamed funnel equals the one-shot batch funnel row for
         row — and the stream really ran as multiple micro-batches (the
         additivity claim is vacuous on a single batch)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_curation_attrition, q_stream_attrition)
+        from otd_semantic_framework_spark.plans.queries.curation import (
+            q_curation_attrition)
+        from otd_semantic_framework_spark.plans.queries.stream import (
+            q_stream_attrition)
         import os, tempfile
         streamed = q_stream_attrition(spark, SF)
         batch = q_curation_attrition(spark, SF)
@@ -378,8 +383,7 @@ class TestStreamUpsert:
 
 class TestZipfAndKAnon:
     def test_zipf_fit_shape(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_text_zipf)
+        from otd_semantic_framework_spark.plans.queries.text import q_text_zipf
         r = q_text_zipf(spark, SF).first()
         assert r.n_points > 2
         # frequencies are non-increasing in rank, so the fitted slope
@@ -388,8 +392,8 @@ class TestZipfAndKAnon:
         assert 0.0 <= r.zipf_r2 <= 1.0
 
     def test_kanon_accounting(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            KANON_K, q_rel_kanon)
+        from otd_semantic_framework_spark.plans.queries._shared import KANON_K
+        from otd_semantic_framework_spark.plans.queries.rel1 import q_rel_kanon
         out = q_rel_kanon(spark, SF).cache()
         docs = _docs(spark).count()
         assert out.agg(F.sum("n")).first()[0] == docs

@@ -15,8 +15,10 @@ SF = "/root/testdata/sf0.001"
 
 class TestEntityCards:
     def test_counters_and_top_neighbor_match_recount(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _mentions_df, q_kg_entity_cards)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            _mentions_df)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_entity_cards)
         m = _mentions_df(spark, SF).toPandas()
         cards = {r.concept_id: r for r in
                  q_kg_entity_cards(spark, SF).collect()}
@@ -45,7 +47,7 @@ class TestEntityCards:
         """The fixture corpus is dense enough that every concept
         co-occurs with something — the left join's NULL branch is
         covered by the recount test's guard, this pins the corpus."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_entity_cards)
         out = q_kg_entity_cards(spark, SF)
         assert out.filter(F.col("top_co").isNull()).count() == 0
@@ -53,8 +55,11 @@ class TestEntityCards:
 
 class TestContrastivePairs:
     def test_positive_is_neardup_negative_is_bucket_neighbor(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            JACCARD_MAX_DOC, q_curation_contrastive_pairs,
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            JACCARD_MAX_DOC)
+        from otd_semantic_framework_spark.plans.queries.curation import (
+            q_curation_contrastive_pairs)
+        from otd_semantic_framework_spark.plans.queries.dedup import (
             q_dedup_jaccard)
         pos = {(r.doc_a, r.doc_b): r.jaccard
                for r in q_dedup_jaccard(spark, SF).collect()}
@@ -81,8 +86,10 @@ class TestContrastivePairs:
     def test_every_anchor_with_a_neighbor_keeps_its_positives(self, spark):
         """Row count == positives whose anchor has a distinct bucket
         neighbor (singleton buckets drop, everything else survives)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_curation_contrastive_pairs, q_dedup_jaccard)
+        from otd_semantic_framework_spark.plans.queries.curation import (
+            q_curation_contrastive_pairs)
+        from otd_semantic_framework_spark.plans.queries.dedup import (
+            q_dedup_jaccard)
         n_pos = q_dedup_jaccard(spark, SF).count()
         n_out = q_curation_contrastive_pairs(spark, SF).count()
         # with 500 docs in 16 buckets singleton buckets are improbable;

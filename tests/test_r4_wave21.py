@@ -13,8 +13,7 @@ SF = "/root/testdata/sf0.001"
 
 class TestChisq:
     def test_cells_and_contributions_match_recount(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_rel_chisq)
+        from otd_semantic_framework_spark.plans.queries.rel1 import q_rel_chisq
         ev = pd.read_parquet(f"{SF}/events.parquet")
         ns = ev.ts.astype("datetime64[ns]").dt.normalize().astype("int64")
         ev["dow"] = (ns // 86_400_000_000_000) % 7
@@ -33,8 +32,7 @@ class TestChisq:
 
     def test_expected_sums_match_observed_total(self, spark):
         """Σ expected == Σ observed (the contingency identity)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_rel_chisq)
+        from otd_semantic_framework_spark.plans.queries.rel1 import q_rel_chisq
         out = q_rel_chisq(spark, SF).toPandas()
         assert abs(out.expected.sum() - out.o.sum()) < 1e-3
 
@@ -45,8 +43,9 @@ class TestGraphSummary:
         node grouping is a partition (each node in exactly one group
         — implied by recomputing groups from degrees in pandas and
         matching every super-edge count)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_graph_summary, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_graph_summary)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
         t = (q_kg_triples(spark, SF)
              .select("subj", "pred", "obj").distinct().toPandas())
         deg = (pd.concat([t.subj.rename("node"), t.obj.rename("node")])

@@ -14,7 +14,7 @@ SF = "/root/testdata/sf0.001"
 
 class TestSurfaceAmbiguity:
     def test_counts_match_collective_output(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_collective_linking, q_kg_surface_ambiguity)
         coll = q_kg_collective_linking(spark, SF).toPandas()
         out = {r.surface: r for r in
@@ -33,7 +33,7 @@ class TestSurfaceAmbiguity:
     def test_context_creates_polysemy(self, spark):
         """At least one surface must have n_concepts > 1 — the whole
         point of the collective pass — and shares must be <= 10^6."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_surface_ambiguity)
         out = q_kg_surface_ambiguity(spark, SF).toPandas()
         assert (out.n_concepts > 1).any()
@@ -47,7 +47,7 @@ class TestTransitiveReduction:
         edges, exactly (the Hasse diagram the closure was built from)."""
         from otd_semantic_framework_spark.plans.driver_ontology import (
             driver_concepts)
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_transitive_reduction)
         got = {(r.concept_id, r.parent_id) for r in
                q_kg_transitive_reduction(spark, SF).collect()}

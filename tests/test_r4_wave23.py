@@ -12,8 +12,10 @@ SF = "/root/testdata/sf0.001"
 
 class TestEventExtraction:
     def test_four_edges_per_event_and_consistency(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _mentions_df, derived_transcripts, q_kg_event_extraction)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            _mentions_df, derived_transcripts)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_event_extraction)
         out = q_kg_event_extraction(spark, SF).toPandas()
         by_event = out.groupby("subj")
         assert (by_event.size() == 4).all()
@@ -32,7 +34,7 @@ class TestEventExtraction:
         """Every kg:action obj is a tool: node, every kg:theme obj a
         concept id, every kg:at_turn obj a turn: node of the same
         conversation encoded in at least one sibling edge set."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_event_extraction)
         out = q_kg_event_extraction(spark, SF).toPandas()
         assert out[out.pred == "kg:action"].obj.str.startswith(
@@ -46,8 +48,10 @@ class TestEventExtraction:
 
 class TestFactIntervals:
     def test_spans_tile_turn_sets_maximally(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _mentions_df, q_kg_fact_intervals)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            _mentions_df)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_fact_intervals)
         m = (_mentions_df(spark, SF)
              .select("conv_id", "turn_idx", "concept_id")
              .distinct().toPandas())
@@ -69,7 +73,7 @@ class TestFactIntervals:
             assert got.n_turns.sum() == len(turns)
 
     def test_corpus_exercises_multi_span_facts(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_fact_intervals)
         out = q_kg_fact_intervals(spark, SF).toPandas()
         assert (out.n_spans > 1).any()

@@ -11,8 +11,9 @@ SF = "/root/testdata/sf0.001"
 
 class TestSnapshotDiff:
     def test_classes_match_slice_recount(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_snapshot_diff, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_snapshot_diff)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
         t = (q_kg_triples(spark, SF)
              .select("subj", "pred", "obj").toPandas())
         t["h"] = t.subj.map(
@@ -31,7 +32,7 @@ class TestSnapshotDiff:
                 added + unchanged)
 
     def test_all_three_classes_fire(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_snapshot_diff)
         out = q_kg_snapshot_diff(spark, SF).toPandas()
         assert (out.added > 0).any()

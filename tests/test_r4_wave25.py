@@ -46,8 +46,8 @@ class TestPersonalizedPageRank:
         """On the fixture KG, every seed holds at least the restart
         floor (150000) and every emitted non-seed rank is pure inflow
         — strictly positive but with no 150000 base injected."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_ppr, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries.kg2 import q_kg_ppr
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
         seeds = {r.subj for r in q_kg_triples(spark, SF)
                  .filter("pred = 'uses_tool'").select("subj")
                  .distinct().collect()}
@@ -69,9 +69,13 @@ class TestSearchPRF:
         """Replay the whole PRF algorithm (feedback top-10, expansion
         top-3 excluding query concepts, damped weights, rescore,
         top-20) over the CDS table in pandas and demand equality."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            PRF_BETA, PRF_FB_DOCS, PRF_FB_TERMS, SEARCH_QUERY,
-            driver_gazetteer, driver_scores, q_kg_cds, q_kg_search_prf)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            PRF_BETA, PRF_FB_DOCS, PRF_FB_TERMS, SEARCH_QUERY)
+        from otd_semantic_framework_spark.plans.driver_ontology import (
+            driver_gazetteer, driver_scores)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_cds
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_search_prf)
         from otd_semantic_framework_spark import semantics as S
 
         norm = S.normalize_text(SEARCH_QUERY)
@@ -122,8 +126,9 @@ class TestSearchPRF:
     def test_expansion_changes_the_ranking(self, spark):
         """PRF must not be a no-op: at least one subject's score
         differs from the base (query-concepts-only) scoring."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_search, q_kg_search_prf)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_search
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_search_prf)
         base = {r.subj_key: r.search_score
                 for r in q_kg_search(spark, SF).collect()}
         prf = {r.subj_key: r.prf_score

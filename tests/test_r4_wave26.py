@@ -11,8 +11,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def _undirected(spark):
-    from otd_semantic_framework_spark.plans.driver_queries import (
-        q_kg_triples)
+    from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
     pairs = {(r.subj, r.obj) for r in
              q_kg_triples(spark, SF).select("subj", "obj").distinct()
              .collect()}
@@ -25,8 +24,9 @@ def _undirected(spark):
 
 class TestLinkpredEval:
     def test_matches_python_replay_on_fixture(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            LINKPRED_EVAL_HITS_K, LINKPRED_HUB_CAP, LINKPRED_MIN_COMMON,
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            LINKPRED_EVAL_HITS_K, LINKPRED_HUB_CAP, LINKPRED_MIN_COMMON)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_linkpred_eval)
         e = _undirected(spark)
         adj = defaultdict(set)
@@ -69,8 +69,9 @@ class TestLinkpredEval:
 
 class TestTypeInference:
     def test_matches_python_vote_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_triples, q_kg_type_inference)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_type_inference)
         votes = Counter()
         obj_type = {"mentions": "concept", "uses_tool": "tool"}
         for r in q_kg_triples(spark, SF).collect():
@@ -94,7 +95,7 @@ class TestTypeInference:
     def test_clean_graph_has_full_confidence(self, spark):
         """Node ids are role-disjoint in the fixture KG, so every
         majority vote must be unanimous."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_type_inference)
         out = q_kg_type_inference(spark, SF)
         assert out.filter("confidence_ppm <> 1000000").count() == 0
@@ -102,7 +103,7 @@ class TestTypeInference:
 
 class TestAssortativity:
     def test_matches_python_replay_and_shape(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_assortativity)
         e = _undirected(spark)
         deg = Counter(s for s, _ in e)

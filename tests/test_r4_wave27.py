@@ -12,7 +12,7 @@ SF = "/root/testdata/sf0.001"
 
 class TestSameasClosure:
     def _mapping(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries._shared import (
             SAMEAS_PREFIX, derived_transcripts)
         groups = defaultdict(list)
         for r in derived_transcripts(spark, SF).collect():
@@ -21,8 +21,9 @@ class TestSameasClosure:
         return {n: min(ns) for ns in groups.values() for n in ns}
 
     def test_matches_python_rewrite_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_sameas_closure, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_sameas_closure)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
         mapping = self._mapping(spark)
         rewritten = {}
         for r in q_kg_triples(spark, SF).collect():
@@ -38,8 +39,9 @@ class TestSameasClosure:
         assert got == expected
 
     def test_closure_merges_and_is_idempotent(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_sameas_closure, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_sameas_closure)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
         mapping = self._mapping(spark)
         merged = {n for n, c in mapping.items() if n != c}
         assert merged, "fixture must contain fingerprint-equivalent turns"
@@ -57,8 +59,11 @@ class TestSameasClosure:
 
 class TestSearchMMR:
     def test_matches_python_greedy_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            MMR_K, MMR_LAMBDA_NUM, MMR_SELECT, q_kg_cds, q_kg_search,
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            MMR_K, MMR_LAMBDA_NUM, MMR_SELECT)
+        from otd_semantic_framework_spark.plans.queries.kg1 import (
+            q_kg_cds, q_kg_search)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_search_mmr)
         cand = q_kg_search(spark, SF).collect()
         assert len(cand) == MMR_K
@@ -95,8 +100,9 @@ class TestSearchMMR:
         assert got == expected
 
     def test_first_pick_is_top_relevance(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_search, q_kg_search_mmr)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_search
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_search_mmr)
         top1 = {r.rank: r.subj_key
                 for r in q_kg_search(spark, SF).collect()}[1]
         mmr1 = {r.mmr_rank: r.subj_key

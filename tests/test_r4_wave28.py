@@ -13,8 +13,9 @@ SF = "/root/testdata/sf0.001"
 
 class TestRRFFusion:
     def test_matches_python_fusion_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            BM25_TERMS, N_QUERY_VECS, RRF_C, RRF_N, RRF_TOP, _docs, _tbl,
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            BM25_TERMS, N_QUERY_VECS, RRF_C, RRF_N, RRF_TOP, _docs, _tbl)
+        from otd_semantic_framework_spark.plans.queries.sim import (
             q_sim_rrf_fusion)
         from otd_semantic_framework_spark.operators.curation import (
             bm25_topk)
@@ -65,7 +66,7 @@ class TestRRFFusion:
         """A doc present in BOTH legs outscores the same ranks taken
         alone — the fused top must not equal either leg's top-10 list
         order unless the legs agree (they don't on this fixture)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.sim import (
             q_sim_rrf_fusion)
         rows = q_sim_rrf_fusion(spark, SF).collect()
         assert len(rows) == 10
@@ -76,8 +77,10 @@ class TestRRFFusion:
 
 class TestAttribution:
     def test_matches_python_weight_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            ATTR_CONV_TYPE, ATTR_U_END_PPM, _tbl, q_rel_attribution)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            ATTR_CONV_TYPE, ATTR_U_END_PPM, _tbl)
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
+            q_rel_attribution)
         events = _tbl(spark, SF, "events").collect()
         convs = [e for e in events if e.event_type == ATTR_CONV_TYPE]
         touches = defaultdict(list)
@@ -125,8 +128,10 @@ class TestAttribution:
         conversion's touches is exactly 1e6, so total attributed
         micro-cents equals 1e6 * the summed value of every converted
         purchase that has at least one touch."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            ATTR_CONV_TYPE, _tbl, q_rel_attribution)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            ATTR_CONV_TYPE, _tbl)
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
+            q_rel_attribution)
         import pyspark.sql.functions as F
         ev = _tbl(spark, SF, "events")
         conv = (ev.filter(F.col("event_type") == ATTR_CONV_TYPE)

@@ -12,8 +12,10 @@ SF = "/root/testdata/sf0.001"
 
 class TestBasketRules:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            BASKET_MIN_SUP, _tbl, q_rel_basket_rules)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            BASKET_MIN_SUP, _tbl)
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
+            q_rel_basket_rules)
         baskets = defaultdict(set)
         for r in _tbl(spark, SF, "lineitem") \
                 .select("l_orderkey", "l_partkey").collect():
@@ -49,7 +51,7 @@ class TestBasketRules:
         """Association mining is pointless if everything sits at
         independence: the fixture must yield rules both above and
         below lift=1."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
             q_rel_basket_rules)
         lifts = [r.lift_ppm for r in
                  q_rel_basket_rules(spark, SF).collect()]
@@ -58,8 +60,10 @@ class TestBasketRules:
 
 class TestClusterARI:
     def test_matches_python_formula_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            KMEANS_ITERS, KMEANS_K, _tbl, q_sim_cluster_ari)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            KMEANS_ITERS, KMEANS_K, _tbl)
+        from otd_semantic_framework_spark.plans.queries.sim import (
+            q_sim_cluster_ari)
         from otd_semantic_framework_spark.operators.simsearch import (
             kmeans_lloyd_exact, quantize_embeddings)
         qz = quantize_embeddings(_tbl(spark, SF, "embeddings"))

@@ -27,7 +27,7 @@ class TestLinJc:
             lin_jc, resnik_mics)
         from otd_semantic_framework_spark.plans.driver_ontology import (
             driver_ancestors)
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries._shared import (
             _mentions_df)
         tags = (_mentions_df(spark, SF)
                 .select("conv_id", "turn_idx", "concept_id").distinct()
@@ -98,8 +98,7 @@ class TestHits:
     def test_hub_authority_split_and_l1(self, spark):
         from otd_semantic_framework_spark.operators.graph import (
             PPM, hits_exact, kg_edges)
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
         tr = q_kg_triples(spark, SF).cache()
         out = hits_exact(tr, iterations=2).cache()
         edges = kg_edges(tr).cache()
@@ -150,7 +149,7 @@ class TestBloom:
         the false-positive column is exactly the difference."""
         from otd_semantic_framework_spark.operators.sketch import (
             bloom_decontaminate)
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries._shared import (
             CONTAM_PROBE_MOD)
         d = _docs(spark)
         probes = d.filter(F.col("doc_id") % CONTAM_PROBE_MOD == 0)
@@ -185,8 +184,7 @@ class TestBloom:
 
 class TestAsk:
     def test_battery(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_ask)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_ask
         rows = {r.ask_id: r.answer for r in q_kg_ask(spark, SF).collect()}
         assert set(rows) == {"any_mention", "uses_tool3",
                              "mention_and_reply", "missing_concept"}
@@ -197,8 +195,10 @@ class TestAsk:
 
 class TestSplit:
     def test_partition_and_shares(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            SPLIT_TRAIN_MAX, SPLIT_VAL_MAX, q_curation_split)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            SPLIT_TRAIN_MAX, SPLIT_VAL_MAX)
+        from otd_semantic_framework_spark.plans.queries.curation import (
+            q_curation_split)
         out = q_curation_split(spark, SF).cache()
         d = _docs(spark)
         total = d.count()
@@ -219,7 +219,7 @@ class TestSplit:
         """Re-derive each doc's bucket with hashlib and pin Spark's
         conv()-based assignment against it; growth stability follows
         because the bucket is a pure function of doc_id."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries._shared import (
             SPLIT_TRAIN_MAX, SPLIT_VAL_MAX)
         ids = [r.doc_id for r in
                _docs(spark).select("doc_id").limit(200).collect()]
@@ -239,7 +239,7 @@ class TestSplit:
     def test_leak_audit_fires_on_cross_split_dup(self, spark):
         """Two docs with identical text whose ids hash into different
         splits must both count as leaky."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries._shared import (
             SPLIT_TRAIN_MAX, SPLIT_VAL_MAX)
         # find two ids in different buckets
         a = next(i for i in range(1000)
@@ -268,8 +268,10 @@ class TestSplit:
 class TestStreamTopk:
     def test_stream_equals_batch(self, spark):
         from pyspark.sql import Window
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            STREAM_TOPK_K, q_stream_topk)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            STREAM_TOPK_K)
+        from otd_semantic_framework_spark.plans.queries.stream import (
+            q_stream_topk)
         got = q_stream_topk(spark, SF).cache()
         ev = spark.read.parquet(f"{SF}/events.parquet")
         w = Window.partitionBy("win_us").orderBy(F.desc("n"),

@@ -18,8 +18,9 @@ def _score(v, breaks, asc):
 
 class TestRFM:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            RFM_F_ORDERS, RFM_M_CENTS, RFM_R_DAYS, _tbl, q_rel_rfm)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            RFM_F_ORDERS, RFM_M_CENTS, RFM_R_DAYS, _tbl)
+        from otd_semantic_framework_spark.plans.queries.rel2 import q_rel_rfm
         rows = _tbl(spark, SF, "orders").collect()
         corpus_max = max(r.o_orderdate for r in rows)
         per_c = defaultdict(lambda: [None, 0, 0])
@@ -60,8 +61,9 @@ class TestRFM:
 
 class TestPrefixRecall:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            N_QUERY_VECS, PREFIX_DIMS, PREFIX_RECALL_K, _tbl,
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            N_QUERY_VECS, PREFIX_DIMS, PREFIX_RECALL_K, _tbl)
+        from otd_semantic_framework_spark.plans.queries.sim import (
             q_sim_prefix_recall)
         emb = {r.vec_id: [float(x) for x in r.embedding]
                for r in _tbl(spark, SF, "embeddings").collect()}

@@ -12,8 +12,9 @@ SF = "/root/testdata/sf0.001"
 
 class TestKeepList:
     def test_matches_python_cascade_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            KEEP_MIN_TOKENS, KEEP_TTR_PCT, SAMEAS_PREFIX, _docs,
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            KEEP_MIN_TOKENS, KEEP_TTR_PCT, SAMEAS_PREFIX, _docs)
+        from otd_semantic_framework_spark.plans.queries.curation import (
             q_curation_keep_list)
         docs = {r.doc_id: r.text.lower()
                 for r in _docs(spark, SF).collect()}
@@ -46,8 +47,9 @@ class TestKeepList:
         assert reasons["kept"] > len(got) // 2
 
     def test_one_row_per_document(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _docs, q_curation_keep_list)
+        from otd_semantic_framework_spark.plans.queries._shared import _docs
+        from otd_semantic_framework_spark.plans.queries.curation import (
+            q_curation_keep_list)
         out = q_curation_keep_list(spark, SF)
         n_docs = _docs(spark, SF).count()
         assert out.count() == n_docs
@@ -56,8 +58,9 @@ class TestKeepList:
 
 class TestConvPool:
     def test_matches_python_pool_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            KMEANS_DIM, N_CONVS, POOL_SIGN_BITS, POOL_TOP, _tbl,
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            KMEANS_DIM, N_CONVS, POOL_SIGN_BITS, POOL_TOP, _tbl)
+        from otd_semantic_framework_spark.plans.queries.sim import (
             q_sim_conv_pool)
         from otd_semantic_framework_spark.operators.simsearch import (
             quantize_embeddings)

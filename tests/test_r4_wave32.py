@@ -13,8 +13,9 @@ SF = "/root/testdata/sf0.001"
 
 class TestPropertyTable:
     def test_matches_python_flatten_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_property_table, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_property_table)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
         rows = q_kg_triples(spark, SF).collect()
         per = defaultdict(lambda: {"mentions": 0, "uses_tool": 0,
                                    "replies_to": 0, "score": None,
@@ -48,8 +49,9 @@ class TestPropertyTable:
 
 class TestJSDSources:
     def test_matches_python_micro_nat_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _docs, q_text_jsd_sources)
+        from otd_semantic_framework_spark.plans.queries._shared import _docs
+        from otd_semantic_framework_spark.plans.queries.text import (
+            q_text_jsd_sources)
         lt = Counter()
         for r in _docs(spark, SF).collect():
             for t in r.text.lower().split(" "):

@@ -13,8 +13,11 @@ SF = "/root/testdata/sf0.001"
 
 class TestPowerlawAlpha:
     def test_matches_python_hill_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            HILL_DMIN, q_kg_powerlaw_alpha, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            HILL_DMIN)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_powerlaw_alpha)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
         pairs = {(r.subj, r.obj) for r in q_kg_triples(spark, SF)
                  .select("subj", "obj").distinct().collect()}
         deg = Counter()
@@ -40,7 +43,7 @@ class TestPowerlawAlpha:
         assert 1_000_000 < row.alpha_micro < 6_000_000
 
     def test_tail_is_nonempty_and_excludes_dmin_below(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_powerlaw_alpha)
         [row] = q_kg_powerlaw_alpha(spark, SF).collect()
         assert row.n_tail > 0
@@ -49,8 +52,10 @@ class TestPowerlawAlpha:
 
 class TestBurstiness:
     def test_matches_python_vmr_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            BURST_MIN_TOTAL, _docs, q_text_burstiness)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            BURST_MIN_TOTAL, _docs)
+        from otd_semantic_framework_spark.plans.queries.text import (
+            q_text_burstiness)
         docs = _docs(spark, SF).collect()
         n_docs = len(docs)
         dt = Counter()

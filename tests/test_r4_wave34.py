@@ -11,8 +11,10 @@ SF = "/root/testdata/sf0.001"
 class TestMultimodalPatches:
     def test_matches_python_grid_replay(self, spark):
         import hashlib
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            MM_PATCH, _docs, q_multimodal_patches)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            MM_PATCH, _docs)
+        from otd_semantic_framework_spark.plans.queries.multimodal import (
+            q_multimodal_patches)
         expected = set()
         for r in _docs(spark, SF).collect():
             h = hashlib.md5(r.text.encode("utf-8")).digest()
@@ -47,8 +49,9 @@ class TestMultimodalPatches:
 
 class TestStreamSCD2:
     def test_stream_equals_batch_history(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_rel_scd2, q_stream_scd2)
+        from otd_semantic_framework_spark.plans.queries.rel1 import q_rel_scd2
+        from otd_semantic_framework_spark.plans.queries.stream import (
+            q_stream_scd2)
         key = lambda r: (r.user_id, r.version)  # noqa: E731
         batch = {key(r): (r.event_type, r.eff_from_us, r.eff_to_us,
                           r.is_current)
@@ -66,8 +69,9 @@ class TestStreamSCD2:
         import glob
         import os
         import tempfile
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _tbl, q_stream_scd2)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
+        from otd_semantic_framework_spark.plans.queries.stream import (
+            q_stream_scd2)
         out = q_stream_scd2(spark, SF)
         n_versions = out.count()
         root = os.path.join(

@@ -11,9 +11,12 @@ SF = "/root/testdata/sf0.001"
 
 class TestImpactAnalysis:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            IMPACT_CONV_SUFFIX, q_kg_cds, q_kg_impact_analysis,
-            q_kg_search, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            IMPACT_CONV_SUFFIX)
+        from otd_semantic_framework_spark.plans.queries.kg1 import (
+            q_kg_cds, q_kg_search, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_impact_analysis)
         ch = lambda c: c.endswith(IMPACT_CONV_SUFFIX)  # noqa: E731
         trip = q_kg_triples(spark, SF).collect()
         t_aff = sum(1 for r in trip if ch(r.subj.split(":")[1]))
@@ -44,8 +47,10 @@ class TestImpactAnalysis:
 
 class TestVocabCoverage:
     def test_matches_python_replay_and_monotone(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            VOCAB_COV_SIZES, _docs, q_text_vocab_coverage)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            VOCAB_COV_SIZES, _docs)
+        from otd_semantic_framework_spark.plans.queries.text import (
+            q_text_vocab_coverage)
         counts = Counter()
         for r in _docs(spark, SF).collect():
             for t in r.text.lower().split(" "):

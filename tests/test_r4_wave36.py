@@ -11,8 +11,12 @@ SF = "/root/testdata/sf0.001"
 
 class TestMentionContexts:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            derived_transcripts, q_kg_canonical, q_kg_mention_contexts)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            derived_transcripts)
+        from otd_semantic_framework_spark.plans.queries.kg1 import (
+            q_kg_canonical)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_mention_contexts)
         turns = defaultdict(list)
         for r in derived_transcripts(spark, SF) \
                 .select("conv_id", "turn_idx").collect():
@@ -44,8 +48,10 @@ class TestMentionContexts:
 
 class TestDomainWeights:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            DOMAIN_WEIGHT_CAP_PPM, _docs, q_curation_domain_weights)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            DOMAIN_WEIGHT_CAP_PPM, _docs)
+        from otd_semantic_framework_spark.plans.queries.curation import (
+            q_curation_domain_weights)
         counts = Counter(r.lang for r in _docs(spark, SF).collect())
         total = sum(counts.values())
         nd = len(counts)
@@ -66,7 +72,7 @@ class TestDomainWeights:
     def test_weighted_mass_is_balanced(self, spark):
         """Reweighting restores parity: n_docs * weight_ppm is (floor-)
         equal across uncapped domains."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.curation import (
             q_curation_domain_weights)
         rows = [r for r in q_curation_domain_weights(spark, SF).collect()
                 if r.capped == 0]

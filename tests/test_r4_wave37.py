@@ -16,9 +16,11 @@ def _md5(s: str) -> str:
 
 class TestNeighborSampling:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            NBR_FANOUT_H1, NBR_FANOUT_H2, q_kg_neighbor_sampling,
-            q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            NBR_FANOUT_H1, NBR_FANOUT_H2)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_neighbor_sampling)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
         tr = [(r.subj, r.pred, r.obj)
               for r in q_kg_triples(spark, SF).collect()]
         adj = defaultdict(set)
@@ -45,8 +47,10 @@ class TestNeighborSampling:
         assert got == expected
 
     def test_fanout_caps_and_no_backtrack(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            NBR_FANOUT_H1, NBR_FANOUT_H2, q_kg_neighbor_sampling)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            NBR_FANOUT_H1, NBR_FANOUT_H2)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_neighbor_sampling)
         rows = q_kg_neighbor_sampling(spark, SF).collect()
         per = defaultdict(int)
         for r in rows:
@@ -67,8 +71,9 @@ class TestNeighborSampling:
 
 class TestBootstrapCI:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            BOOT_POISSON_THRESH, BOOT_REPLICATES, _docs,
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            BOOT_POISSON_THRESH, BOOT_REPLICATES, _docs)
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_bootstrap_ci)
         docs = [(r.doc_id, r.n_chars)
                 for r in _docs(spark, SF).select("doc_id",
@@ -103,7 +108,7 @@ class TestBootstrapCI:
     def test_weights_follow_poisson1(self, spark):
         """The md5-driven weights actually look Poisson(1): empirical
         mean weight within 5% of 1.0 over all (doc, replicate) draws."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries._shared import (
             BOOT_POISSON_THRESH, BOOT_REPLICATES, _docs)
         docs = [r.doc_id for r in _docs(spark, SF).select(
             "doc_id").collect()]

@@ -22,8 +22,9 @@ def _median_doubled(values: list[int]) -> int:
 
 class TestThresholdSweep:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            JACCARD_DF_CAP, JACCARD_MAX_DOC, SWEEP_THRESHOLDS, _docs,
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            JACCARD_DF_CAP, JACCARD_MAX_DOC, SWEEP_THRESHOLDS, _docs)
+        from otd_semantic_framework_spark.plans.queries.dedup import (
             q_dedup_threshold_sweep)
         docs = {r.doc_id: set(t for t in (r.text or "").split(" ") if t)
                 for r in _docs(spark, SF)
@@ -57,7 +58,7 @@ class TestThresholdSweep:
     def test_sweep_is_monotone(self, spark):
         """Raising the threshold can only shrink the surviving set —
         and the fixture grid actually exercises the slope."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.dedup import (
             q_dedup_threshold_sweep)
         rows = sorted(q_dedup_threshold_sweep(spark, SF).collect(),
                       key=lambda r: r.threshold)
@@ -70,8 +71,9 @@ class TestThresholdSweep:
 
 class TestDegreeAnomaly:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_degree_anomaly, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_degree_anomaly)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
         deg = Counter((r.pred, r.subj)
                       for r in q_kg_triples(spark, SF).collect())
         per_pred = defaultdict(list)
@@ -95,7 +97,7 @@ class TestDegreeAnomaly:
     def test_flagged_are_extreme(self, spark):
         """Every flagged subject's degree clears the 3*1.4826*MAD fence
         around the per-pred median (in original units)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_degree_anomaly)
         for r in q_kg_degree_anomaly(spark, SF).collect():
             med = r.med_deg2 / 2

@@ -13,8 +13,12 @@ SF = "/root/testdata/sf0.001"
 
 class TestWupCalibration:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _branch_map_pdf, q_kg_calibration, q_kg_wup_matrix)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            _branch_map_pdf)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_calibration)
+        from otd_semantic_framework_spark.plans.queries.kg1 import (
+            q_kg_wup_matrix)
         bmap = dict(_branch_map_pdf()[["concept_id",
                                        "branch"]].itertuples(index=False))
         bins = defaultdict(lambda: [0, 0, 0])  # n, same, wup_ppm_sum
@@ -36,7 +40,7 @@ class TestWupCalibration:
     def test_wup_is_calibrated_on_fixture(self, spark):
         """The metric means something: the highest-WuP bin has a
         strictly higher same-branch rate than the lowest one."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_calibration)
         rows = sorted(q_kg_calibration(spark, SF).collect(),
                       key=lambda r: r.bin)
@@ -45,8 +49,10 @@ class TestWupCalibration:
 
 class TestCentroidDrift:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            DRIFT_SCALE, _tbl, q_sim_centroid_drift)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            DRIFT_SCALE, _tbl)
+        from otd_semantic_framework_spark.plans.queries.sim import (
+            q_sim_centroid_drift)
         sums = defaultdict(lambda: defaultdict(int))
         counts = defaultdict(int)
         for r in _tbl(spark, SF, "embeddings").collect():
@@ -74,7 +80,7 @@ class TestCentroidDrift:
         near-orthogonal — the monitor reads ~0 where there is no
         signal (a clustered label would read ~1). Also pins range and
         non-degeneracy."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.sim import (
             q_sim_centroid_drift)
         rows = q_sim_centroid_drift(spark, SF).collect()
         assert len(rows) == 10

@@ -33,7 +33,7 @@ def _mk_docs_dir(spark, tmpdir: str, rows: list[tuple]) -> str:
 
 class TestReadability:
     def test_hand_computed_and_monotone(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.text import (
             q_text_readability)
         d = _mk_docs_dir(
             spark, "/tmp/w4_read",
@@ -52,7 +52,7 @@ class TestReadability:
 
     def test_map_only_plan(self, spark):
         """Readability is a pure scan→project — no Exchange anywhere."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.text import (
             q_text_readability)
         plan = q_text_readability(spark, SF)._jdf \
             .queryExecution().executedPlan().toString()
@@ -61,7 +61,7 @@ class TestReadability:
 
 class TestIslands:
     def test_hand_built_streaks(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel1 import (
             q_rel_islands)
         tmp = "/tmp/w4_islands"
         shutil.rmtree(tmp, ignore_errors=True)
@@ -81,8 +81,9 @@ class TestIslands:
             datetime.date(2024, 3, 1) - datetime.date(1970, 1, 1)).days
 
     def test_invariants_on_corpus(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_rel_islands, _tbl)
+        from otd_semantic_framework_spark.plans.queries.rel1 import (
+            q_rel_islands)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         out = q_rel_islands(spark, SF).cache()
         days = (_tbl(spark, SF, "events")
                 .select("user_id", F.to_date("ts").alias("d")).distinct()
@@ -98,8 +99,10 @@ class TestIslands:
 
 class TestDedupEdit:
     def test_near_pairs_found_and_hot_block_capped(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            EDIT_BLOCK_CAP, q_dedup_edit)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            EDIT_BLOCK_CAP)
+        from otd_semantic_framework_spark.plans.queries.dedup import (
+            q_dedup_edit)
         # one cold block of 3 near-identical docs + one hot block of
         # CAP+5 identical-prefix docs that must be pruned entirely
         rows = [(1, "alpha beta gamma delta one two three", "en", "w", 0),
@@ -118,8 +121,10 @@ class TestDedupEdit:
         assert all(a < 100 and b < 100 for a, b in got)
 
     def test_pair_canonical_order(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            EDIT_MAX_DIST, q_dedup_edit)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            EDIT_MAX_DIST)
+        from otd_semantic_framework_spark.plans.queries.dedup import (
+            q_dedup_edit)
         out = q_dedup_edit(spark, SF)
         assert out.where(F.col("doc_a") >= F.col("doc_b")).count() == 0
         assert out.where((F.col("lev") < 0)
@@ -130,8 +135,10 @@ class TestBfs:
     def test_level_structure(self, spark):
         from otd_semantic_framework_spark.operators.graph import (
             bfs_depths, undirected_edges)
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            BFS_MAX_HOPS, BFS_SEEDS, q_kg_bfs, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            BFS_MAX_HOPS, BFS_SEEDS)
+        from otd_semantic_framework_spark.plans.queries.kg1 import (
+            q_kg_bfs, q_kg_triples)
         out = q_kg_bfs(spark, SF).cache()
         seeds = {r.node for r in
                  out.where(F.col("depth") == 0).collect()}
@@ -159,7 +166,7 @@ class TestBfs:
 
 class TestCommunity:
     def test_deterministic_and_total(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg1 import (
             q_kg_community, q_kg_triples)
         from otd_semantic_framework_spark.operators.graph import (
             undirected_edges)
@@ -181,8 +188,9 @@ class TestCommunity:
 
 class TestStreamLateAudit:
     def test_loss_accounting_consistent(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_stream_late_audit, _tbl)
+        from otd_semantic_framework_spark.plans.queries.stream import (
+            q_stream_late_audit)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         out = q_stream_late_audit(spark, SF).cache()
         n_events = _tbl(spark, SF, "events").count()
         assert out.agg(F.sum("n_total")).first()[0] == n_events

@@ -13,8 +13,8 @@ SF = "/root/testdata/sf0.001"
 
 class TestEdgeTrussSupport:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_triples, q_kg_truss)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
+        from otd_semantic_framework_spark.plans.queries.kg2 import q_kg_truss
         adj = defaultdict(set)
         for r in q_kg_triples(spark, SF).select("subj", "obj") \
                 .distinct().collect():
@@ -37,8 +37,7 @@ class TestEdgeTrussSupport:
         to each of its 3 edges), truss4 implies truss3, and the
         fixture graph exercises BOTH zero- and positive-support
         edges."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_truss)
+        from otd_semantic_framework_spark.plans.queries.kg2 import q_kg_truss
         rows = q_kg_truss(spark, SF).collect()
         total = sum(r.support for r in rows)
         assert total % 3 == 0, "support mass must be a multiple of 3"
@@ -50,7 +49,7 @@ class TestEdgeTrussSupport:
 
 class TestCupedAbtest:
     def _units(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import _tbl
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         y = defaultdict(int)
         for r in _tbl(spark, SF, "orders").collect():
             y[r.o_custkey] += math.floor(r.o_totalprice)
@@ -65,7 +64,7 @@ class TestCupedAbtest:
         return units
 
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
             q_rel_abtest)
         units = self._units(spark)
         n = float(len(units))
@@ -95,7 +94,7 @@ class TestCupedAbtest:
         """CUPED is unbiased: the unit-weighted average of the
         adjusted means equals the raw global mean (the centering term
         sums to zero over all units), and rho^2 sits in [0, 1)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
             q_rel_abtest)
         rows = q_rel_abtest(spark, SF).collect()
         assert len(rows) == 2 and {r.variant for r in rows} == {0, 1}

@@ -16,7 +16,7 @@ class TestKnnGraph:
     def _replay(self, spark):
         from otd_semantic_framework_spark.operators.simsearch import (
             hyperplanes)
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries._shared import (
             KNNG_K, KNNG_N_PLANES, _tbl)
         P = np.asarray(hyperplanes(KNNG_N_PLANES, 64), dtype=np.float64)
         rows = _tbl(spark, SF, "embeddings").collect()
@@ -45,7 +45,7 @@ class TestKnnGraph:
         return topk
 
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.sim import (
             q_sim_knn_graph)
         expected = self._replay(spark)
         got = {}
@@ -59,8 +59,9 @@ class TestKnnGraph:
         """Per-node degree <= k with dense ranks from 1, the mutual
         subset is symmetric, and the fixture exercises both mutual and
         one-way edges (the flag is not inert)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            KNNG_K, q_sim_knn_graph)
+        from otd_semantic_framework_spark.plans.queries._shared import KNNG_K
+        from otd_semantic_framework_spark.plans.queries.sim import (
+            q_sim_knn_graph)
         rows = q_sim_knn_graph(spark, SF).collect()
         per_src = defaultdict(list)
         for r in rows:
@@ -75,8 +76,8 @@ class TestKnnGraph:
 
 class TestTextGini:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _docs, q_text_gini)
+        from otd_semantic_framework_spark.plans.queries._shared import _docs
+        from otd_semantic_framework_spark.plans.queries.text import q_text_gini
         masses = [len(r.text or "")
                   for r in _docs(spark, SF).collect()]
         bins = defaultdict(lambda: [0, 0])
@@ -104,8 +105,7 @@ class TestTextGini:
         """The binned Lorenz curve ends at (1, 1), never rises above
         the diagonal (ascending-value bins: the poorest prefix holds
         at most its proportional mass share), and Gini is in [0, 1)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_text_gini)
+        from otd_semantic_framework_spark.plans.queries.text import q_text_gini
         rows = sorted(q_text_gini(spark, SF).collect(),
                       key=lambda r: r.bin)
         assert rows[-1].cum_pop_ppm == 1_000_000

@@ -14,8 +14,9 @@ SF = "/root/testdata/sf0.001"
 
 class TestPathSim:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _mentions_df, q_kg_pathsim)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            _mentions_df)
+        from otd_semantic_framework_spark.plans.queries.kg2 import q_kg_pathsim
         per_turn = defaultdict(set)
         for r in _mentions_df(spark, SF) \
                 .select("conv_id", "turn_idx", "concept_id").collect():
@@ -40,8 +41,7 @@ class TestPathSim:
         1e6, and the score strictly decreases when the same co-count
         is attached to heavier-path concepts (pinned via two actual
         rows with equal co_turns and different n_a + n_b)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_pathsim)
+        from otd_semantic_framework_spark.plans.queries.kg2 import q_kg_pathsim
         rows = q_kg_pathsim(spark, SF).collect()
         assert rows
         for r in rows:
@@ -63,8 +63,9 @@ class TestPathSim:
 
 class TestWelch:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _docs, q_stats_welch)
+        from otd_semantic_framework_spark.plans.queries._shared import _docs
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_welch)
         per = defaultdict(list)
         for r in _docs(spark, SF).collect():
             per[r.source].append(len(r.text or ""))
@@ -93,7 +94,7 @@ class TestWelch:
         """Welch-Satterthwaite df is bounded by min(n1,n2)-1 from
         below and n1+n2-2 from above, and the per-source t stats are
         not all identical (the fixture sources differ)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_welch)
         rows = q_stats_welch(spark, SF).collect()
         nt = sum(r.n_docs for r in rows)

@@ -12,8 +12,10 @@ SF = "/root/testdata/sf0.001"
 
 class TestAutocorr:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            ACF_MAX_LAG, _tbl, q_stats_autocorr)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            ACF_MAX_LAG, _tbl)
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_autocorr)
         days = Counter()
         for r in _tbl(spark, SF, "orders").select("o_orderdate") \
                 .collect():
@@ -41,8 +43,10 @@ class TestAutocorr:
         """|r_k| stays within the biased-ACF bound (<= 1 up to float
         slack), pair counts shrink (weakly) with lag on a near-
         contiguous calendar, and the lags 1..7 are all present."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            ACF_MAX_LAG, q_stats_autocorr)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            ACF_MAX_LAG)
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_autocorr)
         rows = sorted(q_stats_autocorr(spark, SF).collect(),
                       key=lambda r: r.lag)
         assert [r.lag for r in rows] == list(range(1, ACF_MAX_LAG + 1))
@@ -53,8 +57,10 @@ class TestAutocorr:
 
 class TestAnnealSchedule:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            ANNEAL_EPOCHS, ANNEAL_WEIGHT_SCALE, _docs, q_curation_anneal)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            ANNEAL_EPOCHS, ANNEAL_WEIGHT_SCALE, _docs)
+        from otd_semantic_framework_spark.plans.queries.curation import (
+            q_curation_anneal)
         counts = Counter(r.lang for r in _docs(spark, SF).collect())
         w = {s: math.floor(math.sqrt(float(c)) * ANNEAL_WEIGHT_SCALE)
              for s, c in counts.items()}
@@ -76,8 +82,10 @@ class TestAnnealSchedule:
         """Epoch 0 is exactly uniform, the final epoch is exactly the
         smoothed target, the path is monotone per language, and each
         epoch's weights sum to 1e6 within D ppm of floor slack."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            ANNEAL_EPOCHS, q_curation_anneal)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            ANNEAL_EPOCHS)
+        from otd_semantic_framework_spark.plans.queries.curation import (
+            q_curation_anneal)
         rows = q_curation_anneal(spark, SF).collect()
         by_src = {}
         for r in rows:

@@ -13,8 +13,9 @@ SF = "/root/testdata/sf0.001"
 
 class TestSemanticClusters:
     def test_matches_union_find_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _tbl, q_sim_knn_graph, q_sim_semantic_clusters)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
+        from otd_semantic_framework_spark.plans.queries.sim import (
+            q_sim_knn_graph, q_sim_semantic_clusters)
         mutual = [(r.src, r.dst)
                   for r in q_sim_knn_graph(spark, SF).collect()
                   if r.mutual == 1 and r.src < r.dst]
@@ -49,7 +50,7 @@ class TestSemanticClusters:
         is a member (the min), sizes are consistent, and the fixture
         yields both singletons and at least one multi-vector cluster
         (mutual edges exist, so components must merge somewhere)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.sim import (
             q_sim_semantic_clusters)
         rows = q_sim_semantic_clusters(spark, SF).collect()
         assert len({r.vec_id for r in rows}) == len(rows) == 500
@@ -66,8 +67,9 @@ class TestSemanticClusters:
 
 class TestRunsTest:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _tbl, q_stats_runs)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_runs)
         days = Counter()
         for r in _tbl(spark, SF, "orders").select("o_orderdate") \
                 .collect():
@@ -98,7 +100,7 @@ class TestRunsTest:
         """Run count is between 1 and n, both signs are populated
         (the mean cut cannot empty a side on a non-constant series),
         and the expected-runs formula stays inside the same bounds."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_runs)
         row = q_stats_runs(spark, SF).collect()[0]
         assert 0 < row.n_plus < row.n

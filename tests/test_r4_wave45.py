@@ -12,7 +12,7 @@ SF = "/root/testdata/sf0.001"
 
 class TestLtvCurve:
     def _orders(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import _tbl
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         out = []
         for r in _tbl(spark, SF, "orders").collect():
             m = r.o_orderdate.year * 12 + r.o_orderdate.month - 1
@@ -20,8 +20,7 @@ class TestLtvCurve:
         return out
 
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_rel_ltv)
+        from otd_semantic_framework_spark.plans.queries.rel2 import q_rel_ltv
         orders = self._orders(spark)
         cohort = {}
         for ck, m, _ in orders:
@@ -49,8 +48,8 @@ class TestLtvCurve:
         cohort, age-0 rows exist for every cohort (a cohort's first
         month is active by construction), and total revenue across
         the triangle's period cells equals the orders total."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _tbl, q_rel_ltv)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
+        from otd_semantic_framework_spark.plans.queries.rel2 import q_rel_ltv
         rows = q_rel_ltv(spark, SF).collect()
         by_cohort = defaultdict(dict)
         for r in rows:
@@ -70,8 +69,9 @@ class TestLtvCurve:
 
 class TestSeasonality:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _tbl, q_stats_seasonality)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_seasonality)
         days = Counter()
         for r in _tbl(spark, SF, "orders").select("o_orderdate") \
                 .collect():
@@ -101,7 +101,7 @@ class TestSeasonality:
         """All 7 ISO weekdays appear, variance_explained is a valid
         R^2 in [0, 1], and the dow means are not all equal (else the
         decomposition reads nothing)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_seasonality)
         rows = q_stats_seasonality(spark, SF).collect()
         assert sorted(r.dow for r in rows) == list(range(1, 8))

@@ -20,8 +20,9 @@ def _median_int(values):
 
 class TestSimOutliers:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_sim_knn_graph, q_sim_outliers, _tbl)
+        from otd_semantic_framework_spark.plans.queries.sim import (
+            q_sim_knn_graph, q_sim_outliers)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         per = defaultdict(list)
         for r in q_sim_knn_graph(spark, SF).collect():
             per[r.src].append(int(round(r.cos * 1_000_000)))
@@ -86,8 +87,10 @@ class TestSimOutliers:
 
 class TestGumbelEvt:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            GUMBEL_EULER, _tbl, q_stats_evt)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            GUMBEL_EULER, _tbl)
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_evt)
         days = Counter()
         for r in _tbl(spark, SF, "orders").select("o_orderdate") \
                 .collect():
@@ -118,7 +121,7 @@ class TestGumbelEvt:
         """Return levels behave like quantiles of a max distribution:
         99.9% > 99% > mu (location), beta > 0, and the 99% level
         exceeds the mean block maximum."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_evt)
         row = q_stats_evt(spark, SF).collect()[0]
         assert row.gumbel_beta > 0

@@ -13,8 +13,9 @@ SF = "/root/testdata/sf0.001"
 
 class TestRiAudit:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _tbl, q_rel_ri_audit)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
+            q_rel_ri_audit)
         t = {n: _tbl(spark, SF, n).collect()
              for n in ["orders", "lineitem", "customer", "supplier",
                        "part", "nation"]}
@@ -65,8 +66,10 @@ class TestRiAudit:
 
 class TestRankCorr:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_pagerank, q_kg_rank_corr, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries.kg1 import (
+            q_kg_pagerank, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_rank_corr)
         pr = {r.node: r.rank_ppm
               for r in q_kg_pagerank(spark, SF).collect()
               if r.node.startswith("dq:")}
@@ -97,7 +100,7 @@ class TestRankCorr:
         agree with degree (tau well above 0) but not perfectly (the
         link structure adds information) — both facts are the read
         this QA exists for."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_rank_corr)
         row = q_kg_rank_corr(spark, SF).collect()[0]
         assert -1.0 <= row.tau_a <= 1.0

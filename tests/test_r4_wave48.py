@@ -15,8 +15,9 @@ class TestAnnSweep:
     def test_matches_numpy_replay(self, spark):
         from otd_semantic_framework_spark.operators.simsearch import (
             hyperplanes)
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            ANN_K, ANN_SWEEP_PLANES, N_QUERY_VECS, _tbl,
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            ANN_K, ANN_SWEEP_PLANES, N_QUERY_VECS, _tbl)
+        from otd_semantic_framework_spark.plans.queries.sim import (
             q_sim_ann_sweep, q_sim_topk_cosine)
         rows = _tbl(spark, SF, "embeddings").collect()
         ids = np.asarray([r.vec_id for r in rows])
@@ -53,7 +54,7 @@ class TestAnnSweep:
         """More planes -> weakly fewer candidates (the cost falls) and
         recall never exceeds 1e6; the grid's cheapest point must be
         cheaper than its most expensive one (the sweep has signal)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.sim import (
             q_sim_ann_sweep)
         rows = sorted(q_sim_ann_sweep(spark, SF).collect(),
                       key=lambda r: r.n_planes)
@@ -79,8 +80,11 @@ class TestDiameterEst:
         return depth
 
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            DIAM_MAX_HOPS, q_kg_diameter_est, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            DIAM_MAX_HOPS)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_diameter_est)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
         adj = defaultdict(set)
         nodes = set()
         for r in q_kg_triples(spark, SF).select("subj", "obj") \
@@ -102,8 +106,10 @@ class TestDiameterEst:
         """The second sweep's bound dominates the first eccentricity
         (the whole point of the 2-sweep heuristic) and stays within
         the hop cap."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            DIAM_MAX_HOPS, q_kg_diameter_est)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            DIAM_MAX_HOPS)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_diameter_est)
         row = q_kg_diameter_est(spark, SF).collect()[0]
         assert row.diameter_lb >= row.ecc_seed
         assert 0 < row.diameter_lb <= DIAM_MAX_HOPS

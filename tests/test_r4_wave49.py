@@ -14,8 +14,10 @@ SF = "/root/testdata/sf0.001"
 
 class TestHeapsLaw:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            HEAPS_GRID_PPM, _docs, q_text_heaps)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            HEAPS_GRID_PPM, _docs)
+        from otd_semantic_framework_spark.plans.queries.text import (
+            q_text_heaps)
         docs = {r.doc_id: [t for t in (r.text or "").lower().split()
                            if t]
                 for r in _docs(spark, SF).collect()}
@@ -52,7 +54,7 @@ class TestHeapsLaw:
         fitted beta at the full-corpus point sits strictly inside
         (0, 1) — the Heaps regime a healthy natural-language corpus
         shows (beta ~ 0.4-0.8)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.text import (
             q_text_heaps)
         rows = sorted(q_text_heaps(spark, SF).collect(),
                       key=lambda r: r.g_ppm)
@@ -68,8 +70,10 @@ class TestBucketBalance:
     def test_matches_numpy_replay(self, spark):
         from otd_semantic_framework_spark.operators.simsearch import (
             hyperplanes)
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            ANN_N_PLANES, _tbl, q_sim_bucket_balance)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            ANN_N_PLANES, _tbl)
+        from otd_semantic_framework_spark.plans.queries.sim import (
+            q_sim_bucket_balance)
         P = np.asarray(hyperplanes(ANN_N_PLANES, 64), dtype=np.float64)
         rows = _tbl(spark, SF, "embeddings").collect()
         V = np.stack([np.asarray(r.embedding, dtype=np.float64)
@@ -93,8 +97,10 @@ class TestBucketBalance:
         """All 2^planes buckets are present (including any empties),
         occupancies conserve the corpus, and chi2 is a nonnegative
         corpus constant."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            ANN_N_PLANES, q_sim_bucket_balance)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            ANN_N_PLANES)
+        from otd_semantic_framework_spark.plans.queries.sim import (
+            q_sim_bucket_balance)
         rows = q_sim_bucket_balance(spark, SF).collect()
         assert sorted(r.bucket for r in rows) == \
             list(range(1 << ANN_N_PLANES))

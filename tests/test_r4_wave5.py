@@ -26,7 +26,7 @@ def _mk_events_dir(spark, tmpdir: str, rows: list[tuple]) -> str:
 
 class TestKsDrift:
     def test_shifted_vs_identical(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel1 import (
             q_rel_ks_drift)
         rows = []
         eid = 0
@@ -45,7 +45,7 @@ class TestKsDrift:
         assert got[("hi", "lo2")] == 1_000_000
 
     def test_bounds_and_canonical_pairs(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel1 import (
             q_rel_ks_drift)
         out = q_rel_ks_drift(spark, SF).cache()
         # 5 event types -> C(5,2) = 10 canonical pairs
@@ -58,8 +58,10 @@ class TestKsDrift:
 
 class TestKeyphrase:
     def test_hand_built_phrases(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_text_keyphrase, _PY_STOPWORDS)
+        from otd_semantic_framework_spark.plans.queries.text import (
+            q_text_keyphrase)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            _PY_STOPWORDS)
         from tests.test_r4_wave4 import _mk_docs_dir
         d = _mk_docs_dir(
             spark, "/tmp/w5_kp",
@@ -83,8 +85,10 @@ class TestKeyphrase:
             == phrases["neural networks"].score_ppm == 4_000_000
 
     def test_topk_shape_on_corpus(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            KEYPHRASE_TOP, q_text_keyphrase)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            KEYPHRASE_TOP)
+        from otd_semantic_framework_spark.plans.queries.text import (
+            q_text_keyphrase)
         out = q_text_keyphrase(spark, SF).cache()
         n = out.count()
         assert 0 < n <= KEYPHRASE_TOP

@@ -12,8 +12,9 @@ SF = "/root/testdata/sf0.001"
 
 class TestChao1:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _docs, q_stats_chao1)
+        from otd_semantic_framework_spark.plans.queries._shared import _docs
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_chao1)
         freq = Counter()
         for r in _docs(spark, SF).collect():
             t = [x for x in (r.text or "").lower().split() if x]
@@ -35,7 +36,7 @@ class TestChao1:
         """Chao1 never estimates FEWER types than observed, coverage
         sits in (0, 1], and the fixture has genuine singletons (else
         the estimator is inert)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_chao1)
         row = q_stats_chao1(spark, SF).collect()[0]
         assert row.chao1 >= row.v_obs
@@ -45,8 +46,11 @@ class TestChao1:
 
 class TestTopicFocus:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            HHI_SCALE, q_kg_cds, q_kg_topic_focus)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            HHI_SCALE)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_cds
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_topic_focus)
         per = defaultdict(list)
         for r in q_kg_cds(spark, SF).collect():
             per[r.subj_key].append(int(round(r.score * HHI_SCALE)))
@@ -66,7 +70,7 @@ class TestTopicFocus:
         """effective_topics is bounded by [1, n_concepts], HHI by
         [1e6/n, 1e6], and the fixture conversations genuinely differ
         in focus (the read has signal)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_topic_focus)
         rows = q_kg_topic_focus(spark, SF).collect()
         assert len(rows) == 50

@@ -13,7 +13,7 @@ SF = "/root/testdata/sf0.001"
 
 class TestClusterQuality:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.dedup import (
             q_dedup_cluster_quality, q_dedup_components, q_dedup_jaccard)
         comp = {r.doc_id: r.component
                 for r in q_dedup_components(spark, SF).collect()}
@@ -44,7 +44,7 @@ class TestClusterQuality:
         >= 2 docs and >= 1 verified pair (components are built FROM
         the pair graph, so a multi-doc cluster always carries pairs),
         and pair counts never exceed the complete graph."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.dedup import (
             q_dedup_cluster_quality)
         rows = q_dedup_cluster_quality(spark, SF).collect()
         for r in rows:
@@ -57,8 +57,9 @@ class TestClusterQuality:
 
 class TestJackknife:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _docs, q_stats_jackknife)
+        from otd_semantic_framework_spark.plans.queries._shared import _docs
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_jackknife)
         per = defaultdict(lambda: [0, 0])
         for r in _docs(spark, SF).collect():
             per[r.source][0] += 1
@@ -80,7 +81,7 @@ class TestJackknife:
         """The grouped jackknife reads a real nonzero between-source
         sensitivity, far smaller than the mean itself (the sources
         are same-scale)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_jackknife)
         row = q_stats_jackknife(spark, SF).collect()[0]
         assert row.jackknife_se > 0

@@ -11,9 +11,10 @@ SF = "/root/testdata/sf0.001"
 
 class TestPqRecall:
     def test_matches_composition_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            SIM_TOP_K, q_sim_pq_recall, q_sim_pq_topk,
-            q_sim_topk_cosine)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            SIM_TOP_K)
+        from otd_semantic_framework_spark.plans.queries.sim import (
+            q_sim_pq_recall, q_sim_pq_topk, q_sim_topk_cosine)
         bf = defaultdict(set)
         for r in q_sim_topk_cosine(spark, SF).collect():
             bf[r.qid].add(r.cid)
@@ -34,8 +35,10 @@ class TestPqRecall:
         (mean recall strictly between 0 and 1 keeps the eval honest —
         a 100% reading would suggest the truth leaked into the
         approximate path)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            N_QUERY_VECS, q_sim_pq_recall)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            N_QUERY_VECS)
+        from otd_semantic_framework_spark.plans.queries.sim import (
+            q_sim_pq_recall)
         rows = q_sim_pq_recall(spark, SF).collect()
         assert len(rows) == N_QUERY_VECS
         for r in rows:
@@ -46,8 +49,9 @@ class TestPqRecall:
 
 class TestFertility:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _docs, q_curation_fertility)
+        from otd_semantic_framework_spark.plans.queries._shared import _docs
+        from otd_semantic_framework_spark.plans.queries.curation import (
+            q_curation_fertility)
         per = defaultdict(lambda: [0, 0, 0])
         for r in _docs(spark, SF).collect():
             txt = r.text or ""
@@ -68,7 +72,7 @@ class TestFertility:
         """Fertility >= 1 char/token everywhere (a token has at least
         one char), token shares sum to ~1e6, and all five fixture
         languages report."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.curation import (
             q_curation_fertility)
         rows = q_curation_fertility(spark, SF).collect()
         assert len(rows) == 5

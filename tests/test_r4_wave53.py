@@ -11,8 +11,9 @@ SF = "/root/testdata/sf0.001"
 
 class TestNewReturning:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _tbl, q_rel_new_returning)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
+            q_rel_new_returning)
         orders = [(r.o_custkey,
                    r.o_orderdate.year * 12 + r.o_orderdate.month - 1)
                   for r in _tbl(spark, SF, "orders").collect()]
@@ -40,8 +41,9 @@ class TestNewReturning:
         """The first month is 100% new by construction; late months
         are mostly returning (the acquisition wave passes); order
         mass conserves."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _tbl, q_rel_new_returning)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
+            q_rel_new_returning)
         rows = sorted(q_rel_new_returning(spark, SF).collect(),
                       key=lambda r: r.month_idx)
         assert rows[0].new_share_ppm == 1_000_000
@@ -52,8 +54,10 @@ class TestNewReturning:
 
 class TestLabelCalibration:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            CAL_BIN_W, _tbl, q_sim_knn_graph, q_sim_label_calibration)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            CAL_BIN_W, _tbl)
+        from otd_semantic_framework_spark.plans.queries.sim import (
+            q_sim_knn_graph, q_sim_label_calibration)
         labels = {r.vec_id: r.label
                   for r in _tbl(spark, SF, "embeddings")
                   .select("vec_id", "label").collect()}
@@ -75,7 +79,7 @@ class TestLabelCalibration:
         floor — the honest no-signal reading (a clustered embedding
         would rise with the bin). Multiple bins must populate or the
         binning is inert."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.sim import (
             q_sim_label_calibration)
         rows = q_sim_label_calibration(spark, SF).collect()
         assert len(rows) >= 3

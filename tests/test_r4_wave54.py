@@ -15,8 +15,10 @@ KEYWORDS = {"def", "class", "import", "return", "function", "var",
 
 class TestCodeDetect:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            CODE_SYMBOLS, _docs, q_text_code_detect)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            CODE_SYMBOLS, _docs)
+        from otd_semantic_framework_spark.plans.queries.text import (
+            q_text_code_detect)
         expected = {}
         for r in _docs(spark, SF).collect():
             t = r.text or ""
@@ -41,7 +43,7 @@ class TestCodeDetect:
         expressions flags, and typical prose from the fixture does
         not flag as code in the majority (the filter routes, it does
         not blanket)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.text import (
             q_text_code_detect)
         rows = q_text_code_detect(spark, SF).collect()
         share = sum(r.is_code for r in rows) / len(rows)
@@ -57,8 +59,10 @@ class TestCodeDetect:
 
 class TestDecayedLoad:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            EWMA_HORIZON, _tbl, q_stats_ewma)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            EWMA_HORIZON, _tbl)
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_ewma)
         daily = Counter()
         for r in _tbl(spark, SF, "events") \
                 .select("event_type", "ts").collect():
@@ -92,7 +96,7 @@ class TestDecayedLoad:
         between the min and max of the last few days' loads, and the
         decayed load is < 2x the last day + small tail (geometric
         series bound)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_ewma)
         rows = q_stats_ewma(spark, SF).collect()
         assert rows

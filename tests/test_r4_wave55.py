@@ -14,8 +14,9 @@ SF = "/root/testdata/sf0.001"
 
 class TestBacktest:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _tbl, q_stats_backtest)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_backtest)
         monthly = Counter()
         for r in _tbl(spark, SF, "orders").select("o_orderdate") \
                 .collect():
@@ -39,8 +40,9 @@ class TestBacktest:
         excluded; sMAPE sits in [0, 2e6] (its algebraic range); the
         naive forecast is imperfect but not useless on the fixture
         (0 < sMAPE < 2e6)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _tbl, q_stats_backtest)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_backtest)
         rows = q_stats_backtest(spark, SF).collect()
         months = {r.month_idx for r in rows}
         all_months = {
@@ -55,8 +57,10 @@ class TestBacktest:
 
 class TestDimVariance:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            DIMVAR_DEAD_PPM, DIMVAR_SCALE, _tbl, q_sim_dim_variance)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            DIMVAR_DEAD_PPM, DIMVAR_SCALE, _tbl)
+        from otd_semantic_framework_spark.plans.queries.sim import (
+            q_sim_dim_variance)
         per = defaultdict(list)
         for r in _tbl(spark, SF, "embeddings").collect():
             for pos, v in enumerate(r.embedding):
@@ -83,7 +87,7 @@ class TestDimVariance:
         detector is calibrated against (a planted zero column would
         read var_u = 0 -> dead by construction of the integer
         math)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.sim import (
             q_sim_dim_variance)
         rows = q_sim_dim_variance(spark, SF).collect()
         assert len(rows) == 64

@@ -14,8 +14,10 @@ LEET = str.maketrans("013457@$", "oieastas")
 
 class TestBlocklist:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            BLOCKLIST_TERMS, _docs, q_text_blocklist)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            BLOCKLIST_TERMS, _docs)
+        from otd_semantic_framework_spark.plans.queries.text import (
+            q_text_blocklist)
         expected = {}
         for r in _docs(spark, SF).collect():
             toks = [t for t in (r.text or "").lower()
@@ -41,8 +43,9 @@ class TestBlocklist:
 
 class TestAnomalyDays:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _tbl, q_stats_anomaly_days)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_anomaly_days)
         days = Counter()
         for r in _tbl(spark, SF, "orders").select("o_orderdate") \
                 .collect():
@@ -72,7 +75,7 @@ class TestAnomalyDays:
     def test_fence_directionality(self, spark):
         """Spikes sit above the median and collapses below it; every
         flagged day's deviation clears the fence it was flagged by."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_anomaly_days)
         rows = q_stats_anomaly_days(spark, SF).collect()
         assert rows

@@ -15,7 +15,7 @@ class TestTripletMining:
     def _replay(self, spark):
         from otd_semantic_framework_spark.operators.simsearch import (
             hyperplanes)
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries._shared import (
             TRIPLET_MARGIN_PPM, TRIPLET_N_PLANES, _tbl)
         rows = _tbl(spark, SF, "embeddings").collect()
         P = np.asarray(hyperplanes(TRIPLET_N_PLANES, 64))
@@ -52,7 +52,7 @@ class TestTripletMining:
         return expected
 
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.sim import (
             q_sim_triplet_mining)
         got = {r.vec_id: (r.label, r.pos_id, r.pos_ppm, r.neg_id,
                           r.neg_ppm, r.n_pos_cand, r.n_neg_cand,
@@ -66,8 +66,10 @@ class TestTripletMining:
         hash-derived fixture embeddings labels are uncorrelated with
         geometry, so essentially every triplet violates — both flag
         branches are exercised by the crafted corpus below.)"""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            TRIPLET_MARGIN_PPM, q_sim_triplet_mining, _tbl)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            TRIPLET_MARGIN_PPM, _tbl)
+        from otd_semantic_framework_spark.plans.queries.sim import (
+            q_sim_triplet_mining)
         labels = {r.vec_id: r.label
                   for r in _tbl(spark, SF, "embeddings").collect()}
         rows = q_sim_triplet_mining(spark, SF).collect()
@@ -119,8 +121,9 @@ class TestTripletMining:
 
 class TestMannWhitney:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_stats_mannwhitney, _tbl)
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_mannwhitney)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         days = Counter()
         for r in _tbl(spark, SF, "orders").select("o_orderdate") \
                 .collect():
@@ -151,7 +154,7 @@ class TestMannWhitney:
     def test_u_statistics_are_consistent(self, spark):
         """U1 + U2 == n1*n2 (the rank-sum identity) and the doubled
         encodings stay integral."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_mannwhitney)
         row = q_stats_mannwhitney(spark, SF).collect()[0]
         assert row.u1_x2 + row.u2_x2 == 2 * row.n1 * row.n2

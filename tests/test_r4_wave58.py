@@ -15,8 +15,7 @@ PUNCT = set("!\"#$%&'()*+,-./:;<=>?@[\\]^_`{|}~")
 
 class TestTrend:
     def _daily(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _tbl)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         days = Counter()
         for r in _tbl(spark, SF, "orders").select("o_orderdate") \
                 .collect():
@@ -24,7 +23,7 @@ class TestTrend:
         return sorted((d.toordinal(), x) for d, x in days.items())
 
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_trend)
         series = self._daily(spark)
         n = len(series)
@@ -60,7 +59,7 @@ class TestTrend:
         assert abs(row.z - z) < 1e-9
 
     def test_invariants(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_trend)
         row = q_stats_trend(spark, SF).collect()[0]
         assert row.n_pairs == row.n_days * (row.n_days - 1) // 2
@@ -83,8 +82,9 @@ class TestClassEntropy:
         return "n_other"
 
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _docs, q_text_class_entropy)
+        from otd_semantic_framework_spark.plans.queries._shared import _docs
+        from otd_semantic_framework_spark.plans.queries.text import (
+            q_text_class_entropy)
         order = ["n_lower", "n_upper", "n_digit", "n_space", "n_punct",
                  "n_other"]
         expected = {}
@@ -116,7 +116,7 @@ class TestClassEntropy:
     def test_suspect_flag_on_crafted_docs(self, spark):
         """Prose clears the 0.6-bit fence; a digit blob and a
         repeated-char run collapse below it (both branches)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.text import (
             q_text_class_entropy)
         # patch the module that OWNS the query fn (post-split, a query
         # resolves _docs from its defining plans.queries.* module)

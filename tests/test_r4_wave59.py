@@ -12,8 +12,9 @@ SF = "/root/testdata/sf0.001"
 
 class TestCardinalityProfile:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_cardinality_profile, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_cardinality_profile)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
         triples = [(r.subj, r.pred, r.obj)
                    for r in q_kg_triples(spark, SF).collect()]
         out = defaultdict(Counter)
@@ -39,7 +40,7 @@ class TestCardinalityProfile:
     def test_fanout_bounds(self, spark):
         """Mean fan-out is bracketed by 1 and max fan-out, and a
         functional predicate's mean is exactly 1.0 (1e6 ppm)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_cardinality_profile)
         rows = q_kg_cardinality_profile(spark, SF).collect()
         assert rows
@@ -62,8 +63,9 @@ class TestCurriculum:
         return len(toks), d
 
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _docs, q_curation_curriculum)
+        from otd_semantic_framework_spark.plans.queries._shared import _docs
+        from otd_semantic_framework_spark.plans.queries.curation import (
+            q_curation_curriculum)
 
         def med(vals):
             v = sorted(vals)
@@ -98,7 +100,7 @@ class TestCurriculum:
         max difficulty of phase p <= min difficulty of phase p+2 (the
         nested-median boundaries can tie across ADJACENT phases but
         never across two)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.curation import (
             q_curation_curriculum)
         rows = q_curation_curriculum(spark, SF).collect()
         assert {r.phase for r in rows} <= {1, 2, 3, 4}

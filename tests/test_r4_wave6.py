@@ -16,8 +16,10 @@ SF = "/root/testdata/sf0.001"
 class TestBenford:
     def test_shares_partition_and_literals_match(self, spark):
         import math
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            BENFORD_PPM, q_rel_benford)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            BENFORD_PPM)
+        from otd_semantic_framework_spark.plans.queries.rel1 import (
+            q_rel_benford)
         # the shared literal table IS Benford
         for d in range(1, 10):
             assert BENFORD_PPM[d] == round(
@@ -40,8 +42,9 @@ class TestBenford:
 
 class TestStatefulCounts:
     def test_trajectory_is_prefix_sum(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_stream_stateful_counts, _tbl)
+        from otd_semantic_framework_spark.plans.queries.stream import (
+            q_stream_stateful_counts)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         out = q_stream_stateful_counts(spark, SF).cache()
         ev = _tbl(spark, SF, "events")
         # final state per user equals the batch ground truth
@@ -71,8 +74,10 @@ class TestSilhouette:
     def test_bounds_and_consistency(self, spark):
         from otd_semantic_framework_spark.operators.simsearch import (
             kmeans_lloyd_exact, quantize_embeddings)
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            KMEANS_ITERS, KMEANS_K, q_sim_silhouette, _tbl)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            KMEANS_ITERS, KMEANS_K, _tbl)
+        from otd_semantic_framework_spark.plans.queries.sim import (
+            q_sim_silhouette)
         out = q_sim_silhouette(spark, SF).cache()
         emb = _tbl(spark, SF, "embeddings")
         assert out.count() == emb.count()

@@ -16,8 +16,9 @@ EPOCH_ORD = 719163  # date(1970, 1, 1).toordinal()
 
 class TestFriedman:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_stats_friedman, _tbl)
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_friedman)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         days = Counter()
         for r in _tbl(spark, SF, "orders").select("o_orderdate") \
                 .collect():
@@ -61,7 +62,7 @@ class TestFriedman:
         """Within every block ranks 1..7 (as midranks) sum to 28, so
         the doubled rank sums across weekdays total 56*n_blocks; Q is
         non-negative for any rank configuration."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_friedman)
         rows = q_stats_friedman(spark, SF).collect()
         n = rows[0].n_blocks
@@ -74,8 +75,10 @@ class TestHubness:
     def test_matches_python_replay(self, spark):
         from otd_semantic_framework_spark.operators.simsearch import (
             knn_graph)
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            KNNG_K, KNNG_N_PLANES, q_sim_hubness, _tbl)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            KNNG_K, KNNG_N_PLANES, _tbl)
+        from otd_semantic_framework_spark.plans.queries.sim import (
+            q_sim_hubness)
         vecs = _tbl(spark, SF, "embeddings")
         indeg = Counter()
         for r in knn_graph(vecs, k=KNNG_K,
@@ -100,8 +103,9 @@ class TestHubness:
     def test_histogram_accounts_for_antihubs(self, spark):
         """Histogram masses sum to the full node count: nodes that
         appear in nobody's top-k (k_occ = 0) must be counted."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_sim_hubness, _tbl)
+        from otd_semantic_framework_spark.plans.queries.sim import (
+            q_sim_hubness)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         rows = q_sim_hubness(spark, SF).collect()
         n_vec = _tbl(spark, SF, "embeddings").count()
         assert sum(r.n_nodes for r in rows) == n_vec

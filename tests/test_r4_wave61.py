@@ -14,8 +14,9 @@ SF = "/root/testdata/sf0.001"
 
 class TestDispersion:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_stats_dispersion, _tbl)
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_dispersion)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         rows = _tbl(spark, SF, "events") \
             .select("event_type", "ts").collect()
         hour = {r.ts.replace(minute=0, second=0, microsecond=0)
@@ -47,7 +48,7 @@ class TestDispersion:
         """Every type is measured over the SAME global hour span (the
         gap-fill), so n_hours is identical across rows and at least
         the number of distinct observed hours."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_dispersion)
         rows = q_stats_dispersion(spark, SF).collect()
         assert len({r.n_hours for r in rows}) == 1
@@ -58,8 +59,9 @@ class TestDispersion:
 
 class TestUserEntropy:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_rel_user_entropy, _tbl)
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
+            q_rel_user_entropy)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         per = defaultdict(Counter)
         for r in _tbl(spark, SF, "events") \
                 .select("user_id", "event_type").collect():
@@ -83,7 +85,7 @@ class TestUserEntropy:
     def test_entropy_bounds(self, spark):
         """0 <= H <= log2(n_types); single-type users land exactly on
         0; the dominant share is always >= 1/n_types."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
             q_rel_user_entropy)
         rows = q_rel_user_entropy(spark, SF).collect()
         assert rows

@@ -14,8 +14,10 @@ SF = "/root/testdata/sf0.001"
 
 class TestVelocity:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            VELOCITY_FENCE, VELOCITY_WINDOW_S, q_rel_velocity, _tbl)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            VELOCITY_FENCE, VELOCITY_WINDOW_S, _tbl)
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
+            q_rel_velocity)
         per = defaultdict(list)
         for r in _tbl(spark, SF, "events") \
                 .select("user_id", "ts").collect():
@@ -38,8 +40,10 @@ class TestVelocity:
 
     def test_burst_bounds(self, spark):
         """1 <= max_burst <= n_events, and the fence flag replays."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            VELOCITY_FENCE, q_rel_velocity)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            VELOCITY_FENCE)
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
+            q_rel_velocity)
         rows = q_rel_velocity(spark, SF).collect()
         assert rows
         for r in rows:
@@ -50,8 +54,9 @@ class TestVelocity:
 
 class TestDatasetCard:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_curation_dataset_card, _docs)
+        from otd_semantic_framework_spark.plans.queries.curation import (
+            q_curation_dataset_card)
+        from otd_semantic_framework_spark.plans.queries._shared import _docs
         docs = [(r.text or "", r.source, r.lang)
                 for r in _docs(spark, SF).collect()]
         n = len(docs)
@@ -78,7 +83,7 @@ class TestDatasetCard:
     def test_card_consistency(self, spark):
         """Unique texts never exceed docs; dup + unique shares account
         for the corpus; the mean is bracketed by 0 and max."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.curation import (
             q_curation_dataset_card)
         r = q_curation_dataset_card(spark, SF).collect()[0]
         assert 1 <= r.n_unique_texts <= r.n_docs

@@ -15,8 +15,9 @@ SF = "/root/testdata/sf0.001"
 
 class TestStickiness:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_rel_stickiness, _tbl)
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
+            q_rel_stickiness)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         ud = {(r.user_id, r.ts.date())
               for r in _tbl(spark, SF, "events")
               .select("user_id", "ts").collect()}
@@ -39,7 +40,7 @@ class TestStickiness:
         """DAU <= WAU always (today's actives are a subset of the
         week's), so stickiness <= 1e6; the first reported day starts
         a full window after the series start."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
             q_rel_stickiness)
         rows = q_rel_stickiness(spark, SF).collect()
         assert rows
@@ -50,8 +51,9 @@ class TestStickiness:
 
 class TestPopulationEst:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_dedup_population_est, _docs)
+        from otd_semantic_framework_spark.plans.queries.dedup import (
+            q_dedup_population_est)
+        from otd_semantic_framework_spark.plans.queries._shared import _docs
         per = defaultdict(set)
         for r in _docs(spark, SF).collect():
             per[r.source].add(
@@ -73,7 +75,7 @@ class TestPopulationEst:
         """Chapman's estimate can never fall below max(nA, nB), and
         zero-overlap pairs give the (nA+1)(nB+1)-1 open-population
         ceiling."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.dedup import (
             q_dedup_population_est)
         rows = q_dedup_population_est(spark, SF).collect()
         assert rows

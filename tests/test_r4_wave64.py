@@ -13,8 +13,9 @@ SF = "/root/testdata/sf0.001"
 
 class TestControlChart:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_stats_control_chart, _tbl)
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_control_chart)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         n_day, x_day = Counter(), Counter()
         for r in _tbl(spark, SF, "events") \
                 .select("ts", "event_type").collect():
@@ -41,7 +42,7 @@ class TestControlChart:
         limit on every day (the cross-multiplication is exact, the
         float version is the textbook formula)."""
         import math
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_control_chart)
         rows = q_stats_control_chart(spark, SF).collect()
         assert rows
@@ -58,8 +59,9 @@ class TestPiiAudit:
     def test_matches_python_replay(self, spark):
         from otd_semantic_framework_spark.operators.textstats import (
             RX_EMAIL, RX_PHONE, RX_URL)
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_curation_pii_audit, _docs)
+        from otd_semantic_framework_spark.plans.queries.curation import (
+            q_curation_pii_audit)
+        from otd_semantic_framework_spark.plans.queries._shared import _docs
         agg = defaultdict(lambda: [0, 0, 0, 0, 0, 0])
         for r in _docs(spark, SF).collect():
             t = r.text or ""

@@ -14,8 +14,9 @@ SF = "/root/testdata/sf0.001"
 
 class TestJoinCardinality:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_join_cardinality, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_join_cardinality)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
         triples = [(r.subj, r.pred, r.obj)
                    for r in q_kg_triples(spark, SF).collect()]
         preds = sorted({p for _, p, _ in triples})
@@ -47,7 +48,7 @@ class TestJoinCardinality:
     def test_qerror_floor(self, spark):
         """q-error is >= 1 (1e6 ppm) by construction, with equality
         exactly when the estimate is dead-on."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_join_cardinality)
         rows = q_kg_join_cardinality(spark, SF).collect()
         assert rows
@@ -60,8 +61,10 @@ class TestJoinCardinality:
 
 class TestCcf:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            CCF_MAX_LAG, CCF_TYPE_X, CCF_TYPE_Y, q_stats_ccf, _tbl)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            CCF_MAX_LAG, CCF_TYPE_X, CCF_TYPE_Y, _tbl)
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_ccf)
         xs, ys = Counter(), Counter()
         days = set()
         for r in _tbl(spark, SF, "events") \
@@ -109,7 +112,7 @@ class TestCcf:
     def test_overlap_shrinks_with_lag(self, spark):
         """|lag| days fall off the overlap: n(lag) = n(0) - |lag|, and
         exactly one peak value exists (ties share the flag)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_ccf)
         rows = {r.lag_days: r for r in q_stats_ccf(spark, SF).collect()}
         n0 = rows[0].n

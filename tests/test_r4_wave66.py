@@ -12,8 +12,7 @@ SF = "/root/testdata/sf0.001"
 
 class TestApportion:
     def _masses(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            _docs)
+        from otd_semantic_framework_spark.plans.queries._shared import _docs
         m = Counter()
         for r in _docs(spark, SF).collect():
             m[r.source] += len(
@@ -21,8 +20,10 @@ class TestApportion:
         return m
 
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            APPORTION_BUDGET, q_curation_apportion)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            APPORTION_BUDGET)
+        from otd_semantic_framework_spark.plans.queries.curation import (
+            q_curation_apportion)
         m = self._masses(spark)
         m_tot = sum(m.values())
         floor = {s: APPORTION_BUDGET * x // m_tot
@@ -44,8 +45,10 @@ class TestApportion:
     def test_total_is_exactly_budget(self, spark):
         """The defining Hamilton property: allocations sum to the
         budget exactly, and every source gets at least its floor."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            APPORTION_BUDGET, q_curation_apportion)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            APPORTION_BUDGET)
+        from otd_semantic_framework_spark.plans.queries.curation import (
+            q_curation_apportion)
         rows = q_curation_apportion(spark, SF).collect()
         assert sum(r.alloc for r in rows) == APPORTION_BUDGET
         for r in rows:
@@ -54,8 +57,9 @@ class TestApportion:
 
 class TestInterarrival:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_stats_interarrival, _tbl)
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_interarrival)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         import datetime as dt
         epoch = dt.datetime(1970, 1, 1)
         per = defaultdict(list)
@@ -87,7 +91,7 @@ class TestInterarrival:
     def test_gap_sanity(self, spark):
         """Gaps are non-negative, median <= max, and the burstiness
         ratio replays from the emitted columns."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_interarrival)
         rows = q_stats_interarrival(spark, SF).collect()
         assert rows

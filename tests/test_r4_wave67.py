@@ -12,8 +12,9 @@ SF = "/root/testdata/sf0.001"
 
 class TestPsi:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_stats_psi, _tbl)
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_psi)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         rows = _tbl(spark, SF, "events").select("ts", "value").collect()
         es = [int(r.ts.replace(microsecond=0).timestamp()) for r in rows]
         t0, t1 = min(es), max(es)
@@ -47,7 +48,7 @@ class TestPsi:
     def test_psi_nonnegative_and_symmetric_zero(self, spark):
         """Every PSI contribution is >= 0 ((p-q) and ln(p/q) share
         sign), so the total is >= 0; identical halves would give 0."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_psi)
         rows = q_stats_psi(spark, SF).collect()
         assert rows
@@ -58,8 +59,10 @@ class TestPsi:
 
 class TestDormancy:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            PSI_DORMANT_DAYS, q_rel_dormancy, _tbl)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            PSI_DORMANT_DAYS, _tbl)
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
+            q_rel_dormancy)
         per = defaultdict(set)
         for r in _tbl(spark, SF, "events") \
                 .select("user_id", "ts").collect():
@@ -83,7 +86,7 @@ class TestDormancy:
     def test_gap_identities(self, spark):
         """The max gap cannot exceed the span, and resurrection count
         is bounded by active-day transitions."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
             q_rel_dormancy)
         rows = q_rel_dormancy(spark, SF).collect()
         assert rows

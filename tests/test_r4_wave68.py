@@ -11,8 +11,9 @@ SF = "/root/testdata/sf0.001"
 
 class TestGrowthAccounting:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_rel_growth_accounting, _tbl)
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
+            q_rel_growth_accounting)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         um = defaultdict(set)
         for r in _tbl(spark, SF, "events") \
                 .select("user_id", "ts").collect():
@@ -49,7 +50,7 @@ class TestGrowthAccounting:
     def test_mau_decomposition(self, spark):
         """MAU = new + retained + resurrected for every month, and the
         first observed month is all-new."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
             q_rel_growth_accounting)
         rows = sorted(q_rel_growth_accounting(spark, SF).collect(),
                       key=lambda r: r.month)
@@ -61,8 +62,9 @@ class TestGrowthAccounting:
 
 class TestRecords:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_stats_records, _tbl)
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_records)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         days = Counter()
         for r in _tbl(spark, SF, "orders").select("o_orderdate") \
                 .collect():
@@ -87,7 +89,7 @@ class TestRecords:
     def test_first_day_is_both_records(self, spark):
         """Day one is trivially both a record high and a record low,
         so both counts are >= 1 and bounded by n_days."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_records)
         r = q_stats_records(spark, SF).collect()[0]
         assert 1 <= r.n_up_records <= r.n_days

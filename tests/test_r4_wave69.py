@@ -12,8 +12,9 @@ SF = "/root/testdata/sf0.001"
 
 class TestMixShift:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_stats_mix_shift, _tbl)
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_mix_shift)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         dt = defaultdict(Counter)
         tot = Counter()
         for r in _tbl(spark, SF, "events") \
@@ -53,7 +54,7 @@ class TestMixShift:
 
     def test_jsd_bounds(self, spark):
         """Base-2 JSD lives in [0, 1]; entropy in [0, log2(|types|)]."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_mix_shift)
         rows = q_stats_mix_shift(spark, SF).collect()
         assert rows
@@ -64,8 +65,9 @@ class TestMixShift:
 
 class TestNormAudit:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_sim_norm_audit, _tbl)
+        from otd_semantic_framework_spark.plans.queries.sim import (
+            q_sim_norm_audit)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         n2s = []
         nan = 0
         for r in _tbl(spark, SF, "embeddings") \
@@ -94,7 +96,7 @@ class TestNormAudit:
         """The synthetic embeddings are unit-ish and finite: no NaNs,
         no zero vectors, and the histogram masses account for every
         vector."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.sim import (
             q_sim_norm_audit)
         rows = q_sim_norm_audit(spark, SF).collect()
         assert sum(r.n_vecs for r in rows) == rows[0].n

@@ -30,7 +30,7 @@ def _mk_events_dir(spark, tmpdir: str, rows: list[tuple]) -> str:
 
 class TestGapfill:
     def test_linear_interpolation_exact(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel1 import (
             q_rel_gapfill)
         # user 1: observed 1.0 on Jan 1 and 5.0 on Jan 5 -> three gap
         # days interpolating 2.0 / 3.0 / 4.0 exactly (integer ppm).
@@ -51,7 +51,7 @@ class TestGapfill:
         assert len([k for k in out if k[0] == 2]) == 1
 
     def test_grid_density_and_bounds(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel1 import (
             q_rel_gapfill)
         out = q_rel_gapfill(spark, SF).cache()
         # per user the grid is exactly (max day - min day + 1) rows
@@ -117,8 +117,10 @@ class TestShortestPath:
         assert got2 == {"a": 0}
 
     def test_weighted_dominates_bfs_hops(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_shortest_path, SP_WEIGHTS)
+        from otd_semantic_framework_spark.plans.queries.kg1 import (
+            q_kg_shortest_path)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            SP_WEIGHTS)
         out = q_kg_shortest_path(spark, SF)
         mx = max(SP_WEIGHTS.values())
         assert out.filter(F.col("dist") > 3 * mx).count() == 0
@@ -129,7 +131,7 @@ class TestShortestPath:
 
 class TestSnapshotAsof:
     def test_snapshot_never_sees_past_t(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg1 import (
             q_kg_snapshot_asof)
         out = q_kg_snapshot_asof(spark, SF).cache()
         assert out.count() > 0
@@ -143,7 +145,7 @@ class TestSnapshotAsof:
         out.unpersist()
 
     def test_snapshot_is_prefix_of_full_graph(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg1 import (
             q_kg_snapshot_asof, q_kg_triples)
         snap = q_kg_snapshot_asof(spark, SF).select("subj", "pred", "obj")
         full = q_kg_triples(spark, SF).select("subj", "pred", "obj")
@@ -155,8 +157,10 @@ class TestSnapshotAsof:
 
 class TestSparqlAgg:
     def test_having_and_binding_arithmetic(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_sparql_agg, SPARQL_AGG_MIN_TURNS)
+        from otd_semantic_framework_spark.plans.queries.kg1 import (
+            q_kg_sparql_agg)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            SPARQL_AGG_MIN_TURNS)
         out = q_kg_sparql_agg(spark, SF).cache()
         assert out.count() > 0
         assert out.filter(
@@ -169,8 +173,10 @@ class TestSparqlAgg:
         out.unpersist()
 
     def test_matches_manual_self_join(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_sparql_agg, q_kg_triples, SPARQL_AGG_MIN_TURNS)
+        from otd_semantic_framework_spark.plans.queries.kg1 import (
+            q_kg_sparql_agg, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            SPARQL_AGG_MIN_TURNS)
         tr = q_kg_triples(spark, SF).cache()
         m = tr.filter("pred = 'mentions'").select(
             F.col("subj").alias("turn"), F.col("obj").alias("concept"))
@@ -196,8 +202,10 @@ def _quant(vec: list[float]) -> list[int]:
 
 class TestPqTopk:
     def test_structural(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_sim_pq_topk, N_QUERY_VECS, SIM_TOP_K)
+        from otd_semantic_framework_spark.plans.queries.sim import (
+            q_sim_pq_topk)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            N_QUERY_VECS, SIM_TOP_K)
         out = q_sim_pq_topk(spark, SF).cache()
         assert out.count() == N_QUERY_VECS * SIM_TOP_K
         assert out.filter("adc_dist < 0").count() == 0

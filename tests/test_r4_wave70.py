@@ -11,8 +11,9 @@ SF = "/root/testdata/sf0.001"
 
 class TestRichClub:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_rich_club, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_rich_club)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
         edges = set()
         for r in q_kg_triples(spark, SF).collect():
             if r.subj != r.obj:
@@ -38,7 +39,7 @@ class TestRichClub:
     def test_monotone_club_shrinks(self, spark):
         """Raising the threshold can only shrink the club and its
         edge count."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_rich_club)
         rows = sorted(q_kg_rich_club(spark, SF).collect(),
                       key=lambda r: r.k)
@@ -50,8 +51,9 @@ class TestRichClub:
 
 class TestAnova:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            ANOVA_FACTORS, q_rel_anova, _tbl)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            ANOVA_FACTORS, _tbl)
+        from otd_semantic_framework_spark.plans.queries.rel2 import q_rel_anova
         rows = _tbl(spark, SF, "orders").select(
             "o_orderpriority", "o_orderstatus", "o_totalprice"
         ).collect()
@@ -82,7 +84,6 @@ class TestAnova:
     def test_eta2_bounds(self, spark):
         """eta^2 lives in [0, 1] — between-group SS is a component of
         total SS."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_rel_anova)
+        from otd_semantic_framework_spark.plans.queries.rel2 import q_rel_anova
         for r in q_rel_anova(spark, SF).collect():
             assert -1e-9 <= r.eta2 <= 1.0 + 1e-9

@@ -11,8 +11,9 @@ SF = "/root/testdata/sf0.001"
 
 class TestErrorCascade:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_rel_error_cascade, _tbl)
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
+            q_rel_error_cascade)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         per_user = defaultdict(list)
         for r in _tbl(spark, SF, "events") \
                 .select("user_id", "ts", "event_id", "event_type") \
@@ -42,7 +43,7 @@ class TestErrorCascade:
     def test_lift_is_rate_over_base(self, spark):
         """The base rate is the pooled transition error rate, and each
         row's lift replays as n_err*n_all/(n_trans*e_all)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
             q_rel_error_cascade)
         rows = q_rel_error_cascade(spark, SF).collect()
         assert rows
@@ -56,8 +57,9 @@ class TestErrorCascade:
 
 class TestFulfillment:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_rel_fulfillment, _tbl)
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
+            q_rel_fulfillment)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         orders = {r.o_orderkey: r.o_orderdate.date()
                   for r in _tbl(spark, SF, "orders")
                   .select("o_orderkey", "o_orderdate").collect()}
@@ -90,7 +92,7 @@ class TestFulfillment:
     def test_sla_shares_are_nested(self, spark):
         """within-30d share can never exceed within-90d share, and the
         median is bounded by the max."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
             q_rel_fulfillment)
         rows = q_rel_fulfillment(spark, SF).collect()
         assert rows

@@ -13,8 +13,10 @@ class TestLabelSmooth:
     def test_matches_python_replay(self, spark):
         from otd_semantic_framework_spark.operators.simsearch import (
             knn_graph)
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            KNNG_K, KNNG_N_PLANES, q_sim_knn_label_smooth, _tbl)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            KNNG_K, KNNG_N_PLANES, _tbl)
+        from otd_semantic_framework_spark.plans.queries.sim import (
+            q_sim_knn_label_smooth)
         vecs = _tbl(spark, SF, "embeddings")
         labels = {r.vec_id: r.label
                   for r in vecs.select("vec_id", "label").collect()}
@@ -44,7 +46,7 @@ class TestLabelSmooth:
         """The fixture's labels are geometry-independent, so a
         nontrivial share of nodes must look mislabeled — the detector
         fires — but never a node whose own label IS the majority."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.sim import (
             q_sim_knn_label_smooth)
         rows = q_sim_knn_label_smooth(spark, SF).collect()
         assert any(r.suspect for r in rows)
@@ -56,8 +58,9 @@ class TestLabelSmooth:
 
 class TestHhiTrend:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_rel_hhi_trend, _tbl)
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
+            q_rel_hhi_trend)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         per = defaultdict(Counter)
         for r in _tbl(spark, SF, "orders") \
                 .select("o_orderdate", "o_custkey", "o_totalprice") \
@@ -86,7 +89,7 @@ class TestHhiTrend:
         """HHI lives in (1/n, 1]: at least 1e6/n ppm (perfect
         spread) and at most ~1e6 (monopoly); the top share bounds it
         below."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
             q_rel_hhi_trend)
         rows = q_rel_hhi_trend(spark, SF).collect()
         assert rows

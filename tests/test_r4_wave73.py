@@ -11,7 +11,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def _transitions(spark):
-    from otd_semantic_framework_spark.plans.driver_queries import _tbl
+    from otd_semantic_framework_spark.plans.queries._shared import _tbl
     per_user = defaultdict(list)
     rows = _tbl(spark, SF, "events").select(
         "user_id", "ts", "event_id", "event_type").collect()
@@ -27,7 +27,7 @@ def _transitions(spark):
 
 class TestEntropyRate:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_entropy_rate)
         trans, _ = _transitions(spark)
         joint = Counter((a, b) for a, b, _ in trans)
@@ -56,7 +56,7 @@ class TestEntropyRate:
     def test_chain_rule_inequalities(self, spark):
         """H(next|prev) <= H(next) (conditioning cannot raise
         entropy), and the gain is the difference."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_entropy_rate)
         r = q_stats_entropy_rate(spark, SF).collect()[0]
         assert r.h_cond <= r.h_next + 1e-6
@@ -66,7 +66,7 @@ class TestEntropyRate:
 
 class TestTransitionDrift:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_transition_drift)
         trans, rows = _transitions(spark)
         es = [int(r.ts.replace(microsecond=0).timestamp())
@@ -96,7 +96,7 @@ class TestTransitionDrift:
 
     def test_l1_bounds(self, spark):
         """L1 between two distributions lives in [0, 2e6] ppm."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_transition_drift)
         rows = q_stats_transition_drift(spark, SF).collect()
         assert rows

@@ -14,8 +14,10 @@ class TestIntrinsicDim:
     def test_matches_python_replay(self, spark):
         from otd_semantic_framework_spark.operators.simsearch import (
             knn_graph)
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            KNNG_N_PLANES, q_sim_intrinsic_dim, _tbl)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            KNNG_N_PLANES, _tbl)
+        from otd_semantic_framework_spark.plans.queries.sim import (
+            q_sim_intrinsic_dim)
         vecs = _tbl(spark, SF, "embeddings")
         per = defaultdict(dict)
         for r in knn_graph(vecs, k=2,
@@ -44,7 +46,7 @@ class TestIntrinsicDim:
         """Hash-derived iid embeddings are genuinely high-dimensional:
         the TwoNN read must land well above a low-dim manifold (>5)
         and the log-ratio sum must be positive (d2 > d1)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.sim import (
             q_sim_intrinsic_dim)
         r = q_sim_intrinsic_dim(spark, SF).collect()[0]
         assert r.sum_ln_nano > 0
@@ -54,8 +56,9 @@ class TestIntrinsicDim:
 
 class TestDomainRangeAudit:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_domain_range_audit, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_domain_range_audit)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
         triples = [(r.subj, r.pred, r.obj)
                    for r in q_kg_triples(spark, SF).collect()]
         sns_c, ons_c = defaultdict(Counter), defaultdict(Counter)
@@ -83,7 +86,7 @@ class TestDomainRangeAudit:
         """The engine's own extraction is namespace-disciplined, so
         every predicate should read 0 violations — this audit is the
         regression tripwire for extraction bugs."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_domain_range_audit)
         rows = q_kg_domain_range_audit(spark, SF).collect()
         assert rows

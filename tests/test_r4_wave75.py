@@ -12,8 +12,10 @@ SF = "/root/testdata/sf0.001"
 
 class TestHashCollisionAudit:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            HASH_PREFIX_BITS, q_dedup_hash_collision_audit, _docs)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            HASH_PREFIX_BITS, _docs)
+        from otd_semantic_framework_spark.plans.queries.dedup import (
+            q_dedup_hash_collision_audit)
         keys = {hashlib.md5((r.text or "").encode()).hexdigest()
                 for r in _docs(spark, SF).collect()}
         n = len(keys)
@@ -35,7 +37,7 @@ class TestHashCollisionAudit:
         """Wider prefixes can only reduce collisions; an unbiased
         hash's 8-bit collisions must be near the birthday bound when
         n >> 2^8 (ratio within [0.5x, 2x])."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.dedup import (
             q_dedup_hash_collision_audit)
         rows = sorted(q_dedup_hash_collision_audit(spark, SF)
                       .collect(), key=lambda r: r.k)
@@ -48,8 +50,9 @@ class TestHashCollisionAudit:
 
 class TestSlaInversion:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_rel_sla_inversion, _tbl)
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
+            q_rel_sla_inversion)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         orders = {r.o_orderkey: (r.o_orderpriority,
                                  r.o_orderdate.date())
                   for r in _tbl(spark, SF, "orders")
@@ -89,7 +92,7 @@ class TestSlaInversion:
     def test_rank_parsing(self, spark):
         """All five TPC-H priority classes appear with ranks 1..5 and
         exactly one class (the last) has no next."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
             q_rel_sla_inversion)
         rows = q_rel_sla_inversion(spark, SF).collect()
         ranks = sorted(r.rank for r in rows)

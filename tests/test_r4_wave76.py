@@ -13,9 +13,10 @@ SF = "/root/testdata/sf0.001"
 
 class TestCircadian:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            CIRCADIAN_COS_NANO, CIRCADIAN_SIN_NANO, q_stats_circadian,
-            _tbl)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            CIRCADIAN_COS_NANO, CIRCADIAN_SIN_NANO, _tbl)
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_circadian)
         hh = defaultdict(Counter)
         for r in _tbl(spark, SF, "events") \
                 .select("event_type", "ts").collect():
@@ -37,8 +38,10 @@ class TestCircadian:
     def test_trig_constants_are_unit(self, spark):
         """The injected constants are nano-units of a unit circle:
         cos^2 + sin^2 ~ 1e18 per hour, and R lives in [0, 1e6]."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            CIRCADIAN_COS_NANO, CIRCADIAN_SIN_NANO, q_stats_circadian)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            CIRCADIAN_COS_NANO, CIRCADIAN_SIN_NANO)
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_circadian)
         for h in range(24):
             s2 = (CIRCADIAN_COS_NANO[h] ** 2
                   + CIRCADIAN_SIN_NANO[h] ** 2)
@@ -50,8 +53,10 @@ class TestCircadian:
 
 class TestSampleAudit:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            SAMPLE_AUDIT_PCT, q_curation_sample_audit, _docs)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            SAMPLE_AUDIT_PCT, _docs)
+        from otd_semantic_framework_spark.plans.queries.curation import (
+            q_curation_sample_audit)
         per = defaultdict(lambda: [0, 0])
         for r in _docs(spark, SF).collect():
             h = int(hashlib.md5(str(r.doc_id).encode())
@@ -82,7 +87,7 @@ class TestSampleAudit:
         carry real binomial noise — the L1 read is bounded by its
         theoretical max (2.0), not pinned tight (at sf0.1's 250
         docs/source it drops well under 0.2)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.curation import (
             q_curation_sample_audit)
         rows = q_curation_sample_audit(spark, SF).collect()
         assert rows

@@ -14,8 +14,10 @@ class TestIvfSweep:
         """Recall and scan cost are non-decreasing in nprobe; probing
         all cells converges toward the exact answer from below; at
         full probe width recall is high on the small fixture."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            IVF_SWEEP_PROBES, q_sim_ivf_sweep)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            IVF_SWEEP_PROBES)
+        from otd_semantic_framework_spark.plans.queries.sim import (
+            q_sim_ivf_sweep)
         rows = {r.n_probe: r for r in q_sim_ivf_sweep(spark, SF)
                 .collect()}
         assert set(rows) == set(IVF_SWEEP_PROBES)
@@ -32,9 +34,10 @@ class TestIvfSweep:
         sets computed via the library operators."""
         from otd_semantic_framework_spark.operators.simsearch import (
             ann_ivf_topk, cosine_topk)
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            ANN_K, IVF_N_CELLS, IVF_SWEEP_PROBES, N_QUERY_VECS,
-            q_sim_ivf_sweep, _tbl)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            ANN_K, IVF_N_CELLS, IVF_SWEEP_PROBES, N_QUERY_VECS, _tbl)
+        from otd_semantic_framework_spark.plans.queries.sim import (
+            q_sim_ivf_sweep)
         from pyspark.sql import functions as F
         e = _tbl(spark, SF, "embeddings")
         q = (e.filter(F.col("vec_id") < N_QUERY_VECS)
@@ -61,8 +64,9 @@ class TestIvfSweep:
 
 class TestReciprocity:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_reciprocity, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_reciprocity)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
         edges = defaultdict(set)
         for r in q_kg_triples(spark, SF).collect():
             if r.subj != r.obj:
@@ -84,7 +88,7 @@ class TestReciprocity:
     def test_reciprocity_bounds(self, spark):
         """r is a share in [0, 1e6]; the pooled row aggregates the
         per-predicate rows exactly."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_reciprocity)
         rows = q_kg_reciprocity(spark, SF).collect()
         per = [r for r in rows if r.pred != "__all__"]

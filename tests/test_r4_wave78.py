@@ -13,8 +13,11 @@ SF = "/root/testdata/sf0.001"
 
 class TestSaltPlanner:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            SALT_TARGET_PER_KEY, q_kg_salt_planner, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            SALT_TARGET_PER_KEY)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_salt_planner)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
         triples = [(r.subj, r.pred, r.obj)
                    for r in q_kg_triples(spark, SF).collect()]
         got = {(r.pred, r.direction): r
@@ -39,8 +42,10 @@ class TestSaltPlanner:
     def test_salt_brings_fan_under_target(self, spark):
         """The defining property: post-salt worst case <= target, and
         salt is always a power of two (1 included)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            SALT_TARGET_PER_KEY, q_kg_salt_planner)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            SALT_TARGET_PER_KEY)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_salt_planner)
         rows = q_kg_salt_planner(spark, SF).collect()
         assert rows
         for r in rows:
@@ -53,8 +58,10 @@ class TestSaltPlanner:
 
 class TestMemorization:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            MEMO_NGRAM_N, q_text_memorization, _docs)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            MEMO_NGRAM_N, _docs)
+        from otd_semantic_framework_spark.plans.queries.text import (
+            q_text_memorization)
         n = MEMO_NGRAM_N
         mass, docs = Counter(), defaultdict(set)
         for r in _docs(spark, SF).collect():
@@ -87,7 +94,7 @@ class TestMemorization:
     def test_masses_account_for_corpus(self, spark):
         """Band masses sum to the total, and duplicated mass is the
         complement of the df=1 band."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.text import (
             q_text_memorization)
         rows = q_text_memorization(spark, SF).collect()
         total = rows[0].total_mass

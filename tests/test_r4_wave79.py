@@ -12,8 +12,10 @@ SF = "/root/testdata/sf0.001"
 
 class TestSurvival:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            SURVIVAL_CENSOR_DAYS, q_stats_survival, _tbl)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            SURVIVAL_CENSOR_DAYS, _tbl)
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_survival)
         per = defaultdict(set)
         for r in _tbl(spark, SF, "events") \
                 .select("user_id", "ts").collect():
@@ -47,7 +49,7 @@ class TestSurvival:
     def test_km_is_monotone_nonincreasing(self, spark):
         """S(t) never rises with t, lives in [0,1], and the at-risk
         counts are non-increasing in t."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_survival)
         rows = sorted(q_stats_survival(spark, SF).collect(),
                       key=lambda r: r.t)
@@ -61,8 +63,9 @@ class TestSurvival:
 
 class TestDedupAttribution:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_dedup_attribution, _docs)
+        from otd_semantic_framework_spark.plans.queries.dedup import (
+            q_dedup_attribution)
+        from otd_semantic_framework_spark.plans.queries._shared import _docs
         rows = [(r.source,
                  hashlib.md5((r.text or "").encode()).hexdigest())
                 for r in _docs(spark, SF).collect()]
@@ -98,7 +101,7 @@ class TestDedupAttribution:
         """Every distinct text is kept exactly once: kept totals equal
         the distinct-hash count, and a source can never shadow
         lexicographically-earlier sources."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.dedup import (
             q_dedup_attribution)
         rows = q_dedup_attribution(spark, SF).collect()
         for r in rows:

@@ -28,7 +28,7 @@ def _mk_docs_dir(spark, tmpdir: str, texts: list[str]) -> str:
 
 class TestSkipgram:
     def test_window_and_symmetry(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.curation import (
             q_curation_skipgram)
         # "a b c d" twice: (a,b)x2 (a,c)x2 but (a,d) is 3 apart -> absent
         d = _mk_docs_dir(spark, "/tmp/w8_sg", ["a b c d", "a b c d"])
@@ -41,7 +41,7 @@ class TestSkipgram:
         assert all(got[(y, x)] == n for (x, y), n in got.items())
 
     def test_min_count_cut(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.curation import (
             q_curation_skipgram)
         d = _mk_docs_dir(spark, "/tmp/w8_sg2", ["unique words here"])
         # every pair occurs once -> HAVING >= 2 drops everything
@@ -52,8 +52,10 @@ class TestLinkPredict:
     def test_never_predicts_existing_edges(self, spark):
         from otd_semantic_framework_spark.operators.graph import (
             undirected_edges)
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_link_predict, q_kg_triples, LINKPRED_TOP)
+        from otd_semantic_framework_spark.plans.queries.kg1 import (
+            q_kg_link_predict, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            LINKPRED_TOP)
         out = q_kg_link_predict(spark, SF).cache()
         assert out.count() > 0
         e = undirected_edges(q_kg_triples(spark, SF))
@@ -70,7 +72,7 @@ class TestLinkPredict:
     def test_square_graph_predicts_diagonals(self, spark):
         from otd_semantic_framework_spark.operators.graph import (
             undirected_edges)
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries._shared import (
             LINKPRED_MIN_COMMON)
         # cycle a-b-c-d-a: diagonals (a,c) and (b,d) share 2 neighbors
         # and have no edge -> exactly the predicted pairs, jaccard 1/2... wait
@@ -95,7 +97,7 @@ class TestLinkPredict:
 
 class TestCollocations:
     def test_association_beats_frequency(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.text import (
             q_text_collocations)
         # "x y" always together (4x); "the" is frequent but promiscuous
         texts = (["x y"] * 4
@@ -111,8 +113,10 @@ class TestCollocations:
         assert all(r.c12 >= 3 for r in rows)
 
     def test_topk_bounded_and_ranked(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_text_collocations, COLLOC_TOP)
+        from otd_semantic_framework_spark.plans.queries.text import (
+            q_text_collocations)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            COLLOC_TOP)
         out = q_text_collocations(spark, SF).cache()
         n = out.count()
         assert 0 < n <= COLLOC_TOP
@@ -124,7 +128,7 @@ class TestCollocations:
 class TestChangepoint:
     def test_planted_level_shift(self, spark):
         from tests.test_r4_wave5 import _mk_events_dir
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel1 import (
             q_rel_changepoint)
         rows, eid = [], 0
         # type "shift": 10 days at 10.0, then 10 days at 110.0 ->
@@ -149,7 +153,7 @@ class TestChangepoint:
         assert got["flat"].max_abs_cusum == 0
 
     def test_one_row_per_type(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel1 import (
             q_rel_changepoint)
         out = q_rel_changepoint(spark, SF).cache()
         types = (spark.read.parquet(f"{SF}/events.parquet")

@@ -12,8 +12,9 @@ SF = "/root/testdata/sf0.001"
 
 class TestThreadStats:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_thread_stats, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_thread_stats)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
         edges = [(r.subj, r.obj)
                  for r in q_kg_triples(spark, SF).collect()
                  if r.pred == "replies_to"]
@@ -43,7 +44,7 @@ class TestThreadStats:
     def test_linear_chains_dominate_fixture(self, spark):
         """The synthetic transcripts are sequential chats: every
         conversation with replies should be a linear chain."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_thread_stats)
         rows = q_kg_thread_stats(spark, SF).collect()
         assert rows
@@ -54,8 +55,10 @@ class TestThreadStats:
 
 class TestInstructionDetect:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            IMPERATIVE_VERBS, q_text_instruction_detect, _docs)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            IMPERATIVE_VERBS, _docs)
+        from otd_semantic_framework_spark.plans.queries.text import (
+            q_text_instruction_detect)
         expected = {}
         for r in _docs(spark, SF).collect():
             s = r.text or ""

@@ -12,8 +12,10 @@ SF = "/root/testdata/sf0.001"
 
 class TestSimpson:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            SIMPSON_VALUE_FENCE, q_rel_simpson, _tbl)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            SIMPSON_VALUE_FENCE, _tbl)
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
+            q_rel_simpson)
         per = defaultdict(lambda: [0, 0, 0, 0])  # n_we s_we n_wd s_wd
         for r in _tbl(spark, SF, "events") \
                 .select("event_type", "ts", "value").collect():
@@ -56,7 +58,7 @@ class TestSimpson:
     def test_overall_pools_strata(self, spark):
         """The pooled row equals the stratum sums, and sign is the
         exact cross-multiplied comparison."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
             q_rel_simpson)
         rows = q_rel_simpson(spark, SF).collect()
         per = [r for r in rows if r.stratum != "__overall__"]
@@ -71,8 +73,9 @@ class TestSimpson:
 
 class TestPvmBridge:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_rel_pvm_bridge, _tbl)
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
+            q_rel_pvm_bridge)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         orders = {r.o_orderkey: r.o_orderdate
                   for r in _tbl(spark, SF, "orders")
                   .select("o_orderkey", "o_orderdate").collect()}
@@ -128,7 +131,7 @@ class TestPvmBridge:
         """The five effects plus residual reconstruct delta exactly,
         and the residual stays tiny relative to revenue (it is pure
         micro-cent quantization error)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
             q_rel_pvm_bridge)
         rows = q_rel_pvm_bridge(spark, SF).collect()
         assert rows

@@ -17,8 +17,9 @@ class TestAnisotropy:
     def test_identity_matches_brute_force(self, spark):
         """The no-join identity equals the literal mean over all
         ordered pairs (on the quantized unit vectors)."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_sim_anisotropy, _tbl)
+        from otd_semantic_framework_spark.plans.queries.sim import (
+            q_sim_anisotropy)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         U = []
         for r in _tbl(spark, SF, "embeddings") \
                 .select("embedding").collect():
@@ -49,7 +50,7 @@ class TestAnisotropy:
         """Hash-derived embeddings are nearly isotropic: the mean
         pairwise cosine must sit near 0 (|cos| < 0.1), unlike a
         contextual-encoder cone."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.sim import (
             q_sim_anisotropy)
         r = q_sim_anisotropy(spark, SF).collect()[0]
         assert abs(r.mean_pairwise_cos) < 0.1
@@ -58,8 +59,9 @@ class TestAnisotropy:
 
 class TestStorageModel:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_storage_model, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
+            q_kg_storage_model)
+        from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_triples
         triples = [(r.subj, r.pred, r.obj)
                    for r in q_kg_triples(spark, SF).collect()]
         got = {r.column: r
@@ -85,7 +87,7 @@ class TestStorageModel:
         """On a low-cardinality KG the model must show compression:
         every column's encoded size is below raw, and pred (3
         distinct values) compresses hardest."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg2 import (
             q_kg_storage_model)
         rows = {r.column: r
                 for r in q_kg_storage_model(spark, SF).collect()}

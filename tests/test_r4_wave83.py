@@ -12,8 +12,9 @@ SF = "/root/testdata/sf0.001"
 
 class TestInteraction:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_rel_interaction, _tbl)
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
+            q_rel_interaction)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         cells = defaultdict(list)
         for r in _tbl(spark, SF, "orders").select(
                 "o_orderdate", "o_orderpriority",
@@ -59,7 +60,7 @@ class TestInteraction:
     def test_ss_identities(self, spark):
         """cells = A + B + interaction, and every eta^2 is in
         [-eps, 1]."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
             q_rel_interaction)
         got = {r.component: r
                for r in q_rel_interaction(spark, SF).collect()}
@@ -73,8 +74,10 @@ class TestInteraction:
 
 class TestQqShift:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            QQ_DECILES, q_stats_qq_shift, _tbl)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            QQ_DECILES, _tbl)
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_qq_shift)
         days = Counter()
         for r in _tbl(spark, SF, "orders").select("o_orderdate") \
                 .collect():
@@ -112,7 +115,7 @@ class TestQqShift:
 
     def test_deciles_are_monotone(self, spark):
         """Order statistics rise with pct within each half."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_qq_shift)
         rows = sorted(q_stats_qq_shift(spark, SF).collect(),
                       key=lambda r: r.pct)

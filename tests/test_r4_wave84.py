@@ -13,8 +13,9 @@ SF = "/root/testdata/sf0.001"
 
 class TestMahalanobisOod:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_sim_mahalanobis_ood, _tbl)
+        from otd_semantic_framework_spark.plans.queries.sim import (
+            q_sim_mahalanobis_ood)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         vecs = {}
         for r in _tbl(spark, SF, "embeddings") \
                 .select("vec_id", "embedding").collect():
@@ -49,7 +50,7 @@ class TestMahalanobisOod:
         """In-distribution scores concentrate near d: the mean score
         must sit within 20% of d, and OOD flags are rare (< 5%) on
         the iid fixture."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.sim import (
             q_sim_mahalanobis_ood)
         rows = q_sim_mahalanobis_ood(spark, SF).collect()
         n = len(rows)
@@ -61,8 +62,9 @@ class TestMahalanobisOod:
 
 class TestCalendarEffects:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_rel_calendar_effects, _tbl)
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
+            q_rel_calendar_effects)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         days = Counter()
         for r in _tbl(spark, SF, "orders").select("o_orderdate") \
                 .collect():
@@ -103,7 +105,7 @@ class TestCalendarEffects:
     def test_lift_weights_short_doms(self, spark):
         """Days 29-31 exist in fewer months, so their n_days weights
         are strictly smaller than day 1's; lifts hover around 1e6."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel2 import (
             q_rel_calendar_effects)
         got = {r.dom: r
                for r in q_rel_calendar_effects(spark, SF).collect()}

@@ -16,8 +16,10 @@ SF = "/root/testdata/sf0.001"
 
 class TestLongMemory:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            LONGMEM_BLOCKS, q_stats_longmemory, _tbl)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            LONGMEM_BLOCKS, _tbl)
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_longmemory)
         days = Counter()
         for r in _tbl(spark, SF, "orders").select("o_orderdate") \
                 .collect():
@@ -57,7 +59,7 @@ class TestLongMemory:
         """Independent daily counts have H ~ 0.5: block-mean variance
         should drop roughly like 1/m, putting the estimates between
         0 and 1."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_longmemory)
         rows = {r.m: r for r in q_stats_longmemory(spark, SF)
                 .collect()}
@@ -70,8 +72,9 @@ class TestLongMemory:
 
 class TestAblation:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_curation_ablation, _docs)
+        from otd_semantic_framework_spark.plans.queries.curation import (
+            q_curation_ablation)
+        from otd_semantic_framework_spark.plans.queries._shared import _docs
         per = defaultdict(lambda: [0, 0])
         src_of_hash = defaultdict(set)
         for r in _docs(spark, SF).collect():
@@ -104,7 +107,7 @@ class TestAblation:
     def test_duplicated_sources_cost_less_unique(self, spark):
         """Removing a source removes at most n_docs unique texts (its
         exclusive hashes), and every complement stays positive."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.curation import (
             q_curation_ablation)
         rows = q_curation_ablation(spark, SF).collect()
         assert rows

@@ -12,8 +12,9 @@ SF = "/root/testdata/sf0.001"
 
 class TestCusum:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_stats_cusum, _tbl)
+        from otd_semantic_framework_spark.plans.queries.stats import (
+            q_stats_cusum)
+        from otd_semantic_framework_spark.plans.queries._shared import _tbl
         days = Counter()
         for r in _tbl(spark, SF, "orders").select("o_orderdate") \
                 .collect():
@@ -44,7 +45,7 @@ class TestCusum:
         """Both statistics are non-negative everywhere (the reset),
         and cannot both be large simultaneously on the same day
         unless variance is extreme."""
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.stats import (
             q_stats_cusum)
         rows = q_stats_cusum(spark, SF).collect()
         assert rows
@@ -56,8 +57,10 @@ class TestCusum:
 
 class TestTruncation:
     def test_matches_python_replay(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            TRUNC_PREFIX_CHARS, q_dedup_truncation, _docs)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            TRUNC_PREFIX_CHARS, _docs)
+        from otd_semantic_framework_spark.plans.queries.dedup import (
+            q_dedup_truncation)
         fam = defaultdict(list)
         for r in _docs(spark, SF).collect():
             t = r.text or ""

@@ -14,7 +14,7 @@ SF = "/root/testdata/sf0.001"
 class TestConcurrency:
     def test_planted_overlap(self, spark):
         from tests.test_r4_wave5 import _mk_events_dir
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.rel1 import (
             q_rel_concurrency)
         # 3 events 4 minutes apart with a 10-min TTL: minutes 8-9 are
         # covered by the events at :00 (0-9), :04 (4-13), :08 (8-17)
@@ -34,8 +34,10 @@ class TestConcurrency:
         assert got["lone"].peak_minute == base + 120
 
     def test_one_row_per_type_and_bounds(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_rel_concurrency, CONC_TTL_MIN)
+        from otd_semantic_framework_spark.plans.queries.rel1 import (
+            q_rel_concurrency)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            CONC_TTL_MIN)
         out = q_rel_concurrency(spark, SF).cache()
         e = spark.read.parquet(f"{SF}/events.parquet")
         per_type = e.groupBy("event_type").count()
@@ -52,8 +54,9 @@ class TestRandomWalks:
     def test_walks_are_paths_over_real_edges(self, spark):
         from otd_semantic_framework_spark.operators.graph import (
             undirected_edges)
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_kg_random_walks, q_kg_triples, WALK_LEN)
+        from otd_semantic_framework_spark.plans.queries.kg1 import (
+            q_kg_random_walks, q_kg_triples)
+        from otd_semantic_framework_spark.plans.queries._shared import WALK_LEN
         walks = q_kg_random_walks(spark, SF).cache()
         # step 0 is the start itself
         assert walks.filter("step = 0 AND start != node").count() == 0
@@ -73,7 +76,7 @@ class TestRandomWalks:
         walks.unpersist()
 
     def test_deterministic_across_runs(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
+        from otd_semantic_framework_spark.plans.queries.kg1 import (
             q_kg_random_walks)
         a = q_kg_random_walks(spark, SF)
         b = q_kg_random_walks(spark, SF)
@@ -83,8 +86,10 @@ class TestRandomWalks:
 
 class TestDedupCanonical:
     def test_survivor_is_longest_member(self, spark):
-        from otd_semantic_framework_spark.plans.driver_queries import (
-            q_dedup_canonical, q_dedup_components, JACCARD_MAX_DOC)
+        from otd_semantic_framework_spark.plans.queries.dedup import (
+            q_dedup_canonical, q_dedup_components)
+        from otd_semantic_framework_spark.plans.queries._shared import (
+            JACCARD_MAX_DOC)
         out = q_dedup_canonical(spark, SF).cache()
         comp = q_dedup_components(spark, SF)
         docs = (spark.read.parquet(f"{SF}/documents.parquet")

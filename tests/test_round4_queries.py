@@ -7,9 +7,10 @@ import re
 
 from pyspark.sql import functions as F
 
-from otd_semantic_framework_spark.plans.driver_queries import (
-    BATCH_SEARCH_QUERIES, SEARCH_QUERY, q_kg_batch_search, q_kg_nt_export,
-    q_kg_search, q_kg_triples)
+from otd_semantic_framework_spark.plans.queries._shared import (
+    BATCH_SEARCH_QUERIES, SEARCH_QUERY)
+from otd_semantic_framework_spark.plans.queries.kg1 import (
+    q_kg_batch_search, q_kg_nt_export, q_kg_search, q_kg_triples)
 
 SF = "/root/testdata/sf0.001"
 
@@ -121,7 +122,7 @@ def test_maxsim_plan_is_jvm_only(spark):
     """The scoring expression is higher-order functions, not Python:
     the physical plan must contain no Python evaluation node and must
     broadcast the candidate side."""
-    from otd_semantic_framework_spark.plans.driver_queries import (
+    from otd_semantic_framework_spark.plans.queries.sim import (
         q_sim_maxsim_topk)
     plan = (q_sim_maxsim_topk(spark, SF)
             ._jdf.queryExecution().executedPlan().toString())
@@ -140,7 +141,7 @@ def test_clustering_coefficient_bounds_and_triangle_consistency(spark):
     """cc is a ratio: 0 <= cc_ppm <= 1e6; degree-1 vertices pin to 0;
     a vertex with triangles must have degree >= 2; and the triangle
     column must agree with q_kg_triangles on every shared vertex."""
-    from otd_semantic_framework_spark.plans.driver_queries import (
+    from otd_semantic_framework_spark.plans.queries.kg1 import (
         q_kg_clustering, q_kg_triangles)
     cc = {r.concept_id: r for r in q_kg_clustering(spark, SF).collect()}
     assert cc, "empty clustering output"
@@ -181,8 +182,9 @@ def test_semantic_dedup_partitions_the_tagged_turns(spark):
     """Cluster sizes sum to the number of tagged turns; keepers are
     member units; every member of a cluster shares the exact concept
     set (spot-check the largest cluster)."""
-    from otd_semantic_framework_spark.plans.driver_queries import (
-        _mentions_df, q_dedup_semantic)
+    from otd_semantic_framework_spark.plans.queries._shared import _mentions_df
+    from otd_semantic_framework_spark.plans.queries.dedup import (
+        q_dedup_semantic)
     tags = (_mentions_df(spark, SF)
             .select("conv_id", "turn_idx", "concept_id").distinct())
     n_units = tags.select("conv_id", "turn_idx").distinct().count()
@@ -203,8 +205,7 @@ def test_funnel_is_ordered_and_monotone(spark):
     strict-ordering semantics must bind: a user whose only purchase
     precedes their first click must NOT count as a purchase
     conversion (checked on a hand-built corpus)."""
-    from otd_semantic_framework_spark.plans.driver_queries import (
-        q_rel_funnel)
+    from otd_semantic_framework_spark.plans.queries.rel1 import q_rel_funnel
     row = q_rel_funnel(spark, SF).collect()[0]
     assert row.n_view >= row.n_click >= row.n_purchase
     assert row.n_view > 0 and row.n_click > 0, "fixture funnel inert"
@@ -237,7 +238,7 @@ def test_concept_drift_shares_sum_and_lag_alignment(spark):
     """Within every stage the concept shares must sum to ~1e6 ppm
     (floor division loses < n_concepts ppm), and prev_share_ppm must
     equal the same concept's share at its previous observed stage."""
-    from otd_semantic_framework_spark.plans.driver_queries import (
+    from otd_semantic_framework_spark.plans.queries.kg1 import (
         q_kg_concept_drift)
     rows = q_kg_concept_drift(spark, SF).collect()
     assert rows
@@ -280,8 +281,8 @@ def test_kg_related_counts_and_bounds(spark):
     """Pair intersection counts bounded by per-concept counts; the
     per-concept counts agree with a direct aggregation; jaccard in
     (0, 1e6]."""
-    from otd_semantic_framework_spark.plans.driver_queries import (
-        _mentions_df, q_kg_related)
+    from otd_semantic_framework_spark.plans.queries._shared import _mentions_df
+    from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_related
     tags = (_mentions_df(spark, SF)
             .select("conv_id", "turn_idx", "concept_id").distinct())
     direct = {r.concept_id: r.n for r in
@@ -303,8 +304,8 @@ def test_kg_resnik_brute_force_replay(spark):
     """Full pure-Python replay of the MICS selection on the fixture:
     for every emitted pair the mics must be the min-mass (tie: min id)
     common ancestor-or-self, with the exact mass and ppm."""
-    from otd_semantic_framework_spark.plans.driver_queries import (
-        _mentions_df, q_kg_resnik)
+    from otd_semantic_framework_spark.plans.queries._shared import _mentions_df
+    from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_resnik
     from otd_semantic_framework_spark.plans.driver_ontology import (
         driver_concepts)
     path = {c.concept_id: set(c.path) for c in driver_concepts()}
@@ -340,7 +341,7 @@ def test_resnik_sibling_pairs_more_similar_than_cross_branch(spark):
     """Semantic sanity: two leaves under the same branch must have a
     MICS at least as informative (<= mass) as a cross-branch pair's
     (whose only common subsumer is the root)."""
-    from otd_semantic_framework_spark.plans.driver_queries import q_kg_resnik
+    from otd_semantic_framework_spark.plans.queries.kg1 import q_kg_resnik
     from otd_semantic_framework_spark.plans.driver_ontology import (
         driver_concepts)
     parent = {c.concept_id: c.parent_id for c in driver_concepts()}
@@ -361,7 +362,7 @@ def test_window_dist_invariants(spark):
     """Per-nation: rnk is 1..n dense over unique custkeys; quartiles
     are 1..4 and non-decreasing along rnk; pct/cume ppm are exact rank
     arithmetic and monotone."""
-    from otd_semantic_framework_spark.plans.driver_queries import (
+    from otd_semantic_framework_spark.plans.queries.rel1 import (
         q_rel_window_dist)
     rows = q_rel_window_dist(spark, SF).collect()
     assert rows
@@ -389,7 +390,7 @@ def test_funnel_latency_histogram_consistency(spark):
     """Band counts sum to the funnel's purchase count; cum_users is a
     strictly increasing prefix sum ending at the total; the last
     cum_share_ppm is exactly 1e6."""
-    from otd_semantic_framework_spark.plans.driver_queries import (
+    from otd_semantic_framework_spark.plans.queries.rel1 import (
         q_rel_funnel, q_rel_funnel_latency)
     n_purchase = q_rel_funnel(spark, SF).collect()[0].n_purchase
     rows = sorted(q_rel_funnel_latency(spark, SF).collect(),
@@ -410,8 +411,8 @@ def test_retention_cohort_triangle(spark):
     (everyone is active in their first week) => retained_ppm == 1e6;
     n_active never exceeds cohort_size; cohort sizes sum to the
     number of distinct users."""
-    from otd_semantic_framework_spark.plans.driver_queries import (
-        _tbl, q_rel_retention)
+    from otd_semantic_framework_spark.plans.queries._shared import _tbl
+    from otd_semantic_framework_spark.plans.queries.rel1 import q_rel_retention
     rows = q_rel_retention(spark, SF).collect()
     assert rows
     n_users = (_tbl(spark, SF, "events")
@@ -450,7 +451,7 @@ def test_dsir_fixture_target_mean_exceeds_raw_mean(spark):
     """On the driver fixture with lang='en' as target, the mean score
     of target docs must exceed the mean of non-target docs — the
     importance weights must actually tilt toward the target."""
-    from otd_semantic_framework_spark.plans.driver_queries import (
+    from otd_semantic_framework_spark.plans.queries.curation import (
         q_curation_dsir)
     rows = q_curation_dsir(spark, SF).collect()
     tgt = [r.dsir_score_ppm for r in rows if r.is_target]
@@ -465,7 +466,7 @@ def test_lexical_diversity_hand_and_fixture(spark):
     fixture: bounds and exact ratio arithmetic for every row."""
     from otd_semantic_framework_spark.operators.textstats import (
         lexical_diversity)
-    from otd_semantic_framework_spark.plans.driver_queries import q_text_ttr
+    from otd_semantic_framework_spark.plans.queries.text import q_text_ttr
     docs = spark.createDataFrame(
         [(1, "a b c d"), (2, "x x x x x"), (3, ""), (4, None),
          (5, "w w y")],
