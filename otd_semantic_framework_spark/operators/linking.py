@@ -34,6 +34,8 @@ candidates against `concept_similarity` (P10).
 
 from __future__ import annotations
 
+import hashlib
+import json
 from collections.abc import Iterator
 from functools import cached_property
 
@@ -158,13 +160,22 @@ def surface_canonical_table(ontology_pdf: pd.DataFrame,
         rows, columns=["surface", "concept_id", "cos_sim", "link_score"])
 
 
+# OntologySetup.digest -> surface canonical table, one small frame per
+# distinct ontology content seen by the process. The table is a pure
+# function of that content, so setups over equal content share one
+# computation (two threads missing at once both compute the same table);
+# callers get copies, never the memoised frame.
+_CANONICAL_MEMO: dict[str, pd.DataFrame] = {}
+
+
 class OntologySetup:
     """The one driver-side ontology setup of KG construction: concepts →
-    gazetteer, then (on first use of :attr:`canonical`) Wu-Palmer pairs
-    → :func:`surface_canonical_table`. Built once per ontology frame by
-    ``build_triples_fast``, ``run_pipeline`` and the query oracles. The
-    canonical table is lazy because ``run_pipeline``'s fine-grained
-    stages never read it."""
+    gazetteer, then (on use of :attr:`canonical`) Wu-Palmer pairs →
+    :func:`surface_canonical_table`. Built per call by
+    ``build_triples_fast``, ``run_pipeline`` and the query oracles; the
+    canonical table is computed once per ontology CONTENT
+    (:attr:`digest`) per process and handed out as a copy. It is lazy
+    because ``run_pipeline``'s fine-grained stages never read it."""
 
     def __init__(self, ontology_pdf: pd.DataFrame):
         self.ontology_pdf = ontology_pdf
@@ -175,13 +186,29 @@ class OntologySetup:
         self.gazetteer = S.build_gazetteer(self.concepts)
 
     @cached_property
+    def digest(self) -> str:
+        """Order-free sha256 over every column the setup reads, the
+        embeddings included (:func:`concept_matrix` scores against
+        them): the memo key of :attr:`canonical` and the ontology part
+        of ``run_pipeline``'s checkpoint fingerprint."""
+        rows = sorted(
+            json.dumps([c.concept_id, c.pref_label, sorted(c.alt_labels),
+                        c.parent_id, c.depth, c.path,
+                        np.asarray(e, dtype=np.float64).tobytes().hex()])
+            for c, e in zip(self.concepts, self.ontology_pdf["embedding"]))
+        return hashlib.sha256("\n".join(rows).encode()).hexdigest()
+
+    @property
     def canonical(self) -> pd.DataFrame:
-        wup_pdf = pd.DataFrame(
-            [(a.concept_id, b.concept_id, S.wup_similarity(a, b))
-             for a in self.concepts for b in self.concepts],
-            columns=["concept_a", "concept_b", "wup"])
-        return surface_canonical_table(self.ontology_pdf, self.gazetteer,
-                                       wup_pdf)
+        table = _CANONICAL_MEMO.get(self.digest)
+        if table is None:
+            wup_pdf = pd.DataFrame(
+                [(a.concept_id, b.concept_id, S.wup_similarity(a, b))
+                 for a in self.concepts for b in self.concepts],
+                columns=["concept_a", "concept_b", "wup"])
+            table = _CANONICAL_MEMO[self.digest] = surface_canonical_table(
+                self.ontology_pdf, self.gazetteer, wup_pdf)
+        return table.copy()
 
 
 def canonicalize_broadcast(mentions: DataFrame,

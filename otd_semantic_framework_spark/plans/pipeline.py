@@ -132,6 +132,19 @@ class CheckpointedRun:
         return out
 
 
+def respread(spark: SparkSession, df: DataFrame,
+             n: int | None = None) -> DataFrame:
+    """P11: round-robin respread before the mention UDF. The UDF is
+    map-only, so an even spread defuses hot-conversation stragglers (one
+    skewed input partition otherwise pins the whole stage). ``n``
+    defaults to ONE task per core: round-robin already makes the
+    partitions equal in size, so more waves add no balance, and every
+    Python task pays a fixed worker set-up (pyspark's per-task
+    ``importlib.invalidate_caches`` over its zip imports, ~0.3 s a wave
+    on 4 cores) that does not shrink with the partition."""
+    return df.repartition(n or spark.sparkContext.defaultParallelism)
+
+
 def build_triples_fast(spark: SparkSession, transcripts: DataFrame,
                        ontology_pdf: pd.DataFrame | None = None,
                        spread_partitions: int | None = None) -> DataFrame:
@@ -155,17 +168,11 @@ def build_triples_fast(spark: SparkSession, transcripts: DataFrame,
     tests/test_autotag.py::test_fast_path_equals_checkpointed."""
     onto = OntologySetup(ontology_pdf if ontology_pdf is not None
                          else fixtures.ontology_pandas())
-    # P11: the mention UDF is map-only, so a round-robin respread defuses
-    # hot-conversation stragglers (one skewed input partition otherwise
-    # pins the whole wave). Default 3 waves per core;
-    # ``spread_partitions=0`` disables the respread entirely — the
+    # ``spread_partitions=0`` disables the P11 respread entirely — the
     # DIAGNOSTIC baseline the adversarial-skew bench
     # (scripts/skew_bench.py) measures the salting against.
-    if spread_partitions == 0:
-        spread = transcripts
-    else:
-        n = spread_partitions or spark.sparkContext.defaultParallelism * 3
-        spread = transcripts.repartition(n)
+    spread = (transcripts if spread_partitions == 0
+              else respread(spark, transcripts, spread_partitions))
     canon_concepts = detect_canonical_concepts_exploded(
         normalize_turns(spread), onto.gazetteer, onto.canonical)
     return (
@@ -224,18 +231,10 @@ def run_pipeline(
     onto = OntologySetup(ontology_pdf)
     gaz = onto.gazetteer
     run = CheckpointedRun(spark, run_dir, run_id)
-    # The fingerprint must digest the ontology's CONTENT, not just its
-    # size (same discipline as the manual-tags digest below): an edited
-    # taxonomy with an unchanged concept count — relabeled concept,
-    # re-parented subtree — must NOT resume checkpoints computed under
-    # the old one. Order-free over the identity-bearing fields.
-    onto_digest = S.stable_hash(
-        "onto", *sorted(f"{c.concept_id}\x00{c.pref_label}\x00"
-                        f"{c.parent_id}\x00{'/'.join(c.path)}\x00"
-                        f"{'+'.join(sorted(c.alt_labels))}"
-                        for c in onto.concepts))
-    cfg_fp = (len(ontology_pdf), f"onto:{onto_digest:x}",
-              S.COS_THRESHOLD, S.LINK_ALPHA, S.TOP_K)
+    # The fingerprint digests the ontology's CONTENT, every column
+    # included (embeddings too): an edited taxonomy or retrained
+    # embeddings must NOT resume checkpoints computed under the old ones.
+    cfg_fp = (f"onto:{onto.digest}", S.COS_THRESHOLD, S.LINK_ALPHA, S.TOP_K)
 
     ontology_df = spark.createDataFrame(ontology_pdf, schema=ONTOLOGY_CONCEPTS)
     concept_sim = run.stage(
@@ -244,8 +243,7 @@ def run_pipeline(
     if stop_after == "concept_similarity":
         return PipelineResult(None, None, run.metrics)
 
-    # P11 respread before the UDF stage (hot-conversation stragglers)
-    spread = transcripts.repartition(spark.sparkContext.defaultParallelism * 3)
+    spread = respread(spark, transcripts)
 
     if fused_linking:
         canonical = run.stage("canonical", cfg_fp, lambda: canonicalize_broadcast(

@@ -48,3 +48,14 @@ def small_df(spark, small_pdf):
 @pytest.fixture(scope="session")
 def ontology_pdf():
     return fixtures.ontology_pandas()
+
+
+@pytest.fixture(scope="session")
+def retrained_ontology_pdf(ontology_pdf):
+    """Same taxonomy as ``ontology_pdf``, one concept's embedding
+    retrained (negated): an embedding-only edit."""
+    edited = ontology_pdf.copy()
+    emb = list(edited["embedding"])
+    emb[0] = [-x for x in emb[0]]
+    edited["embedding"] = emb
+    return edited

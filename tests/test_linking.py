@@ -1,11 +1,13 @@
 """P6/P7/P9/P10 — linking: both physical strategies agree; candidates
 respect threshold/top-k; canonicalization is deterministic."""
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from otd_semantic_framework_spark import semantics as S
 from otd_semantic_framework_spark.operators.linking import (
-    canonicalize, link_candidates_arrow, link_candidates_broadcast)
+    OntologySetup, canonicalize, link_candidates_arrow,
+    link_candidates_broadcast, surface_canonical_table)
 from otd_semantic_framework_spark.operators.mentions import (
     detect_mentions_exploded)
 from otd_semantic_framework_spark.operators.normalize import normalize_turns
@@ -78,3 +80,57 @@ def test_precomputed_canonical_equals_compute_path(spark, tiny_df, ontology_pdf)
     k2 = sorted((r.mention_id, r.concept_id, round(r.link_score, 6))
                 for r in fast.collect())
     assert k1 == k2
+
+
+def _counting_canonical_table(monkeypatch):
+    """Fresh canonical-table memo plus a counter of
+    surface_canonical_table calls."""
+    from otd_semantic_framework_spark.operators import linking
+    monkeypatch.setattr(linking, "_CANONICAL_MEMO", {})
+    calls = []
+    real = linking.surface_canonical_table
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(linking, "surface_canonical_table", counting)
+    return calls
+
+
+def test_canonical_table_computed_once_per_content(monkeypatch, ontology_pdf):
+    calls = _counting_canonical_table(monkeypatch)
+    first = OntologySetup(ontology_pdf).canonical
+    # equal content in a different frame (rows reversed) hits the memo
+    again = OntologySetup(
+        ontology_pdf.iloc[::-1].reset_index(drop=True)).canonical
+    assert len(calls) == 1
+    assert again.equals(first)
+
+
+def test_embedding_edit_recomputes_canonical_table(monkeypatch, ontology_pdf,
+                                                  retrained_ontology_pdf):
+    calls = _counting_canonical_table(monkeypatch)
+    base = OntologySetup(ontology_pdf)
+    assert not base.canonical.empty
+    edited = OntologySetup(retrained_ontology_pdf)
+    assert edited.digest != base.digest
+    table = edited.canonical
+    assert len(calls) == 2
+    wup = pd.DataFrame(
+        [(a.concept_id, b.concept_id, S.wup_similarity(a, b))
+         for a in edited.concepts for b in edited.concepts],
+        columns=["concept_a", "concept_b", "wup"])
+    assert table.equals(surface_canonical_table(
+        retrained_ontology_pdf, edited.gazetteer, wup))
+
+
+def test_mutating_canonical_table_does_not_leak(monkeypatch, ontology_pdf):
+    _counting_canonical_table(monkeypatch)
+    onto = OntologySetup(ontology_pdf)
+    table = onto.canonical
+    pristine = table.copy()
+    table.loc[:, "link_score"] = -1.0
+    table.drop(table.index[:3], inplace=True)
+    assert onto.canonical.equals(pristine)
+    assert OntologySetup(ontology_pdf).canonical.equals(pristine)

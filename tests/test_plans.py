@@ -68,8 +68,9 @@ def test_fast_path_plan_shape(spark, tiny_df):
 def test_fast_path_exchange_and_scan_counts(spark, tiny_df, tmp_path):
     """build_triples_fast's docstring, pinned on the EXECUTED (AQE
     final) plan over a parquet source: exactly two Exchanges — the P11
-    round-robin respread and the replies_to window's conv_id hash — and
-    three parquet scans, one per triple rule."""
+    round-robin respread, sized to one task per core, and the
+    replies_to window's conv_id hash — and three parquet scans, one per
+    triple rule."""
     p = str(tmp_path / "t.parquet")
     tiny_df.write.parquet(p)
     df = build_triples_fast(spark, spark.read.parquet(p))
@@ -78,6 +79,8 @@ def test_fast_path_exchange_and_scan_counts(spark, tiny_df, tmp_path):
     assert "isFinalPlan=true" in final
     exchanges = re.findall(r"\bExchange (\w+)", final)
     assert sorted(exchanges) == ["RoundRobinPartitioning", "hashpartitioning"]
+    n = spark.sparkContext.defaultParallelism
+    assert f"RoundRobinPartitioning({n})" in final
     assert final.count("FileScan parquet") == 3
 
 

@@ -206,3 +206,22 @@ def test_edited_ontology_invalidates_checkpoints(spark, tiny_df, tmp_path):
     # and an UNCHANGED ontology still resumes everything
     res2 = run_pipeline(spark, tiny_df, run_dir, ontology_pdf=edited)
     assert all(m.get("resumed", False) for m in res2.metrics.values())
+
+
+def test_embedding_edit_invalidates_checkpoints(spark, tiny_df, tmp_path,
+                                                ontology_pdf,
+                                                retrained_ontology_pdf):
+    """Retrained embeddings with an unchanged taxonomy must not resume
+    the candidates checkpoint (candidate scores are cosines against the
+    concept embeddings); the same edited ontology then resumes it."""
+    run_dir = str(tmp_path / "run")
+    run_pipeline(spark, tiny_df, run_dir, ontology_pdf=ontology_pdf,
+                 stop_after="candidates")
+    res = run_pipeline(spark, tiny_df, run_dir,
+                       ontology_pdf=retrained_ontology_pdf,
+                       stop_after="candidates")
+    assert res.metrics["candidates"]["resumed"] is False, res.metrics
+    res2 = run_pipeline(spark, tiny_df, run_dir,
+                        ontology_pdf=retrained_ontology_pdf,
+                        stop_after="candidates")
+    assert res2.metrics["candidates"]["resumed"] is True, res2.metrics
