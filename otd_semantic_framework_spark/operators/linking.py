@@ -7,36 +7,32 @@ taxonomy-distance scoring for entity canonicalization. Entity linking is
 a broadcast-join of candidate mentions against the precomputed ontology
 concept-similarity matrix."
 
-Two physical strategies for the candidate stage, identical results
-(asserted by tests/test_linking.py):
+Every artifact the linking layer derives from the ontology is a pure
+function of it, and :class:`OntologySetup` is the one place each is
+derived: the label-embedding table (:func:`ontology_table`), the
+gazetteer, the per-surface cosine scores over it, the Wu-Palmer pairs
+and the blended canonical table.
 
-1. :func:`link_candidates_arrow` — the GENERAL path. ``mapInPandas``
-   over Arrow batches; per batch: gather token vectors for the batch's
-   unique surfaces (embedding lookup, P6 — mean-pool + renormalize),
-   one ``M @ C.T`` numpy matmul against the broadcast concept matrix,
-   ``argsort`` top-k ≥ θ. No per-row Python in the math. Handles
-   unbounded mention vocabularies.
-
-2. :func:`link_candidates_broadcast` — the SCALE path (P10) when the
-   mention vocabulary is bounded (gazetteer mentions always are): score
-   every DISTINCT surface once driver-side into a tiny
-   (surface, concept_id, cos_sim) table and broadcast-hash-join it to the
-   mention stream. At 10^12 turns this turns a per-row vector compute
-   into a map-side join against a few-thousand-row table — the same
-   precompute-then-join trick the reference uses with its cached CDS
-   matrix [K].
+Candidates (P7/P10): the mention vocabulary is closed (gazetteer
+mentions always are), so every DISTINCT surface is scored once
+driver-side into a tiny (surface, concept_id, cos_sim) table
+(:attr:`OntologySetup.scores`) that :func:`link_candidates_broadcast`
+broadcast-hash-joins to the mention stream. At 10^12 turns this turns a
+per-row vector compute into a map-side join against a few-thousand-row
+table — the same precompute-then-join trick the reference uses with its
+cached CDS matrix [K].
 
 Canonicalization (P9): top-cos concept per mention defines the anchor
 c_top; link_score(c) = α·cos(c) + (1−α)·wup(c, c_top); best link_score
-wins (ties → smallest concept_id). The wup lookup is a broadcast join of
-candidates against `concept_similarity` (P10).
+wins (ties → smallest concept_id). :func:`blend_scores` is the one
+driver-side blend; :func:`canonicalize` is its Spark twin, a broadcast
+join of candidates against `concept_similarity` (P10).
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-from collections.abc import Iterator
 from functools import cached_property
 
 import numpy as np
@@ -46,10 +42,22 @@ from pyspark.sql import functions as F
 
 from .. import semantics as S
 
-_CAND_SCHEMA = (
-    "conv_id string, turn_idx int, mention_id long, surface string, "
-    "concept_id string, cos_sim double"
-)
+
+def label_embedding(label: str) -> list[float]:
+    """The ontology's label-embedding rule (P6): the hash phrase vector
+    of the normalized label."""
+    return [float(x) for x in S.phrase_vector(S.normalize_text(label))]
+
+
+def ontology_table(concepts) -> pd.DataFrame:
+    """The ontology_concepts table (FIXTURES.md B2) of ``concepts``,
+    with one :func:`label_embedding` per pref label."""
+    return pd.DataFrame(
+        [(c.concept_id, c.pref_label, list(c.alt_labels), c.parent_id,
+          c.depth, list(c.path), label_embedding(c.pref_label))
+         for c in concepts],
+        columns=["concept_id", "pref_label", "alt_labels", "parent_id",
+                 "depth", "path", "embedding"])
 
 
 def concept_matrix(ontology_pdf: pd.DataFrame) -> tuple[list[str], np.ndarray]:
@@ -65,7 +73,7 @@ def score_surfaces(surfaces: list[str], concept_ids: list[str],
     """Pure scoring core: unique surfaces → (surface, concept_id, cos_sim).
 
     cos rounded to SCORE_DECIMALS; top-k by (-cos, concept_id).
-    Shared by both physical strategies AND by the search path (P17).
+    Shared by :attr:`OntologySetup.scores` and the search path (P17).
     """
     if not surfaces:
         return pd.DataFrame(columns=["surface", "concept_id", "cos_sim"])
@@ -83,36 +91,12 @@ def score_surfaces(surfaces: list[str], concept_ids: list[str],
     return pd.DataFrame(rows, columns=["surface", "concept_id", "cos_sim"])
 
 
-def link_candidates_arrow(mentions: DataFrame, ontology_pdf: pd.DataFrame,
-                          top_k: int = S.TOP_K,
-                          threshold: float = S.COS_THRESHOLD) -> DataFrame:
-    """General path: Arrow-batched embedding + matmul inside executors."""
-    concept_ids, cmat = concept_matrix(ontology_pdf)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            uniq = pdf["surface"].drop_duplicates().tolist()
-            scores = score_surfaces(uniq, concept_ids, cmat, top_k, threshold)
-            out = pdf.merge(scores, on="surface", how="inner")
-            yield out[["conv_id", "turn_idx", "mention_id", "surface",
-                       "concept_id", "cos_sim"]]
-
-    return mentions.mapInPandas(run, schema=_CAND_SCHEMA)
-
-
-def link_candidates_broadcast(mentions: DataFrame, ontology_pdf: pd.DataFrame,
-                              gazetteer: dict[str, str],
-                              top_k: int = S.TOP_K,
-                              threshold: float = S.COS_THRESHOLD) -> DataFrame:
-    """Scale path (P10): precompute scores for the closed surface
-    vocabulary, broadcast-join to the mention stream (map-side only)."""
-    spark = mentions.sparkSession
-    concept_ids, cmat = concept_matrix(ontology_pdf)
-    surfaces = sorted(gazetteer)
-    scores = score_surfaces(surfaces, concept_ids, cmat, top_k, threshold)
-    score_df = spark.createDataFrame(
+def link_candidates_broadcast(mentions: DataFrame,
+                              scores: pd.DataFrame) -> DataFrame:
+    """P7/P10: broadcast-join the precomputed surface scores
+    (:attr:`OntologySetup.scores`) to the mention stream (map-side
+    only; surfaces without a candidate drop out)."""
+    score_df = mentions.sparkSession.createDataFrame(
         scores, schema="surface string, concept_id string, cos_sim double")
     return (
         mentions.join(F.broadcast(score_df), "surface", "inner")
@@ -121,61 +105,70 @@ def link_candidates_broadcast(mentions: DataFrame, ontology_pdf: pd.DataFrame,
     )
 
 
+def blend_scores(scores: pd.DataFrame, wup_pdf: pd.DataFrame,
+                 alpha: float) -> pd.DataFrame:
+    """The driver-side P9 blend. Per surface the anchor is the cos-top
+    concept (ties → smallest id), and every candidate gets
+    link_score = round(α·cos + (1−α)·wup(candidate, anchor), 6).
+
+    The rounding is half away from zero, the SQL ROUND of both Spark
+    (``F.round`` in :func:`canonicalize`) and DuckDB: the blended value
+    is hash-compared against SQL in the oracles, and builtin ``round``
+    differs from it on .5 boundaries. Returns ``scores`` ordered by
+    (surface, −cos_sim, concept_id) plus a ``link_score`` column."""
+    wup = dict(zip(zip(wup_pdf["concept_a"], wup_pdf["concept_b"]),
+                   wup_pdf["wup"]))
+    g = scores.sort_values(["surface", "cos_sim", "concept_id"],
+                           ascending=[True, False, True])
+    anchor = g.groupby("surface")["concept_id"].transform("first")
+    w = np.array([wup.get(k, 0.0) for k in zip(g["concept_id"], anchor)],
+                 dtype=np.float64)
+    link = S.round_half_away(
+        alpha * g["cos_sim"].to_numpy(dtype=np.float64) + (1 - alpha) * w,
+        S.SCORE_DECIMALS)
+    return g.assign(link_score=link).reset_index(drop=True)
+
+
 def surface_canonical_table(ontology_pdf: pd.DataFrame,
                             gazetteer: dict[str, str],
-                            wup_pdf: pd.DataFrame,
-                            alpha: float = S.LINK_ALPHA,
-                            top_k: int = S.TOP_K,
-                            threshold: float = S.COS_THRESHOLD) -> pd.DataFrame:
+                            wup_pdf: pd.DataFrame) -> pd.DataFrame:
     """Fully-precomputed (surface → canonical concept, link_score).
 
     Candidate sets, the cos-top anchor, and the Wu-Palmer-blended winner
     are all pure functions of the surface string, so for a closed
     mention vocabulary the ENTIRE P7→P9 chain collapses into one tiny
-    table computed driver-side once — the same precompute-the-scores
-    move the reference makes with its cached CDS matrix [K]. At corpus
-    scale canonicalization then costs one broadcast hash join: zero
-    shuffles, zero Python. Equivalence with the compute path is pinned
-    by tests/test_linking.py."""
-    concept_ids, cmat = concept_matrix(ontology_pdf)
-    scores = score_surfaces(sorted(gazetteer), concept_ids, cmat,
-                            top_k, threshold)
-    wup = {(r.concept_a, r.concept_b): r.wup for r in wup_pdf.itertuples()}
-    rows = []
-    for surface, grp in scores.groupby("surface"):
-        g = grp.sort_values(["cos_sim", "concept_id"],
-                            ascending=[False, True])
-        top_cid = g.iloc[0]["concept_id"]
-        best = None
-        for r in g.itertuples():
-            link = round(alpha * r.cos_sim
-                         + (1 - alpha) * wup.get((r.concept_id, top_cid), 0.0),
-                         S.SCORE_DECIMALS)
-            key = (-link, r.concept_id)
-            if best is None or key < best[0]:
-                best = (key, r.concept_id, r.cos_sim, link)
-        _, cid, cos, link = best
-        rows.append((surface, cid, float(cos), float(link)))
-    return pd.DataFrame(
-        rows, columns=["surface", "concept_id", "cos_sim", "link_score"])
+    table computed driver-side once: :func:`blend_scores` over the
+    gazetteer's surface scores, then the best link_score per surface
+    (ties → smallest concept_id). At corpus scale canonicalization then
+    costs one broadcast hash join: zero shuffles, zero Python.
+    Equivalence with the Spark compute path is pinned by
+    tests/test_linking.py."""
+    scores = score_surfaces(sorted(gazetteer), *concept_matrix(ontology_pdf))
+    return (blend_scores(scores, wup_pdf, S.LINK_ALPHA)
+            .sort_values(["surface", "link_score", "concept_id"],
+                         ascending=[True, False, True])
+            .drop_duplicates("surface")
+            .reset_index(drop=True))
 
 
-# OntologySetup.digest -> surface canonical table, one small frame per
-# distinct ontology content seen by the process. The table is a pure
-# function of that content, so setups over equal content share one
-# computation (two threads missing at once both compute the same table);
+# (artifact name, OntologySetup.digest) -> small frame, one per derived
+# artifact per distinct ontology content seen by the process. Each is a
+# pure function of that content, so setups over equal content share one
+# computation (two threads missing at once both compute the same frame);
 # callers get copies, never the memoised frame.
-_CANONICAL_MEMO: dict[str, pd.DataFrame] = {}
+_MEMO: dict[tuple[str, str], pd.DataFrame] = {}
 
 
 class OntologySetup:
-    """The one driver-side ontology setup of KG construction: concepts →
-    gazetteer, then (on use of :attr:`canonical`) Wu-Palmer pairs →
-    :func:`surface_canonical_table`. Built per call by
-    ``build_triples_fast``, ``run_pipeline`` and the query oracles; the
-    canonical table is computed once per ontology CONTENT
-    (:attr:`digest`) per process and handed out as a copy. It is lazy
-    because ``run_pipeline``'s fine-grained stages never read it."""
+    """The one driver-side ontology setup: concepts → gazetteer, and on
+    first use, per ontology CONTENT (:attr:`digest`) per process, the
+    derived tables :attr:`scores`, :attr:`wup` and :attr:`canonical`,
+    each handed out as a copy. Built by ``build_triples_fast``,
+    ``run_pipeline`` and the driver ontology
+    (``plans.driver_ontology.driver_setup``). The tables are lazy
+    because most callers read one of them: ``run_pipeline``'s
+    fine-grained stages only :attr:`scores`, the fused paths only
+    :attr:`canonical`."""
 
     def __init__(self, ontology_pdf: pd.DataFrame):
         self.ontology_pdf = ontology_pdf
@@ -189,7 +182,7 @@ class OntologySetup:
     def digest(self) -> str:
         """Order-free sha256 over every column the setup reads, the
         embeddings included (:func:`concept_matrix` scores against
-        them): the memo key of :attr:`canonical` and the ontology part
+        them): the memo key of the derived tables and the ontology part
         of ``run_pipeline``'s checkpoint fingerprint."""
         rows = sorted(
             json.dumps([c.concept_id, c.pref_label, sorted(c.alt_labels),
@@ -198,17 +191,35 @@ class OntologySetup:
             for c, e in zip(self.concepts, self.ontology_pdf["embedding"]))
         return hashlib.sha256("\n".join(rows).encode()).hexdigest()
 
+    def _memo(self, name: str, build) -> pd.DataFrame:
+        key = (name, self.digest)
+        table = _MEMO.get(key)
+        if table is None:
+            table = _MEMO[key] = build()
+        return table.copy()
+
+    @property
+    def scores(self) -> pd.DataFrame:
+        """(surface, concept_id, cos_sim): top-k cosine ≥ θ of every
+        gazetteer surface (P7)."""
+        return self._memo("scores", lambda: score_surfaces(
+            sorted(self.gazetteer), *concept_matrix(self.ontology_pdf)))
+
+    @property
+    def wup(self) -> pd.DataFrame:
+        """(concept_a, concept_b, wup): all-pairs Wu-Palmer (P8),
+        unrounded."""
+        return self._memo("wup", lambda: pd.DataFrame(
+            [(a.concept_id, b.concept_id, S.wup_similarity(a, b))
+             for a in self.concepts for b in self.concepts],
+            columns=["concept_a", "concept_b", "wup"]))
+
     @property
     def canonical(self) -> pd.DataFrame:
-        table = _CANONICAL_MEMO.get(self.digest)
-        if table is None:
-            wup_pdf = pd.DataFrame(
-                [(a.concept_id, b.concept_id, S.wup_similarity(a, b))
-                 for a in self.concepts for b in self.concepts],
-                columns=["concept_a", "concept_b", "wup"])
-            table = _CANONICAL_MEMO[self.digest] = surface_canonical_table(
-                self.ontology_pdf, self.gazetteer, wup_pdf)
-        return table.copy()
+        """(surface, concept_id, cos_sim, link_score): the
+        :func:`surface_canonical_table` of this ontology."""
+        return self._memo("canonical", lambda: surface_canonical_table(
+            self.ontology_pdf, self.gazetteer, self.wup))
 
 
 def canonicalize_broadcast(mentions: DataFrame,
@@ -223,8 +234,7 @@ def canonicalize_broadcast(mentions: DataFrame,
     return mentions.join(F.broadcast(canon_df), "surface", "inner")
 
 
-def canonicalize(candidates: DataFrame, concept_sim: DataFrame,
-                 alpha: float = S.LINK_ALPHA) -> DataFrame:
+def canonicalize(candidates: DataFrame, concept_sim: DataFrame) -> DataFrame:
     """P9: one canonical concept per mention via Wu-Palmer-blended score.
 
     concept_sim is tiny → broadcast join (P10). The two windows partition
@@ -252,7 +262,8 @@ def canonicalize(candidates: DataFrame, concept_sim: DataFrame,
         .withColumn("wup_score", F.coalesce(F.col("wup"), F.lit(0.0)))
         .withColumn(
             "link_score",
-            F.round(alpha * F.col("cos_sim") + (1.0 - alpha) * F.col("wup_score"),
+            F.round(S.LINK_ALPHA * F.col("cos_sim")
+                    + (1.0 - S.LINK_ALPHA) * F.col("wup_score"),
                     S.SCORE_DECIMALS),
         )
         .drop("concept_a", "concept_b", "wup")

@@ -8,12 +8,14 @@ checks therefore run over a deterministic "data-engine" taxonomy built
 from that vocabulary, exactly like the transport ontology is built over
 the transcript vocabulary.
 
-The tiny derived artifacts — gazetteer surface scores (cosine of the
-shared hash embeddings, SURVEY.md P7) and all-pairs Wu-Palmer — are
-computed once here in pure Python and consumed BOTH by the Spark query
-(broadcast join, P10) and by the DuckDB oracle (rendered as literal
-``VALUES``), so the driver's value-hash compares the *relational logic*
-(windows, joins, aggregations, dedup) on identical inputs.
+The tiny derived artifacts — the gazetteer, its surface scores (cosine
+of the shared hash embeddings, SURVEY.md P7), all-pairs Wu-Palmer and
+the canonical table — come from one ``OntologySetup`` over these
+concepts (:func:`driver_setup`), computed once in pure Python and
+consumed BOTH by the Spark query (broadcast join, P10) and by the DuckDB
+oracle (rendered as literal ``VALUES``), so the driver's value-hash
+compares the *relational logic* (windows, joins, aggregations, dedup) on
+identical inputs.
 """
 
 from __future__ import annotations
@@ -23,7 +25,7 @@ from functools import lru_cache
 import pandas as pd
 
 from .. import semantics as S
-from ..operators.linking import concept_matrix, score_surfaces
+from ..operators.linking import OntologySetup, ontology_table
 
 _BRANCHES = ["scan", "join", "agg", "sort", "stream", "vector", "table", "query"]
 _LEAVES = [
@@ -53,33 +55,31 @@ def driver_concepts() -> tuple[S.Concept, ...]:
 
 
 @lru_cache(maxsize=1)
+def driver_setup() -> OntologySetup:
+    """The ontology setup over :func:`driver_concepts` (label embeddings
+    by the one table builder), shared by the Spark queries and their
+    oracles."""
+    return OntologySetup(ontology_table(driver_concepts()))
+
+
 def driver_gazetteer() -> dict[str, str]:
-    return S.build_gazetteer(list(driver_concepts()))
+    return driver_setup().gazetteer
 
 
-@lru_cache(maxsize=1)
 def driver_scores() -> pd.DataFrame:
     """(surface, concept_id, cos_sim) — real hash-embedding cosine,
     thresholded/top-k exactly like the main pipeline (P7)."""
-    concepts = driver_concepts()
-    pdf = pd.DataFrame({
-        "concept_id": [c.concept_id for c in concepts],
-        "embedding": [S.phrase_vector(S.normalize_text(c.pref_label)).tolist()
-                      for c in concepts],
-    })
-    ids, cmat = concept_matrix(pdf)
-    return score_surfaces(sorted(driver_gazetteer()), ids, cmat)
+    return driver_setup().scores
 
 
 @lru_cache(maxsize=1)
 def driver_wup() -> pd.DataFrame:
-    rows = []
-    cs = driver_concepts()
-    for a in cs:
-        for b in cs:
-            rows.append((a.concept_id, b.concept_id,
-                         round(S.wup_similarity(a, b), S.SCORE_DECIMALS)))
-    return pd.DataFrame(rows, columns=["concept_a", "concept_b", "wup"])
+    """All-pairs Wu-Palmer rounded to SCORE_DECIMALS: the oracle-paired
+    queries inline these values as DuckDB ``VALUES``, so both engines
+    read the same rounded doubles."""
+    wup = driver_setup().wup
+    wup["wup"] = [round(w, S.SCORE_DECIMALS) for w in wup["wup"].tolist()]
+    return wup
 
 
 @lru_cache(maxsize=1)

@@ -62,6 +62,16 @@ def _fingerprint(*parts: object) -> str:
     return f"{S.stable_hash('fp', *parts):016x}"
 
 
+def _content_digest(df: DataFrame) -> str:
+    """Order-free digest of a frame's rows: the row count plus the sum
+    of per-row xxhash64, summed as decimal(38,0) so that no input size
+    overflows it (a long sum overflows under ANSI mode)."""
+    r = df.select(F.count(F.lit(1)).alias("n"),
+                  F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)"))
+                  .alias("h")).first()
+    return f"{r['n']}:{r['h'] or 0}"
+
+
 class CheckpointedRun:
     """Stage wrapper: write-through checkpoint with bucket-level lineage."""
 
@@ -243,31 +253,35 @@ def run_pipeline(
     if stop_after == "concept_similarity":
         return PipelineResult(None, None, run.metrics)
 
+    # Every later stage derives from the transcripts, so their
+    # fingerprints also digest the transcripts' CONTENT: the same run
+    # dir given other transcripts must recompute, not resume.
+    in_fp = (*cfg_fp, f"input:{_content_digest(transcripts)}")
     spread = respread(spark, transcripts)
 
     if fused_linking:
-        canonical = run.stage("canonical", cfg_fp, lambda: canonicalize_broadcast(
+        canonical = run.stage("canonical", in_fp, lambda: canonicalize_broadcast(
             detect_mentions_exploded(normalize_turns(spread), gaz),
             onto.canonical))
         if stop_after == "canonical":
             return PipelineResult(None, None, run.metrics)
     else:
-        mentions = run.stage("mentions", cfg_fp, lambda: detect_mentions_exploded(
+        mentions = run.stage("mentions", in_fp, lambda: detect_mentions_exploded(
             normalize_turns(spread), gaz))
         if stop_after == "mentions":
             return PipelineResult(None, None, run.metrics)
 
-        candidates = run.stage("candidates", cfg_fp, lambda: link_candidates_broadcast(
-            mentions, ontology_pdf, gaz))
+        candidates = run.stage("candidates", in_fp, lambda: link_candidates_broadcast(
+            mentions, onto.scores))
         if stop_after == "candidates":
             return PipelineResult(None, None, run.metrics)
 
-        canonical = run.stage("canonical", cfg_fp, lambda: canonicalize(
+        canonical = run.stage("canonical", in_fp, lambda: canonicalize(
             candidates, concept_sim))
         if stop_after == "canonical":
             return PipelineResult(None, None, run.metrics)
 
-    triples = run.stage("triples", cfg_fp, lambda: dedup_triples(
+    triples = run.stage("triples", in_fp, lambda: dedup_triples(
         extract_triples(transcripts, canonical)))
     if stop_after == "triples":
         return PipelineResult(triples, None, run.metrics)
@@ -275,26 +289,17 @@ def run_pipeline(
     out_triples = triples
     if infer_broader:
         from ..operators.triples import infer_broader_triples
-        inferred = run.stage("inferred_triples", cfg_fp,
+        inferred = run.stage("inferred_triples", in_fp,
                              lambda: infer_broader_triples(triples, ontology_df))
         out_triples = triples.unionByName(inferred)
         if stop_after == "inferred_triples":
             return PipelineResult(out_triples, None, run.metrics)
 
-    # The fingerprint must encode the manual tags' CONTENT, not just
-    # their presence: unlike cfg_fp's pinned constants they are external
-    # mutable data — a re-run of the same run_dir with an edited manual
-    # table must NOT resume the stale cds_scores checkpoint. One tiny
-    # agg (count + sum of per-row xxhash64) digests them order-free.
-    if manual_tags is None:
-        cds_fp = cfg_fp
-    else:
-        digest_row = (manual_tags
-                      .select(F.count(F.lit(1)).alias("n"),
-                              F.sum(F.xxhash64(*manual_tags.columns))
-                              .alias("h"))
-                      .first())
-        cds_fp = (*cfg_fp, f"manual:{digest_row['n']}:{digest_row['h']}")
+    # The manual tags' CONTENT keys the CDS stage too: a re-run of the
+    # same run_dir with an edited manual table must NOT resume the stale
+    # cds_scores checkpoint.
+    cds_fp = in_fp if manual_tags is None else (
+        *in_fp, f"manual:{_content_digest(manual_tags)}")
     cds = run.stage("cds_scores", cds_fp, lambda: cds_scores(
         triples, concept_sim, manual_tags=manual_tags),
         lineage_key="subj_key")

@@ -9,12 +9,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ... import semantics as S
-from ...operators.linking import OntologySetup, canonicalize
-from ...operators.wup import concept_similarity
 from ...schemas import CONCEPT_SIMILARITY
-from ..driver_ontology import (driver_ancestors, driver_concepts,
-                              driver_gazetteer, driver_scores, driver_wup,
-                              values_sql)
+from ..driver_ontology import (driver_concepts, driver_gazetteer,
+                              driver_scores, driver_wup, values_sql)
 
 # ---------------------------------------------------------------------------
 # Derived transcripts (portable across Spark SQL and DuckDB)
@@ -65,8 +62,6 @@ __all__ = [
     "EMB_DEDUP_THRESHOLD",
     "MINHASH_THRESHOLD",
     "SIMHASH_MAX_HAMMING",
-    "_fast_onto_pdf",
-    "_fast_canon_pdf",
     "MAXSIM_TOKENS",
     "PACK_BUDGET",
     "CONTAM_N",
@@ -475,30 +470,6 @@ MINHASH_THRESHOLD = 0.5
 
 
 SIMHASH_MAX_HAMMING = 16
-
-
-def _fast_onto_pdf():
-    """Ontology frame for the fast-pipeline query (same construction as
-    the production fixtures: driver concepts + hash embeddings)."""
-    import pandas as pd
-    concepts = list(driver_concepts())
-    return pd.DataFrame({
-        "concept_id": [c.concept_id for c in concepts],
-        "pref_label": [c.pref_label for c in concepts],
-        "alt_labels": [list(c.alt_labels) for c in concepts],
-        "parent_id": [c.parent_id for c in concepts],
-        "depth": [c.depth for c in concepts],
-        "path": [list(c.path) for c in concepts],
-        "embedding": [
-            [float(x) for x in S.phrase_vector(S.normalize_text(c.pref_label))]
-            for c in concepts],
-    })
-
-
-def _fast_canon_pdf():
-    """The precomputed surface→canonical table build_triples_fast uses,
-    recomputed with the same driver-side setup for the oracle."""
-    return OntologySetup(_fast_onto_pdf()).canonical
 
 
 MAXSIM_TOKENS = 4          # 64-dim vectors -> 4 token slices of width 16

@@ -10,8 +10,8 @@ from ... import semantics as S
 from ...operators.linking import canonicalize
 from ...operators.wup import concept_similarity
 from ..driver_ontology import (driver_ancestors, driver_concepts,
-                              driver_gazetteer, driver_scores, driver_wup,
-                              values_sql)
+                              driver_gazetteer, driver_scores, driver_setup,
+                              driver_wup, values_sql)
 
 
 from ._shared import *  # noqa: F401,F403
@@ -749,16 +749,16 @@ def q_kg_search_wup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P17 with the reference's lexical+taxonomic query scoring [K]:
     each query surface's candidates rescored by the P9 blend
     (α·cos + (1−α)·wup vs the cos-top anchor) before the per-concept
-    max — exercising plans/search.blend_query_scores."""
-    from ..search import blend_query_scores
+    max — exercising operators/linking.blend_scores."""
+    from ...operators.linking import blend_scores
     scores = driver_scores()
     gaz = driver_gazetteer()
     norm = S.normalize_text(SEARCH_QUERY)
     surfaces = sorted({m[0] for m in S.find_mentions(norm, gaz)})
     qs = scores[scores.surface.isin(surfaces)].round({"cos_sim": 6})
-    blended = blend_query_scores(qs, driver_wup())
-    q = (blended.groupby("concept_id", as_index=False)["cos_sim"].max()
-         .rename(columns={"cos_sim": "q_score"}))
+    blended = blend_scores(qs, driver_wup(), S.LINK_ALPHA)
+    q = (blended.groupby("concept_id", as_index=False)["link_score"].max()
+         .rename(columns={"link_score": "q_score"}))
     q_df = spark.createDataFrame(q, "concept_id string, q_score double")
     cds = q_kg_cds(spark, sf_dir)
     ranked = (
@@ -905,7 +905,8 @@ def q_kg_fast_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..pipeline import build_triples_fast
     t = derived_transcripts(spark, sf_dir).withColumn(
         "ts", F.lit(None).cast("timestamp"))
-    return build_triples_fast(spark, t, ontology_pdf=_fast_onto_pdf())
+    return build_triples_fast(spark, t,
+                              ontology_pdf=driver_setup().ontology_pdf)
 
 
 def _sql_kg_fast_pipeline() -> str:
@@ -914,7 +915,8 @@ def _sql_kg_fast_pipeline() -> str:
                   key=lambda s: (-len(s.split()), s))
     pattern = r"\b(?:" + "|".join(keys) + r")\b"
     canon = values_sql(
-        _fast_canon_pdf()[["surface", "concept_id", "link_score"]], "c")
+        driver_setup().canonical[["surface", "concept_id", "link_score"]],
+        "c")
     return f"""
 WITH transcripts AS ({TRANSCRIPTS_CTE}),
 mentions AS (
@@ -1095,7 +1097,7 @@ def q_kg_resume_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     _shutil.rmtree(run_dir, ignore_errors=True)
     t = derived_transcripts(spark, sf_dir).withColumn(
         "ts", F.lit(None).cast("timestamp"))
-    onto = _fast_onto_pdf()
+    onto = driver_setup().ontology_pdf
     run_pipeline(spark, t, run_dir, ontology_pdf=onto, fused_linking=True)
     r2 = run_pipeline(spark, t, run_dir, ontology_pdf=onto,
                       fused_linking=True)
@@ -1122,7 +1124,8 @@ def _sql_kg_resume_manifest() -> str:
                   key=lambda s: (-len(s.split()), s))
     pattern = r"\b(?:" + "|".join(keys) + r")\b"
     canon = values_sql(
-        _fast_canon_pdf()[["surface", "concept_id", "link_score"]], "c")
+        driver_setup().canonical[["surface", "concept_id", "link_score"]],
+        "c")
     rows = []
     for c in driver_concepts():
         for pos, anc in enumerate(c.path, start=1):

@@ -7,6 +7,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
+from ..driver_ontology import driver_setup
 from ._shared import *  # noqa: F401,F403
 
 
@@ -160,7 +161,8 @@ def q_stream_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
               .option("maxFilesPerTrigger", 1).parquet(src))
 
     def _extract(batch_df: DataFrame, _batch_id: int) -> None:
-        build_triples_fast(spark, batch_df, ontology_pdf=_fast_onto_pdf()
+        build_triples_fast(spark, batch_df,
+                           ontology_pdf=driver_setup().ontology_pdf
                            ).write.mode("append").parquet(out)
 
     q = (stream.writeStream.outputMode("append").foreachBatch(_extract)

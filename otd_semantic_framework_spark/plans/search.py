@@ -10,9 +10,10 @@ rank (never a global sort).
 
 ``wup_pdf`` enables the reference's lexical+taxonomic blend on the
 QUERY side (VERDICT r1 "What's missing" #3): each surface's candidate
-concepts are rescored α·cos + (1−α)·wup(c, cos-top anchor) — the exact
-P9 canonicalization blend — before the per-concept max. Without it the
-scoring is pure cosine (round-1 behavior).
+concepts are rescored by ``operators.linking.blend_scores`` — the P9
+canonicalization blend, α·cos + (1−α)·wup(c, cos-top anchor) — before
+the per-concept max. Without it the scoring is pure cosine (round-1
+behavior).
 """
 
 from __future__ import annotations
@@ -22,30 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import semantics as S
-from ..operators.linking import concept_matrix, score_surfaces
-
-
-def blend_query_scores(scores: pd.DataFrame, wup_pdf: pd.DataFrame,
-                       alpha: float = S.LINK_ALPHA) -> pd.DataFrame:
-    """Per-surface taxonomy blend of query candidate scores (driver-side
-    pandas — the query is one row). For each surface: anchor = cos-top
-    concept (ties → smallest id); every candidate's score becomes
-    round(α·cos + (1−α)·wup(candidate, anchor), 6)."""
-    wup = {(r.concept_a, r.concept_b): r.wup for r in wup_pdf.itertuples()}
-    out = []
-    for surface, grp in scores.groupby("surface"):
-        g = grp.sort_values(["cos_sim", "concept_id"],
-                            ascending=[False, True])
-        anchor = g.iloc[0]["concept_id"]
-        for r in g.itertuples():
-            # round_half_away, NOT builtin round: the blended value is
-            # hash-compared against SQL ROUND (half-away) in the oracle
-            blended = float(S.round_half_away(
-                alpha * r.cos_sim
-                + (1 - alpha) * wup.get((r.concept_id, anchor), 0.0),
-                S.SCORE_DECIMALS))
-            out.append((surface, r.concept_id, blended))
-    return pd.DataFrame(out, columns=["surface", "concept_id", "cos_sim"])
+from ..operators.linking import blend_scores, concept_matrix, score_surfaces
 
 
 def search(query: str, cds: DataFrame, ontology_pdf: pd.DataFrame,
@@ -60,16 +38,16 @@ def search(query: str, cds: DataFrame, ontology_pdf: pd.DataFrame,
     gaz = {S.normalize_text(c): c for c in ontology_pdf["pref_label"]}
     surfaces = [m[0] for m in S.find_mentions(norm, gaz)] or norm.split()
     ids, cmat = concept_matrix(ontology_pdf)
-    scores = score_surfaces(sorted(set(surfaces)), ids, cmat,
-                            top_k=S.TOP_K, threshold=S.COS_THRESHOLD)
+    scores = score_surfaces(sorted(set(surfaces)), ids, cmat)
     if scores.empty:
         return spark.createDataFrame(
             [], "subj_key string, rank int, search_score double, matched_concepts array<string>")
+    col = "cos_sim"
     if wup_pdf is not None:
-        scores = blend_query_scores(scores, wup_pdf, alpha)
+        scores, col = blend_scores(scores, wup_pdf, alpha), "link_score"
     qvec = (
-        scores.groupby("concept_id", as_index=False)["cos_sim"].max()
-        .rename(columns={"cos_sim": "q_score"})
+        scores.groupby("concept_id", as_index=False)[col].max()
+        .rename(columns={col: "q_score"})
     )
     q_df = spark.createDataFrame(qvec, schema="concept_id string, q_score double")
     ranked = (

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import semantics as S
+from ..operators.linking import ontology_table
 from ..schemas import ONTOLOGY_CONCEPTS, TRANSCRIPTS
 
 _BASE_TS = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
@@ -127,14 +128,7 @@ def transcripts_spark(spark: SparkSession, n_convs: int,
 
 def ontology_pandas() -> pd.DataFrame:
     """ontology_concepts table (FIXTURES.md B2) incl. 64-d label embeddings."""
-    rows = []
-    for c in S.build_ontology():
-        rows.append((
-            c.concept_id, c.pref_label, c.alt_labels, c.parent_id,
-            c.depth, c.path, [float(x) for x in S.phrase_vector(S.normalize_text(c.pref_label))],
-        ))
-    return pd.DataFrame(rows, columns=[
-        "concept_id", "pref_label", "alt_labels", "parent_id", "depth", "path", "embedding"])
+    return ontology_table(S.build_ontology())
 
 
 def ontology_spark(spark: SparkSession) -> DataFrame:

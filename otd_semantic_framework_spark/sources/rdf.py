@@ -215,18 +215,15 @@ def skos_concepts(triples: DataFrame, max_depth: int = 32) -> DataFrame:
 
 
 def ontology_table_from_turtle(spark: SparkSession, path: str) -> DataFrame:
-    """Fixture-Turtle → full ONTOLOGY_CONCEPTS table (embeddings from
-    the deterministic hash phrase vectors, like sources/fixtures.py),
-    ready for run_pipeline / concept_similarity. The ontology is tiny
+    """Fixture-Turtle → full ONTOLOGY_CONCEPTS table (embeddings by
+    ``operators.linking.label_embedding``, the rule of every ontology
+    table), ready for run_pipeline / concept_similarity. The ontology is tiny
     by nature, so the embedding step collects it (same as every other
     ontology constructor in this repo)."""
-    from .. import semantics as S
+    from ..operators.linking import label_embedding
     from ..schemas import ONTOLOGY_CONCEPTS
     pdf = skos_concepts(parse_turtle(spark, path)).toPandas()
-    pdf["embedding"] = [
-        [float(x) for x in S.phrase_vector(S.normalize_text(lbl))]
-        for lbl in pdf["pref_label"]
-    ]
+    pdf["embedding"] = [label_embedding(lbl) for lbl in pdf["pref_label"]]
     pdf["alt_labels"] = [list(a) for a in pdf["alt_labels"]]
     pdf["path"] = [list(p) for p in pdf["path"]]
     return spark.createDataFrame(pdf, schema=ONTOLOGY_CONCEPTS)

@@ -1,13 +1,14 @@
-"""P6/P7/P9/P10 — linking: both physical strategies agree; candidates
-respect threshold/top-k; canonicalization is deterministic."""
+"""P6/P7/P9/P10 — linking: candidates respect threshold/top-k;
+canonicalization is deterministic; the precomputed canonical table
+equals the Spark compute path and rounds like SQL."""
 
 import pandas as pd
 from pyspark.sql import functions as F
 
 from otd_semantic_framework_spark import semantics as S
 from otd_semantic_framework_spark.operators.linking import (
-    OntologySetup, canonicalize, link_candidates_arrow,
-    link_candidates_broadcast, surface_canonical_table)
+    OntologySetup, canonicalize, link_candidates_broadcast,
+    surface_canonical_table)
 from otd_semantic_framework_spark.operators.mentions import (
     detect_mentions_exploded)
 from otd_semantic_framework_spark.operators.normalize import normalize_turns
@@ -20,21 +21,9 @@ def _mentions(tiny_df):
     return detect_mentions_exploded(normalize_turns(tiny_df), gaz), gaz
 
 
-def _key(rows):
-    return sorted((r.mention_id, r.concept_id, round(r.cos_sim, 6)) for r in rows)
-
-
-def test_arrow_and_broadcast_paths_agree(spark, tiny_df, ontology_pdf):
-    mentions, gaz = _mentions(tiny_df)
-    a = _key(link_candidates_arrow(mentions, ontology_pdf).collect())
-    b = _key(link_candidates_broadcast(mentions, ontology_pdf, gaz).collect())
-    assert a == b
-    assert len(a) > 0
-
-
 def test_candidates_threshold_topk(spark, tiny_df, ontology_pdf):
-    mentions, gaz = _mentions(tiny_df)
-    cands = link_candidates_broadcast(mentions, ontology_pdf, gaz)
+    mentions, _ = _mentions(tiny_df)
+    cands = link_candidates_broadcast(mentions, OntologySetup(ontology_pdf).scores)
     rows = cands.collect()
     assert all(r.cos_sim >= S.COS_THRESHOLD for r in rows)
     counts = cands.groupBy("mention_id").count().collect()
@@ -45,8 +34,8 @@ def test_candidates_threshold_topk(spark, tiny_df, ontology_pdf):
 
 
 def test_canonicalize_one_per_mention(spark, tiny_df, ontology_pdf):
-    mentions, gaz = _mentions(tiny_df)
-    cands = link_candidates_broadcast(mentions, ontology_pdf, gaz)
+    mentions, _ = _mentions(tiny_df)
+    cands = link_candidates_broadcast(mentions, OntologySetup(ontology_pdf).scores)
     sim = concept_similarity(ontology_spark(spark))
     canon = canonicalize(cands, sim)
     n_mentions = mentions.select("mention_id").distinct().count()
@@ -55,7 +44,8 @@ def test_canonicalize_one_per_mention(spark, tiny_df, ontology_pdf):
     assert canon.select("mention_id").distinct().count() == n_linked
     # deterministic across partitionings
     canon2 = canonicalize(
-        link_candidates_broadcast(mentions.repartition(13), ontology_pdf, gaz), sim)
+        link_candidates_broadcast(mentions.repartition(13),
+                                  OntologySetup(ontology_pdf).scores), sim)
     k1 = sorted((r.mention_id, r.concept_id, r.link_score) for r in canon.collect())
     k2 = sorted((r.mention_id, r.concept_id, r.link_score) for r in canon2.collect())
     assert k1 == k2
@@ -63,15 +53,16 @@ def test_canonicalize_one_per_mention(spark, tiny_df, ontology_pdf):
 
 def test_precomputed_canonical_equals_compute_path(spark, tiny_df, ontology_pdf):
     """The zero-shuffle broadcast canonical table (P7→P9 precomputed)
-    must equal the full compute path (arrow candidates → windows → wup
-    join) mention for mention."""
+    must equal the full compute path (broadcast candidates → windows →
+    wup join) mention for mention."""
     from otd_semantic_framework_spark.operators.linking import (
         canonicalize_broadcast, surface_canonical_table)
     from tests.oracle_tagger import oracle_concept_similarity
 
     mentions, gaz = _mentions(tiny_df)
     sim = concept_similarity(ontology_spark(spark))
-    compute = canonicalize(link_candidates_arrow(mentions, ontology_pdf), sim)
+    compute = canonicalize(link_candidates_broadcast(
+        mentions, OntologySetup(ontology_pdf).scores), sim)
     table = surface_canonical_table(
         ontology_pdf, gaz, oracle_concept_similarity(S.build_ontology()))
     fast = canonicalize_broadcast(mentions, table)
@@ -86,7 +77,7 @@ def _counting_canonical_table(monkeypatch):
     """Fresh canonical-table memo plus a counter of
     surface_canonical_table calls."""
     from otd_semantic_framework_spark.operators import linking
-    monkeypatch.setattr(linking, "_CANONICAL_MEMO", {})
+    monkeypatch.setattr(linking, "_MEMO", {})
     calls = []
     real = linking.surface_canonical_table
 
@@ -134,3 +125,19 @@ def test_mutating_canonical_table_does_not_leak(monkeypatch, ontology_pdf):
     table.drop(table.index[:3], inplace=True)
     assert onto.canonical.equals(pristine)
     assert OntologySetup(ontology_pdf).canonical.equals(pristine)
+
+
+def test_canonical_link_score_rounds_like_sql(monkeypatch, ontology_pdf):
+    """One candidate at cos 0.800001 (self-wup 1.0) blends to 0.9000005:
+    SQL ROUND (Spark F.round, DuckDB round) gives 0.900001, half away
+    from zero, where builtin round gives 0.9."""
+    from otd_semantic_framework_spark.operators import linking
+    from tests.oracle_tagger import oracle_concept_similarity
+    cid = ontology_pdf["concept_id"][0]
+    monkeypatch.setattr(linking, "score_surfaces", lambda *a, **k: pd.DataFrame(
+        [("x", cid, 0.800001)], columns=["surface", "concept_id", "cos_sim"]))
+    table = surface_canonical_table(
+        ontology_pdf, {"x": cid},
+        oracle_concept_similarity(S.build_ontology()))
+    assert table[["concept_id", "link_score"]].values.tolist() == [
+        [cid, 0.900001]]

@@ -141,6 +141,22 @@ def test_pipeline_accepts_manual_tags(spark, tiny_df, tmp_path):
         (s, c) for s, c, _ in merged_auto}
 
 
+def test_pipeline_digests_a_large_manual_table(spark, tiny_df, tmp_path,
+                                              ontology_pdf):
+    """The checkpoint digest of the manual tags must not overflow: a
+    long sum of 1,000 row hashes does under ANSI mode."""
+    from otd_semantic_framework_spark.plans.pipeline import run_pipeline
+    manual = spark.range(1000).select(
+        F.concat(F.lit("conv:manual-"), F.col("id").cast("string"))
+        .alias("subj_key"),
+        F.lit(ontology_pdf["concept_id"][0]).alias("concept_id"),
+        F.lit(1.0).alias("tag_score"))
+    res = run_pipeline(spark, tiny_df, str(tmp_path / "run"),
+                       fused_linking=True, manual_tags=manual)
+    assert (res.cds.filter(F.col("subj_key").startswith("conv:manual-"))
+            .select("subj_key").distinct().count()) == 1000
+
+
 def test_manual_edge_cases(spark, onto):
     """Empty curated input → empty validated output (no crash); an
     empty tag_graph is an explicit error; merging with an empty side

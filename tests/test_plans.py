@@ -34,7 +34,8 @@ def _opt(df) -> str:
 def test_linking_is_broadcast_join(spark, tiny_df, ontology_pdf):
     gaz = S.build_gazetteer(S.build_ontology())
     mentions = detect_mentions_exploded(normalize_turns(tiny_df), gaz)
-    cands = link_candidates_broadcast(mentions, ontology_pdf, gaz)
+    cands = link_candidates_broadcast(mentions,
+                                      OntologySetup(ontology_pdf).scores)
     plan = _plan(cands)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
@@ -44,7 +45,8 @@ def test_linking_is_broadcast_join(spark, tiny_df, ontology_pdf):
 def test_canonicalize_wup_join_is_broadcast(spark, tiny_df, ontology_pdf):
     gaz = S.build_gazetteer(S.build_ontology())
     mentions = detect_mentions_exploded(normalize_turns(tiny_df), gaz)
-    cands = link_candidates_broadcast(mentions, ontology_pdf, gaz)
+    cands = link_candidates_broadcast(mentions,
+                                      OntologySetup(ontology_pdf).scores)
     canon = canonicalize(cands, concept_similarity(ontology_spark(spark)))
     plan = _plan(canon)
     assert plan.count("BroadcastHashJoin") >= 2  # scores + wup sides

@@ -7,6 +7,7 @@ import os
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from otd_semantic_framework_spark.plans.pipeline import run_pipeline
 
@@ -73,6 +74,25 @@ def test_rerun_same_dir_skips_everything(spark, tiny_df, tmp_path):
     run_pipeline(spark, tiny_df, run_dir)
     again = run_pipeline(spark, tiny_df, run_dir)
     assert all(v.get("resumed") for v in again.metrics.values())
+
+
+def test_same_dir_other_transcripts_recomputes(spark, tiny_df, tmp_path):
+    """The stage fingerprints digest the transcripts' content: a run dir
+    built from six conversations and then given twelve recomputes every
+    stage downstream of the transcripts and equals a fresh run."""
+    convs = sorted(r.conv_id for r in
+                   tiny_df.select("conv_id").distinct().collect())
+    six = tiny_df.filter(F.col("conv_id").isin(convs[:6]))
+    twelve = tiny_df.filter(F.col("conv_id").isin(convs[:12]))
+    run_dir = str(tmp_path / "shared")
+    run_pipeline(spark, six, run_dir, fused_linking=True)
+    again = run_pipeline(spark, twelve, run_dir, fused_linking=True)
+    fresh = run_pipeline(spark, twelve, str(tmp_path / "fresh"),
+                         fused_linking=True)
+    assert again.metrics["concept_similarity"]["resumed"] is True
+    assert not any(again.metrics[s]["resumed"]
+                   for s in ("canonical", "triples", "cds_scores"))
+    assert _triples_key(again.triples) == _triples_key(fresh.triples)
 
 
 def test_incremental_merge_equals_full(spark, tiny_df, tmp_path):

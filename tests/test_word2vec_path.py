@@ -29,7 +29,7 @@ from otd_semantic_framework_spark.operators.embed import (
     mention_embeddings, train_word2vec)
 from otd_semantic_framework_spark.operators.evaluate import precision_recall
 from otd_semantic_framework_spark.operators.linking import (
-    canonicalize, link_candidates_broadcast)
+    OntologySetup, canonicalize, link_candidates_broadcast)
 from otd_semantic_framework_spark.operators.mentions import (
     detect_mentions_exploded)
 from otd_semantic_framework_spark.operators.normalize import normalize_turns
@@ -90,7 +90,7 @@ def test_trained_word2vec_linking_quality(spark):
 
     # --- hash-embedding canonical goldens -------------------------------
     golden = (canonicalize(
-        link_candidates_broadcast(mentions, onto, gaz),
+        link_candidates_broadcast(mentions, OntologySetup(onto).scores),
         concept_similarity(ontology_spark(spark)))
         .select("mention_id", "concept_id"))
 
