@@ -24,9 +24,10 @@ cached CDS matrix [K].
 
 Canonicalization (P9): top-cos concept per mention defines the anchor
 c_top; link_score(c) = α·cos(c) + (1−α)·wup(c, c_top); best link_score
-wins (ties → smallest concept_id). :func:`blend_scores` is the one
-driver-side blend; :func:`canonicalize` is its Spark twin, a broadcast
-join of candidates against `concept_similarity` (P10).
+wins (ties → smallest concept_id). :func:`link_scores` is the one
+driver-side blend (:func:`blend_scores` applies it to a frame);
+:func:`canonicalize` is its Spark twin, a broadcast join of candidates
+against `concept_similarity` (P10).
 """
 
 from __future__ import annotations
@@ -67,16 +68,17 @@ def concept_matrix(ontology_pdf: pd.DataFrame) -> tuple[list[str], np.ndarray]:
     return ids, mat
 
 
-def score_surfaces(surfaces: list[str], concept_ids: list[str],
-                   cmat: np.ndarray, top_k: int = S.TOP_K,
-                   threshold: float = S.COS_THRESHOLD) -> pd.DataFrame:
-    """Pure scoring core: unique surfaces → (surface, concept_id, cos_sim).
-
-    cos rounded to SCORE_DECIMALS; top-k by (-cos, concept_id).
-    Shared by :attr:`OntologySetup.scores` and the search path (P17).
-    """
+def surface_rows(surfaces: list[str], concept_ids: list[str],
+                 cmat: np.ndarray, top_k: int = S.TOP_K,
+                 threshold: float = S.COS_THRESHOLD
+                 ) -> list[tuple[str, str, float]]:
+    """Pure scoring core: unique surfaces → [(surface, concept_id,
+    cos_sim)], in ``surfaces`` order and per surface by (−cos,
+    concept_id), cos rounded to SCORE_DECIMALS, top-k at or above
+    ``threshold``. The search path (P17) reads the rows directly;
+    :func:`score_surfaces` frames them."""
     if not surfaces:
-        return pd.DataFrame(columns=["surface", "concept_id", "cos_sim"])
+        return []
     M = np.stack([S.phrase_vector(s).astype(np.float64) for s in surfaces])
     sims = np.round(M @ cmat.T, S.SCORE_DECIMALS)  # unit vectors → cosine
     cid_arr = np.asarray(concept_ids)
@@ -88,7 +90,17 @@ def score_surfaces(surfaces: list[str], concept_ids: list[str],
             continue
         ranked = sorted(keep, key=lambda j: (-row[j], cid_arr[j]))[:top_k]
         rows.extend((surf, cid_arr[j], float(row[j])) for j in ranked)
-    return pd.DataFrame(rows, columns=["surface", "concept_id", "cos_sim"])
+    return rows
+
+
+def score_surfaces(surfaces: list[str], concept_ids: list[str],
+                   cmat: np.ndarray, top_k: int = S.TOP_K,
+                   threshold: float = S.COS_THRESHOLD) -> pd.DataFrame:
+    """:func:`surface_rows` as a (surface, concept_id, cos_sim) frame,
+    the form :attr:`OntologySetup.scores` holds."""
+    return pd.DataFrame(
+        surface_rows(surfaces, concept_ids, cmat, top_k, threshold),
+        columns=["surface", "concept_id", "cos_sim"])
 
 
 def link_candidates_broadcast(mentions: DataFrame,
@@ -105,27 +117,47 @@ def link_candidates_broadcast(mentions: DataFrame,
     )
 
 
-def blend_scores(scores: pd.DataFrame, wup_pdf: pd.DataFrame,
-                 alpha: float) -> pd.DataFrame:
-    """The driver-side P9 blend. Per surface the anchor is the cos-top
-    concept (ties → smallest id), and every candidate gets
-    link_score = round(α·cos + (1−α)·wup(candidate, anchor), 6).
+def wup_lookup(wup_pdf: pd.DataFrame) -> dict[tuple[str, str], float]:
+    """{(concept_a, concept_b): wup} of a Wu-Palmer table, the form
+    :func:`blend_scores` reads; build it once per table."""
+    return dict(zip(zip(wup_pdf["concept_a"], wup_pdf["concept_b"]),
+                    wup_pdf["wup"]))
+
+
+def link_scores(surface, concept_id, cos_sim,
+                wup: dict[tuple[str, str], float],
+                alpha: float) -> np.ndarray:
+    """The P9 blend of candidate rows given in (surface, −cos_sim,
+    concept_id) order: each surface's first row is its anchor, and every
+    row gets round(α·cos + (1−α)·wup(candidate, anchor), 6), with
+    ``wup`` the :func:`wup_lookup` of the Wu-Palmer table (0 for a
+    missing pair).
 
     The rounding is half away from zero, the SQL ROUND of both Spark
     (``F.round`` in :func:`canonicalize`) and DuckDB: the blended value
     is hash-compared against SQL in the oracles, and builtin ``round``
-    differs from it on .5 boundaries. Returns ``scores`` ordered by
-    (surface, −cos_sim, concept_id) plus a ``link_score`` column."""
-    wup = dict(zip(zip(wup_pdf["concept_a"], wup_pdf["concept_b"]),
-                   wup_pdf["wup"]))
+    differs from it on .5 boundaries."""
+    w, prev, anchor = [], None, None
+    for s, c in zip(surface, concept_id):
+        if s != prev:
+            prev, anchor = s, c
+        w.append(wup.get((c, anchor), 0.0))
+    return S.round_half_away(
+        alpha * np.asarray(cos_sim, dtype=np.float64)
+        + (1 - alpha) * np.asarray(w, dtype=np.float64),
+        S.SCORE_DECIMALS)
+
+
+def blend_scores(scores: pd.DataFrame, wup: dict[tuple[str, str], float],
+                 alpha: float) -> pd.DataFrame:
+    """The driver-side P9 blend of a (surface, concept_id, cos_sim)
+    frame: the anchor of a surface is its cos-top concept (ties →
+    smallest id). Returns ``scores`` ordered by (surface, −cos_sim,
+    concept_id) plus the :func:`link_scores` column ``link_score``."""
     g = scores.sort_values(["surface", "cos_sim", "concept_id"],
                            ascending=[True, False, True])
-    anchor = g.groupby("surface")["concept_id"].transform("first")
-    w = np.array([wup.get(k, 0.0) for k in zip(g["concept_id"], anchor)],
-                 dtype=np.float64)
-    link = S.round_half_away(
-        alpha * g["cos_sim"].to_numpy(dtype=np.float64) + (1 - alpha) * w,
-        S.SCORE_DECIMALS)
+    link = link_scores(g["surface"], g["concept_id"], g["cos_sim"], wup,
+                       alpha)
     return g.assign(link_score=link).reset_index(drop=True)
 
 
@@ -144,7 +176,7 @@ def surface_canonical_table(ontology_pdf: pd.DataFrame,
     Equivalence with the Spark compute path is pinned by
     tests/test_linking.py."""
     scores = score_surfaces(sorted(gazetteer), *concept_matrix(ontology_pdf))
-    return (blend_scores(scores, wup_pdf, S.LINK_ALPHA)
+    return (blend_scores(scores, wup_lookup(wup_pdf), S.LINK_ALPHA)
             .sort_values(["surface", "link_score", "concept_id"],
                          ascending=[True, False, True])
             .drop_duplicates("surface")

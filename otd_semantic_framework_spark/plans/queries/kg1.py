@@ -750,13 +750,13 @@ def q_kg_search_wup(spark: SparkSession, sf_dir: str) -> DataFrame:
     each query surface's candidates rescored by the P9 blend
     (α·cos + (1−α)·wup vs the cos-top anchor) before the per-concept
     max — exercising operators/linking.blend_scores."""
-    from ...operators.linking import blend_scores
+    from ...operators.linking import blend_scores, wup_lookup
     scores = driver_scores()
     gaz = driver_gazetteer()
     norm = S.normalize_text(SEARCH_QUERY)
     surfaces = sorted({m[0] for m in S.find_mentions(norm, gaz)})
     qs = scores[scores.surface.isin(surfaces)].round({"cos_sim": 6})
-    blended = blend_scores(qs, driver_wup(), S.LINK_ALPHA)
+    blended = blend_scores(qs, wup_lookup(driver_wup()), S.LINK_ALPHA)
     q = (blended.groupby("concept_id", as_index=False)["link_score"].max()
          .rename(columns={"link_score": "q_score"}))
     q_df = spark.createDataFrame(q, "concept_id string, q_score double")
@@ -1098,10 +1098,15 @@ def q_kg_resume_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = derived_transcripts(spark, sf_dir).withColumn(
         "ts", F.lit(None).cast("timestamp"))
     onto = driver_setup().ontology_pdf
-    run_pipeline(spark, t, run_dir, ontology_pdf=onto, fused_linking=True)
-    r2 = run_pipeline(spark, t, run_dir, ontology_pdf=onto,
-                      fused_linking=True)
-    m = _pd.read_parquet(_os.path.join(run_dir, "checkpoint_manifest.parquet"))
+    try:
+        run_pipeline(spark, t, run_dir, ontology_pdf=onto, fused_linking=True)
+        r2 = run_pipeline(spark, t, run_dir, ontology_pdf=onto,
+                          fused_linking=True)
+        m = _pd.read_parquet(
+            _os.path.join(run_dir, "checkpoint_manifest.parquet"))
+    finally:
+        # the summary below is pandas: nothing reads the run dir again
+        _shutil.rmtree(run_dir, ignore_errors=True)
     summary = (m.groupby("stage", as_index=False)["rows_out"].sum()
                .sort_values("stage"))
     summary["resumed"] = [bool(r2.metrics[s]["resumed"])

@@ -23,13 +23,29 @@ ingest, sources/ckan_http.py). Endpoints:
                                          THEN rebuild the matrix)
 
 Shape at scale: the server is a thin driver-side front door over the
-engine — it owns no data path. ``cds_scores`` is the cached,
-materialized P14 artifact; each search request costs driver-side numpy
-on the single-row query plus ONE broadcast-join aggregation job over
-the distributed CDS table (plans/search.py — orderBy+limit, never a
-global-sort window). Tag POSTs append single rows to the run's curated
-store; /api/v1/refresh replays P19 (validate + merge) and P14
-(propagate) as batch jobs and atomically swaps the cached CDS. A real
+engine. Searches are served from memory: each load (start-up and every
+refresh) reads the materialized P14 ``cds_scores`` table once into a
+``plans.search.CdsIndex`` — a CSR copy of the table by concept — and
+builds the query-side invariants (gazetteer, concept matrix, Wu-Palmer
+lookup) into a ``plans.search.QueryScorer``. A search request is then
+driver-side numpy on the single-row query plus a gather over the rows
+of the query's concepts: no Spark job, no file and no lock. The
+ranking is ``plans.search.search``'s, which stays the batch path and
+the oracle the served payload is tested against.
+
+Memory envelope: the index holds 12 bytes per CDS row (an int32
+subject code and a float64 score) plus one string per subject and per
+concept. A subject has at most one row per concept: 68 in the
+benchmark's served table (28,354 rows, 800 subjects), about 0.8 KB
+per subject, so 10^6 subjects fit in under 1 GB of driver memory (the
+pandas copy a load reads through is transient). Tables beyond the
+driver's memory need the Spark path (or a sharded index per server).
+
+Tag POSTs append single rows to the run's curated store;
+/api/v1/refresh replays P19 (validate + merge) and P14 (propagate) as
+batch jobs, writes the new ``cds_scores`` and only then builds the next
+served snapshot and swaps it in with one assignment, so a search during
+a refresh answers from the previous snapshot and never fails. A real
 deployment puts N of these stateless servers behind a load balancer
 against one shared Iceberg run catalog (sources/storage.py).
 """
@@ -37,22 +53,38 @@ against one shared Iceberg run catalog (sources/storage.py).
 from __future__ import annotations
 
 import json
+import logging
 import threading
+from dataclasses import dataclass
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from pyspark.sql import SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 
+from .plans.search import CdsIndex, QueryScorer
 from .sources.fixtures import ontology_pandas, ontology_spark
 from .sources.storage import Storage
 
 MANUAL_TAGS_TABLE = "manual_tags_http"
+log = logging.getLogger(__name__)
+
+
+@dataclass(frozen=True)
+class _Served:
+    """One load of the served run dir. Never mutated: a refresh builds
+    the next one and swaps it in with a single assignment, so a search
+    reads one consistent snapshot without the lock."""
+    cds: DataFrame  # the served table, uncached (read by checks, not searches)
+    index: CdsIndex
+    scorer: QueryScorer
+    wup_pdf: pd.DataFrame | None
 
 
 class SearchService:
-    """Engine facade the HTTP handlers call. Thread-safe: Spark job
-    submission is safe from multiple threads; the tag store and the
-    cached-CDS swap are serialized behind one lock."""
+    """Engine facade the HTTP handlers call. Thread-safe: searches read
+    the current immutable :class:`_Served` snapshot; the tag store and
+    the refresh are serialized behind one lock."""
 
     def __init__(self, spark: SparkSession, run_dir: str):
         self.spark = spark
@@ -65,27 +97,38 @@ class SearchService:
         self._load()
 
     def _load(self) -> None:
-        self.cds = self.storage.read_table(self.spark, "cds_scores").cache()
-        self.cds_rows = self.cds.count()
-        self.wup_pdf = (
+        cds = self.storage.read_table(self.spark, "cds_scores")
+        wup_pdf = (
             self.storage.read_table(self.spark, "concept_similarity")
             .toPandas()
             if self.storage.exists(self.spark, "concept_similarity")
             else None)
+        self._served = _Served(cds, CdsIndex(cds.toPandas()),
+                               QueryScorer(self.ontology_pdf, wup_pdf),
+                               wup_pdf)
+
+    @property
+    def cds(self) -> DataFrame:
+        return self._served.cds
+
+    @property
+    def cds_rows(self) -> int:
+        return self._served.index.rows
+
+    @property
+    def wup_pdf(self) -> pd.DataFrame | None:
+        return self._served.wup_pdf
 
     # -- read path ---------------------------------------------------
     def search(self, query: str, top_n: int = 10,
                taxonomic: bool = False) -> dict:
-        from .plans.search import search as engine_search
-        if taxonomic and self.wup_pdf is None:
+        served = self._served
+        if taxonomic and served.wup_pdf is None:
             raise ValueError(
                 "taxonomic search needs the concept_similarity table — "
                 "run the `matrix` lifecycle for this run dir first")
-        hits = engine_search(query, self.cds, self.ontology_pdf,
-                             top_n=top_n,
-                             wup_pdf=self.wup_pdf if taxonomic else None)
-        return {"query": query,
-                "results": [r.asDict() for r in hits.collect()]}
+        q = served.scorer.scores(query, taxonomic=taxonomic)
+        return {"query": query, "results": served.index.rank(q, top_n)}
 
     def concepts(self) -> list[dict]:
         return self.ontology_pdf[["concept_id", "pref_label"]].to_dict(
@@ -130,12 +173,10 @@ class SearchService:
                 valid)
             sim = self.storage.read_table(self.spark, "concept_similarity")
             cds = propagate_cds(merged.drop("sources"), sim)
-            # write to a fresh table then swap: the served cache keeps
-            # answering from memory until the new artifact is complete
+            # searches keep answering from the current snapshot until
+            # the new table is written and the next snapshot is built
             self.storage.write_table(cds, "cds_scores")
-            old = self.cds
             self._load()
-            old.unpersist()
             self.pending_tags = 0
             return {"manual_valid": valid.count(),
                     "manual_rejected": n_rejected,
@@ -154,6 +195,13 @@ def _make_handler(svc: SearchService):
             self.send_header("Content-Length", str(len(body)))
             self.end_headers()
             self.wfile.write(body)
+
+        def _fail(self, e: Exception) -> None:
+            """Any error the handlers do not map to a 4xx: log it with
+            its traceback and answer a JSON 500 naming its type, so the
+            client never sees a dropped connection."""
+            log.exception("%s %s failed", self.command, self.path)
+            self._json(500, {"error": type(e).__name__, "detail": str(e)})
 
         def do_GET(self):
             u = urlparse(self.path)
@@ -179,6 +227,8 @@ def _make_handler(svc: SearchService):
                     self._json(404, {"error": f"unknown path {u.path}"})
             except (ValueError, KeyError) as e:
                 self._json(400, {"error": str(e)})
+            except Exception as e:
+                self._fail(e)
 
         def do_POST(self):
             u = urlparse(self.path)
@@ -198,6 +248,8 @@ def _make_handler(svc: SearchService):
                 self._json(400, {"error": f"unknown concept_id {e}"})
             except (ValueError, json.JSONDecodeError) as e:
                 self._json(400, {"error": str(e)})
+            except Exception as e:
+                self._fail(e)
 
     return Handler
 

@@ -245,3 +245,19 @@ def test_embedding_edit_invalidates_checkpoints(spark, tiny_df, tmp_path,
                         ontology_pdf=retrained_ontology_pdf,
                         stop_after="candidates")
     assert res2.metrics["candidates"]["resumed"] is True, res2.metrics
+
+
+def test_resume_manifest_query_removes_its_run_dir(spark, tiny_df,
+                                                   monkeypatch):
+    """kg_resume_manifest's two-run checkpoint dir is gone once the
+    query's rows are collected (the summary is built in pandas)."""
+    import tempfile
+
+    from otd_semantic_framework_spark.plans.queries import kg1
+    monkeypatch.setattr(kg1, "derived_transcripts",
+                        lambda spark, sf_dir: tiny_df.drop("ts"))
+    run_dir = os.path.join(tempfile.gettempdir(),
+                           f"kg_resume_sf-tiny_{os.getpid()}")
+    rows = kg1.q_kg_resume_manifest(spark, "sf-tiny").collect()
+    assert rows and all(r.resumed for r in rows)
+    assert not os.path.exists(run_dir)
