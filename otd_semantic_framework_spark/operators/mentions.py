@@ -5,7 +5,7 @@ reference extracts spaCy noun-chunk terms per document [K]; spaCy is
 absent in this sandbox (SURVEY.md §0 [L]) so mention detection is a
 gazetteer n-gram matcher: greedy longest-match left-to-right over
 normalized tokens against the broadcast ontology label set, compiled to
-one leftmost-longest regex alternation (``semantics.gazetteer_pattern``;
+one trie-shaped leftmost-longest regex (``semantics.gazetteer_pattern``;
 the pure ``semantics.find_mentions`` / ``find_mentions_regex`` are the
 test oracle).
 
@@ -20,9 +20,20 @@ executor python worker, not per row. mention_id is
 ``xxhash64(conv_id, turn_idx, tok_start)`` — deterministic, so re-runs /
 resumed runs emit identical ids (SURVEY.md §4 risk 3; never
 ``monotonically_increasing_id`` in persisted output).
+
+Worker set-up is paid once per Python worker, not once per task. Before
+every task pyspark's worker calls ``importlib.invalidate_caches()``,
+which makes each ``zipimporter`` on the worker path re-read its
+archive's central directory (pyspark.zip: 1,328 entries, with one
+importer per imported subpackage). The first batch a worker sees marks
+the zip importers it already holds as static (:func:`_set_up_worker`),
+so later tasks in the reused worker skip those re-reads.
 """
 
 from __future__ import annotations
+
+import sys
+import zipimport
 
 import numpy as np
 import pandas as pd
@@ -31,6 +42,29 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import semantics as S
+
+
+_worker_set_up = False
+
+
+def _set_up_worker() -> None:
+    """Once per Python worker process: make ``invalidate_caches`` a
+    no-op on every zip importer the worker already holds. Those are the
+    archives Spark put on the worker path before its first task
+    (pyspark.zip, py4j, the spark-core jar, ``--py-files``), and they do not
+    change while the worker lives. Importers created later, such as
+    those for ``sc.addPyFile`` zips, keep the normal behaviour."""
+    global _worker_set_up
+    if _worker_set_up:
+        return
+    _worker_set_up = True
+    for finder in list(sys.path_importer_cache.values()):
+        if isinstance(finder, zipimport.zipimporter):
+            finder.invalidate_caches = _archive_is_static
+
+
+def _archive_is_static() -> None:
+    """``invalidate_caches`` of a zip importer marked static."""
 
 
 def _mega_batches(batches, norm_col: str, caller: str):
@@ -48,7 +82,11 @@ def _mega_batches(batches, norm_col: str, caller: str):
     operators/normalize.py emit). Non-ASCII text, the sign that
     normalization was skipped, raises a ValueError naming ``caller`` and
     the offending row rather than an opaque error deep in an executor.
+
+    The first call in a worker process also sets the worker up
+    (:func:`_set_up_worker`).
     """
+    _set_up_worker()
     for pdf in batches:
         if len(pdf) == 0:
             continue

@@ -149,9 +149,12 @@ def respread(spark: SparkSession, df: DataFrame,
     skewed input partition otherwise pins the whole stage). ``n``
     defaults to ONE task per core: round-robin already makes the
     partitions equal in size, so more waves add no balance, and every
-    Python task pays a fixed worker set-up (pyspark's per-task
-    ``importlib.invalidate_caches`` over its zip imports, ~0.3 s a wave
-    on 4 cores) that does not shrink with the partition."""
+    Python task still pays a fixed cost that does not shrink with the
+    partition (the worker hand-shake, the UDF closure's unpickle and
+    the Arrow stream set-up). pyspark's per-task
+    ``importlib.invalidate_caches`` over its zip imports, once the
+    largest part of that cost, is now paid once per worker
+    (``operators.mentions._set_up_worker``)."""
     return df.repartition(n or spark.sparkContext.defaultParallelism)
 
 

@@ -273,18 +273,44 @@ def build_gazetteer(concepts: list[Concept]) -> dict[str, str]:
 
 
 def gazetteer_pattern(gazetteer, max_ngram: int = MAX_NGRAM) -> "re.Pattern[str]":
-    """Compiled alternation implementing the same greedy
-    leftmost-longest non-overlapping semantics as :func:`find_mentions`
-    on normalized text (tokens are [a-z0-9]+ single-space separated, so
-    ``\\b`` boundaries == token boundaries). Alternatives are ordered by
-    descending token length so the longest match wins at each position;
-    the regex engine then continues after the match (no overlap) —
-    byte-for-byte the find_mentions walk, at C speed.
-    Equivalence is pinned by tests/test_mentions.py."""
-    keys = sorted((k for k in gazetteer if len(k.split()) <= max_ngram),
-                  key=lambda s: (-len(s.split()), s))
-    alts = "|".join(re.escape(k) for k in keys)
-    return re.compile(rf"\b(?:{alts})\b")
+    """Compiled regex implementing the same greedy leftmost-longest
+    non-overlapping semantics as :func:`find_mentions` on normalized
+    text (tokens are [a-z0-9]+ single-space separated, so ``\\b``
+    boundaries == token boundaries).
+
+    The keys of at most ``max_ngram`` tokens are compiled into ONE
+    character trie, ``\\b(?:…)\\b``: each trie node is an alternation
+    over its next characters, and a node that ends a key makes the rest
+    a greedy optional tail. At a given start, every key that can match
+    is a prefix of the text there, so all of them lie on one trie path;
+    the greedy tails try the deepest first and back off only when the
+    trailing ``\\b`` fails. Two matching keys on one path that both end
+    at token boundaries differ in token count, so deepest == most
+    tokens == the key ``find_mentions`` takes first. The engine then
+    continues after the match (no overlap) — the find_mentions walk, at
+    C speed. A flat alternation of the keys gives the same matches but
+    re-tries every key's shared prefix at each position, and scans 2-3x
+    slower. An empty key set never matches.
+    Equivalence is pinned by tests/test_mentions.py and
+    tests/test_properties.py."""
+    trie: dict = {}
+    for k in gazetteer:
+        if 0 < len(k.split()) <= max_ngram:
+            node = trie
+            for ch in k:
+                node = node.setdefault(ch, {})
+            node[""] = {}  # end of a key
+    return re.compile(rf"\b{_trie_regex(trie)}\b" if trie else "(?!)")
+
+
+def _trie_regex(node: dict) -> str:
+    """Regex of one trie node of :func:`gazetteer_pattern`."""
+    alts = [re.escape(ch) + _trie_regex(child)
+            for ch, child in sorted(node.items()) if ch]
+    if not alts:
+        return ""
+    body = alts[0] if len(alts) == 1 else "(?:" + "|".join(alts) + ")"
+    return f"(?:{body})?" if "" in node else body
 
 
 def find_mentions_regex(norm_text: str, pattern: "re.Pattern[str]"

@@ -108,3 +108,82 @@ def test_fused_canonical_detector_equivalence(spark, tiny_df, ontology_pdf):
     got13 = k(detect_canonical_concepts_exploded(
         normalize_turns(tiny_df.repartition(13)), gaz, canon_table))
     assert got13 == want
+
+
+def test_worker_set_up_once_per_worker(spark, tiny_df, ontology_pdf,
+                                       tmp_path):
+    """The detector's batch prologue sets each reused Python worker up
+    once: afterwards the zip importers the worker already held keep
+    their directory across ``importlib.invalidate_caches()``, a zip
+    added later with ``addPyFile`` still imports, and the detector's
+    rows do not change."""
+    import zipfile
+
+    import pandas as pd
+
+    from otd_semantic_framework_spark.operators.linking import OntologySetup
+
+    def worker_state(zips_probe: bool):
+        """Runs inside a Python worker: (whether the mention prologue
+        has set this worker up, whether ``importlib.invalidate_caches()``
+        left every zip importer the worker holds with the same
+        ``_files``)."""
+        import importlib
+        import sys
+        import zipimport
+        mod = sys.modules.get(
+            "otd_semantic_framework_spark.operators.mentions")
+        set_up = bool(getattr(mod, "_worker_set_up", False))
+        same = True
+        if zips_probe:
+            zips = [f for f in sys.path_importer_cache.values()
+                    if isinstance(f, zipimport.zipimporter)]
+            before = [f._files for f in zips]
+            importlib.invalidate_caches()
+            same = all(f._files is b for f, b in zip(zips, before))
+        return set_up, same
+
+    onto = OntologySetup(ontology_pdf)
+    sc = spark.sparkContext
+    n = sc.defaultParallelism
+    norm = normalize_turns(tiny_df).repartition(n)
+
+    def detect():
+        return sorted(map(tuple, detect_canonical_concepts_exploded(
+            norm, onto.gazetteer, onto.canonical).collect()))
+
+    first = detect()
+    assert first
+
+    # Idle workers are reused first-in first-out, so 3n one-row tasks
+    # visit every idle worker, including the n the detector just used.
+    def probe(batches):
+        for pdf in batches:
+            set_up, same = worker_state(True)
+            yield pd.DataFrame({"set_up": [set_up] * len(pdf),
+                                "same": [same] * len(pdf)})
+
+    seen = spark.range(0, 3 * n, 1, 3 * n).mapInPandas(
+        probe, "set_up boolean, same boolean").collect()
+    set_up_rows = [r for r in seen if r.set_up]
+    assert set_up_rows, seen
+    assert all(r.same for r in set_up_rows), seen
+
+    pkg = tmp_path / "otd_late_zip.zip"
+    with zipfile.ZipFile(pkg, "w") as z:
+        z.writestr("otd_late_zip_mod.py", "VALUE = 42\n")
+    sc.addPyFile(str(pkg))
+
+    def late_import(batches):
+        import otd_late_zip_mod
+        for pdf in batches:
+            set_up, _ = worker_state(False)
+            yield pd.DataFrame({"value": [otd_late_zip_mod.VALUE] * len(pdf),
+                                "set_up": [set_up] * len(pdf)})
+
+    late = spark.range(0, 3 * n, 1, 3 * n).mapInPandas(
+        late_import, "value long, set_up boolean").collect()
+    assert {r.value for r in late} == {42}
+    assert any(r.set_up for r in late), late
+
+    assert detect() == first

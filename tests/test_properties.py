@@ -31,6 +31,45 @@ def test_regex_equals_walk_on_random_inputs(tokens, gaz_entries):
     assert S.find_mentions_regex(text, pat) == S.find_mentions(text, gaz, 2)
 
 
+# Tokens over a 3-letter alphabet with a digit, so gazetteer keys share
+# character prefixes within a token (ab / abc) and across tokens
+# (ab / ab c / abx y): every trie branch and optional tail is exercised.
+_ptoken = st.text(alphabet="ab1", min_size=1, max_size=3)
+_pkey = st.lists(_ptoken, min_size=1, max_size=3).map(" ".join)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_pkey, max_size=12),
+       st.lists(st.one_of(_ptoken, st.integers(0, 11)), max_size=20),
+       st.integers(1, 3))
+def test_trie_regex_equals_walk_on_shared_prefixes(keys, pieces, max_ngram):
+    """A text piece is a raw token or (an int) one of the keys, so keys
+    that extend each other often meet at one position."""
+    gaz = {k: f"c{i}" for i, k in enumerate(keys)}
+    text = " ".join(p if isinstance(p, str) else keys[p % len(keys)]
+                    for p in pieces if keys or isinstance(p, str))
+    pat = S.gazetteer_pattern(gaz, max_ngram)
+    assert S.find_mentions_regex(text, pat) == \
+        S.find_mentions(text, gaz, max_ngram)
+
+
+def test_trie_regex_prefix_keys_each_match():
+    """Keys that are prefixes of each other, within and across tokens:
+    each one is the longest match somewhere, and the regex agrees with
+    the walk on every case."""
+    gaz = {k: f"c{i}" for i, k in enumerate(
+        ["ab", "abc", "ab c", "abx y", "1", "12", "12 3", "12 3 4"])}
+    cases = ["ab", "abc", "ab c", "ab cd", "abx y", "abx", "abx yz",
+             "ab abc ab c abx y", "1 12 12 3 12 3 4 12 34", "123 1a",
+             "a b c", "abcab c"]
+    found = set()
+    for text in cases:
+        got = S.find_mentions_regex(text, S.gazetteer_pattern(gaz, 3))
+        assert got == S.find_mentions(text, gaz, 3), text
+        found.update(surface for surface, _, _ in got)
+    assert found == set(gaz)
+
+
 @settings(max_examples=200, deadline=None)
 @given(st.text(max_size=80))
 def test_normalize_idempotent_and_clean(s):
