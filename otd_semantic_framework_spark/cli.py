@@ -9,7 +9,15 @@ evaluate subcommands via argparse; SURVEY.md §3.1].
     python -m otd_semantic_framework_spark evaluate  --run-dir RUN --golden G.parquet
     python -m otd_semantic_framework_spark gen       --convs 1000 --out T.parquet
     python -m otd_semantic_framework_spark serve     --run-dir RUN --port 8080
+    python -m otd_semantic_framework_spark validate  --run-dir RUN
+    python -m otd_semantic_framework_spark describe  --run-dir RUN NODE [--sample 10]
     python -m otd_semantic_framework_spark curate    --input D.parquet [--clean-out C.parquet]
+
+``autotag`` and ``matrix`` build a run: each takes ``--ontology
+<file.ttl>`` (default: the built-in ontology) and records that ontology
+in the run dir. Every other command that reads a run (``search``,
+``tag``, ``serve``, ``validate``) uses the recorded one
+(``plans.pipeline.run_ontology``).
 
 ``tag`` is the batch form of the reference's `dataset_tagger` lifecycle
 (curated manual tags merged into the run's CDS); ``search --taxonomic``
@@ -17,8 +25,9 @@ enables the reference's lexical+taxonomic query blend (P17, r2);
 ``serve`` (r4) is the reference's web front door — HTTP search plus
 interactive tagging — as a stdlib HTTP server (serve.py).
 
-Each subcommand is a thin shell over the plans/* modules; Spark session
-config comes from --master (or spark-submit).
+Each subcommand is a thin shell over the plans/* modules, run on the
+one Spark session ``main`` starts and stops (config from --master or
+spark-submit).
 """
 
 from __future__ import annotations
@@ -28,34 +37,26 @@ import json
 import sys
 
 
-def _spark(args):
-    from .session import get_spark
-    return get_spark("otd-cli", master=args.master)
-
-
-def cmd_gen(args) -> None:
+def cmd_gen(spark, args) -> None:
     from .sources.fixtures import transcripts_spark
-    spark = _spark(args)
     transcripts_spark(spark, args.convs).write.mode("overwrite").parquet(args.out)
     n = spark.read.parquet(args.out).count()
     print(json.dumps({"written": args.out, "turns": n}))
-    spark.stop()
 
 
 def _ontology_pdf(spark, args):
-    """--ontology <file.ttl>: Spark-native SKOS Turtle ingest
-    (sources/rdf.py) — the reference's rdflib .ttl load [K]. Default:
-    the built-in deterministic taxonomy."""
-    if getattr(args, "ontology", None):
+    """--ontology <file.ttl> of a command that builds a run: Spark-native
+    SKOS Turtle ingest (sources/rdf.py) — the reference's rdflib .ttl
+    load [K]. None (the built-in deterministic taxonomy) without it."""
+    if args.ontology:
         from .sources.rdf import ontology_table_from_turtle
         return ontology_table_from_turtle(spark, args.ontology).toPandas()
     return None
 
 
-def cmd_autotag(args) -> None:
+def cmd_autotag(spark, args) -> None:
     """The reference's `autotag` lifecycle: corpus → triples (+ CDS)."""
     from .plans.pipeline import run_pipeline
-    spark = _spark(args)
     transcripts = spark.read.parquet(args.input)
     res = run_pipeline(spark, transcripts, args.run_dir, run_id=args.run_id,
                        fused_linking=args.fused,
@@ -64,103 +65,73 @@ def cmd_autotag(args) -> None:
     print(json.dumps({"triples": res.triples.count(),
                       "cds_rows": res.cds.count(),
                       "metrics": res.metrics}))
-    spark.stop()
 
 
-def cmd_matrix(args) -> None:
-    """The reference's `matrix` lifecycle: build + persist the Wu-Palmer
-    concept-similarity table."""
+def cmd_matrix(spark, args) -> None:
+    """The reference's `matrix` lifecycle: record the run's ontology and
+    build + persist its Wu-Palmer concept-similarity table."""
     from .operators.wup import concept_similarity
-    from .sources.fixtures import ontology_spark
+    from .plans.pipeline import record_ontology
+    from .schemas import ONTOLOGY_CONCEPTS
     from .sources.storage import Storage
-    spark = _spark(args)
-    if getattr(args, "ontology", None):
-        from .sources.rdf import ontology_table_from_turtle
-        onto = ontology_table_from_turtle(spark, args.ontology)
-    else:
-        onto = ontology_spark(spark)
-    sim = concept_similarity(onto)
+    onto = record_ontology(args.run_dir, _ontology_pdf(spark, args))
+    sim = concept_similarity(
+        spark.createDataFrame(onto, schema=ONTOLOGY_CONCEPTS))
     Storage(args.run_dir).write_table(sim, "concept_similarity")
     print(json.dumps({"pairs": sim.count()}))
-    spark.stop()
 
 
-def cmd_search(args) -> None:
+def cmd_search(spark, args) -> None:
     """The reference's `ontosearch search` lifecycle (--taxonomic adds
     the query-side Wu-Palmer blend)."""
+    from .plans.pipeline import read_run_table, run_ontology
     from .plans.search import search
-    from .sources.fixtures import ontology_pandas
-    from .sources.storage import Storage
-    spark = _spark(args)
-    st = Storage(args.run_dir)
-    cds = st.read_table(spark, "cds_scores")
-    wup_pdf = (st.read_table(spark, "concept_similarity").toPandas()
+    cds = read_run_table(spark, args.run_dir, "cds_scores", "search")
+    wup_pdf = (read_run_table(spark, args.run_dir, "concept_similarity",
+                              "taxonomic search").toPandas()
                if args.taxonomic else None)
-    hits = search(args.query, cds, ontology_pandas(), top_n=args.top_n,
-                  wup_pdf=wup_pdf)
+    hits = search(args.query, cds, run_ontology(args.run_dir),
+                  top_n=args.top_n, wup_pdf=wup_pdf)
     rows = [r.asDict() for r in hits.collect()]
     print(json.dumps({"query": args.query, "results": rows}, default=str))
-    spark.stop()
 
 
-def cmd_tag(args) -> None:
+def cmd_tag(spark, args) -> None:
     """The reference's `dataset_tagger` lifecycle, batch form: validate
-    a curated (subj_key, concept_id, weight) table against the
+    a curated (subj_key, concept_id, weight) table against the run's
     ontology, merge with the run's autotag conversation tags, refresh
     the CDS table from the union, and report what was rejected."""
-    from .operators.cds import conv_tags, propagate_cds
-    from .operators.manual import (ingest_manual_tags, invalid_manual_tags,
-                                   merge_tag_sources)
-    from .sources.fixtures import ontology_spark
-    from .sources.storage import Storage
-    spark = _spark(args)
-    st = Storage(args.run_dir)
-    manual_raw = spark.read.parquet(args.tags)
-    onto = ontology_spark(spark)
-    valid = ingest_manual_tags(manual_raw, onto)
-    n_rejected = invalid_manual_tags(manual_raw, onto).count()
-    merged = merge_tag_sources(
-        conv_tags(st.read_table(spark, "triples")), valid)
-    cds = propagate_cds(merged.drop("sources"),
-                        st.read_table(spark, "concept_similarity"))
-    st.write_table(cds, "cds_scores")
-    print(json.dumps({"manual_valid": valid.count(),
-                      "manual_rejected": n_rejected,
-                      "cds_rows": st.read_table(spark, "cds_scores").count()}))
-    spark.stop()
+    from .plans.pipeline import refresh_cds, run_ontology
+    print(json.dumps(refresh_cds(spark, args.run_dir,
+                                 spark.read.parquet(args.tags),
+                                 run_ontology(args.run_dir))))
 
 
-def cmd_serve(args) -> None:
+def cmd_serve(spark, args) -> None:
     """The reference's web front doors (ontosearch HTTP search +
     dataset_tagger tagging) as one stdlib HTTP server; blocks."""
     from .serve import serve
-    serve(_spark(args), args.run_dir, args.host, args.port)
+    serve(spark, args.run_dir, args.host, args.port)
 
 
-def cmd_validate(args) -> None:
+def cmd_validate(spark, args) -> None:
     """SHACL-lite shape validation of a materialized run's triple graph
-    (operators/graph.py validate_graph): per-constraint violation
-    counts; exits nonzero if any constraint fires."""
-    import sys
-
+    against the run's ontology (operators/graph.py validate_graph):
+    per-constraint violation counts; exits nonzero if any constraint
+    fires."""
     from .operators.graph import validate_graph
-    from .sources.fixtures import ontology_pandas
-    from .sources.storage import Storage
-    spark = _spark(args)
-    triples = Storage(args.run_dir).read_table(spark, "triples")
-    onto = _ontology_pdf(spark, args)
-    if onto is None:
-        onto = ontology_pandas()
-    concepts = spark.createDataFrame(onto[["concept_id"]])
+    from .plans.pipeline import read_run_table, run_ontology
+    triples = read_run_table(spark, args.run_dir, "triples", "validate")
+    concepts = spark.createDataFrame(
+        run_ontology(args.run_dir)[["concept_id"]])
     report = {r["constraint"]: r["violations"]
               for r in validate_graph(triples, concepts).collect()}
     print(json.dumps(report))
-    spark.stop()
     if any(v > 0 for v in report.values()):
         sys.exit(2)
 
 
-def cmd_describe(args) -> None:
+def cmd_describe(spark, args) -> None:
     """SPARQL DESCRIBE over a materialized run's triple graph
     (operators/graph.py describe_cbd): the concise bounded description
     of a node — incident triples plus the mentions-attributes of
@@ -169,9 +140,8 @@ def cmd_describe(args) -> None:
     from pyspark.sql import functions as F
 
     from .operators.graph import describe_cbd
-    from .sources.storage import Storage
-    spark = _spark(args)
-    triples = Storage(args.run_dir).read_table(spark, "triples")
+    from .plans.pipeline import read_run_table
+    triples = read_run_table(spark, args.run_dir, "triples", "describe")
     cbd = describe_cbd(triples, args.node).cache()
     by_via = {r["via"]: r["n"] for r in
               cbd.groupBy("via").agg(F.count(F.lit(1)).alias("n"))
@@ -184,21 +154,18 @@ def cmd_describe(args) -> None:
                       "n_neighbor": by_via.get("neighbor", 0),
                       "sample": sample}))
     cbd.unpersist()
-    spark.stop()
 
 
-def cmd_evaluate(args) -> None:
+def cmd_evaluate(spark, args) -> None:
     """The reference's evaluation lifecycle: P/R vs a golden triple set."""
     from .operators.evaluate import precision_recall
-    from .sources.storage import Storage
-    spark = _spark(args)
-    ours = Storage(args.run_dir).read_table(spark, "triples")
+    from .plans.pipeline import read_run_table
+    ours = read_run_table(spark, args.run_dir, "triples", "evaluate")
     golden = spark.read.parquet(args.golden)
     print(json.dumps(precision_recall(ours, golden)))
-    spark.stop()
 
 
-def cmd_curate(args) -> None:
+def cmd_curate(spark, args) -> None:
     """Training-data curation pass over a documents parquet: print the
     sequential filter-attrition funnel (per-rule drop report) and, with
     --clean-out, write the boilerplate-cleaned corpus. The two
@@ -206,7 +173,6 @@ def cmd_curate(args) -> None:
     text_boilerplate)."""
     from .operators.curation import filter_attrition
     from .operators.dedup import boilerplate_segments
-    spark = _spark(args)
     docs = spark.read.parquet(args.input)
     funnel = [r.asDict() for r in
               filter_attrition(docs, min_tokens=args.min_tokens,
@@ -218,7 +184,6 @@ def cmd_curate(args) -> None:
                               df_cap=args.df_cap)
          .write.mode("overwrite").parquet(args.clean_out))
         print(json.dumps({"cleaned": args.clean_out}))
-    spark.stop()
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -261,7 +226,6 @@ def main(argv: list[str] | None = None) -> None:
     v.set_defaults(fn=cmd_serve)
 
     va = sub.add_parser("validate"); va.add_argument("--run-dir", required=True)
-    va.add_argument("--ontology")
     va.set_defaults(fn=cmd_validate)
 
     d = sub.add_parser("describe"); d.add_argument("--run-dir", required=True)
@@ -281,7 +245,12 @@ def main(argv: list[str] | None = None) -> None:
     c.set_defaults(fn=cmd_curate)
 
     args = ap.parse_args(argv)
-    args.fn(args)
+    from .session import get_spark
+    spark = get_spark("otd-cli", master=args.master)
+    try:
+        args.fn(spark, args)
+    finally:
+        spark.stop()
 
 
 if __name__ == "__main__":

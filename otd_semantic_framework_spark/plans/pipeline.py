@@ -21,6 +21,9 @@ fingerprint, row counters and status. A resumed run skips stages whose
 manifest is complete for the same fingerprint and re-reads the persisted
 output — the property test asserts resume ≡ single run. Totals are also
 attached in-flight via ``df.observe`` (no extra action needed).
+
+A run dir also records its ontology (``ontology.parquet``), which every
+reader of the run takes from :func:`run_ontology`.
 """
 
 from __future__ import annotations
@@ -70,6 +73,56 @@ def _content_digest(df: DataFrame) -> str:
                   F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)"))
                   .alias("h")).first()
     return f"{r['n']}:{r['h'] or 0}"
+
+
+def record_ontology(run_dir: str,
+                    ontology_pdf: pd.DataFrame | None = None) -> pd.DataFrame:
+    """Write the ontology a run is built with (default: the built-in
+    one) into the run dir, and return it."""
+    if ontology_pdf is None:
+        ontology_pdf = fixtures.ontology_pandas()
+    os.makedirs(run_dir, exist_ok=True)
+    ontology_pdf.to_parquet(os.path.join(run_dir, "ontology.parquet"))
+    return ontology_pdf
+
+
+def run_ontology(run_dir: str) -> pd.DataFrame:
+    """The ontology a run dir was built with, read by pandas (no Spark
+    job). A run dir that predates the record falls back to the built-in
+    ontology, which every such run used unless given ``--ontology``."""
+    path = os.path.join(run_dir, "ontology.parquet")
+    return (pd.read_parquet(path) if os.path.exists(path)
+            else fixtures.ontology_pandas())
+
+
+def read_run_table(spark: SparkSession, run_dir: str, name: str,
+                   needed_by: str) -> DataFrame:
+    """A run's table, or a ValueError naming it and the lifecycle step
+    that makes it (in place of Spark's opaque AnalysisException)."""
+    st = Storage(run_dir)
+    if not st.exists(spark, name):
+        step = "matrix" if name == "concept_similarity" else "autotag"
+        raise ValueError(f"{needed_by} needs the {name} table — run the "
+                         f"`{step}` lifecycle for this run dir first")
+    return st.read_table(spark, name)
+
+
+def refresh_cds(spark: SparkSession, run_dir: str, manual_raw: DataFrame,
+                ontology_pdf: pd.DataFrame) -> dict:
+    """The reference's `dataset_tagger` refresh (P19 + P14), for the CLI
+    ``tag`` and the server alike: validate curated (subj_key,
+    concept_id, weight) rows against the run's concepts, then write the
+    CDS of the manual∪autotag union as the new ``cds_scores``."""
+    from ..operators.manual import ingest_manual_tags, invalid_manual_tags
+    triples = read_run_table(spark, run_dir, "triples", "refresh")
+    sim = read_run_table(spark, run_dir, "concept_similarity", "refresh")
+    concepts = spark.createDataFrame(ontology_pdf[["concept_id"]])
+    valid = ingest_manual_tags(manual_raw, concepts)
+    n_rejected = invalid_manual_tags(manual_raw, concepts).count()
+    st = Storage(run_dir)
+    st.write_table(cds_scores(triples, sim, manual_tags=valid), "cds_scores")
+    return {"manual_valid": valid.count(), "manual_rejected": n_rejected,
+            "cds_rows": st.read_table(spark, "cds_scores").count()}
 
 
 class CheckpointedRun:
@@ -206,7 +259,8 @@ def run_pipeline(
     manual_tags: DataFrame | None = None,
     infer_broader: bool = False,
 ) -> PipelineResult:
-    """Execute the full pipeline with checkpoints under ``run_dir``.
+    """Execute the full pipeline with checkpoints under ``run_dir``,
+    which every call first records ``ontology_pdf`` in.
 
     ``stop_after`` kills the run after the named stage (resume tests).
 
@@ -240,7 +294,7 @@ def run_pipeline(
     manifest buckets, not more stages, are the unit of partial-failure
     recovery.
     """
-    ontology_pdf = ontology_pdf if ontology_pdf is not None else fixtures.ontology_pandas()
+    ontology_pdf = record_ontology(run_dir, ontology_pdf)
     onto = OntologySetup(ontology_pdf)
     gaz = onto.gazetteer
     run = CheckpointedRun(spark, run_dir, run_id)

@@ -9,7 +9,7 @@ new dependencies (the same call the sandbox forced for live CKAN
 ingest, sources/ckan_http.py). Endpoints:
 
     GET  /health                         liveness + run metadata
-    GET  /api/v1/concepts                ontology concept list
+    GET  /api/v1/concepts                the run's ontology concepts
     GET  /api/v1/search?q=..&top_n=10&taxonomic=1
                                          ranked subjects as JSON — the
                                          CLI `search` payload, verbatim
@@ -21,6 +21,10 @@ ingest, sources/ckan_http.py). Endpoints:
                                          (the reference's two-step
                                          lifecycle: tag in the web app,
                                          THEN rebuild the matrix)
+
+The ontology is the run's own (``plans.pipeline.run_ontology``, the
+one ``autotag``/``matrix`` recorded): the concept list, query scoring
+and tag validation all use it.
 
 Shape at scale: the server is a thin driver-side front door over the
 engine. Searches are served from memory: each load (start-up and every
@@ -43,7 +47,8 @@ driver's memory need the Spark path (or a sharded index per server).
 
 Tag POSTs append single rows to the run's curated store;
 /api/v1/refresh replays P19 (validate + merge) and P14 (propagate) as
-batch jobs, writes the new ``cds_scores`` and only then builds the next
+batch jobs (``plans.pipeline.refresh_cds``, the same call as the CLI
+``tag``), writes the new ``cds_scores`` and only then builds the next
 served snapshot and swaps it in with one assignment, so a search during
 a refresh answers from the previous snapshot and never fails. A real
 deployment puts N of these stateless servers behind a load balancer
@@ -62,8 +67,8 @@ from urllib.parse import parse_qs, urlparse
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from .plans.pipeline import read_run_table, refresh_cds, run_ontology
 from .plans.search import CdsIndex, QueryScorer
-from .sources.fixtures import ontology_pandas, ontology_spark
 from .sources.storage import Storage
 
 MANUAL_TAGS_TABLE = "manual_tags_http"
@@ -91,13 +96,13 @@ class SearchService:
         self.storage = Storage(run_dir)
         self.run_dir = run_dir
         self._lock = threading.Lock()
-        self.ontology_pdf = ontology_pandas()
+        self.ontology_pdf = run_ontology(run_dir)
         self._known_concepts = set(self.ontology_pdf["concept_id"])
         self.pending_tags = 0
         self._load()
 
     def _load(self) -> None:
-        cds = self.storage.read_table(self.spark, "cds_scores")
+        cds = read_run_table(self.spark, self.run_dir, "cds_scores", "serve")
         wup_pdf = (
             self.storage.read_table(self.spark, "concept_similarity")
             .toPandas()
@@ -153,34 +158,19 @@ class SearchService:
         """Merge every stored curated tag into the CDS — P19 + P14 —
         and swap the served cache. The reference rebuilds its matrix as
         a separate step after web tagging; this is that step."""
-        from .operators.cds import conv_tags, propagate_cds
-        from .operators.manual import (ingest_manual_tags,
-                                       invalid_manual_tags,
-                                       merge_tag_sources)
         with self._lock:
-            if self.wup_pdf is None:
-                raise ValueError("refresh needs concept_similarity — "
-                                 "run the `matrix` lifecycle first")
             if not self.storage.exists(self.spark, MANUAL_TAGS_TABLE):
                 return {"manual_valid": 0, "manual_rejected": 0,
                         "cds_rows": self.cds_rows}
-            manual = self.storage.read_table(self.spark, MANUAL_TAGS_TABLE)
-            onto = ontology_spark(self.spark)
-            valid = ingest_manual_tags(manual, onto)
-            n_rejected = invalid_manual_tags(manual, onto).count()
-            merged = merge_tag_sources(
-                conv_tags(self.storage.read_table(self.spark, "triples")),
-                valid)
-            sim = self.storage.read_table(self.spark, "concept_similarity")
-            cds = propagate_cds(merged.drop("sources"), sim)
             # searches keep answering from the current snapshot until
             # the new table is written and the next snapshot is built
-            self.storage.write_table(cds, "cds_scores")
+            out = refresh_cds(
+                self.spark, self.run_dir,
+                self.storage.read_table(self.spark, MANUAL_TAGS_TABLE),
+                self.ontology_pdf)
             self._load()
             self.pending_tags = 0
-            return {"manual_valid": valid.count(),
-                    "manual_rejected": n_rejected,
-                    "cds_rows": self.cds_rows}
+            return out
 
 
 def _make_handler(svc: SearchService):

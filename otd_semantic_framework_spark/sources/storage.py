@@ -84,7 +84,7 @@ class Storage:
 
         which the bucket(256, subj) layout serves without a full shuffle
         of the target; on parquet (no transactional rewrite) the
-        equivalent is union + dedup + atomic-overwrite via staging dir —
+        equivalent is union + dedup + the staged swap ``_swap_in`` —
         DataFrames read from the table BEFORE a merge must be consumed
         before the next merge swaps the directory (Iceberg's snapshot
         versioning has no such constraint). Incremental == full-batch
@@ -108,21 +108,29 @@ class Storage:
                 WHEN NOT MATCHED THEN INSERT *
             """)
             return self.read_table(spark, name)
-        if not self.exists(spark, name):
-            self.write_table(new_triples, name)
-            return self.read_table(spark, name)
-        merged = dedup_triples(
+        merged = (dedup_triples(
             self.read_table(spark, name).unionByName(new_triples))
-        # parquet cannot rewrite in place while being read: stage, then
-        # swap via rename-to-backup -> rename-staging-in -> drop backup.
-        # A crash between the renames leaves EITHER the old table (as
-        # `name__backup`, recoverable) or the new one in place — never a
-        # window with zero copies (plain rmtree-then-rename had one).
+            if self.exists(spark, name) else new_triples)
+        self._swap_in(spark, name, merged)
+        return self.read_table(spark, name)
+
+    def _swap_in(self, spark: SparkSession, name: str,
+                 df: DataFrame) -> None:
+        """Make ``df`` the parquet table ``name``. A first write goes
+        straight in; a replacement, which may read the table it
+        replaces, is staged and swapped: write staging, drop a stale
+        backup, rename final -> backup, staging -> final, drop the
+        backup. A crash between the renames leaves EITHER the old table
+        (as ``name__backup``, recoverable) or the new one in place —
+        never a window with zero copies (rmtree-then-rename had one)."""
+        if not self.exists(spark, name):
+            self.write_table(df, name)
+            return
+        import shutil
         staging = f"{name}__staging"
-        self.write_table(merged, staging)
+        self.write_table(df, staging)
         final = self._path(name)
         backup = self._path(f"{name}__backup")
-        import shutil
         if os.path.exists(backup):
             shutil.rmtree(backup)
         os.rename(final, backup)
@@ -131,7 +139,6 @@ class Storage:
         # Spark's shared file-status cache still lists the pre-swap
         # files for this path; refresh before anyone re-reads it
         spark.catalog.refreshByPath(final)
-        return self.read_table(spark, name)
 
     def upsert_latest(self, spark: SparkSession, name: str,
                       updates: DataFrame, key_cols: list[str],
@@ -148,8 +155,8 @@ class Storage:
             WHEN NOT MATCHED THEN INSERT *
 
         served by the key-bucketed layout without a full target
-        shuffle; on parquet it is union + per-key argmax + the same
-        crash-safe staged swap ``merge_triples`` uses. Scale shape:
+        shuffle; on parquet it is union + per-key argmax + the
+        crash-safe staged swap (``_swap_in``). Scale shape:
         ONE hash agg keyed on the upsert key (map-side partial — the
         update batch is usually a sliver of the table, and AQE keeps
         the union's partitioning sane); no windows, no driver state.
@@ -176,20 +183,7 @@ class Storage:
                   .select(*key_cols,
                           *[F.col(f"_w.{c}").alias(c)
                             for c in [ver_col] + data_cols]))
-        if not self.exists(spark, name):
-            self.write_table(merged, name)
-            return self.read_table(spark, name)
-        staging = f"{name}__staging"
-        self.write_table(merged, staging)
-        final = self._path(name)
-        backup = self._path(f"{name}__backup")
-        import shutil
-        if os.path.exists(backup):
-            shutil.rmtree(backup)
-        os.rename(final, backup)
-        os.rename(self._path(staging), final)
-        shutil.rmtree(backup)
-        spark.catalog.refreshByPath(final)
+        self._swap_in(spark, name, merged)
         return self.read_table(spark, name)
 
     def exists(self, spark: SparkSession, name: str) -> bool:
@@ -211,13 +205,12 @@ class Storage:
         Iceberg mode delegates to the engine's own maintenance
         (``rewrite_data_files``); parquet mode rewrites the table into
         ``ceil(bytes / target_file_mb)`` files via a round-robin
-        repartition (even output sizes, no key skew) using the same
-        crash-safe backup-rename swap as merge_triples. Content is
+        repartition (even output sizes, no key skew) through the
+        crash-safe staged swap (``_swap_in``). Content is
         byte-identical under set semantics (pytest-pinned). Returns the
         resulting file count.
         """
         import math
-        import shutil
 
         if self.mode == "iceberg":
             spark.sql(
@@ -231,16 +224,8 @@ class Storage:
             os.path.getsize(os.path.join(final, f))
             for f in os.listdir(final) if f.endswith(".parquet"))
         n_files = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
-        df = self.read_table(spark, name).repartition(n_files)
-        staging = f"{name}__staging"
-        self.write_table(df, staging)
-        backup = self._path(f"{name}__backup")
-        if os.path.exists(backup):
-            shutil.rmtree(backup)
-        os.rename(final, backup)
-        os.rename(self._path(staging), final)
-        shutil.rmtree(backup)
-        spark.catalog.refreshByPath(final)
+        self._swap_in(spark, name,
+                      self.read_table(spark, name).repartition(n_files))
         return sum(1 for f in os.listdir(final) if f.endswith(".parquet"))
 
     # -- snapshot versioning (Iceberg time-travel parity) -----------------

@@ -91,6 +91,16 @@ def test_cli_turtle_ontology(tmp_path):
     # generated transport corpus, so tagging must produce triples
     assert out["triples"] > 0 and out["cds_rows"] > 0
 
+    # `tag` validates against the run's recorded (Turtle) ontology:
+    # its otd:bus is accepted, the built-in otd:C001 is not
+    import pandas as pd
+    tags = str(tmp_path / "manual.parquet")
+    pd.DataFrame({"subj_key": ["conv:ttl-demo"] * 2,
+                  "concept_id": ["http://example.org/otd/bus", "otd:C001"],
+                  "weight": [0.9, 0.9]}).to_parquet(tags)
+    out = _run("tag", "--run-dir", run_dir, "--tags", tags)
+    assert out["manual_valid"] == 1 and out["manual_rejected"] == 1
+
 
 def test_cli_infer_broader_and_validate(tmp_path):
     """autotag --infer-broader adds the P12b stage; `validate` reports
