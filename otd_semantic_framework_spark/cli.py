@@ -14,10 +14,11 @@ evaluate subcommands via argparse; SURVEY.md §3.1].
     python -m otd_semantic_framework_spark curate    --input D.parquet [--clean-out C.parquet]
 
 ``autotag`` and ``matrix`` build a run: each takes ``--ontology
-<file.ttl>`` (default: the built-in ontology) and records that ontology
-in the run dir. Every other command that reads a run (``search``,
-``tag``, ``serve``, ``validate``) uses the recorded one
-(``plans.pipeline.run_ontology``).
+<file.ttl>`` and records that ontology in the run dir. Without it
+``autotag`` uses the built-in ontology and ``matrix`` the one the run
+dir records (the built-in one if none). Every other command that
+reads a run (``search``, ``tag``, ``serve``, ``validate``) uses the
+recorded one (``plans.pipeline.run_ontology``).
 
 ``tag`` is the batch form of the reference's `dataset_tagger` lifecycle
 (curated manual tags merged into the run's CDS); ``search --taxonomic``
@@ -69,12 +70,16 @@ def cmd_autotag(spark, args) -> None:
 
 def cmd_matrix(spark, args) -> None:
     """The reference's `matrix` lifecycle: record the run's ontology and
-    build + persist its Wu-Palmer concept-similarity table."""
+    build + persist its Wu-Palmer concept-similarity table. Without
+    ``--ontology`` it keeps the ontology the run dir already records
+    (the built-in one for a new run dir)."""
     from .operators.wup import concept_similarity
-    from .plans.pipeline import record_ontology
+    from .plans.pipeline import record_ontology, run_ontology
     from .schemas import ONTOLOGY_CONCEPTS
     from .sources.storage import Storage
-    onto = record_ontology(args.run_dir, _ontology_pdf(spark, args))
+    onto = _ontology_pdf(spark, args)
+    onto = record_ontology(args.run_dir, run_ontology(args.run_dir)
+                           if onto is None else onto)
     sim = concept_similarity(
         spark.createDataFrame(onto, schema=ONTOLOGY_CONCEPTS))
     Storage(args.run_dir).write_table(sim, "concept_similarity")

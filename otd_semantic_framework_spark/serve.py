@@ -8,7 +8,8 @@ stdlib ``ThreadingHTTPServer`` — the same protocol surface with zero
 new dependencies (the same call the sandbox forced for live CKAN
 ingest, sources/ckan_http.py). Endpoints:
 
-    GET  /health                         liveness + run metadata
+    GET  /health                         liveness, run metadata and the
+                                         result cache's counters
     GET  /api/v1/concepts                the run's ontology concepts
     GET  /api/v1/search?q=..&top_n=10&taxonomic=1
                                          ranked subjects as JSON — the
@@ -37,6 +38,23 @@ of the query's concepts: no Spark job, no file and no lock. The
 ranking is ``plans.search.search``'s, which stays the batch path and
 the oracle the served payload is tested against.
 
+Repeated searches are answered from the snapshot's result cache: a
+bounded LRU of search answers keyed by ``(query, top_n, taxonomic)``
+that lives and dies with its snapshot, so a refresh starts with an
+empty one and nothing in it can go stale. A miss runs the scoring and
+ranking above and stores the answer. The cache holds at most
+``CACHE_MAX_ROWS`` result rows, least recently used first out; an entry
+also pays one row for its key plus one per 256 query characters, and
+an answer larger than the whole budget is served but not stored.
+Measured with tracemalloc on CPython 3.11, a cached row is a tuple
+over the index's own subject and concept strings: 0.7 KB when it
+matches all 68 concepts of the built-in ontology, about 0.15 KB for
+the usual one to three. A charged unit of key costs at most 1.3 KB
+(256 four-byte characters plus the entry). So one snapshot's cache
+stays under 26 MB in the worst case (20,000 distinct long non-ASCII
+queries) and takes about 3 MB for top-10 answers.
+``GET /health`` reports its entries, rows, hits and misses.
+
 Memory envelope: the index holds 12 bytes per CDS row (an int32
 subject code and a float64 score) plus one string per subject and per
 concept. A subject has at most one row per concept: 68 in the
@@ -50,9 +68,11 @@ Tag POSTs append single rows to the run's curated store;
 batch jobs (``plans.pipeline.refresh_cds``, the same call as the CLI
 ``tag``), writes the new ``cds_scores`` and only then builds the next
 served snapshot and swaps it in with one assignment, so a search during
-a refresh answers from the previous snapshot and never fails. A real
-deployment puts N of these stateless servers behind a load balancer
-against one shared Iceberg run catalog (sources/storage.py).
+a refresh answers from the previous snapshot and never fails. A refresh
+holds the tag store only while it reads the stored tags, so a tag POST
+during a refresh is answered at once and merged by the next refresh.
+A real deployment puts N of these stateless servers behind a load
+balancer against one shared Iceberg run catalog (sources/storage.py).
 """
 
 from __future__ import annotations
@@ -60,7 +80,8 @@ from __future__ import annotations
 import json
 import logging
 import threading
-from dataclasses import dataclass
+from collections import OrderedDict
+from dataclasses import dataclass, field
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
@@ -72,30 +93,81 @@ from .plans.search import CdsIndex, QueryScorer
 from .sources.storage import Storage
 
 MANUAL_TAGS_TABLE = "manual_tags_http"
+MANUAL_TAGS_SCHEMA = "subj_key string, concept_id string, weight double"
+CACHE_MAX_ROWS = 20_000  # result rows one snapshot's search cache holds
 log = logging.getLogger(__name__)
+
+
+class _ResultCache:
+    """Bounded LRU of one snapshot's search answers, keyed by
+    ``(query, top_n, taxonomic)``; see the module docstring for the
+    bound and its memory. Answers are stored frozen (tuples) and thawed
+    into fresh dicts on every hit, so no caller can change what the
+    next one is served. Only the dict operations run under the cache's
+    own lock: a miss ranks outside it, and two threads missing the same
+    key both rank it and store one copy."""
+
+    def __init__(self, max_rows: int = CACHE_MAX_ROWS):
+        self.max_rows = max_rows
+        self._lock = threading.Lock()
+        self._entries: OrderedDict = OrderedDict()  # key -> (cost, rows)
+        self.rows = self.hits = self.misses = 0
+
+    def get(self, key: tuple) -> list[dict] | None:
+        with self._lock:
+            entry = self._entries.get(key)
+            if entry is None:
+                self.misses += 1
+                return None
+            self._entries.move_to_end(key)
+            self.hits += 1
+        return [{"subj_key": s, "rank": r, "search_score": v,
+                 "matched_concepts": list(m)} for s, r, v, m in entry[1]]
+
+    def put(self, key: tuple, results: list[dict]) -> None:
+        rows = tuple((r["subj_key"], r["rank"], r["search_score"],
+                      tuple(r["matched_concepts"])) for r in results)
+        cost = 1 + len(rows) + len(key[0]) // 256
+        if cost > self.max_rows:
+            return
+        with self._lock:
+            old = self._entries.pop(key, None)
+            self.rows += cost - (old[0] if old else 0)
+            self._entries[key] = (cost, rows)
+            while self.rows > self.max_rows:
+                self.rows -= self._entries.popitem(last=False)[1][0]
+
+    def stats(self) -> dict:
+        with self._lock:
+            return {"entries": len(self._entries), "rows": self.rows,
+                    "hits": self.hits, "misses": self.misses}
 
 
 @dataclass(frozen=True)
 class _Served:
     """One load of the served run dir. Never mutated: a refresh builds
     the next one and swaps it in with a single assignment, so a search
-    reads one consistent snapshot without the lock."""
+    reads one consistent snapshot without the lock. Its result cache
+    memoizes answers over this snapshot only, and goes with it."""
     cds: DataFrame  # the served table, uncached (read by checks, not searches)
     index: CdsIndex
     scorer: QueryScorer
     wup_pdf: pd.DataFrame | None
+    cache: _ResultCache = field(default_factory=_ResultCache)
 
 
 class SearchService:
     """Engine facade the HTTP handlers call. Thread-safe: searches read
-    the current immutable :class:`_Served` snapshot; the tag store and
-    the refresh are serialized behind one lock."""
+    the current immutable :class:`_Served` snapshot and take no service
+    lock; tag appends and a refresh's read of the stored tags share the
+    store lock, and refreshes run one at a time under their own."""
 
     def __init__(self, spark: SparkSession, run_dir: str):
         self.spark = spark
         self.storage = Storage(run_dir)
         self.run_dir = run_dir
-        self._lock = threading.Lock()
+        self._store_lock = threading.Lock()
+        self._refresh_lock = threading.Lock()
         self.ontology_pdf = run_ontology(run_dir)
         self._known_concepts = set(self.ontology_pdf["concept_id"])
         self.pending_tags = 0
@@ -124,16 +196,32 @@ class SearchService:
     def wup_pdf(self) -> pd.DataFrame | None:
         return self._served.wup_pdf
 
+    def cache_stats(self) -> dict:
+        """Entries, rows, hits and misses of the current snapshot's
+        result cache (all zero right after a load)."""
+        return self._served.cache.stats()
+
     # -- read path ---------------------------------------------------
     def search(self, query: str, top_n: int = 10,
                taxonomic: bool = False) -> dict:
+        """The CLI ``search`` payload for ``query`` over the current
+        snapshot. A repeat of an earlier ``(query, top_n, taxonomic)``
+        is answered from the snapshot's result cache (at most
+        ``CACHE_MAX_ROWS`` rows, under 26 MB; module docstring); a miss
+        scores and ranks the query and stores the answer. Errors are
+        raised, never cached. The caller owns the returned payload."""
         served = self._served
         if taxonomic and served.wup_pdf is None:
             raise ValueError(
                 "taxonomic search needs the concept_similarity table — "
                 "run the `matrix` lifecycle for this run dir first")
-        q = served.scorer.scores(query, taxonomic=taxonomic)
-        return {"query": query, "results": served.index.rank(q, top_n)}
+        key = (query, top_n, taxonomic)
+        results = served.cache.get(key)
+        if results is None:
+            results = served.index.rank(
+                served.scorer.scores(query, taxonomic=taxonomic), top_n)
+            served.cache.put(key, results)
+        return {"query": query, "results": results}
 
     def concepts(self) -> list[dict]:
         return self.ontology_pdf[["concept_id", "pref_label"]].to_dict(
@@ -147,29 +235,37 @@ class SearchService:
         if not subj_key or not (0.0 < float(weight) <= 1.0):
             raise ValueError("subj_key required; weight must be in (0,1]")
         row = self.spark.createDataFrame(
-            [(subj_key, concept_id, float(weight))],
-            schema="subj_key string, concept_id string, weight double")
-        with self._lock:
+            [(subj_key, concept_id, float(weight))], schema=MANUAL_TAGS_SCHEMA)
+        with self._store_lock:
             self.storage.write_table(row, MANUAL_TAGS_TABLE, mode="append")
             self.pending_tags += 1
             return {"stored": 1, "pending_tags": self.pending_tags}
 
     def refresh(self) -> dict:
         """Merge every stored curated tag into the CDS — P19 + P14 —
-        and swap the served cache. The reference rebuilds its matrix as
-        a separate step after web tagging; this is that step."""
-        with self._lock:
-            if not self.storage.exists(self.spark, MANUAL_TAGS_TABLE):
-                return {"manual_valid": 0, "manual_rejected": 0,
-                        "cds_rows": self.cds_rows}
+        and swap the served snapshot. The reference rebuilds its matrix
+        as a separate step after web tagging; this is that step.
+
+        The store lock is held only while the stored tags are read into
+        the driver, so a tag POSTed during the rest of the refresh is
+        stored at once, stays pending and is merged by the next one."""
+        with self._refresh_lock:
+            with self._store_lock:
+                if not self.storage.exists(self.spark, MANUAL_TAGS_TABLE):
+                    return {"manual_valid": 0, "manual_rejected": 0,
+                            "cds_rows": self.cds_rows}
+                manual = self.storage.read_table(
+                    self.spark, MANUAL_TAGS_TABLE).toPandas()
+                covered = self.pending_tags
             # searches keep answering from the current snapshot until
             # the new table is written and the next snapshot is built
             out = refresh_cds(
                 self.spark, self.run_dir,
-                self.storage.read_table(self.spark, MANUAL_TAGS_TABLE),
+                self.spark.createDataFrame(manual, schema=MANUAL_TAGS_SCHEMA),
                 self.ontology_pdf)
             self._load()
-            self.pending_tags = 0
+            with self._store_lock:
+                self.pending_tags -= covered
             return out
 
 
@@ -201,7 +297,8 @@ def _make_handler(svc: SearchService):
                     self._json(200, {"status": "ok",
                                      "run_dir": svc.run_dir,
                                      "cds_rows": svc.cds_rows,
-                                     "taxonomic": svc.wup_pdf is not None})
+                                     "taxonomic": svc.wup_pdf is not None,
+                                     "cache": svc.cache_stats()})
                 elif u.path == "/api/v1/concepts":
                     self._json(200, svc.concepts())
                 elif u.path == "/api/v1/search":

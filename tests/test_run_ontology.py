@@ -7,6 +7,7 @@ table."""
 
 import argparse
 import json
+import shutil
 import threading
 import urllib.error
 import urllib.request
@@ -14,7 +15,7 @@ import urllib.request
 import pandas as pd
 import pytest
 
-from otd_semantic_framework_spark.cli import cmd_search
+from otd_semantic_framework_spark.cli import cmd_matrix, cmd_search
 from otd_semantic_framework_spark.operators.linking import OntologySetup
 from otd_semantic_framework_spark.plans.pipeline import (record_ontology,
                                                          refresh_cds,
@@ -98,6 +99,23 @@ def test_recorded_ontology_roundtrip(ttl_run, tmp_path):
     built_in = record_ontology(str(tmp_path / "built_in"))
     assert OntologySetup(run_ontology(str(tmp_path / "built_in"))).digest \
         == OntologySetup(built_in).digest
+
+
+def test_bare_matrix_keeps_the_runs_ontology(spark, ttl_run, tmp_path):
+    """``matrix`` without ``--ontology`` on a Turtle run keeps the Turtle
+    record and rebuilds the Wu-Palmer pairs over the Turtle ids."""
+    _, svc, onto = ttl_run
+    run_dir = str(tmp_path / "copy")
+    shutil.copytree(svc.run_dir, run_dir)
+    st = Storage(run_dir)
+    want = sorted(map(tuple, st.read_table(spark, "concept_similarity")
+                      .collect()))
+    cmd_matrix(spark, argparse.Namespace(run_dir=run_dir, ontology=None))
+    assert set(run_ontology(run_dir)["concept_id"]) == set(onto["concept_id"])
+    got = sorted(map(tuple, st.read_table(spark, "concept_similarity")
+                     .collect()))
+    assert got == want
+    assert {a for a, _, _ in got} == set(onto["concept_id"])
 
 
 def test_read_side_names_missing_tables(spark, tmp_path):

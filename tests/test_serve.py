@@ -6,9 +6,13 @@ the engine call, POST-validated curated tagging, and the two-step
 tag → refresh → re-search flow end-to-end. Searches are answered from
 the in-memory CDS index: the Spark ``search`` plan is its oracle, no
 search submits a Spark job, and a search during a refresh answers from
-the previous snapshot."""
+the previous snapshot. Repeated searches are answered from the
+snapshot's bounded result cache, which a refresh empties; a tag POST
+during a refresh is answered at once and merged by the next one."""
 
 import json
+import shutil
+import sys
 import threading
 import urllib.error
 import urllib.request
@@ -21,7 +25,8 @@ from otd_semantic_framework_spark import semantics as S
 from otd_semantic_framework_spark.plans.pipeline import run_pipeline
 from otd_semantic_framework_spark.plans.search import (CdsIndex, query_scores,
                                                        search as engine_search)
-from otd_semantic_framework_spark.serve import make_server
+from otd_semantic_framework_spark.serve import (CACHE_MAX_ROWS, SearchService,
+                                                _ResultCache, make_server)
 from otd_semantic_framework_spark.sources.fixtures import ontology_pandas
 from otd_semantic_framework_spark.sources.storage import Storage
 
@@ -275,3 +280,226 @@ def test_unexpected_errors_answer_json_500(server, monkeypatch):
             call()
         assert e.value.code == 500
         assert json.loads(e.value.read())["error"] == "RuntimeError"
+
+
+def _hold_cds_write(monkeypatch):
+    """Make the next ``cds_scores`` write block, after writing, until
+    ``release`` is set; ``written`` is set once it blocks."""
+    written, release = threading.Event(), threading.Event()
+    write_table = Storage.write_table
+
+    def gated_write(self, df, name, *args, **kwargs):
+        write_table(self, df, name, *args, **kwargs)
+        if name == "cds_scores":
+            written.set()
+            release.wait(120)
+
+    monkeypatch.setattr(Storage, "write_table", gated_write)
+    return written, release
+
+
+def _label_path(concept, top_n=1000):
+    return ("/api/v1/search?q=" + urllib.request.quote(concept["pref_label"])
+            + f"&top_n={top_n}")
+
+
+def test_cached_answers_equal_cold_answers_and_engine(server, spark):
+    """On a fresh snapshot every first answer is a miss and its repeat a
+    hit, and both are the Spark ``search`` rows."""
+    _, svc = server
+    fresh = SearchService(spark, svc.run_dir)
+    many = fresh.cds.select("subj_key").distinct().count() + 5
+    keys = [(q, top_n, taxonomic)
+            for q in _seeded_queries(17, 6) + ["qqq zzz xyzzy"]
+            for taxonomic in (False, True) for top_n in (1, 10, many)]
+    for n, key in enumerate(keys):
+        cold = fresh.search(*key)
+        assert fresh.cache_stats()["misses"] == n + 1
+        warm = fresh.search(*key)
+        assert fresh.cache_stats()["hits"] == n + 1
+        assert warm == cold
+        assert cold["results"] == _direct(fresh, *key), key
+    assert fresh.cache_stats()["entries"] == len(keys)
+
+
+def test_errors_are_not_cached(server, spark, tmp_path):
+    """A negative top_n, and taxonomic mode on a run without the
+    Wu-Palmer table, answer 400 on every repeat and store nothing."""
+    base, svc = server
+    before = svc.cache_stats()
+    for _ in range(3):
+        with pytest.raises(urllib.error.HTTPError) as e:
+            _get(base, "/api/v1/search?q=bus&top_n=-1")
+        assert e.value.code == 400
+    after = svc.cache_stats()
+    assert (after["entries"], after["rows"], after["hits"]) == (
+        before["entries"], before["rows"], before["hits"])
+
+    bare = str(tmp_path / "no_wup")
+    shutil.copytree(svc.run_dir, bare, ignore=shutil.ignore_patterns(
+        "concept_similarity.parquet"))
+    httpd, no_wup = make_server(spark, bare, port=0)
+    t = threading.Thread(target=httpd.serve_forever, daemon=True)
+    t.start()
+    try:
+        url = f"http://127.0.0.1:{httpd.server_address[1]}"
+        for _ in range(3):
+            with pytest.raises(urllib.error.HTTPError) as e:
+                _get(url, "/api/v1/search?q=bus&taxonomic=1")
+            assert e.value.code == 400
+        code, _ = _get(url, "/api/v1/search?q=bus")
+        assert code == 200
+        assert no_wup.cache_stats()["entries"] == 1
+    finally:
+        httpd.shutdown()
+        httpd.server_close()
+        t.join(timeout=60)
+    assert not t.is_alive()
+
+
+def test_health_cache_counters_and_refresh_leaves_nothing_stale(server):
+    """/health counts hits and misses of the current snapshot; a refresh
+    swaps in an empty cache, so a repeated query finds a subject the
+    refresh added."""
+    base, _ = server
+    concept = _self_matching_concept()
+    subj = "conv:cache-stale"
+    path = _label_path(concept)
+
+    def cache():
+        return _get(base, "/health")[1]["cache"]
+
+    _, first = _get(base, path)
+    before = cache()
+    _, again = _get(base, path)
+    after = cache()
+    assert again == first and subj not in {
+        r["subj_key"] for r in first["results"]}
+    assert after["hits"] == before["hits"] + 1
+    assert (after["misses"], after["entries"], after["rows"]) == (
+        before["misses"], before["entries"], before["rows"])
+    _get(base, path.replace("top_n=1000", "top_n=999"))
+    assert cache()["misses"] == before["misses"] + 1
+    assert cache()["entries"] == before["entries"] + 1
+
+    code, _ = _post(base, "/api/v1/tag", {"subj_key": subj,
+                                          "concept_id": concept["concept_id"],
+                                          "weight": 0.9})
+    assert code == 200
+    code, _ = _post(base, "/api/v1/refresh", {})
+    assert code == 200
+    assert cache() == {"entries": 0, "rows": 0, "hits": 0, "misses": 0}
+    _, refreshed = _get(base, path)
+    assert subj in {r["subj_key"] for r in refreshed["results"]}
+    assert cache()["misses"] == 1 and cache()["entries"] == 1
+
+
+def test_mutating_a_payload_cannot_change_the_next_answer(server):
+    _, svc = server
+    q = "bus timetable delay"
+    want = json.loads(json.dumps(svc.search(q, 7, True)))
+    for _ in range(2):  # the payload of a miss, then of a hit
+        got = svc.search(q, 7, True)
+        assert got == want and got["results"]
+        got["results"][0]["matched_concepts"].append("otd:forged")
+        got["results"][0]["subj_key"] = "conv:forged"
+        got["results"].reverse()
+        got["results"].append({"subj_key": "conv:extra"})
+    assert svc.search(q, 7, True) == want
+
+
+def test_cache_bound_holds_and_evicts_least_recent(server):
+    """More distinct answers than the budget: the cached rows stay within
+    it, the least recently used go first, and an answer larger than the
+    whole budget is served but not stored."""
+    _, svc = server
+    assert _ResultCache().max_rows == CACHE_MAX_ROWS
+    answers = {(q, 10, tax): svc.search(q, 10, tax)["results"]
+               for q in _seeded_queries(5, 12) for tax in (False, True)}
+    answers = {k: v for k, v in answers.items() if v}
+    cache = _ResultCache(max_rows=40)
+    keys = list(answers)
+    for k in keys:
+        cache.put(k, answers[k])
+        assert cache.get(keys[0]) == answers[keys[0]]  # the most recent
+        assert 0 < cache.stats()["rows"] <= 40
+    assert sum(1 + len(answers[k]) for k in keys) > 40
+    assert cache.get(keys[1]) is None  # the least recent, evicted first
+    assert cache.get(keys[-1]) == answers[keys[-1]]
+
+    big = [dict(answers[keys[0]][0], rank=i + 1) for i in range(40)]
+    before = cache.stats()
+    cache.put(("huge", 40, False), big)
+    assert cache.get(("huge", 40, False)) is None
+    assert cache.stats()["rows"] == before["rows"]
+    assert cache.stats()["entries"] == before["entries"]
+
+
+def test_cache_under_thread_contention():
+    """Sixteen threads hit, miss and evict on one small cache with a
+    short switch interval: no update to its counters is lost."""
+    cache = _ResultCache(max_rows=60)
+    rows = [{"subj_key": f"conv:{i}", "rank": i + 1, "search_score": 0.5,
+             "matched_concepts": ["otd:C001"]} for i in range(9)]
+    calls = 2000
+
+    def worker(k):
+        for i in range(calls):
+            key = (f"q{(i * 7 + k) % 23}", 10, False)
+            if cache.get(key) is None:
+                cache.put(key, rows[:1 + (i + k) % 9])
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(k,))
+                   for k in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    stats = cache.stats()
+    assert stats["hits"] + stats["misses"] == 16 * calls
+    assert stats["rows"] == sum(c for c, _ in cache._entries.values())
+    assert stats["rows"] <= 60 and stats["entries"] == len(cache._entries)
+
+
+def test_tag_during_refresh_is_answered_and_merged_next(server, monkeypatch):
+    """A tag POSTed while a refresh is held inside its cds_scores write
+    is stored at once; that refresh does not include it, so it stays
+    pending, and the next refresh merges it."""
+    base, svc = server
+    concept = _self_matching_concept()
+    early, late = "conv:tag-before-refresh", "conv:tag-during-refresh"
+    code, _ = _post(base, "/api/v1/tag", {"subj_key": early,
+                                          "concept_id": concept["concept_id"],
+                                          "weight": 0.9})
+    assert code == 200
+    written, release = _hold_cds_write(monkeypatch)
+    refreshed = {}
+    refresher = threading.Thread(target=lambda: refreshed.update(
+        r=_post(base, "/api/v1/refresh", {})))
+    refresher.start()
+    try:
+        assert written.wait(120)
+        tagged = _post(base, "/api/v1/tag", {
+            "subj_key": late, "concept_id": concept["concept_id"],
+            "weight": 0.9})
+        held = refresher.is_alive()
+    finally:
+        release.set()
+        refresher.join(timeout=180)
+    assert not refresher.is_alive() and refreshed["r"][0] == 200
+    assert held and tagged[0] == 200
+    assert svc.pending_tags == 1
+    found = {r["subj_key"] for r in _get(base, _label_path(concept))[1][
+        "results"]}
+    assert early in found and late not in found
+
+    code, _ = _post(base, "/api/v1/refresh", {})
+    assert code == 200 and svc.pending_tags == 0
+    assert late in {r["subj_key"] for r in _get(
+        base, _label_path(concept))[1]["results"]}
