@@ -53,7 +53,11 @@ the usual one to three. A charged unit of key costs at most 1.3 KB
 (256 four-byte characters plus the entry). So one snapshot's cache
 stays under 26 MB in the worst case (20,000 distinct long non-ASCII
 queries) and takes about 3 MB for top-10 answers.
-``GET /health`` reports its entries, rows, hits and misses.
+``GET /health`` reports its entries, rows, hits and misses. The cache
+helps only searches that repeat: a miss adds the lookup and the stored
+copy (about 3 µs for a top-10 answer on a 4-vCPU VM) to the ~0.4 ms of
+scoring and ranking, and the hits and misses show what share of a
+deployment's searches repeat.
 
 Memory envelope: the index holds 12 bytes per CDS row (an int32
 subject code and a float64 score) plus one string per subject and per
